@@ -362,7 +362,7 @@ object SkipProfile {
     }
     val ladderRungs = engine.lastFilteredAnnProbe.getOrElse((0, 0))
     // …while the FRONT DOOR at the same nominal nprobe starts
-    // bound-aware (r16 adaptiveProbe — bruteRows=0 forces the probe
+    // bound-aware (the r16 adaptive start — bruteRows=0 forces the probe
     // route so the two numbers compare the ladders, not the routes)
     val tDoor = best {
       require(engine.recallServe(q, k = 10, nprobe = 1,

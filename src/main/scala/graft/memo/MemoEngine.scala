@@ -1220,39 +1220,53 @@ class MemoEngine(spark: SparkSession, basePath: String,
       .filter(FilterAlgebra.compile(filterExpr, col("metadata")))
       .select(col("id"))
 
-  /** The probe-WIDENING retry shared by [[annRecall]] and [[pqRecall]]'s
-    * filtered arms: run `pass` at the requested nprobe; while the result
-    * under-fills k and unprobed cells remain, double nprobe and retry.
-    * The fill contract this buys: the result has min(k, total matching
-    * survivors) rows — a selective filter can never silently under-fill
-    * the way a post-filter of k unfiltered hits would. Each retry
-    * re-scans only probed cells, and the doubling makes the total work a
-    * geometric series bounded by ~2× the final pass; at nprobe = nlist
-    * the IVF arm IS the exact filtered ranking (every cell probed).
-    * Collecting is bounded: a pass returns ≤ k rows by construction.
+  /** Where a FILTERED probe ladder starts: the caller's nprobe clamped
+    * to [1, nlist]; with `adaptive` (the serve front doors) raised to
+    * the width the survivor count implies ([[MemoEngine.adaptiveNprobe]]);
+    * and with ≤ k survivors jumped straight to the full probe — no
+    * intermediate rung can fill k, so the ladder would walk every rung
+    * to full probe regardless. Returns (start width, whether that jump
+    * skipped rungs — reported as one widening retry). Shared by the
+    * single-query ([[widenToFill]]) and batch ([[probeRecallBatch]])
+    * ladders so both start identically. */
+  private def startProbe(k: Int, nprobe: Int, nlist: Int, survivors: Long,
+      adaptive: Boolean): (Int, Boolean) = {
+    val base = math.min(math.max(nprobe, 1), nlist)
+    if (survivors <= k) (nlist, base < nlist)
+    else if (adaptive) (math.min(nlist,
+      math.max(base, MemoEngine.adaptiveNprobe(k, nlist, survivors))), false)
+    else (base, false)
+  }
+
+  /** The probe-WIDENING retry of the single-query filtered probe
+    * ([[probeRecall]]): run `pass` at the start width ([[startProbe]]);
+    * while the result under-fills k and unprobed cells remain, double
+    * nprobe and retry. The fill contract this buys: the result has
+    * min(k, total matching survivors) rows — a selective filter can
+    * never silently under-fill the way a post-filter of k unfiltered
+    * hits would. Each retry re-scans only probed cells, and the
+    * doubling makes the total work a geometric series bounded by ~2×
+    * the final pass; at nprobe = nlist the probe IS the exact filtered
+    * ranking (every cell probed). Collecting is bounded: a pass returns
+    * ≤ k rows by construction.
     *
     * `survivors` (the CACHED mask's row count — one job over an
-    * in-memory frame) short-circuits the ladder: with ≤ k survivors no
-    * intermediate probe can ever fill k, so the loop would walk every
-    * rung to full probe regardless — jump there in ONE pass (reported
-    * as a single retry; zero survivors skips the scan entirely). This
-    * is the SELECTIVE-filter fast path, which is exactly when users
-    * filter ANN: the result is the exact ranking of the few survivors
-    * at the cost of one probe-all pass instead of log₂(nlist) + 1. */
+    * in-memory frame) drives the ≤ k shortcut: the SELECTIVE-filter fast
+    * path, which is exactly when users filter ANN — the result is the
+    * exact ranking of the few survivors at the cost of one probe-all
+    * pass instead of log₂(nlist) + 1; zero survivors skips the scan
+    * entirely. */
   private def widenToFill(k: Int, nprobe: Int, nlist: Int,
-      survivors: Long, adaptive: Boolean = false)(
+      survivors: Long, adaptive: Boolean)(
       pass: Int => Array[org.apache.spark.sql.Row])
       : Array[org.apache.spark.sql.Row] = {
     if (survivors == 0) {
       lastFilteredAnnProbe = Some((0, 0))
       return Array.empty
     }
-    var np = math.min(math.max(nprobe, 1), nlist)
-    if (adaptive && survivors > k)
-      np = math.min(nlist,
-        math.max(np, MemoEngine.adaptiveNprobe(k, nlist, survivors)))
-    var retries = 0
-    if (survivors <= k && np < nlist) { np = nlist; retries = 1 }
+    val (np0, jumped) = startProbe(k, nprobe, nlist, survivors, adaptive)
+    var np = np0
+    var retries = if (jumped) 1 else 0
     var hits = pass(np)
     while (hits.length < k && np < nlist) {
       np = math.min(np * 2, nlist)
@@ -1261,6 +1275,81 @@ class MemoEngine(spark: SparkSession, basePath: String,
     }
     lastFilteredAnnProbe = Some((np, retries))
     hits
+  }
+
+  /** An opened probe artifact: its cell count plus the three kernels the
+    * probe bodies call — one single-query search returning (id, score,
+    * …) ≤ k rows, and the batch search with and without the exact-fill
+    * ladder over (query_id, qv) queries. The IVF and IVF-PQ families
+    * differ ONLY here ([[AnnFamily]]). */
+  private abstract class AnnProbe(val nlist: Int) {
+    def search(qv: Array[Float], k: Int, nprobe: Int,
+        allowed: Option[DataFrame], floor: Option[Double]): DataFrame
+    def searchBatch(q: DataFrame, k: Int, nprobe: Int,
+        floor: Option[Double]): DataFrame
+    def searchBatchFill(q: DataFrame, k: Int, nprobe: Int, mask: DataFrame,
+        floor: Option[Double], track: DataFrame => Unit)
+        : (DataFrame, (Int, Int))
+  }
+
+  /** A probed vector family — the engine-maintained IVF artifact (raw
+    * vectors re-ranked in the probed cells) or the IVF-PQ artifact (ADC
+    * codes cut to k×refine candidates, then the raw re-rank). `route`
+    * is the name [[lastServeRoute]] reports; `open` brings the artifact
+    * current ([[ensureIvf]] / [[ensurePq]]) and loads it, None on an
+    * empty/uncommitted store. */
+  private abstract class AnnFamily(val route: String) {
+    def open(): Option[AnnProbe]
+  }
+
+  private object IvfFamily extends AnnFamily("ann") {
+    def open(): Option[AnnProbe] = ensureIvf().map { centroids =>
+      val idx = graft.ops.IvfIndex.load(spark, ivfDir)
+      new AnnProbe(centroids.length) {
+        def search(qv: Array[Float], k: Int, nprobe: Int,
+            allowed: Option[DataFrame], floor: Option[Double]) =
+          graft.ops.IvfIndex.search(idx, centroids, qv, k, nprobe, allowed,
+            rawFloor = floor)
+        def searchBatch(q: DataFrame, k: Int, nprobe: Int,
+            floor: Option[Double]) =
+          graft.ops.IvfIndex.searchBatch(idx, centroids, q, "query_id",
+            "qv", k, nprobe, rawFloor = floor)
+        def searchBatchFill(q: DataFrame, k: Int, nprobe: Int,
+            mask: DataFrame, floor: Option[Double],
+            track: DataFrame => Unit) =
+          graft.ops.IvfIndex.searchBatchFill(idx, centroids, q, "query_id",
+            "qv", k, nprobe, allowed = Some(mask), rawFloor = floor,
+            track = track)
+      }
+    }
+  }
+
+  /** The compressed family at `refine` candidates per result row; the
+    * refine stage re-ranks against the live store's [[index]]. */
+  private final class PqFamily(refine: Int) extends AnnFamily("pq") {
+    def open(): Option[AnnProbe] = ensurePq().map {
+      case (centroids, codebooks) =>
+        val codes = graft.ops.PqIndex.loadCodes(spark, pqDir)
+        new AnnProbe(centroids.length) {
+          def search(qv: Array[Float], k: Int, nprobe: Int,
+              allowed: Option[DataFrame], floor: Option[Double]) =
+            graft.ops.PqIndex.searchIvfPq(codes, index, "id", "embedding",
+              centroids, codebooks, qv, k, nprobe, refine, allowed,
+              rawFloor = floor)
+          def searchBatch(q: DataFrame, k: Int, nprobe: Int,
+              floor: Option[Double]) =
+            graft.ops.PqIndex.searchBatchIvfPq(codes, index, "id",
+              "embedding", centroids, codebooks, q, "query_id", "qv", k,
+              nprobe, refine, rawFloor = floor)
+          def searchBatchFill(q: DataFrame, k: Int, nprobe: Int,
+              mask: DataFrame, floor: Option[Double],
+              track: DataFrame => Unit) =
+            graft.ops.PqIndex.searchBatchFillIvfPq(codes, index, "id",
+              "embedding", centroids, codebooks, q, "query_id", "qv", k,
+              nprobe, refine, allowed = Some(mask), rawFloor = floor,
+              track = track)
+        }
+    }
   }
 
   /** Approximate semantic recall over the engine-MAINTAINED IVF artifact
@@ -1287,53 +1376,47 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * — never a silently short post-filtered list. */
   def annRecall(query: String, k: Int = MemoOps.DefaultK,
       nprobe: Int = 4, filterExpr: Option[String] = None,
-      floor: Option[Double] = None,
-      adaptiveProbe: Boolean = false): DataFrame =
-    annRecallImpl(query, k, nprobe, filterExpr, floor, adaptiveProbe,
-      withBody = true)
+      floor: Option[Double] = None): DataFrame =
+    probeRecall(IvfFamily, query, k, nprobe, filterExpr, floor,
+      adaptive = false, withBody = true)
 
-  /** [[annRecall]] with the body join/sort optionally elided: the hybrid
-    * fusion tails consume only (id, score) and rejoin bodies once AFTER
-    * fusion — the arm's own records scan + global sort was pure waste on
-    * those paths (the fused ranking is bit-identical either way; the
-    * per-list rank window never needed sorted input). */
-  private def annRecallImpl(query: String, k: Int,
-      nprobe: Int, filterExpr: Option[String],
-      floor: Option[Double],
-      adaptiveProbe: Boolean, withBody: Boolean): DataFrame =
-    ensureIvf() match {
-      case Some(centroids) =>
-        val qv = graft.functions.VectorKernels.hashEmbedFloats(
-          query, graft.functions.VectorKernels.DefaultDim)
-        val idx = graft.ops.IvfIndex.load(spark, ivfDir)
+  /** The ONE single-query probe body both families share ([[annRecall]],
+    * [[pqRecall]], the serve front doors, `hybridRecall(ann = true)`):
+    * unfiltered → one probe at `nprobe`; filtered → the mask, CACHED so
+    * every widening pass (and the body join) reuses it without
+    * re-scanning the matching segments, driven through [[widenToFill]].
+    * `adaptive` starts the ladder bound-aware ([[startProbe]]);
+    * `withBody = false` elides the body join/sort — the hybrid fusion
+    * tails consume only (id, score) and rejoin bodies once AFTER fusion
+    * (the fused ranking is bit-identical either way). An empty store
+    * falls back to the exact [[recall]] ranking. */
+  private def probeRecall(family: AnnFamily, query: String, k: Int,
+      nprobe: Int, filterExpr: Option[String], floor: Option[Double],
+      adaptive: Boolean, withBody: Boolean): DataFrame =
+    family.open() match {
+      case Some(probe) =>
+        val qv = VectorKernels.hashEmbedFloats(query, VectorKernels.DefaultDim)
+        def bodies(ranked: DataFrame): DataFrame =
+          if (!withBody) ranked
+          else ranked
+            .join(filterExpr.fold(records)(recordsForFilter)
+              .select(col("id"), col("body")), Seq("id"))
+            .orderBy(desc("score"), col("id"))
         filterExpr match {
           case None =>
-            val ranked = graft.ops.IvfIndex.search(idx, centroids, qv, k,
-                math.min(nprobe, centroids.length), rawFloor = floor)
-              .select(col("id"), col("score"))
-            if (!withBody) ranked
-            else ranked
-              .join(records.select(col("id"), col("body")), Seq("id"))
-              .orderBy(desc("score"), col("id"))
+            bodies(probe.search(qv, k, math.min(nprobe, probe.nlist), None,
+              floor).select(col("id"), col("score")))
           case Some(f) =>
-            // cache the mask: every widening pass (and the body join)
-            // reuses it without re-scanning the matching segments
             val mask = annMask(f).cache()
             try {
-              val hits = widenToFill(k, nprobe, centroids.length,
-                  mask.count(), adaptiveProbe) { np =>
-                graft.ops.IvfIndex.search(idx, centroids, qv, k, np,
-                  Some(mask), rawFloor = floor).collect()
+              val hits = widenToFill(k, nprobe, probe.nlist, mask.count(),
+                  adaptive) { np =>
+                probe.search(qv, k, np, Some(mask), floor).collect()
               }
               import spark.implicits._
-              val ranked = spark.createDataset(hits.toSeq
-                  .map(r => (r.getLong(0), r.getDouble(2))))
-                .toDF("id", "score")
-              if (!withBody) ranked
-              else ranked
-                .join(recordsForFilter(f).select(col("id"), col("body")),
-                  Seq("id"))
-                .orderBy(desc("score"), col("id"))
+              bodies(spark.createDataset(hits.toSeq.map(r =>
+                  (r.getAs[Long]("id"), r.getAs[Double]("score"))))
+                .toDF("id", "score"))
             } finally mask.unpersist()
         }
       case None =>
@@ -1341,8 +1424,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
           .select(col("id"), col("score"), col("body"))
     }
 
-  /** Test seam: which arm [[recallServe]] took ("brute" | "ann") and
-    * the survivor upper bound it decided on. Production never reads it. */
+  /** Test seam: which arm the last [[serveRoute]] decision took
+    * ("brute" | "ann" | "pq") and the survivor upper bound it decided
+    * on. Production never reads it. */
   private[graft] var lastServeRoute: Option[(String, Long)] = None
 
   /** Widening-rung caches, keyed by SERVING-CALL TOKEN. A fill ladder
@@ -1417,72 +1501,76 @@ class MemoEngine(spark: SparkSession, basePath: String,
   }
 
   /** The filter-aware serving FRONT DOOR — the BENCH_NOTES r14
-    * selectivity leg's finding as code. Cost shapes: the filtered
-    * brute path scans exactly the stats-surviving segments' rows (no
-    * artifact probe, no join); the filtered ANN path pays mask
-    * derivation + probed cells and wins once the corpus dwarfs them.
-    * Which is cheaper is decided by a BOUNDED number, not the corpus:
-    * the surviving segments' row counts off their (memoized) stats
-    * sidecars. When that upper bound is ≤ `bruteRows`, the pruned
-    * brute scan is O(bruteRows) whatever the chain or corpus size —
-    * take it, it is also EXACT; otherwise (many survivors, a missing
-    * sidecar making the bound unknowable, or no filter at all) serve
-    * from the ANN artifact. Unfiltered queries always probe: with no
-    * mask the brute arm would be the full corpus scan the artifact
-    * exists to avoid.
+    * selectivity leg's finding as code: [[serveRoute]] picks the arm
+    * (exact pruned brute scan, IVF probe, or compressed IVF-PQ probe)
+    * off two driver-side sidecar bounds, never a job; see there for the
+    * cost shapes. [[recallServeBatch]], [[hybridServe]] and
+    * [[hybridServeBatch]] route through the same function.
     *
     * CONTRACT PARITY across arms: every arm applies [[MemoOps.recall]]'s
     * −0.9 score floor (the reference's, memo_cli.py:294) to the RAW
     * cosine before rounding and before the top-k, so the same query
     * returns the same result SET whichever arm the row-count bound
-    * picks — the probe arms are [[annRecall]]/[[pqRecall]] (no floor by
-    * default, exact-fill contract) with `floor` threaded into the index
+    * picks — the probe arms are [[annRecall]]/[[pqRecall]]'s probe body
+    * (exact-fill contract) with `floor` threaded into the index
     * kernels' refine stage, identical floor semantics to the brute
     * scan's (a raw score in [−0.90005, −0.9) rounds to −0.9000 but is
     * excluded by EVERY arm, and above-floor rows fill top-k slots
-    * sub-floor rows would have wasted). The residual
-    * divergence is ANN approximation itself, never the floor.
-    *
-    * A second bound picks WHICH probe arm: when the survivors' raw
-    * vectors (bound × dim × 4 bytes — what the probed cells' re-rank
-    * would read in the worst case) exceed `pqBytes`, serve the
-    * COMPRESSED path ([[pqRecall]]: m-byte ADC codes, ~32× narrower,
-    * only k×refine survivors touch raw vectors); under it, the plain
-    * IVF probe reads the raw vectors directly. Unfiltered queries price
-    * the whole live chain's row count the same way (Σ all sidecars).
-    * Both numbers are driver-side sums of memoized sidecar longs —
-    * never a job. */
+    * sub-floor rows would have wasted). The residual divergence is ANN
+    * approximation itself, never the floor. */
   def recallServe(query: String, k: Int = MemoOps.DefaultK,
       filterExpr: Option[String] = None, nprobe: Int = 4,
       bruteRows: Long = 4096L,
-      pqBytes: Long = MemoEngine.DefaultServePqBytes): DataFrame = {
+      pqBytes: Long = MemoEngine.DefaultServePqBytes): DataFrame =
+    serveLeg(query, k, filterExpr, nprobe, bruteRows, pqBytes,
+      withBody = true)
+
+  /** The routed single-query semantic leg of [[recallServe]] and
+    * [[hybridServe]]: the brute arm is [[recall]]; the probe arms run
+    * [[probeRecall]] with the serving floor and the bound-aware ladder
+    * start. */
+  private def serveLeg(query: String, k: Int, filterExpr: Option[String],
+      nprobe: Int, bruteRows: Long, pqBytes: Long,
+      withBody: Boolean): DataFrame =
+    serveRoute(filterExpr, bruteRows, pqBytes) match {
+      case None => recall(query, k, filterExpr)
+      case Some(family) =>
+        probeRecall(family, query, k, nprobe, filterExpr,
+          floor = Some(MemoOps.ScoreFloor), adaptive = true, withBody)
+    }
+
+  /** THE route decision of every serving door. Which arm is cheaper is
+    * decided by BOUNDED numbers, not the corpus: the filter's surviving
+    * segments' row counts off their (memoized) stats sidecars
+    * ([[serveBound]]). When that upper bound is ≤ `bruteRows`, the
+    * pruned brute scan is O(bruteRows) whatever the chain or corpus
+    * size — take it, it is also EXACT (None). Otherwise (many
+    * survivors, a missing sidecar making the bound unknowable, or no
+    * filter at all) serve from a probe artifact: unfiltered queries
+    * always probe, since with no mask the brute arm would be the full
+    * corpus scan the artifacts exist to avoid. A second bound picks
+    * WHICH probe: when the candidates' raw vectors ([[serveVecBytes]]
+    * — what the probed cells' re-rank would read in the worst case)
+    * exceed `pqBytes`, the COMPRESSED family (m-byte ADC codes, ~32×
+    * narrower, only k×refine survivors touch raw vectors); under it,
+    * the plain IVF probe reads the raw vectors directly. Reports its
+    * decision through [[lastServeRoute]]. */
+  private def serveRoute(filterExpr: Option[String], bruteRows: Long,
+      pqBytes: Long): Option[AnnFamily] = {
     val bound = serveBound(filterExpr)
-    // floor parity: the probe arms floor the RAW cosine inside the
-    // kernels (before rounding AND before the top-k), exactly where the
-    // brute arm ([[MemoOps.recall]]) floors — a raw score in
-    // [−0.90005, −0.9) can't round up past the cut, and above-floor
-    // rows fill slots sub-floor rows would have wasted
-    def probeArm(): DataFrame =
-      if (serveVecBytes(bound) > pqBytes) {
-        lastServeRoute = Some(("pq", bound))
-        pqRecall(query, k, nprobe, filterExpr = filterExpr,
-          floor = Some(MemoOps.ScoreFloor), adaptiveProbe = true)
-      } else {
-        lastServeRoute = Some(("ann", bound))
-        annRecall(query, k, nprobe, filterExpr,
-          floor = Some(MemoOps.ScoreFloor), adaptiveProbe = true)
-      }
-    if (filterExpr.isDefined && bound <= bruteRows) {
-      lastServeRoute = Some(("brute", bound))
-      recall(query, k, filterExpr)
-    } else probeArm() // unfiltered never brutes: that IS the corpus scan
+    val route =
+      if (filterExpr.isDefined && bound <= bruteRows) None
+      else if (serveVecBytes(bound) > pqBytes) Some(new PqFamily(refine = 4))
+      else Some(IvfFamily)
+    lastServeRoute = Some((route.fold("brute")(_.route), bound))
+    route
   }
 
-  /** [[recallServe]]'s routing bound: Σ sidecar row counts of the
-    * filter's stats-surviving segments (all live segments when
-    * unfiltered) — driver-side memoized longs, never a job. One
-    * missing/undecodable sidecar makes the bound unknowable →
-    * Long.MaxValue (price blind as big). */
+  /** [[serveRoute]]'s row bound: Σ sidecar row counts of the filter's
+    * stats-surviving segments (all live segments when unfiltered) —
+    * driver-side memoized longs, never a job. One missing/undecodable
+    * sidecar makes the bound unknowable → Long.MaxValue (price blind as
+    * big). */
   private def serveBound(filterExpr: Option[String]): Long = {
     def rowBound(kept: Seq[Int], segs: Seq[String]): Long =
       kept.foldLeft(0L) { (acc, i) =>
@@ -1512,51 +1600,55 @@ class MemoEngine(spark: SparkSession, basePath: String,
     if (rows == Long.MaxValue) Long.MaxValue
     else rows * graft.functions.VectorKernels.DefaultDim * 4L
 
-  /** The BATCH front door — [[recallServe]]'s three-way routing for a
-    * query batch, decided ONCE from the same driver-side sidecar bounds
-    * (never per query: the bounds depend on the filter, not the query
-    * text). The brute arm is [[MemoOps.recallBatch]] over the
-    * stats-pruned (records ⨝ index) frame — [[recall]]'s exact contract
-    * (metadata filter, −0.9 raw floor, blank skip, HALF_UP round) per
-    * query in one pass; the probe arms are [[annRecallBatch]] /
-    * [[pqRecallBatch]] (exact-fill ladder included) with the floor
-    * re-applied, so the route choice never changes the result set
+  /** The BATCH front door — [[recallServe]]'s routing for a query batch,
+    * decided ONCE by [[serveRoute]] (never per query: the bounds depend
+    * on the filter, not the query text). The brute arm is
+    * [[MemoOps.recallBatch]] over the stats-pruned (records ⨝ index)
+    * frame — [[recall]]'s exact contract (metadata filter, −0.9 raw
+    * floor, blank skip, HALF_UP round) per query in one pass; the probe
+    * arms are the batch probe body (exact-fill ladder included) with the
+    * floor re-applied, so the route choice never changes the result set
     * beyond ANN approximation. Returns (query_id, id, score, body),
     * top-k SET per query, unordered. */
   def recallServeBatch(queries: DataFrame, queryIdCol: String,
       queryTextCol: String, k: Int = MemoOps.DefaultK,
       filterExpr: Option[String] = None, nprobe: Int = 4,
       bruteRows: Long = 4096L,
-      pqBytes: Long = MemoEngine.DefaultServePqBytes): DataFrame = {
-    val bound = serveBound(filterExpr)
-    if (filterExpr.isDefined && bound <= bruteRows) {
-      lastServeRoute = Some(("brute", bound))
-      val q = queries.select(
-        col(queryIdCol).cast("long").as("query_id"),
-        graft.functions.GraftFunctions.embedText(col(queryTextCol))
-          .as("qv"))
-      val (baseR, idx) = filterExpr.fold((records, index))(prunedPair)
-      MemoOps.recallBatch(baseR.join(idx, Seq("id")), q, k, filterExpr)
-        .join(filterExpr.fold(records)(recordsForFilter)
-          .select(col("id"), col("body")), Seq("id"))
-        .select(col("query_id"), col("id"), col("score"), col("body"))
-    } else if (serveVecBytes(bound) > pqBytes) {
-      lastServeRoute = Some(("pq", bound))
-      pqRecallBatch(queries, queryIdCol, queryTextCol, k, nprobe,
-        filterExpr = filterExpr, floor = Some(MemoOps.ScoreFloor),
-        adaptiveProbe = true)
-    } else {
-      lastServeRoute = Some(("ann", bound))
-      annRecallBatch(queries, queryIdCol, queryTextCol, k, nprobe,
-        filterExpr, floor = Some(MemoOps.ScoreFloor),
-        adaptiveProbe = true)
-    }
-  }
+      pqBytes: Long = MemoEngine.DefaultServePqBytes): DataFrame =
+    serveLegBatch(queries, queryIdCol, queryTextCol, k, filterExpr, nprobe,
+      bruteRows, pqBytes, withBody = true)
 
-  /** Test seam for the FILTERED batch serving path: (final nprobe,
-    * widening rungs) of the last [[annRecallBatch]] ladder — the batch
+  /** [[serveLeg]]'s batch twin, shared by [[recallServeBatch]] and
+    * [[hybridServeBatch]]: brute → [[bruteVecBatch]], probe →
+    * [[probeRecallBatch]] with the serving floor and bound-aware start. */
+  private def serveLegBatch(queries: DataFrame, queryIdCol: String,
+      queryTextCol: String, k: Int, filterExpr: Option[String],
+      nprobe: Int, bruteRows: Long, pqBytes: Long,
+      withBody: Boolean): DataFrame =
+    serveRoute(filterExpr, bruteRows, pqBytes) match {
+      case None =>
+        val ranked = bruteVecBatch(queries, queryIdCol, queryTextCol, k,
+          filterExpr)
+        if (!withBody) ranked else batchBodies(ranked, filterExpr)
+      case Some(family) =>
+        probeRecallBatch(family, queries, queryIdCol, queryTextCol, k,
+          nprobe, filterExpr, floor = Some(MemoOps.ScoreFloor),
+          adaptive = true, withBody)
+    }
+
+  /** A batch ranking's (query_id, id, score) joined to the bodies of
+    * the records the filter can reach. */
+  private def batchBodies(ranked: DataFrame,
+      filterExpr: Option[String]): DataFrame =
+    ranked
+      .join(filterExpr.fold(records)(recordsForFilter)
+        .select(col("id"), col("body")), Seq("id"))
+      .select(col("query_id"), col("id"), col("score"), col("body"))
+
+  /** Test seam for the FILTERED batch serving paths: (final nprobe,
+    * widening rungs) of the last batch ladder, either family — the batch
     * twin of [[lastFilteredAnnProbe]]. Production never reads it. */
-  private[graft] var lastBatchAnnWiden: Option[(Int, Int)] = None
+  private[graft] var lastBatchWiden: Option[(Int, Int)] = None
 
   /** The BATCH twin of [[annRecall]] over the SAME maintained IVF
     * artifact — the pipeline serving shape (thousands of queries, ONE
@@ -1571,178 +1663,93 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * bounded at any batch size).
     *
     * A `filterExpr` rides in as the same O(matching segments) candidate
-    * mask the single-query path derives — CACHED across every pass and
-    * slice (one matching-segments scan per call, not per slice) — and
-    * the filtered batch now carries [[annRecall]]'s EXACT-FILL contract:
-    * queries the first probe under-fills re-run at doubled nprobe
-    * ([[graft.ops.IvfIndex.searchBatchFill]]'s per-query-id ladder), so
-    * every query returns min(k, its matching survivors) rows while
-    * filled queries keep their one-pass cost. The single-query
-    * shortcuts port too: ≤ k mask survivors jumps every query straight
-    * to the full probe (no intermediate rung can fill anyone), and an
-    * empty mask returns no rows with zero scans. The unfiltered batch
-    * stays single-pass approximate — the same contract as unfiltered
-    * [[annRecall]], where an under-filled k means the probed cells
-    * genuinely lack rows and widening is a quality (nprobe) choice, not
-    * a correctness one. Returns (query_id, id, score, body), top-k SET
-    * per query, unordered. An empty/uncommitted store returns no rows. */
+    * mask the single-query path derives, and the filtered batch carries
+    * [[annRecall]]'s EXACT-FILL contract through [[probeRecallBatch]]'s
+    * per-query-id ladder. The unfiltered batch stays single-pass
+    * approximate — the same contract as unfiltered [[annRecall]], where
+    * an under-filled k means the probed cells genuinely lack rows and
+    * widening is a quality (nprobe) choice, not a correctness one.
+    * Returns (query_id, id, score, body), top-k SET per query,
+    * unordered. An empty/uncommitted store returns no rows. */
   def annRecallBatch(queries: DataFrame, queryIdCol: String,
       queryTextCol: String, k: Int = MemoOps.DefaultK, nprobe: Int = 4,
       filterExpr: Option[String] = None,
-      floor: Option[Double] = None,
-      adaptiveProbe: Boolean = false,
-      withBody: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.types._
-    val outSchema = StructType(Seq(
-      StructField("query_id", LongType), StructField("id", LongType),
-      StructField("score", DoubleType), StructField("body", StringType)))
-    val srvTok = beginServingCall()
-    try ensureIvf() match {
-      case Some(centroids) =>
-        val q = queries.select(
-          col(queryIdCol).cast("long").as("query_id"),
-          graft.functions.GraftFunctions.embedText(col(queryTextCol))
-            .as("qv"))
-        val idx = graft.ops.IvfIndex.load(spark, ivfDir)
-        val nlist = centroids.length
-        filterExpr match {
-          case None =>
-            val ranked = graft.ops.IvfIndex.searchBatch(idx, centroids,
-              q, "query_id", "qv", k, math.min(nprobe, nlist),
-              rawFloor = floor)
-            if (!withBody)
-              ranked.select(col("query_id"), col("id"), col("score"))
-            else ranked
-              .join(records.select(col("id"), col("body")), Seq("id"))
-              .select(col("query_id"), col("id"), col("score"),
-                col("body"))
-          case Some(f) =>
-            // eagerly MATERIALIZED (localCheckpoint), not cache()d: the
-            // ladder's final full-probe rung stays lazy (its fill-count
-            // job decides nothing and is skipped), so the mask must
-            // survive until the caller consumes the result — a
-            // CacheManager entry would need unpersist bookkeeping (and
-            // identical filter plans across calls SHARE one entry, so a
-            // drain could uncache an in-flight twin); checkpointed
-            // blocks are reclaimed by the ContextCleaner when the
-            // result frame becomes unreachable
-            val mask = annMask(f).localCheckpoint(true)
-            val survivors = mask.count()
-            if (survivors == 0) {
-              lastBatchAnnWiden = Some((0, 0))
-              emptyFrame(outSchema)
-            } else {
-              val np0 =
-                if (survivors <= k) nlist
-                else {
-                  val base = math.min(math.max(nprobe, 1), nlist)
-                  if (adaptiveProbe) math.min(nlist, math.max(base,
-                    MemoEngine.adaptiveNprobe(k, nlist, survivors)))
-                  else base
-                }
-              val (hits, widen) = graft.ops.IvfIndex.searchBatchFill(
-                idx, centroids, q, "query_id", "qv", k, np0,
-                allowed = Some(mask), rawFloor = floor,
-                track = registerServingCache(srvTok))
-              lastBatchAnnWiden =
-                Some(if (survivors <= k && np0 > nprobe)
-                  (widen._1, widen._2 + 1) else widen)
-              afterServingLadderHook(srvTok)
-              if (!withBody)
-                hits.select(col("query_id"), col("id"), col("score"))
-              else hits
-                .join(recordsForFilter(f).select(col("id"), col("body")),
-                  Seq("id"))
-                .select(col("query_id"), col("id"), col("score"),
-                  col("body"))
-            }
-        }
-      case None => emptyFrame(outSchema)
-    } finally endServingCall(srvTok)
-  }
-
-  /** [[lastBatchAnnWiden]]'s twin for the compressed batch path. */
-  private[graft] var lastBatchPqWiden: Option[(Int, Int)] = None
+      floor: Option[Double] = None): DataFrame =
+    probeRecallBatch(IvfFamily, queries, queryIdCol, queryTextCol, k,
+      nprobe, filterExpr, floor, adaptive = false, withBody = true)
 
   /** The BATCH twin of [[pqRecall]] — [[annRecallBatch]]'s contract on
     * the engine-maintained IVF-PQ artifact: queries embed IN THE PLAN,
     * the probed cells' m-byte codes pay the ADC candidate stage (~32×
     * narrower than the raw vectors), and only the ≤ k×refine survivors
     * per query touch raw vectors for the exact re-rank
-    * ([[graft.ops.PqIndex.searchBatchIvfPq]]). The filtered arm carries
-    * the EXACT-FILL contract through the shared per-query-id widening
-    * ladder (mask BEFORE the ADC cut, so the cut can never starve the
-    * fill; ≤ k survivors jump to full probe; empty mask returns no rows
-    * with zero scans; the mask is cached across every pass and slice).
-    * The unfiltered batch stays single-pass approximate, matching
-    * unfiltered [[pqRecall]]. Returns (query_id, id, score, body),
-    * top-k SET per query, unordered. Empty/uncommitted store → no
-    * rows. */
+    * ([[graft.ops.PqIndex.searchBatchIvfPq]]). The filter mask applies
+    * BEFORE the ADC cut, so the cut can never starve the fill. Returns
+    * (query_id, id, score, body), top-k SET per query, unordered.
+    * Empty/uncommitted store → no rows. */
   def pqRecallBatch(queries: DataFrame, queryIdCol: String,
       queryTextCol: String, k: Int = MemoOps.DefaultK, nprobe: Int = 4,
       refine: Int = 4, filterExpr: Option[String] = None,
-      floor: Option[Double] = None,
-      adaptiveProbe: Boolean = false,
-      withBody: Boolean = true): DataFrame = {
+      floor: Option[Double] = None): DataFrame =
+    probeRecallBatch(new PqFamily(refine), queries, queryIdCol,
+      queryTextCol, k, nprobe, filterExpr, floor, adaptive = false,
+      withBody = true)
+
+  /** The ONE batch probe body both families share. The filtered arm's
+    * mask is eagerly MATERIALIZED (localCheckpoint), not cache()d: the
+    * ladder's final full-probe rung stays lazy (its fill-count job
+    * decides nothing and is skipped), so the mask must survive until
+    * the caller consumes the result — a CacheManager entry would need
+    * unpersist bookkeeping (and identical filter plans across calls
+    * SHARE one entry, so a drain could uncache an in-flight twin);
+    * checkpointed blocks are reclaimed by the ContextCleaner when the
+    * result frame becomes unreachable. Queries the first probe
+    * under-fills re-run at doubled nprobe (the kernels' per-query-id
+    * fill ladder), so every query returns min(k, its matching
+    * survivors) rows while filled queries keep their one-pass cost; the
+    * start width is [[startProbe]]'s (≤ k survivors jump every query
+    * to the full probe), and an empty mask returns no rows with zero
+    * scans. The ladder's rung caches register under this call's
+    * serving token ([[servingCaches]]). `withBody = false` returns
+    * (query_id, id, score) for the hybrid fusion tail. */
+  private def probeRecallBatch(family: AnnFamily, queries: DataFrame,
+      queryIdCol: String, queryTextCol: String, k: Int, nprobe: Int,
+      filterExpr: Option[String], floor: Option[Double], adaptive: Boolean,
+      withBody: Boolean): DataFrame = {
     import org.apache.spark.sql.types._
     val outSchema = StructType(Seq(
       StructField("query_id", LongType), StructField("id", LongType),
       StructField("score", DoubleType), StructField("body", StringType)))
+    def bodies(ranked: DataFrame): DataFrame =
+      if (!withBody)
+        ranked.select(col("query_id"), col("id"), col("score"))
+      else batchBodies(ranked, filterExpr)
     val srvTok = beginServingCall()
-    try ensurePq() match {
-      case Some((centroids, codebooks)) =>
+    try family.open() match {
+      case Some(probe) =>
         val q = queries.select(
           col(queryIdCol).cast("long").as("query_id"),
           graft.functions.GraftFunctions.embedText(col(queryTextCol))
             .as("qv"))
-        val codes = graft.ops.PqIndex.loadCodes(spark, pqDir)
-        val nlist = centroids.length
         filterExpr match {
           case None =>
-            val ranked = graft.ops.PqIndex.searchBatchIvfPq(codes,
-              index, "id", "embedding", centroids, codebooks, q,
-              "query_id", "qv", k, math.min(nprobe, nlist), refine,
-              rawFloor = floor)
-            if (!withBody)
-              ranked.select(col("query_id"), col("id"), col("score"))
-            else ranked
-              .join(records.select(col("id"), col("body")), Seq("id"))
-              .select(col("query_id"), col("id"), col("score"),
-                col("body"))
+            bodies(probe.searchBatch(q, k, math.min(nprobe, probe.nlist),
+              floor))
           case Some(f) =>
-            // see annRecallBatch: eagerly materialized, never cache()d —
-            // the lazy final rung reads checkpointed blocks at
-            // consumption, reclaimed by the ContextCleaner afterwards
             val mask = annMask(f).localCheckpoint(true)
             val survivors = mask.count()
             if (survivors == 0) {
-              lastBatchPqWiden = Some((0, 0))
+              lastBatchWiden = Some((0, 0))
               emptyFrame(outSchema)
             } else {
-              val np0 =
-                if (survivors <= k) nlist
-                else {
-                  val base = math.min(math.max(nprobe, 1), nlist)
-                  if (adaptiveProbe) math.min(nlist, math.max(base,
-                    MemoEngine.adaptiveNprobe(k, nlist, survivors)))
-                  else base
-                }
-              val (hits, widen) = graft.ops.PqIndex.searchBatchFillIvfPq(
-                codes, index, "id", "embedding", centroids, codebooks,
-                q, "query_id", "qv", k, np0, refine,
-                allowed = Some(mask), rawFloor = floor,
-                track = registerServingCache(srvTok))
-              lastBatchPqWiden =
-                Some(if (survivors <= k && np0 > nprobe)
-                  (widen._1, widen._2 + 1) else widen)
+              val (np0, jumped) =
+                startProbe(k, nprobe, probe.nlist, survivors, adaptive)
+              val (hits, widen) = probe.searchBatchFill(q, k, np0, mask,
+                floor, registerServingCache(srvTok))
+              lastBatchWiden =
+                Some(if (jumped) (widen._1, widen._2 + 1) else widen)
               afterServingLadderHook(srvTok)
-              if (!withBody)
-                hits.select(col("query_id"), col("id"), col("score"))
-              else hits
-                .join(recordsForFilter(f).select(col("id"), col("body")),
-                  Seq("id"))
-                .select(col("query_id"), col("id"), col("score"),
-                  col("body"))
+              bodies(hits)
             }
         }
       case None => emptyFrame(outSchema)
@@ -1826,56 +1833,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * when survivors exceed k×refine), PQ's standard approximation. */
   def pqRecall(query: String, k: Int = MemoOps.DefaultK, nprobe: Int = 4,
       refine: Int = 4, filterExpr: Option[String] = None,
-      floor: Option[Double] = None,
-      adaptiveProbe: Boolean = false): DataFrame =
-    pqRecallImpl(query, k, nprobe, refine, filterExpr, floor,
-      adaptiveProbe, withBody = true)
-
-  /** [[pqRecall]] with the body join/sort optionally elided — the
-    * [[annRecallImpl]] rationale on the compressed arm. */
-  private def pqRecallImpl(query: String, k: Int, nprobe: Int,
-      refine: Int, filterExpr: Option[String],
-      floor: Option[Double],
-      adaptiveProbe: Boolean, withBody: Boolean): DataFrame =
-    ensurePq() match {
-      case Some((centroids, codebooks)) =>
-        val qv = VectorKernels.hashEmbedFloats(query, VectorKernels.DefaultDim)
-        val codes = graft.ops.PqIndex.loadCodes(spark, pqDir)
-        filterExpr match {
-          case None =>
-            val ranked = graft.ops.PqIndex.searchIvfPq(codes, index, "id",
-                "embedding", centroids, codebooks, qv, k,
-                math.min(nprobe, centroids.length), refine,
-                rawFloor = floor)
-              .select(col("id"), col("score"))
-            if (!withBody) ranked
-            else ranked
-              .join(records.select(col("id"), col("body")), Seq("id"))
-              .orderBy(desc("score"), col("id"))
-          case Some(f) =>
-            val mask = annMask(f).cache()
-            try {
-              val hits = widenToFill(k, nprobe, centroids.length,
-                  mask.count(), adaptiveProbe) { np =>
-                graft.ops.PqIndex.searchIvfPq(codes, index, "id",
-                  "embedding", centroids, codebooks, qv, k, np, refine,
-                  Some(mask), rawFloor = floor).collect()
-              }
-              import spark.implicits._
-              val ranked = spark.createDataset(hits.toSeq
-                  .map(r => (r.getLong(0), r.getDouble(1))))
-                .toDF("id", "score")
-              if (!withBody) ranked
-              else ranked
-                .join(recordsForFilter(f).select(col("id"), col("body")),
-                  Seq("id"))
-                .orderBy(desc("score"), col("id"))
-            } finally mask.unpersist()
-        }
-      case None =>
-        recall(query, k, filterExpr)
-          .select(col("id"), col("score"), col("body"))
-    }
+      floor: Option[Double] = None): DataFrame =
+    probeRecall(new PqFamily(refine), query, k, nprobe, filterExpr, floor,
+      adaptive = false, withBody = true)
 
   private def sigDir: String = base.resolve("_minhash").toString
 
@@ -2737,8 +2697,8 @@ class MemoEngine(spark: SparkSession, basePath: String,
       filterExpr: Option[String] = None, perList: Int = 50,
       ann: Boolean = false, annNprobe: Int = 4): DataFrame = {
     val vecBase =
-      if (ann) annRecallImpl(query, perList, annNprobe, filterExpr,
-        floor = None, adaptiveProbe = false, withBody = false)
+      if (ann) probeRecall(IvfFamily, query, perList, annNprobe, filterExpr,
+        floor = None, adaptive = false, withBody = false)
       else recall(query, perList, filterExpr)
     hybridFuse(query, k, filterExpr, perList, vecBase)
   }
@@ -2766,28 +2726,13 @@ class MemoEngine(spark: SparkSession, basePath: String,
   def hybridServe(query: String, k: Int = MemoOps.DefaultK,
       filterExpr: Option[String] = None, perList: Int = 50,
       nprobe: Int = 4, bruteRows: Long = 4096L,
-      pqBytes: Long = MemoEngine.DefaultServePqBytes): DataFrame = {
-    val bound = serveBound(filterExpr)
-    val vecBase =
-      if (filterExpr.isDefined && bound <= bruteRows) {
-        lastServeRoute = Some(("brute", bound))
-        recall(query, perList, filterExpr)
-      } else if (serveVecBytes(bound) > pqBytes) {
-        lastServeRoute = Some(("pq", bound))
-        // body-less arm: the fusion tail consumes (id, score) only and
-        // rejoins bodies once after fusion — same fused ranking, one
-        // records scan + global sort fewer per serve
-        pqRecallImpl(query, perList, nprobe, refine = 4,
-          filterExpr = filterExpr, floor = Some(MemoOps.ScoreFloor),
-          adaptiveProbe = true, withBody = false)
-      } else {
-        lastServeRoute = Some(("ann", bound))
-        annRecallImpl(query, perList, nprobe, filterExpr,
-          floor = Some(MemoOps.ScoreFloor), adaptiveProbe = true,
-          withBody = false)
-      }
-    hybridFuse(query, k, filterExpr, perList, vecBase)
-  }
+      pqBytes: Long = MemoEngine.DefaultServePqBytes): DataFrame =
+    // body-less probe arms: the fusion tail consumes (id, score) only and
+    // rejoins bodies once after fusion — same fused ranking, one records
+    // scan + global sort fewer per serve
+    hybridFuse(query, k, filterExpr, perList,
+      serveLeg(query, perList, filterExpr, nprobe, bruteRows, pqBytes,
+        withBody = false))
 
   /** [[hybridRecall]]'s fusion tail, shared with [[hybridServe]]: rank
     * the semantic leg, probe the postings artifact for the lexical leg,
@@ -2858,8 +2803,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
       ann: Boolean = false, annNprobe: Int = 4): DataFrame = {
     if (currentVersion.isEmpty) return emptyFrame(hybridBatchSchema)
     val vecBase =
-      if (ann) annRecallBatch(queries, queryIdCol, queryTextCol, perList,
-        annNprobe, filterExpr, withBody = false)
+      if (ann) probeRecallBatch(IvfFamily, queries, queryIdCol,
+        queryTextCol, perList, annNprobe, filterExpr, floor = None,
+        adaptive = false, withBody = false)
       else bruteVecBatch(queries, queryIdCol, queryTextCol, perList,
         filterExpr)
     hybridFuseBatch(queries, queryIdCol, queryTextCol, k, filterExpr,
@@ -2883,23 +2829,8 @@ class MemoEngine(spark: SparkSession, basePath: String,
       nprobe: Int = 4, bruteRows: Long = 4096L,
       pqBytes: Long = MemoEngine.DefaultServePqBytes): DataFrame = {
     if (currentVersion.isEmpty) return emptyFrame(hybridBatchSchema)
-    val bound = serveBound(filterExpr)
-    val vecBase =
-      if (filterExpr.isDefined && bound <= bruteRows) {
-        lastServeRoute = Some(("brute", bound))
-        bruteVecBatch(queries, queryIdCol, queryTextCol, perList,
-          filterExpr)
-      } else if (serveVecBytes(bound) > pqBytes) {
-        lastServeRoute = Some(("pq", bound))
-        pqRecallBatch(queries, queryIdCol, queryTextCol, perList, nprobe,
-          filterExpr = filterExpr, floor = Some(MemoOps.ScoreFloor),
-          adaptiveProbe = true, withBody = false)
-      } else {
-        lastServeRoute = Some(("ann", bound))
-        annRecallBatch(queries, queryIdCol, queryTextCol, perList, nprobe,
-          filterExpr, floor = Some(MemoOps.ScoreFloor),
-          adaptiveProbe = true, withBody = false)
-      }
+    val vecBase = serveLegBatch(queries, queryIdCol, queryTextCol, perList,
+      filterExpr, nprobe, bruteRows, pqBytes, withBody = false)
     hybridFuseBatch(queries, queryIdCol, queryTextCol, k, filterExpr,
       perList, vecBase)
   }
@@ -3010,17 +2941,6 @@ class MemoEngine(spark: SparkSession, basePath: String,
     parsed match {
       case None => (segs.indices.toSeq, segs, v)
       case Some(fm) =>
-        // generation-scoped eviction: a filtered read SWEEPS the whole
-        // live chain, so the cache's true working set IS the live
-        // segment list — once over the threshold, drop only entries no
-        // longer in the live manifest (vacuumed/rewritten dirs, the one
-        // source of unbounded growth). A wholesale clear (or LRU, which
-        // a sequential over-cap sweep thrashes to 100% miss) would
-        // forfeit the "100k sidecars read ONCE" contract on long chains.
-        if (statsCache.size > statsCacheMax) {
-          val live = segs.toSet
-          statsCache.keySet.removeIf(k => !live.contains(k))
-        }
         val kept = segs.indices.filter { i =>
           readMetaStats(segs(i))
             .forall(graft.filter.SegmentStats.canMatch(fm, _))
@@ -3034,7 +2954,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * "has no sidecar", which a promoted dir can never gain — memoize
     * per engine instance: a filtered read against a 100k-segment chain
     * costs 100k sidecar file reads ONCE, not per query. Growth is
-    * bounded GENERATION-scoped (see [[prunedSegmentLists]]): past the
+    * bounded GENERATION-scoped (see [[readMetaStats]]): past the
     * threshold, entries for dirs no longer in the live manifest are
     * dropped — the cache tracks the live chain, never the churn
     * history. */
@@ -3044,11 +2964,29 @@ class MemoEngine(spark: SparkSession, basePath: String,
   private[graft] def statsCacheSize: Int = statsCache.size
   private[graft] val statsSidecarReads =
     new java.util.concurrent.atomic.AtomicLong(0) // spec observability
+  /** The live version the last eviction sweep ran against. */
+  private val statsSweptAt = new java.util.concurrent.atomic.AtomicLong(-1L)
 
+  /** Every stats read in the engine (filtered pruning, the serve
+    * router's bound, the maintenance cost route, WHERE-scoped view
+    * scans) comes through here, so the cache's eviction lives here too.
+    * Generation-scoped: on a MISS with the cache over the threshold,
+    * drop only the entries no longer in the live manifest
+    * (vacuumed/rewritten dirs, the one source of unbounded growth) —
+    * once per live version, so a cold pass over an over-threshold chain
+    * pays one sweep, not one per segment. A wholesale clear (or LRU,
+    * which a sequential over-cap sweep thrashes to 100% miss) would
+    * forfeit the "100k sidecars read ONCE" contract on long chains. */
   private def readMetaStats(segDir: String)
       : Option[graft.filter.SegmentStats] = {
     val cached = statsCache.get(segDir)
     if (cached != null) return cached
+    if (statsCache.size > statsCacheMax) currentVersion.foreach { v =>
+      if (statsSweptAt.getAndSet(v) != v) {
+        val live = segments(v, "records").toSet
+        statsCache.keySet.removeIf(k => !live.contains(k))
+      }
+    }
     statsSidecarReads.incrementAndGet()
     val p = Paths.get(segDir).resolve("_metastats")
     val st =

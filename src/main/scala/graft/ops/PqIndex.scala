@@ -270,7 +270,9 @@ object PqIndex {
   }
 
   /** Append-intent journals + pending-delete tombstones (underscore
-    * names: invisible to parquet reads of `path`). */
+    * names: invisible to parquet reads of `path`). Flat codes have no
+    * append path; [[buildIfAbsent]] still reads `_pq_journal` so an
+    * artifact an older append left torn is treated as stale and rebuilt. */
   private val Journal = "_pq_journal"
   private val IvfPqJournal = "_ivfpq_journal"
   private def tombDir(path: String) = s"$path/_tombstones"
@@ -289,39 +291,63 @@ object PqIndex {
     * ([[IvfIndex.stableRead]]'s contract: complete-old-or-complete-new
     * even against back-to-back apply/append pairs; the manifest read is
     * HEADER-ONLY, the codebook matrices are never touched) — excluding
-    * any docs retracted by [[delete]]/[[deleteIvfPq]]
+    * any docs retracted by [[deleteIvfPq]]
     * ([[ArtifactMeta.excludeTombstones]]). */
   def loadCodes(spark: SparkSession, path: String): DataFrame =
     IvfIndex.stableRead(spark, path, IvfPqMetaName, m =>
       ArtifactMeta.excludeTombstones(
         IvfIndex.resolveCellData(spark, path, m), tombDir(path), "id"))
 
-  /** Retract documents from a codes artifact WITHOUT a rebuild —
-    * [[IvfIndex.delete]]'s contract on the PQ artifacts: tombstone the
-    * ids (probes exclude them via [[loadCodes]]' anti-join), retreat the
-    * stamp facts additively, journal the window. A later
-    * [[buildIfAbsent]] over corpus ∖ batch validates without re-encoding;
-    * the next full rewrite (rebuild or [[compactIvfPq]]) folds the
-    * tombstones away physically. Same id contract as every delete path:
-    * the batch must be exactly rows previously encoded. */
-  def delete(batch: DataFrame, idCol: String, embCol: String,
-      path: String): Unit =
-    deleteTagged(batch, idCol, embCol, path, Journal, MetaName,
-      splitArity = 5)
-
-  /** [[delete]] for a persisted IVF-PQ index. */
+  /** Retract documents from a persisted IVF-PQ index WITHOUT a rebuild
+    * — [[IvfIndex.delete]]'s contract on the composed artifact:
+    * tombstone the ids (probes exclude them via [[loadCodes]]'
+    * anti-join), retreat the stamp facts additively, journal the window.
+    * A later [[buildIfAbsentIvfPq]] over corpus ∖ batch validates
+    * without re-encoding; [[applyDeletesIvfPq]] (or the next full
+    * rewrite) folds the tombstones away physically. Same id contract as
+    * every delete path: the batch must be exactly rows previously
+    * encoded. The stamp is `count:nlist:m:ksub:sampleFraction:fp<sum>`,
+    * so the retreat rewrites fields 0 and last and preserves the config
+    * middle verbatim. */
   def deleteIvfPq(batch: DataFrame, idCol: String, embCol: String,
-      path: String): Unit =
-    deleteTagged(batch, idCol, embCol, path, IvfPqJournal, IvfPqMetaName,
-      splitArity = 6)
+      path: String): Unit = ArtifactMeta.withBuildLock(batch, path) {
+    val spark = batch.sparkSession
+    val lines = readMetaFileLines(hconf(batch), path, IvfPqMetaName)
+      .getOrElse(throw new IllegalStateException(
+        s"no PQ artifact at $path — build before delete"))
+    val stamp = lines.head
+    ArtifactMeta.journalGuard(spark, path, IvfPqJournal, stamp)
+    val parts = stamp.split(":", 6)
+    require(parts.length == 6 && parts.last.startsWith("fp"),
+      s"PQ artifact at $path has a pre-lifecycle stamp — rebuild it")
+    val (bn, bfp) = ArtifactMeta.fingerprint(batch, Seq(idCol, embCol))
+    val n = parts(0).toLong - bn
+    require(n >= 0, s"delete batch exceeds artifact contents at $path " +
+      s"(${parts(0)} rows, $bn deleted) — id contract violated")
+    val next = (n.toString +: parts.tail.init :+
+      s"fp${BigInt(parts.last.drop(2)) - bfp}").mkString(":")
+    ArtifactMeta.write(spark, path, IvfPqJournal, next)
+    batch.select(col(idCol).as("id")).distinct()
+      .write.mode("append").parquet(tombDir(path))
+    // legacy (pre-manifest) artifacts get their cell manifest PINNED
+    // here, one maintenance cycle before any physical apply
+    // ([[IvfIndex.delete]]'s migration contract)
+    val body =
+      if (lines.exists(_.startsWith("base:"))) lines.tail
+      else {
+        val (occ, rest) = lines.tail.span(_.startsWith("occ:"))
+        occ ++ IvfIndex.CellManifest.render(
+          IvfIndex.freshManifest(spark, path)) ++ rest
+      }
+    writeMetaFileLines(hconf(batch), path, IvfPqMetaName, next +: body)
+    ArtifactMeta.delete(spark, path, IvfPqJournal)
+  }
 
   /** Apply pending IVF-PQ tombstones physically — [[IvfIndex.applyDeletes]]
     * on the composed artifact: rewrite only the affected `cell_id=`
     * partitions (the shared [[IvfIndex.swapAffectedCells]] swap), clear
     * the tombstone table, refresh the stored occupancy. Returns true iff
-    * anything was applied. Flat codes have no partitions to swap — their
-    * tombstones fold away on the next full rewrite (rebuild or
-    * [[compactIvfPq]]). Inherits [[IvfIndex.applyDeletes]]'s
+    * anything was applied. Inherits [[IvfIndex.applyDeletes]]'s
     * manifest-gated visibility contract verbatim: the cell manifest
     * rides in `_ivfpq_meta`, one atomic swap publishes it, and a probe
     * racing the apply sees complete-old, complete-new, or the documented
@@ -359,46 +385,6 @@ object PqIndex {
           true
       }
     }
-
-  /** Shared tombstone-delete body: both PQ artifacts stamp
-    * `count:<config...>:fp<sum>`, so the retreat rewrites fields 0 and
-    * last and preserves the config middle verbatim. */
-  private def deleteTagged(batch: DataFrame, idCol: String, embCol: String,
-      path: String, journal: String, metaName: String,
-      splitArity: Int): Unit = ArtifactMeta.withBuildLock(batch, path) {
-    val spark = batch.sparkSession
-    val lines = readMetaFileLines(hconf(batch), path, metaName).getOrElse(
-      throw new IllegalStateException(
-        s"no PQ artifact at $path — build before delete"))
-    val stamp = lines.head
-    ArtifactMeta.journalGuard(spark, path, journal, stamp)
-    val parts = stamp.split(":", splitArity)
-    require(parts.length == splitArity && parts.last.startsWith("fp"),
-      s"PQ artifact at $path has a pre-lifecycle stamp — rebuild it")
-    val (bn, bfp) = ArtifactMeta.fingerprint(batch, Seq(idCol, embCol))
-    val n = parts(0).toLong - bn
-    require(n >= 0, s"delete batch exceeds artifact contents at $path " +
-      s"(${parts(0)} rows, $bn deleted) — id contract violated")
-    val next = (n.toString +: parts.tail.init :+
-      s"fp${BigInt(parts.last.drop(2)) - bfp}").mkString(":")
-    ArtifactMeta.write(spark, path, journal, next)
-    batch.select(col(idCol).as("id")).distinct()
-      .write.mode("append").parquet(tombDir(path))
-    // legacy (pre-manifest) IVF-PQ artifacts get their cell manifest
-    // PINNED here, one maintenance cycle before any physical apply
-    // ([[IvfIndex.delete]]'s migration contract); flat codes have no
-    // cell layout to manifest
-    val body =
-      if (metaName != IvfPqMetaName || lines.exists(_.startsWith("base:")))
-        lines.tail
-      else {
-        val (occ, rest) = lines.tail.span(_.startsWith("occ:"))
-        occ ++ IvfIndex.CellManifest.render(
-          IvfIndex.freshManifest(spark, path)) ++ rest
-      }
-    writeMetaFileLines(hconf(batch), path, metaName, next +: body)
-    ArtifactMeta.delete(spark, path, journal)
-  }
 
   /** Codebooks of a persisted codes table, straight off its stamp file —
     * for oracle exporters that must be a pure function of on-disk state. */
@@ -523,56 +509,18 @@ object PqIndex {
       pqEncode(col(embCol), codebooks).as("code"),
       nearestCentroid(col(embCol), centroids).as("cell_id"))
 
-  /** Append a batch to a persisted codes table WITHOUT retraining or
-    * rewriting — [[IvfIndex.append]]'s contract on the PQ artifact: the
-    * codebooks are REUSED from the stamp file (a quantizer does not need
-    * retraining for an ingest increment; quantization error drifts only as
-    * the data distribution does, and [[searchAdcRefine]]'s exact re-rank
-    * absorbs it), the batch is codegen-encoded, and its rows land as NEW
-    * files (`mode("append")` — existing files are never read or rewritten,
-    * so the cost is O(batch) regardless of artifact size). The stamp
-    * advances additively ([[ArtifactMeta.fingerprint]] is an additive
-    * sum), so a later [[buildIfAbsent]] over the grown corpus validates
-    * instead of re-encoding.
-    *
-    * Returns the (reused) codebooks. */
-  def append(batch: DataFrame, idCol: String, embCol: String,
-      path: String): Array[Array[Array[Float]]] =
-      ArtifactMeta.withBuildLock(batch, path) {
-    val meta = readMeta(batch, path).getOrElse(throw new IllegalStateException(
-      s"no PQ codes artifact at $path — run buildIfAbsent before append"))
-    val Array(count, m, ksub, sampleFraction, fp) =
-      meta.stamp.split(":", 5) match {
-        case a if a.length == 5 && a(4).startsWith("fp") => a
-        case _ => throw new IllegalStateException(
-          s"PQ artifact at $path predates content-fingerprint stamps — " +
-            "delete it (or its _pq_codebooks) and rebuild")
-      }
-    // journal protocol (the Lexical shape): a crash between the data
-    // write and the stamp advance must be detectable, not silently served
-    ArtifactMeta.journalGuard(batch.sparkSession, path, Journal, meta.stamp)
-    // tombstone half of the ID CONTRACT (the [[graft.ops.Lexical.append]]
-    // rule): a pending-delete id may not be re-appended — its old codes
-    // rows are still present, so the tombstone would mask the new rows
-    // while the stamp advanced. Flat codes apply deletes only on a full
-    // rewrite, hence the rebuild hint.
-    ArtifactMeta.requireNoPendingTombstones(batch, idCol, tombDir(path),
-      "rebuild the codes artifact first")
-    val (bn, bfp) = ArtifactMeta.fingerprint(batch, Seq(idCol, embCol))
-    val next =
-      s"${count.toLong + bn}:$m:$ksub:$sampleFraction:fp${BigInt(fp.drop(2)) + bfp}"
-    ArtifactMeta.write(batch.sparkSession, path, Journal, next)
-    encode(batch, idCol, embCol, meta.codebooks)
-      .write.mode("append").parquet(path)
-    writeMeta(batch, path, Meta(next, meta.codebooks))
-    ArtifactMeta.delete(batch.sparkSession, path, Journal)
-    meta.codebooks
-  }
-
-  /** [[append]] for a persisted IVF-PQ index: both quantizers reused from
-    * the stamp file, the batch lands as new files inside the existing
-    * `cell_id=` partitions, the stamp advances additively, and the stored
-    * per-cell occupancy is refreshed (a partition-column-only scan) so
+  /** Append a batch to a persisted IVF-PQ index WITHOUT retraining or
+    * rewriting — [[IvfIndex.append]]'s contract on the composed
+    * artifact: both quantizers are REUSED from the stamp file (a
+    * quantizer does not need retraining for an ingest increment;
+    * quantization error drifts only as the data distribution does, and
+    * the exact refine re-rank absorbs it), the batch lands as new files
+    * inside the existing `cell_id=` partitions (existing files are never
+    * read or rewritten — O(batch) regardless of artifact size), the
+    * stamp advances additively ([[ArtifactMeta.fingerprint]] is an
+    * additive sum, so a later [[buildIfAbsentIvfPq]] over the grown
+    * corpus validates instead of re-encoding), and the stored per-cell
+    * occupancy is refreshed (a partition-column-only scan) so
     * [[compactIvfPq]]'s drift check stays metadata-only.
     *
     * Returns the (reused) (centroids, codebooks). */
@@ -591,8 +539,10 @@ object PqIndex {
       }
     ArtifactMeta.journalGuard(batch.sparkSession, path, IvfPqJournal,
       meta.stamp)
-    // tombstone half of the ID CONTRACT — see [[append]]; IVF-PQ has a
-    // physical apply, so the hint names it.
+    // tombstone half of the ID CONTRACT (the [[graft.ops.Lexical.append]]
+    // rule): a pending-delete id may not be re-appended — its old codes
+    // rows are still present, so the tombstone would mask the new rows
+    // while the stamp advanced
     ArtifactMeta.requireNoPendingTombstones(batch, idCol, tombDir(path),
       "run applyDeletesIvfPq first")
     val (bn, bfp) = ArtifactMeta.fingerprint(batch, Seq(idCol, embCol))

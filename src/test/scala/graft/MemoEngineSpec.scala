@@ -841,7 +841,7 @@ class MemoEngineSpec extends SparkTestBase {
       .collect()
       .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val widen = engine.lastBatchAnnWiden.getOrElse((0, 0))
+    val widen = engine.lastBatchWiden.getOrElse((0, 0))
     assert(widen._2 >= 1 && widen._1 > 1,
       s"expected the batch ladder to widen from nprobe=1, got $widen")
     queries.collect().foreach { r =>
@@ -860,9 +860,9 @@ class MemoEngineSpec extends SparkTestBase {
     val fewSurvivors = engine.annRecallBatch(queries, "qid", "qtext",
         k = 5, nprobe = 1, filterExpr = Some("{hot: h1}"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(engine.lastBatchAnnWiden ==
+    assert(engine.lastBatchWiden ==
         Some((MemoEngine.AnnNlist, 1)),
-      s"expected the <=k shortcut report, got ${engine.lastBatchAnnWiden}")
+      s"expected the <=k shortcut report, got ${engine.lastBatchWiden}")
     assert(fewSurvivors.map(_._2).toSet == Set(0L, 12L, 24L, 36L, 48L),
       "shortcut full probe must return exactly the h1 survivors")
     engine.clean()
@@ -952,8 +952,8 @@ class MemoEngineSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toSet
     assert(batch == served,
       s"batch front door diverged at the adaptive width: $batch")
-    assert(engine.lastBatchAnnWiden.contains(adaptive),
-      s"batch ladder telemetry diverged: ${engine.lastBatchAnnWiden} " +
+    assert(engine.lastBatchWiden.contains(adaptive),
+      s"batch ladder telemetry diverged: ${engine.lastBatchWiden} " +
         s"vs $adaptive")
     engine.clean()
   }
@@ -1093,7 +1093,7 @@ class MemoEngineSpec extends SparkTestBase {
     // the exact-fill ladder at a starving nprobe equals the single-query
     // widening path per query, and fills exactly k
     val starving = batchSets(Some("{part: p1}"), 5, 1)
-    val widen = engine.lastBatchPqWiden.getOrElse((0, 0))
+    val widen = engine.lastBatchWiden.getOrElse((0, 0))
     assert(widen._2 >= 1 && widen._1 > 1,
       s"expected the pq batch ladder to widen from nprobe=1, got $widen")
     queries.collect().foreach { r =>
@@ -1106,8 +1106,8 @@ class MemoEngineSpec extends SparkTestBase {
     }
     // ≤ k survivors: the shortcut report matches the ann batch's shape
     batchSets(Some("{hot: h1}"), 5, 1)
-    assert(engine.lastBatchPqWiden == Some((MemoEngine.AnnNlist, 1)),
-      s"expected the <=k shortcut report, got ${engine.lastBatchPqWiden}")
+    assert(engine.lastBatchWiden == Some((MemoEngine.AnnNlist, 1)),
+      s"expected the <=k shortcut report, got ${engine.lastBatchWiden}")
     engine.clean()
   }
 
@@ -1115,15 +1115,42 @@ class MemoEngineSpec extends SparkTestBase {
       "row-bounded, ivf when vector-byte-bounded, pq past the byte budget " +
       "or blind") {
     import org.apache.spark.sql.functions.col
+    import spark.implicits._
     val engine = filteredAnnStore()
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    // one router serves every door: the batch and hybrid doors, driven
+    // through the same inputs, must report the identical (route, bound)
+    // recallServe just reported
+    def sameRouteOnEveryDoor(e: MemoEngine, q: String,
+        filter: Option[String], bruteRows: Long = 4096L,
+        pqBytes: Long = MemoEngine.DefaultServePqBytes): Unit = {
+      val expected = e.lastServeRoute
+      val queries = Seq((0L, q)).toDF("qid", "qtext")
+      Seq[(String, () => Unit)](
+        "recallServeBatch" -> (() => e.recallServeBatch(queries, "qid",
+          "qtext", k = 5, filterExpr = filter, bruteRows = bruteRows,
+          pqBytes = pqBytes).collect()),
+        "hybridServe" -> (() => e.hybridServe(q, k = 5,
+          filterExpr = filter, bruteRows = bruteRows,
+          pqBytes = pqBytes).collect()),
+        "hybridServeBatch" -> (() => e.hybridServeBatch(queries, "qid",
+          "qtext", k = 5, filterExpr = filter, bruteRows = bruteRows,
+          pqBytes = pqBytes).collect())
+      ).foreach { case (door, serve) =>
+        e.lastServeRoute = None
+        serve()
+        assert(e.lastServeRoute == expected,
+          s"$door routed ${e.lastServeRoute}, recallServe $expected")
+      }
+    }
     // selective filter, default budget: the surviving segment's 20 rows
     // bound the brute scan — take the exact pruned-frame arm
     val served = rows(engine.recallServe("topic1 theme2", k = 5,
       filterExpr = Some("{part: p1}")))
     assert(engine.lastServeRoute == Some(("brute", 20L)),
       s"expected the bounded brute route, got ${engine.lastServeRoute}")
+    sameRouteOnEveryDoor(engine, "topic1 theme2", Some("{part: p1}"))
     assert(served == rows(engine.recall("topic1 theme2", k = 5,
       filterExpr = Some("{part: p1}"))))
     // same filter under a tiny row budget: the bound exceeds it — probe
@@ -1132,6 +1159,8 @@ class MemoEngineSpec extends SparkTestBase {
       filterExpr = Some("{part: p1}"), nprobe = MemoEngine.AnnNlist,
       bruteRows = 10L))
     assert(engine.lastServeRoute == Some(("ann", 20L)))
+    sameRouteOnEveryDoor(engine, "topic1 theme2", Some("{part: p1}"),
+      bruteRows = 10L)
     assert(servedAnn == rows(engine.annRecall("topic1 theme2", k = 5,
       nprobe = MemoEngine.AnnNlist, filterExpr = Some("{part: p1}"))
       .filter(col("score") >= MemoOps.ScoreFloor)))
@@ -1142,6 +1171,8 @@ class MemoEngineSpec extends SparkTestBase {
       bruteRows = 10L, pqBytes = 64L))
     assert(engine.lastServeRoute == Some(("pq", 20L)),
       s"expected the byte-bounded pq route, got ${engine.lastServeRoute}")
+    sameRouteOnEveryDoor(engine, "topic1 theme2", Some("{part: p1}"),
+      bruteRows = 10L, pqBytes = 64L)
     assert(servedPq == rows(engine.pqRecall("topic1 theme2", k = 5,
       nprobe = MemoEngine.AnnNlist, filterExpr = Some("{part: p1}"))
       .filter(col("score") >= MemoOps.ScoreFloor)))
@@ -1149,10 +1180,12 @@ class MemoEngineSpec extends SparkTestBase {
     // the artifact exists to avoid); the byte bound prices the CHAIN
     engine.recallServe("topic1 theme2", k = 5).collect()
     assert(engine.lastServeRoute.exists(_._1 == "ann"))
+    sameRouteOnEveryDoor(engine, "topic1 theme2", None)
     engine.recallServe("topic1 theme2", k = 5, pqBytes = 64L).collect()
     assert(engine.lastServeRoute.exists(_._1 == "pq"),
       s"unfiltered past the byte budget must compress, got " +
         s"${engine.lastServeRoute}")
+    sameRouteOnEveryDoor(engine, "topic1 theme2", None, pqBytes = 64L)
     engine.clean()
     // a store without stats sidecars: the bound is unknowable — pricing
     // blind assumes big, which is the compressed arm
@@ -1162,6 +1195,7 @@ class MemoEngineSpec extends SparkTestBase {
     e2.recallServe("note", k = 1, filterExpr = Some("{part: p0}")).collect()
     assert(e2.lastServeRoute == Some(("pq", Long.MaxValue)),
       s"missing sidecars must route to pq, got ${e2.lastServeRoute}")
+    sameRouteOnEveryDoor(e2, "note", Some("{part: p0}"))
     e2.clean()
   }
 

@@ -377,35 +377,6 @@ class PqIndexSpec extends SparkTestBase {
       "embedding regeneration with identical ids did not rebuild")
   }
 
-  test("append reuses codebooks, never rewrites files, advances the stamp") {
-    val seed = emb.filter(col("vec_id") % 2 === 0)
-    val batch = emb.filter(col("vec_id") % 2 === 1)
-    val path = java.nio.file.Files.createTempDirectory("pq_app")
-      .resolve("codes").toString
-    val cbs = PqIndex.buildIfAbsent(seed, "vec_id", "embedding",
-      m = 8, ksub = 16, path)
-    val before = dataFilesWithMtime(path)
-    val cbs2 = PqIndex.append(batch, "vec_id", "embedding", path)
-    assert(cbs.flatten.flatten.toSeq == cbs2.flatten.flatten.toSeq,
-      "append must reuse the stored codebooks")
-    val after = dataFilesWithMtime(path)
-    before.foreach { case (f, mtime) =>
-      assert(after.contains(f), s"append removed existing file $f")
-      assert(after(f) == mtime, s"append rewrote existing file $f")
-    }
-    assert(after.size > before.size, "append added no files")
-    // appended rows carry the codes the ORIGINAL codebooks produce
-    val stored = PqIndex.loadCodes(spark, path).orderBy("id").collect()
-      .map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq)).toSeq
-    val fresh = PqIndex.encode(emb, "vec_id", "embedding", cbs).orderBy("id")
-      .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq)).toSeq
-    assert(stored == fresh, "appended artifact diverges from a fresh encode")
-    // stamp advanced: buildIfAbsent over the grown corpus validates
-    PqIndex.buildIfAbsent(emb, "vec_id", "embedding", m = 8, ksub = 16, path)
-    assert(dataFilesWithMtime(path) == after,
-      "grown-corpus buildIfAbsent re-encoded despite a valid appended stamp")
-  }
-
   test("ivf-pq append lands in existing cell partitions; compact rebalances") {
     import spark.implicits._
     val path = java.nio.file.Files.createTempDirectory("ivfpq_app")
@@ -472,39 +443,9 @@ class PqIndexSpec extends SparkTestBase {
       "full-probe full-refine search drifted through compaction")
   }
 
-  test("delete tombstones codes out; stamp validates for the survivors") {
-    val path = java.nio.file.Files.createTempDirectory("pq_del")
-      .resolve("codes").toString
-    PqIndex.buildIfAbsent(emb, "vec_id", "embedding", m = 8, ksub = 16, path)
-    val files = codeFiles(path)
-    val victims = emb.filter(col("vec_id") % 9 === 0)
-    val survivors = emb.filter(col("vec_id") % 9 =!= 0)
-    PqIndex.delete(victims, "vec_id", "embedding", path)
-    assert(codeFiles(path) == files, "delete must not touch code files")
-    val served = PqIndex.loadCodes(spark, path)
-      .select("id").collect().map(_.getLong(0)).toSet
-    val victimIds = victims.select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(served.intersect(victimIds).isEmpty, "tombstoned ids served")
-    assert(served.size == survivors.count())
-    // retreated stamp validates for corpus ∖ batch: no re-encode
-    PqIndex.buildIfAbsent(survivors, "vec_id", "embedding",
-      m = 8, ksub = 16, path)
-    assert(codeFiles(path) == files,
-      "buildIfAbsent over the survivors must reuse, not re-encode")
-  }
-
   test("a tombstoned id is refused by both append paths until applied") {
-    // flat codes: only a full rewrite applies deletes
-    val flat = java.nio.file.Files.createTempDirectory("pq_reuse")
-      .resolve("codes").toString
-    PqIndex.buildIfAbsent(emb, "vec_id", "embedding", m = 8, ksub = 16, flat)
     val vid = emb.agg(min("vec_id")).head().getLong(0)
     val reAdd = emb.filter(col("vec_id") === vid)
-    PqIndex.delete(reAdd, "vec_id", "embedding", flat)
-    val e1 = intercept[IllegalStateException] {
-      PqIndex.append(reAdd, "vec_id", "embedding", flat)
-    }
-    assert(e1.getMessage.contains("pending delete"), e1.getMessage)
     // ivf-pq: applyDeletesIvfPq clears the way
     val ivfpq = java.nio.file.Files.createTempDirectory("ivfpq_reuse")
       .resolve("idx").toString
@@ -565,23 +506,32 @@ class PqIndexSpec extends SparkTestBase {
     PqIndex.buildIfAbsent(emb, "vec_id", "embedding", m = 8, ksub = 16, path)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(path, "_pq_journal"), "999:8:16:1.0:fp0\n")
-    val e = intercept[IllegalStateException] {
-      PqIndex.append(emb.limit(5), "vec_id", "embedding", path)
-    }
-    assert(e.getMessage.contains("incomplete append"))
     // freshness sees the torn artifact as stale → rebuild clears it
     PqIndex.buildIfAbsent(emb, "vec_id", "embedding", m = 8, ksub = 16, path)
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(path, "_pq_journal")))
     assert(PqIndex.loadCodes(spark, path).count() == emb.count())
+    // ivf-pq: a torn journal refuses the next append until a rebuild
+    val ivfpq = java.nio.file.Files.createTempDirectory("ivfpq_torn")
+      .resolve("idx").toString
+    PqIndex.buildIfAbsentIvfPq(emb, "vec_id", "embedding",
+      nlist = 8, m = 8, ksub = 16, ivfpq)
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(ivfpq, "_ivfpq_journal"),
+      "999:8:8:16:1.0:fp0\n")
+    val e = intercept[IllegalStateException] {
+      PqIndex.appendIvfPq(emb.limit(5), "vec_id", "embedding", ivfpq)
+    }
+    assert(e.getMessage.contains("incomplete append"))
+    PqIndex.buildIfAbsentIvfPq(emb, "vec_id", "embedding",
+      nlist = 8, m = 8, ksub = 16, ivfpq)
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(ivfpq, "_ivfpq_journal")))
+    assert(PqIndex.loadCodes(spark, ivfpq).count() == emb.count())
   }
 
   test("append refuses a path with no artifact (both layouts)") {
     val none = java.nio.file.Files.createTempDirectory("pq_none").toString
-    val e1 = intercept[IllegalStateException] {
-      PqIndex.append(emb, "vec_id", "embedding", s"$none/codes")
-    }
-    assert(e1.getMessage.contains("buildIfAbsent"))
     val e2 = intercept[IllegalStateException] {
       PqIndex.appendIvfPq(emb, "vec_id", "embedding", s"$none/ivfpq")
     }

@@ -673,6 +673,18 @@ class SegmentStatsSpec extends SparkTestBase {
     assert(engine.statsCacheSize == 1,
       "stale pre-rewrite entries must be evicted, not retained forever")
     engine.clean()
+    // the same churn seen only by UNFILTERED serving (the router's row
+    // bound reads every live sidecar, no filter ever prunes): the
+    // rewritten chain's dead dirs must still be evicted
+    val served = freshEngine()
+    served.statsCacheMax = 3
+    (0 until 5).foreach(s => served.save(doc(s"doc $s", s"c$s")))
+    served.recallServe("doc", k = 3).collect()
+    served.reindex()
+    served.recallServe("doc", k = 3).collect()
+    assert(served.statsCacheSize == 1,
+      "unfiltered serving must evict stale pre-rewrite entries too")
+    served.clean()
   }
 
   test("restore writes sidecars: the restored snapshot stays prunable") {
