@@ -7,10 +7,14 @@ import org.apache.spark.sql.SparkSession
   * cost): feeds a single batch through `MemoEngine.streamAppend` on a
   * pre-seeded store and prints every Spark job with its wall ms and
   * callsite, plus the driver gap. Measurement harness for the commit-path
-  * optimization (guide §1). */
+  * optimization (guide §1).
+  *
+  * `IngestProfile save [notes] [saves]` profiles the CLI-shaped commit
+  * instead: `saves` plain-append `save` calls of `notes` metadata-bearing
+  * notes each (default 100 × 12) on a seeded store, printing each save's
+  * wall ms and commit phases, then the per-phase medians. */
 object IngestProfile {
   def main(args: Array[String]): Unit = {
-    val n = args.headOption.map(_.toInt).getOrElse(12500)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -18,6 +22,13 @@ object IngestProfile {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    if (args.headOption.contains("save")) {
+      saves(spark, args.lift(1).fold(100)(_.toInt),
+        args.lift(2).fold(12)(_.toInt))
+      spark.stop()
+      return
+    }
+    val n = args.headOption.map(_.toInt).getOrElse(12500)
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_ingest_prof")
     val engine = new graft.memo.MemoEngine(spark, base.resolve("db").toString)
@@ -61,5 +72,38 @@ object IngestProfile {
     }
     println(s"  jobs=${order.size} sumJobMs=$sum driverGapMs=${(wall - sum).round}")
     spark.stop()
+  }
+
+  private def saves(spark: SparkSession, notes: Int, count: Int): Unit = {
+    val base = java.nio.file.Files.createTempDirectory("graft_save_prof")
+    // maxSegments past the run: every profiled save is a plain append
+    val engine = new graft.memo.MemoEngine(spark,
+      base.resolve("db").toString, maxSegments = count + 2)
+    def batch(s: Int): String = (0 until notes).map { i =>
+      s"---\nbody: save $s note $i about topic ${i % 7}\n" +
+        s"metadata: {category: c${i % 5}, n: $i, tags: [t${i % 3}, x]}\n"
+    }.mkString
+    engine.save(batch(0)) // seed, and warm the JIT on one commit
+    engine.save(batch(1))
+    val phases = scala.collection.mutable.Map[String, Vector[Double]]()
+      .withDefaultValue(Vector.empty)
+    graft.memo.MemoEngine.commitPhaseHook = (ph, ms) => synchronized {
+      phases(ph) = phases(ph) :+ ms
+    }
+    val walls = (0 until count).map { s =>
+      val t0 = System.nanoTime()
+      engine.save(batch(s + 2))
+      val wall = (System.nanoTime() - t0) / 1e6
+      println(f"  save ${s + 2}%3d wall $wall%8.1f ms")
+      wall
+    }
+    graft.memo.MemoEngine.commitPhaseHook = null
+    def median(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
+    println(f"########## save x$count notes=$notes median wall " +
+      f"${median(walls)}%.1f ms ##########")
+    phases.toSeq.sortBy(_._1).foreach { case (ph, ms) =>
+      println(f"  [phase] $ph%-28s median ${median(ms)}%8.1f ms (n=${ms.size})")
+    }
+    engine.clean()
   }
 }

@@ -3,8 +3,12 @@ package graft.filter
 import java.nio.charset.StandardCharsets
 import java.util.Base64
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 import graft.functions.GraftFunctions.{metaNum, metaPyStr}
 import graft.memo.MetaCodec
@@ -68,8 +72,9 @@ final case class KeyStats(
   * filter), and per-key stats. `keysComplete = false` means the
   * segment had more distinct keys than the cap, so a key MISSING from
   * `keys` is unknown rather than provably absent — but stats for the
-  * keys that ARE recorded remain exact (the aggregation saw every
-  * row). */
+  * keys that ARE recorded remain exact (the fold saw every row). A
+  * segment with a partition past [[SegmentStats.PartitionKeyCapFactor]]
+  * × the key cap records no keys at all (`keysComplete = false`). */
 final case class SegmentStats(rows: Long, nMeta: Long,
     keysComplete: Boolean, keys: Map[String, KeyStats])
 
@@ -132,125 +137,233 @@ object SegmentStats {
 
   // -------------------------------------------------------------- compute
 
-  /** One small aggregation pair over a just-written segment: the
-    * header counts (+ the id range, so the caller can write both
-    * sidecars from one read) and the per-key stats. Cost is
-    * O(segment), column-pruned to (id, metadata) — the same class as
-    * the `_idrange` scan it rides along with. The frame is CACHED for
-    * the duration: the header, key-stats, and two dictionary passes
-    * are four driver actions, and on the streaming-ingest path (one
-    * compute per micro-batch commit) re-scanning the just-written
-    * parquet four times was measurable — the r14 pairs leg
-    * (BENCH_NOTES) priced the whole sidecar at ~14% of s94 before
-    * this. */
-  def compute(dfIn: DataFrame, maxKeys: Int = MaxKeys,
+  /** Per-partition key-tracking cap, as a multiple of the effective
+    * `maxKeys`: it bounds every partition's fold state to
+    * `PartitionKeyCapFactor × maxKeys` keys × `maxVals + 1` dictionary
+    * strings per side. A partition that sees more distinct keys stops
+    * tracking them, and its segment gets the degraded (sound) sidecar —
+    * header counts only, `keysComplete = false`, no per-key stats. */
+  val PartitionKeyCapFactor = 8
+
+  /** Header counts, id range and per-key stats of one segment, in ONE
+    * Spark job with no shuffle: a narrow projection evaluates the same
+    * row-level views the compiled predicate uses ([[metaPyStr]],
+    * [[metaNum]], the 'l'/'s' prefix tests, the payload substring, and
+    * `from_json(payload, array<string>)` mapped through [[metaPyStr]] for
+    * list elements), one row per (record, metadata entry) via
+    * `posexplode_outer`; a `mapPartitions` fold feeds bounded
+    * accumulators and the driver merges one accumulator per partition.
+    * Bounds follow Spark's min/max orderings (code-point strings,
+    * NaN-largest doubles, the first value kept on a ±0.0 tie), so the
+    * stats equal those of the equivalent Catalyst aggregations (a test
+    * reference pins it), and [[encode]] sorts keys and dictionaries.
+    * Cost is O(segment), column-pruned to (id, metadata). */
+  def compute(df: DataFrame, maxKeys: Int = MaxKeys,
       maxVals: Int = MaxVals): (Option[(Long, Long)], SegmentStats) = {
     require(maxKeys >= 1 && maxVals >= 1,
       s"stats caps must be >= 1, got (maxKeys=$maxKeys, maxVals=$maxVals)")
-    val df = dfIn.cache()
-    try computeCached(df, maxKeys, maxVals) finally df.unpersist()
+    val keyCap = PartitionKeyCapFactor * maxKeys
+    val parts = projection(df).queryExecution.toRdd.mapPartitions { rows =>
+      val acc = new PartAcc(keyCap, maxVals)
+      rows.foreach(acc.add)
+      Iterator.single(acc)
+    }.collect()
+    val total = parts.foldLeft(new PartAcc(keyCap, maxVals)) { (a, b) =>
+      a.merge(b); a
+    }
+    val idRange = if (total.hasId) Some((total.idMin, total.idMax)) else None
+    if (total.keys == null)
+      (idRange, SegmentStats(total.rows, total.nMeta, keysComplete = false,
+        Map.empty))
+    else {
+      // deterministic under the cap: most rows first, ties by key
+      val ranked = total.keys.asScala.toSeq.sortWith { case ((ka, a), (kb, b)) =>
+        if (a.n != b.n) a.n > b.n else cpCompare(ka, kb) < 0
+      }
+      (idRange, SegmentStats(total.rows, total.nMeta,
+        keysComplete = ranked.length <= maxKeys,
+        ranked.take(maxKeys).map { case (k, a) => k -> a.result }.toMap))
+    }
   }
 
-  private def computeCached(df: DataFrame, maxKeys: Int, maxVals: Int)
-      : (Option[(Long, Long)], SegmentStats) = {
-    val header = df.agg(
-      count(lit(1)), count(when(size(col("metadata")) > 0, 1)),
-      min(col("id")), max(col("id"))).collect()(0)
-    val rows = header.getLong(0)
-    val nMeta = header.getLong(1)
-    val idRange =
-      if (header.isNullAt(2)) None
-      else Some((header.getLong(2), header.getLong(3)))
-    // a segment with NO non-empty metadata (nMeta == 0 — the streaming
-    // ingest steady state, where bodies arrive bare) provably yields an
-    // empty key set: explode(metadata) emits no rows, so the per-key
-    // aggregation and both dictionary passes would return empty. Skip
-    // them — two Spark jobs plus their planning, per micro-batch commit
-    // — and return the identical (complete, key-less) stats directly.
-    if (nMeta == 0L)
-      return (idRange, SegmentStats(rows, 0L, keysComplete = true, Map.empty))
-    val kv = df.select(explode(col("metadata")).as(Seq("k", "v")))
+  /** Column ordinals of [[projection]]'s rows, read by [[PartAcc.add]]. */
+  private final val ColId = 0
+  private final val ColHasMeta = 1
+  private final val ColFirst = 2  // first exploded row of its record
+  private final val ColKey = 3    // null: the record has no entries
+  private final val ColIsList = 4
+  private final val ColNum = 5
+  private final val ColIsStr = 6
+  private final val ColPys = 7    // null iff the value is null
+  private final val ColStrPayload = 8
+  private final val ColElems = 9
+
+  private def projection(df: DataFrame): DataFrame = {
     val v = col("v")
     val isList = v.startsWith("l")
-    val numV = metaNum(v)
-    val isNum = numV.isNotNull
     val isStr = v.startsWith("s") // the exact class $prefix accepts
-    val pys = metaPyStr(v)
     val payload = v.substr(lit(2), length(v))
-    val collected = kv.groupBy("k").agg(
-      count(lit(1)).as("n"),
-      count(when(isList, 1)).as("nList"),
-      count(when(isNum, 1)).as("nNum"),
-      count(when(isStr, 1)).as("nStr"),
-      min(pys).as("pysMin"), max(pys).as("pysMax"),
-      min(numV).as("numMin"), max(numV).as("numMax"),
-      min(when(!isNum, pys)).as("nnsMin"),
-      max(when(!isNum, pys)).as("nnsMax"),
-      min(when(isStr, payload)).as("strMin"),
-      max(when(isStr, payload)).as("strMax"))
-      .orderBy(desc("n"), col("k")) // deterministic under the cap
-      .limit(maxKeys + 1)
-      .collect()
-    val complete = collected.length <= maxKeys
-    // only the KEPT keys get dictionaries — keys beyond the MaxKeys cap
-    // are discarded from the sidecar anyway, so scoping the dictionary
-    // aggregation to this (≤ MaxKeys, driver-known) set bounds its
-    // driver collect to MaxKeys × (maxVals + 1) strings BY CONSTRUCTION,
-    // whatever the segment's key cardinality
-    val keptKeys = collected.take(maxKeys).map(_.getString(0)).toSeq
-    // exact capped dictionaries: the distinct str() renderings per key,
-    // of scalar VALUES and of well-formed list values' ELEMENTS. The
-    // per-key cap is enforced BEFORE any per-key collection (distinct →
-    // rank ≤ cap+1), so no aggregation state ever holds more than
-    // cap+1 strings per key, whatever the segment's cardinality.
-    // BOTH dictionary families (scalar values, list elements) in ONE
-    // job: the two pair frames union under a side tag and share the
-    // distinct → rank-cap → collect pass. On the streaming-ingest path
-    // this runs once per micro-batch commit, where each extra driver
-    // action is pure scheduler overhead (the segments are small) — the
-    // r14 pairs leg priced the sidecar write at ~14% of s94.
-    def capped(pairs: DataFrame): Map[(String, String), Option[Set[String]]] = {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("side", "k").orderBy("v")
-      pairs.filter(col("k").isin(keptKeys: _*))
-        .distinct()
-        .withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") <= maxVals + 1)
-        .groupBy("side", "k").agg(collect_list(col("v")).as("vs"))
-        .collect()
-        .map { r =>
-          val vs = r.getSeq[String](2)
-          (r.getString(0), r.getString(1)) ->
-            (if (vs.length > maxVals) None else Some(vs.toSet))
-        }.toMap
+    df.select(col("id"),
+        coalesce(size(col("metadata")) > 0, lit(false)).as("hasMeta"),
+        posexplode_outer(col("metadata")).as(Seq("pos", "k", "v")))
+      .select(col("id"), col("hasMeta"),
+        coalesce(col("pos"), lit(0)) === 0,
+        col("k"),
+        coalesce(isList, lit(false)),
+        metaNum(v),
+        coalesce(isStr, lit(false)),
+        metaPyStr(v),
+        when(isStr, payload),
+        when(isList, transform(
+          from_json(payload, ArrayType(StringType)), metaPyStr(_))))
+  }
+
+  /** Spark's double ordering (what min/max aggregated): NaN above every
+    * number, -0.0 equal to 0.0 — so on a tie the value seen first stays. */
+  private def dLess(a: Double, b: Double): Boolean =
+    a != b && java.lang.Double.compare(a, b) < 0
+
+  private def sMin(cur: String, x: String): String =
+    if (x == null || (cur != null && cpCompare(cur, x) <= 0)) cur else x
+  private def sMax(cur: String, x: String): String =
+    if (x == null || (cur != null && cpCompare(cur, x) >= 0)) cur else x
+
+  /** A distinct-string dictionary that drops itself (null) once it holds
+    * more than `cap` values — the set never exceeds `cap + 1`. */
+  private def dictAdd(d: java.util.HashSet[String], x: String, cap: Int)
+      : java.util.HashSet[String] =
+    if (d == null || !d.add(x) || d.size <= cap) d else null
+
+  private def dictUnion(a: java.util.HashSet[String],
+      b: java.util.HashSet[String], cap: Int): java.util.HashSet[String] =
+    if (a == null || b == null) null
+    else {
+      var d = a
+      val it = b.iterator()
+      while (d != null && it.hasNext) d = dictAdd(d, it.next(), cap)
+      d
     }
-    val dicts = capped(
-      kv.filter(!isList).select(lit("v").as("side"), col("k"), pys.as("v"))
-        .unionByName(kv.filter(isList)
-          .select(col("k"), explode(from_json(payload,
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.StringType))).as("e"))
-          .select(lit("e").as("side"), col("k"),
-            metaPyStr(col("e")).as("v"))))
-    val valDicts = dicts.collect { case (("v", k), d) => k -> d }
-    val elemDicts = dicts.collect { case (("e", k), d) => k -> d }
-    val keys = collected.take(maxKeys).map { r =>
-      def optS(i: Int) = if (r.isNullAt(i)) None else Some(r.getString(i))
-      def optD(i: Int) = if (r.isNullAt(i)) None else Some(r.getDouble(i))
-      val k = r.getString(0)
-      val nList = r.getLong(2)
-      k -> KeyStats(
-        r.getLong(1), nList, r.getLong(3), r.getLong(4),
-        r.getString(5), r.getString(6),
-        optD(7), optD(8), optS(9), optS(10), optS(11), optS(12),
-        // a key with no scalar rows has a provably EMPTY scalar
-        // dictionary (and symmetrically for elements of a list-free
-        // key): membership tests on them prune every operand
-        vals = valDicts.getOrElse(k, Some(Set.empty)),
-        elems = elemDicts.getOrElse(k,
-          if (nList == 0) Some(Set.empty) else None))
-    }.toMap
-    (idRange, SegmentStats(rows, nMeta, complete, keys))
+
+  /** Fold state of one key. */
+  private final class KeyAcc(maxVals: Int) extends Serializable {
+    var n, nList, nNum, nStr = 0L
+    var pysMin, pysMax, nnsMin, nnsMax, strMin, strMax: String = null
+    var numMin, numMax = 0.0
+    var vals = new java.util.HashSet[String]()  // scalar str() renderings
+    var elems = new java.util.HashSet[String]() // list elements' str()
+    var elemRows = false // any list element seen
+
+    def add(r: InternalRow): Unit = {
+      n += 1
+      val list = r.getBoolean(ColIsList)
+      if (list) nList += 1
+      val num = !r.isNullAt(ColNum)
+      if (num) addNum(r.getDouble(ColNum), r.getDouble(ColNum), 1L)
+      if (r.getBoolean(ColIsStr)) {
+        nStr += 1
+        val p = r.getUTF8String(ColStrPayload).toString
+        strMin = sMin(strMin, p)
+        strMax = sMax(strMax, p)
+      }
+      if (!r.isNullAt(ColPys)) {
+        val p = r.getUTF8String(ColPys).toString
+        pysMin = sMin(pysMin, p)
+        pysMax = sMax(pysMax, p)
+        if (!num) {
+          nnsMin = sMin(nnsMin, p)
+          nnsMax = sMax(nnsMax, p)
+        }
+        if (!list) vals = dictAdd(vals, p, maxVals)
+      }
+      if (list && !r.isNullAt(ColElems)) {
+        val es = r.getArray(ColElems)
+        var i = 0
+        while (i < es.numElements()) {
+          elemRows = true
+          if (!es.isNullAt(i))
+            elems = dictAdd(elems, es.getUTF8String(i).toString, maxVals)
+          i += 1
+        }
+      }
+    }
+
+    private def addNum(lo: Double, hi: Double, count: Long): Unit = {
+      if (nNum == 0L || dLess(lo, numMin)) numMin = lo
+      if (nNum == 0L || dLess(numMax, hi)) numMax = hi
+      nNum += count
+    }
+
+    /** Fold `o` (a LATER partition's state) into this one. */
+    def merge(o: KeyAcc): Unit = {
+      if (o.nNum > 0L) addNum(o.numMin, o.numMax, o.nNum)
+      n += o.n; nList += o.nList; nStr += o.nStr
+      pysMin = sMin(pysMin, o.pysMin); pysMax = sMax(pysMax, o.pysMax)
+      nnsMin = sMin(nnsMin, o.nnsMin); nnsMax = sMax(nnsMax, o.nnsMax)
+      strMin = sMin(strMin, o.strMin); strMax = sMax(strMax, o.strMax)
+      vals = dictUnion(vals, o.vals, maxVals)
+      elems = dictUnion(elems, o.elems, maxVals)
+      elemRows ||= o.elemRows
+    }
+
+    def result: KeyStats = {
+      def dict(d: java.util.HashSet[String]) =
+        Option(d).map(_.asScala.toSet)
+      KeyStats(n, nList, nNum, nStr, pysMin, pysMax,
+        if (nNum > 0L) Some(numMin) else None,
+        if (nNum > 0L) Some(numMax) else None,
+        Option(nnsMin), Option(nnsMax), Option(strMin), Option(strMax),
+        vals = dict(vals),
+        // a key with no list elements has a provably EMPTY element
+        // dictionary only when it has no list values at all — list
+        // values without elements (empty or malformed payloads) leave it
+        // unknown
+        elems = if (elemRows) dict(elems)
+          else if (nList == 0L) Some(Set.empty) else None)
+    }
+  }
+
+  /** Fold state of one partition; `keys` turns null past `keyCap`. */
+  private final class PartAcc(keyCap: Int, maxVals: Int)
+      extends Serializable {
+    var rows, nMeta = 0L
+    var hasId = false
+    var idMin, idMax = 0L
+    var keys = new java.util.HashMap[String, KeyAcc]()
+
+    def add(r: InternalRow): Unit = {
+      if (r.getBoolean(ColFirst)) {
+        rows += 1
+        if (r.getBoolean(ColHasMeta)) nMeta += 1
+        if (!r.isNullAt(ColId)) addIds(r.getLong(ColId), r.getLong(ColId))
+      }
+      if (keys != null && !r.isNullAt(ColKey)) {
+        val k = r.getUTF8String(ColKey).toString
+        var a = keys.get(k)
+        if (a == null && keys.size >= keyCap) keys = null
+        else {
+          if (a == null) { a = new KeyAcc(maxVals); keys.put(k, a) }
+          a.add(r)
+        }
+      }
+    }
+
+    private def addIds(lo: Long, hi: Long): Unit = {
+      if (!hasId || lo < idMin) idMin = lo
+      if (!hasId || hi > idMax) idMax = hi
+      hasId = true
+    }
+
+    /** Fold `o` (a LATER partition's state) into this one. */
+    def merge(o: PartAcc): Unit = {
+      rows += o.rows
+      nMeta += o.nMeta
+      if (o.hasId) addIds(o.idMin, o.idMax)
+      if (keys != null && o.keys == null) keys = null
+      if (keys != null) o.keys.forEach { (k, oa) =>
+        val a = keys.get(k)
+        if (a == null) keys.put(k, oa) else a.merge(oa)
+      }
+    }
   }
 
   // ------------------------------------------------------------- canMatch

@@ -117,8 +117,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
     // written to `segDir` (streamIngest's cached mint) — aggregating it
     // skips the parquet re-read and unties the stats leg from the
     // records write, letting both run concurrently
-    val df = source.getOrElse(
-      spark.read.schema(YamlIO.recordSchema).parquet(segDir.toString))
+    val df = source.getOrElse(readSegments("records", Seq(segDir.toString)))
     if (metaStatsSidecars) {
       val (idRange, stats) = graft.filter.SegmentStats.compute(df,
         statsMaxKeys, statsMaxVals)
@@ -148,8 +147,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * metadata domain. Pruning is an over-approximation: a false
     * positive only reads an extra segment; a missing/undecodable
     * sidecar (pre-existing stores) reads as "unprunable". Cost: one
-    * per-key aggregation over the just-written segment, riding the
-    * same (id, metadata)-pruned read as the id-range scan. */
+    * shuffle-free Spark job over the just-written segment
+    * ([[graft.filter.SegmentStats.compute]]), the same (id,
+    * metadata)-pruned read that yields the id range. */
   private def writeMetaStats(segDir: Path,
       stats: graft.filter.SegmentStats): Unit =
     Files.writeString(segDir.resolve("_metastats"),
@@ -165,7 +165,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
       if (ranges.isEmpty) "empty"
       else ranges.map { case (lo, hi) => s"$lo,$hi" }.mkString(";"))
     if (metaStatsSidecars) {
-      val df = spark.read.schema(YamlIO.recordSchema).parquet(segDir.toString)
+      val df = readSegments("records", Seq(segDir.toString))
       writeMetaStats(segDir, graft.filter.SegmentStats.compute(df,
         statsMaxKeys, statsMaxVals)._2)
     }
@@ -257,13 +257,20 @@ class MemoEngine(spark: SparkSession, basePath: String,
     val stamp =
       try Files.getLastModifiedTime(currentFile).toInstant.toString
       catch { case _: java.io.IOException =>
-        return spark.read.parquet(segments(v, kind): _*) }
+        return readSegments(kind, segments(v, kind)) }
     val memo = MemoEngine.scanMemo
     if (memo.size > 128) memo.clear() // bound across long version chains
     memo.computeIfAbsent(
       (System.identityHashCode(spark).toString, basePath, stamp, v, kind),
-      _ => spark.read.parquet(segments(v, kind): _*))
+      _ => readSegments(kind, segments(v, kind)))
   }
+
+  /** Committed segments of `kind` read under the writer's declared
+    * schema: every records / index segment is written with exactly that
+    * shape, so the read skips the footer schema-inference job (30-90 ms
+    * per read) and resolves even when every listed dir is empty. */
+  private def readSegments(kind: String, paths: Seq[String]): DataFrame =
+    spark.read.schema(MemoEngine.segmentSchema(kind)).parquet(paths: _*)
 
   /** The live records table; empty-schema table when the DB doesn't exist.
     * Appends are log-structured: the read unions the base snapshot with the
@@ -419,7 +426,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
       if (missing.nonEmpty) throw new IllegalArgumentException(
         s"changefeed v$fromV..v$toV is no longer resolvable: vacuum " +
         s"reclaimed ${missing.mkString(", ")}")
-      spark.read.parquet(delta: _*)
+      readSegments("records", delta)
         .select(col("id"), lit("added").as("change"), col("body"),
           col("metadata"))
     } else {
@@ -654,54 +661,55 @@ class MemoEngine(spark: SparkSession, basePath: String,
     if (entries.isEmpty) return Seq.empty
     MemoEngine.retryOnConflict {
       val v0 = currentVersion // the optimistic-concurrency token
-      val existing = records.cache()
-      try {
-        // Scale note: only driver-side state here is the (small) input
-        // batch. Override validation probes the store for JUST the batch's
-        // ids; the max id comes from an aggregate — never a full id collect.
-        val overrideIds = entries.collect { case (Some(id), _, _) => id }
-        if (overrideIds.nonEmpty) {
-          val found = existing.select("id")
-            .filter(col("id").isin(overrideIds: _*)).as[Long].collect().toSet
-          overrideIds.find(!found.contains(_)).foreach { id =>
-            // message mirrors memo_cli.py:427
-            throw new IllegalArgumentException(s"override id $id does not exist")
+      // Scale note: only driver-side state here is the (small) input
+      // batch. Override validation probes the store for JUST the batch's
+      // ids; the max id comes from an aggregate — never a full id collect.
+      // Both are column-pruned id scans, so the live store is NOT pinned:
+      // a cache here would materialize every column (bodies included) of
+      // the whole corpus per save.
+      val existing = records
+      val overrideIds = entries.collect { case (Some(id), _, _) => id }
+      if (overrideIds.nonEmpty) {
+        val found = existing.select("id")
+          .filter(col("id").isin(overrideIds: _*)).as[Long].collect().toSet
+        overrideIds.find(!found.contains(_)).foreach { id =>
+          // message mirrors memo_cli.py:427
+          throw new IllegalArgumentException(s"override id $id does not exist")
+        }
+      }
+      val maxId = existing.agg(max(col("id"))).collect()(0) match {
+        case r if r.isNullAt(0) => -1L
+        case r => r.getLong(0)
+      }
+      var nextId = maxId
+      val resolved = entries.map {
+        case (Some(id), body, meta) => (id, body, meta)
+        case (None, body, meta) => nextId += 1; (nextId, body, meta)
+      }
+      val batchDf = resolved.toDF("id", "body", "metadata")
+      val idsDf = batchDf.select("id")
+      (v0, overrideIds.isEmpty) match {
+        case (Some(prior), true) =>
+          // pure append: new segment + manifest extension, O(batch) write
+          commitAppend(batchDf, idsDf, expectedPrior = prior)
+        case _ =>
+          // overwrite (or first save). A chain whose segments carry id
+          // ranges takes the SEGMENT-PRUNED patch — only the segments
+          // holding overwritten ids rewrite, everything else rides by
+          // reference ([[patchMerge]]); otherwise a fresh compacting
+          // snapshot for latest-wins reads. The index is derived
+          // incrementally either way (batch rows embed, nothing else).
+          val patched = v0.exists(prior =>
+            patchMerge(prior, idsDf, batchDf, mark = None))
+          if (!patched) {
+            val merged = existing.join(idsDf, Seq("id"), "left_anti")
+              .unionByName(batchDf)
+            commit(merged, v0, changedIds = Some(idsDf))
           }
-        }
-        val maxId = existing.agg(max(col("id"))).collect()(0) match {
-          case r if r.isNullAt(0) => -1L
-          case r => r.getLong(0)
-        }
-        var nextId = maxId
-        val resolved = entries.map {
-          case (Some(id), body, meta) => (id, body, meta)
-          case (None, body, meta) => nextId += 1; (nextId, body, meta)
-        }
-        val batchDf = resolved.toDF("id", "body", "metadata")
-        val idsDf = batchDf.select("id")
-        (v0, overrideIds.isEmpty) match {
-          case (Some(prior), true) =>
-            // pure append: new segment + manifest extension, O(batch) write
-            commitAppend(batchDf, idsDf, expectedPrior = prior)
-          case _ =>
-            // overwrite (or first save). A chain whose segments carry id
-            // ranges takes the SEGMENT-PRUNED patch — only the segments
-            // holding overwritten ids rewrite, everything else rides by
-            // reference ([[patchMerge]]); otherwise a fresh compacting
-            // snapshot for latest-wins reads. The index is derived
-            // incrementally either way (batch rows embed, nothing else).
-            val patched = v0.exists(prior =>
-              patchMerge(prior, idsDf, batchDf, mark = None))
-            if (!patched) {
-              val merged = existing.join(idsDf, Seq("id"), "left_anti")
-                .unionByName(batchDf)
-              commit(merged, v0, changedIds = Some(idsDf))
-            }
-        }
-        // the reference echoes the FULL body, newlines and all
-        // (memo_cli.py:430, 440: f"Memorized: '{note}' ...")
-        resolved.map { case (id, body, _) => (id, body) }
-      } finally existing.unpersist()
+      }
+      // the reference echoes the FULL body, newlines and all
+      // (memo_cli.py:430, 440: f"Memorized: '{note}' ...")
+      resolved.map { case (id, body, _) => (id, body) }
     }
   }
 
@@ -1035,7 +1043,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
     }
 
   private def bodyCorpus(paths: Seq[String]): DataFrame =
-    spark.read.parquet(paths: _*)
+    readSegments("records", paths)
       .filter(!isBlank(col("body"))).select(col("id"), col("body"))
 
   private def ensureLexical(): Unit = {
@@ -1099,7 +1107,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
       appendSeg = (seg, _) => {
         lastIvfMode = Some("append")
         graft.ops.IvfIndex.append(
-          spark.read.parquet(seg), "id", "embedding", ivfDir)
+          readSegments("index", Seq(seg)), "id", "embedding", ivfDir)
         ()
       },
       rebuild = v => {
@@ -1774,7 +1782,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
       appendSeg = (seg, _) => {
         lastPqMode = Some("append")
         graft.ops.PqIndex.appendIvfPq(
-          spark.read.parquet(seg), "id", "embedding", pqDir)
+          readSegments("index", Seq(seg)), "id", "embedding", pqDir)
       },
       rebuild = v => {
         // RETRACT arm — [[ensureIvf]]'s argument on the compressed
@@ -2077,14 +2085,12 @@ class MemoEngine(spark: SparkSession, basePath: String,
     }
     if (!vector) {
       if (kept.isEmpty) emptyFrame(YamlIO.recordSchema)
-      else spark.read.schema(YamlIO.recordSchema)
-        .parquet(kept.map(segs): _*)
+      else readSegments("records", kept.map(segs))
     } else {
       val segsI = segments(ver, "index")
       if (segsI.size != segs.size) indexAt(ver) // unpaired: sound fallback
       else if (kept.isEmpty) emptyFrame(MemoEngine.IndexSchema)
-      else spark.read.schema(MemoEngine.IndexSchema)
-        .parquet(kept.map(segsI): _*)
+      else readSegments("index", kept.map(segsI))
     }
   }
 
@@ -3011,7 +3017,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
       case None => records // undefined-store error path stays identical
       case Some((kept, _, _)) if kept.isEmpty =>
         emptyFrame(YamlIO.recordSchema)
-      case Some((kept, segs, _)) => spark.read.parquet(kept.map(segs): _*)
+      case Some((kept, segs, _)) => readSegments("records", kept.map(segs))
     }
 
   /** (records, index) both restricted to the filter's surviving
@@ -3033,12 +3039,11 @@ class MemoEngine(spark: SparkSession, basePath: String,
         val paired = segsI.size == segs.size
         val recs =
           if (kept.isEmpty) emptyFrame(YamlIO.recordSchema)
-          else spark.read.parquet(kept.map(segs): _*)
+          else readSegments("records", kept.map(segs))
         val idx =
           if (!paired) index
           else if (kept.isEmpty) emptyFrame(MemoEngine.IndexSchema)
-          else spark.read.schema(MemoEngine.IndexSchema)
-            .parquet(kept.map(segsI): _*)
+          else readSegments("index", kept.map(segsI))
         (recs, idx)
     }
 
@@ -3478,7 +3483,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
             Some(viewContribOf(emptyFrame(YamlIO.recordSchema),
               1, groupKey, measures, aggOf, where))
           else Some(viewContribOf(
-            spark.read.schema(YamlIO.recordSchema).parquet(kept: _*),
+            readSegments("records", kept),
             1, groupKey, measures, aggOf, where))
         }
       } else {
@@ -4034,8 +4039,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
             val segs = whereSurviving(segments(live, "records"), where)
             val corpus = viewContribOf(
               if (segs.isEmpty) emptyFrame(YamlIO.recordSchema)
-              else spark.read.schema(YamlIO.recordSchema)
-                .parquet(segs: _*),
+              else readSegments("records", segs),
               1, groupKey, measures, aggOf, where)
             val rescanned = fullAgg(
               corpus.join(brokenKeys.as("bk"),
@@ -4051,7 +4055,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
               viewContribOf(emptyFrame(YamlIO.recordSchema),
                 1, groupKey, measures, aggOf, where)
             else viewContribOf(
-              spark.read.schema(YamlIO.recordSchema).parquet(segs: _*),
+              readSegments("records", segs),
               1, groupKey, measures, aggOf, where))
           ("rebuild", segs, full)
       }
@@ -5126,8 +5130,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
        else Seq((touchRow.getLong(0), touchRow.getLong(1)))))
     val v = prior + 1
     val staging = newStaging()
-    val oldTouched = spark.read.schema(YamlIO.recordSchema)
-      .parquet(touched.map(segsR): _*)
+    val oldTouched = readSegments("records", touched.map(segsR))
       .cache() // read by the survivors write AND the feed materialization
     try {
       oldTouched
@@ -5155,14 +5158,13 @@ class MemoEngine(spark: SparkSession, basePath: String,
       // to the captured-version rebuild. Spec-pinned.
       if (materializeFeeds) {
         MemoOps.changeFeedWithPrev(oldTouched,
-          spark.read.schema(YamlIO.recordSchema)
-            .parquet(staging.resolve("records").toString))
+          readSegments("records", Seq(staging.resolve("records").toString)))
           .write.mode("overwrite")
           .parquet(staging.resolve("changefeed").toString)
         Files.write(staging.resolve("changefeed").resolve("_prev"),
           Array.emptyByteArray)
       }
-      spark.read.parquet(touched.map(segsI): _*)
+      readSegments("index", touched.map(segsI))
         .join(batchIds, Seq("id"), "left_anti")
         .unionByName(upserts.filter(!isBlank(col("body")))
           .select(col("id"), embedText(col("body")).as("embedding")))
@@ -5650,6 +5652,13 @@ object MemoEngine {
       org.apache.spark.sql.types.StructField("embedding",
         org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.FloatType), nullable = true)))
+
+  /** The at-rest schema of a committed segment of `kind`. */
+  private def segmentSchema(kind: String): org.apache.spark.sql.types.StructType =
+    kind match {
+      case "records" => YamlIO.recordSchema
+      case "index" => IndexSchema
+    }
 
   /** Default cell count for the engine-maintained IVF artifact
     * ([[MemoEngine.annRecall]]); clamped to the corpus size on rebuild
