@@ -524,10 +524,18 @@ object SegmentStats {
       else Some(rest.split(",", -1).map(b64d).toSet)
     }
 
+  /** A key whose every value is a null map value has no str() bounds
+    * (MetaCodec never writes one, but a segment written by another tool
+    * can hold it): it is dropped and the key set marked incomplete, so
+    * the key reads as unknown and never prunes. */
   def encode(st: SegmentStats): String = {
+    val (keys, boundless) = st.keys.partition { case (_, ks) =>
+      ks.pysMin != null && ks.pysMax != null
+    }
+    val complete = st.keysComplete && boundless.isEmpty
     val header =
-      s"meta2 ${st.rows} ${st.nMeta} ${if (st.keysComplete) 1 else 0}"
-    val lines = st.keys.toSeq.sortBy(_._1).map { case (k, s) =>
+      s"meta2 ${st.rows} ${st.nMeta} ${if (complete) 1 else 0}"
+    val lines = keys.toSeq.sortBy(_._1).map { case (k, s) =>
       Seq(b64e(k), s.n, s.nList, s.nNum, s.nStr,
         b64e(s.pysMin), b64e(s.pysMax),
         encOptD(s.numMin), encOptD(s.numMax),

@@ -484,13 +484,12 @@ class MemoEngine(spark: SparkSession, basePath: String,
             .select(col("id"), embedText(col("body")).as("embedding"))
       })
       // independent writes overlapped exactly as in [[commitAppend]]
-      MemoEngine.bothWrites(
-        embedded.write.mode("overwrite")
-          .parquet(staging.resolve("index").toString), {
+      MemoEngine.legs(spark)(() => {
           recs.write.mode("overwrite")
             .parquet(staging.resolve("records").toString)
           writeIdRange(staging.resolve("records"))
-        })
+        }, () => embedded.write.mode("overwrite")
+          .parquet(staging.resolve("index").toString))
       writeManifest(staging, v, "records",
         Seq(versionDir(v).resolve("records").toString))
       writeManifest(staging, v, "index",
@@ -569,10 +568,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
           source = if (batchRows.isDefined) Some(recs) else None)
       }
       if (batchRows.isDefined)
-        MemoEngine.bothWrites(indexLeg(),
-          MemoEngine.bothWrites(recordsLeg(), statsLeg()))
+        MemoEngine.legs(spark)(statsLeg, recordsLeg, indexLeg)
       else
-        MemoEngine.bothWrites(indexLeg(), { recordsLeg(); statsLeg() })
+        MemoEngine.legs(spark)(() => { recordsLeg(); statsLeg() }, indexLeg)
       MemoEngine.commitPhase("manifests_finalize") {
         writeManifest(staging, v, "records",
           segments(expectedPrior, "records") :+
@@ -1046,11 +1044,11 @@ class MemoEngine(spark: SparkSession, basePath: String,
     readSegments("records", paths)
       .filter(!isBlank(col("body"))).select(col("id"), col("body"))
 
-  private def ensureLexical(): Unit = {
-    lastLexMode = Some("fresh")
+  private def ensureLexical(
+      arm: FamilyArm = new FamilyArm(lastLexMode = _)): Unit = {
     ensureArtifact[Unit](lexDir, "records", beforeLexicalBuildHook)(
       appendSeg = (seg, ver) => {
-        lastLexMode = Some("append")
+        arm("append")
         graft.ops.Lexical.appendOnce(
           bodyCorpus(Seq(seg)), "id", "body", lexDir,
           batchId = ver, lineage = "storev")
@@ -1066,9 +1064,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
             familyRetract(lexDir, v0, v, vector = false)(
               d => graft.ops.Lexical.delete(d, "id", "body", lexDir))(
               a => graft.ops.Lexical.append(a, "id", "body", lexDir))))
-          lastLexMode = Some("retract")
+          arm("retract")
         else {
-          lastLexMode = Some("rebuild")
+          arm("rebuild")
           graft.ops.Lexical.writeIndex(
             bodyCorpus(segments(v, "records")), "id", "body", lexDir)
           ArtifactMeta.delete(spark, lexDir, RetractJournal)
@@ -1101,11 +1099,11 @@ class MemoEngine(spark: SparkSession, basePath: String,
     *
     * Returns the centroid matrix, or None for an empty corpus (no cells
     * to probe — callers fall back to the exact ranking). */
-  private def ensureIvf(): Option[Array[Array[Float]]] = {
-    lastIvfMode = Some("fresh")
+  private def ensureIvf(arm: FamilyArm = new FamilyArm(lastIvfMode = _))
+      : Option[Array[Array[Float]]] =
     ensureArtifact(ivfDir, "index")(
       appendSeg = (seg, _) => {
-        lastIvfMode = Some("append")
+        arm("append")
         graft.ops.IvfIndex.append(
           readSegments("index", Seq(seg)), "id", "embedding", ivfDir)
         ()
@@ -1123,10 +1121,10 @@ class MemoEngine(spark: SparkSession, basePath: String,
               d => graft.ops.IvfIndex.delete(d, "id", "embedding", ivfDir))(
               a => { graft.ops.IvfIndex.append(a, "id", "embedding", ivfDir)
                      () }))) {
-          lastIvfMode = Some("retract")
+          arm("retract")
           graft.ops.IvfIndex.readCentroids(spark, ivfDir)
         } else {
-          lastIvfMode = Some("rebuild")
+          arm("rebuild")
           val out = rebuildIvf(v)
           if (out.isDefined)
             ArtifactMeta.delete(spark, ivfDir, RetractJournal)
@@ -1134,7 +1132,6 @@ class MemoEngine(spark: SparkSession, basePath: String,
         }
       },
       serve = () => graft.ops.IvfIndex.readCentroids(spark, ivfDir))
-  }
 
   /** Rebuild arm of [[ensureIvf]]: train + persist from the captured
     * version's index segments. nlist scales as min(default, corpus size)
@@ -1776,11 +1773,11 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * artifact rebuilds from the CAPTURED version's segments (the
     * [[ensureLexical]] race argument verbatim). nlist/ksub clamp to the
     * corpus size on rebuild so tiny stores still train. */
-  private def ensurePq(): Option[(Array[Array[Float]], Array[Array[Array[Float]]])] = {
-    lastPqMode = Some("fresh")
+  private def ensurePq(arm: FamilyArm = new FamilyArm(lastPqMode = _))
+      : Option[(Array[Array[Float]], Array[Array[Array[Float]]])] =
     ensureArtifact(pqDir, "index")(
       appendSeg = (seg, _) => {
-        lastPqMode = Some("append")
+        arm("append")
         graft.ops.PqIndex.appendIvfPq(
           readSegments("index", Seq(seg)), "id", "embedding", pqDir)
       },
@@ -1792,10 +1789,10 @@ class MemoEngine(spark: SparkSession, basePath: String,
             familyRetract(pqDir, v0, v, vector = true)(
               d => graft.ops.PqIndex.deleteIvfPq(d, "id", "embedding", pqDir))(
               a => graft.ops.PqIndex.appendIvfPq(a, "id", "embedding", pqDir)))) {
-          lastPqMode = Some("retract")
+          arm("retract")
           graft.ops.PqIndex.ivfPqMetaAt(spark, pqDir)
         } else {
-          lastPqMode = Some("rebuild")
+          arm("rebuild")
           val out = rebuildPq(v)
           if (out.isDefined)
             ArtifactMeta.delete(spark, pqDir, RetractJournal)
@@ -1803,7 +1800,6 @@ class MemoEngine(spark: SparkSession, basePath: String,
         }
       },
       serve = () => graft.ops.PqIndex.ivfPqMetaAt(spark, pqDir))
-  }
 
   /** Rebuild arm of [[ensurePq]]: train + encode from the captured
     * version's index segments. */
@@ -1863,6 +1859,16 @@ class MemoEngine(spark: SparkSession, basePath: String,
   private[graft] var lastLexMode: Option[String] = None
   private[graft] var lastIvfMode: Option[String] = None
   private[graft] var lastPqMode: Option[String] = None
+
+  /** The arm ONE family walk took ("fresh" | "append" | "retract" |
+    * "rebuild"), held per call so a [[maintain]] leg reports its own
+    * walk while other legs and other callers run; every step is also
+    * mirrored into the family's shared `last*Mode` seam. */
+  private final class FamilyArm(seam: Option[String] => Unit) {
+    var mode = "fresh"
+    seam(Some(mode))
+    def apply(m: String): Unit = { mode = m; seam(Some(m)) }
+  }
 
   /** One classified v0→v records diff, shared by every maintenance
     * consumer of the window — the four [[familyRetract]] walks AND the
@@ -2187,11 +2193,11 @@ class MemoEngine(spark: SparkSession, basePath: String,
     ArtifactMeta.read(spark, artDir, LexVersionFile)
       .flatMap(_.toLongOption).filter(_ >= 0)
 
-  private def ensureSignatures(): Unit = {
-    lastSigMode = Some("fresh")
+  private def ensureSignatures(
+      arm: FamilyArm = new FamilyArm(lastSigMode = _)): Unit = {
     ensureArtifact[Unit](sigDir, "records")(
       appendSeg = (seg, _) => {
-        lastSigMode = Some("append")
+        arm("append")
         graft.ops.Dedup.appendSignatures(
           bodyCorpus(Seq(seg)), "id", "body", sigDir)
       },
@@ -2205,9 +2211,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
             familyRetract(sigDir, v0, v, vector = false)(
               d => graft.ops.Dedup.deleteSignatures(d, "id", "body", sigDir))(
               a => graft.ops.Dedup.appendSignatures(a, "id", "body", sigDir))))
-          lastSigMode = Some("retract")
+          arm("retract")
         else {
-          lastSigMode = Some("rebuild")
+          arm("rebuild")
           graft.ops.Dedup.writeSignatures(
             bodyCorpus(segments(v, "records")), "id", "body", sigDir)
           ArtifactMeta.delete(spark, sigDir, RetractJournal)
@@ -4334,54 +4340,82 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * policy — a metadata-only check when balanced, see [[retrainIvf]]).
     * Each family runs its own documented watermark walk: a fresh family
     * costs two metadata reads, a behind family exactly its catch-up
-    * arm — this op adds no machinery, it sequences the machinery so an
+    * arm — this op adds no machinery, it schedules the machinery so an
     * ingest pipeline can pay maintenance at a chosen time instead of on
-    * the first post-commit read. Returns a per-family status report. */
+    * the first post-commit read.
+    *
+    * The four families run as CONCURRENT legs ([[MemoEngine.legs]]),
+    * each walk followed by its own tombstone apply / retrain / labeling
+    * step: their small jobs and driver-side work (planning, k-means,
+    * Parquet writes) overlap instead of queueing. The legs share no
+    * lock — each family has its own artifact dir, build lock and
+    * watermark, and the one shared memo (the retract diff) is guarded by
+    * its own lock. A failed leg fails the call only after every leg has
+    * finished, with the first failure in leg order; its family's
+    * watermark stays behind and the next call catches it up. Views
+    * refresh (and compact) after the legs. Returns a per-family status
+    * report; each family's value names the arm its walk took on this
+    * call, e.g. `current (append)` or `current (rebuild, nlist 64)`. */
   def maintain(retrainSkew: Option[Double] = None,
       compactFragmentation: Option[Double] = None): Map[String, String] = {
     if (currentVersion.isEmpty) return Map("store" -> "empty")
-    val b = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    ensureLexical(); b += "lexical" -> "current"
-    val ivf = ensureIvf()
-    b += ("ivf" -> ivf.map(c => s"current (nlist ${c.length})")
-      .getOrElse("empty"))
-    val pq = ensurePq()
-    b += ("ivfpq" -> pq.map(c => s"current (nlist ${c._1.length})")
-      .getOrElse("empty"))
-    ensureSignatures(); b += "signatures" -> "current"
-    // the dup-group labeling is maintained only for stores that asked
-    // for it (its spec file records the registered threshold) — maintain
-    // never CREATES the artifact, it brings an existing one current
-    ArtifactMeta.read(spark, dupDir, DupSpecFile)
-      .flatMap(_.stripPrefix("j").toDoubleOption).foreach { j =>
-        dupGroups(j); b += "dupgroups" -> s"current (j $j)"
-      }
-    // physical tombstone apply on the cell-partitioned families: a
-    // retract fold (or an explicit artifact delete) leaves pending
-    // tombstones the probes anti-join; applying them rewrites ONLY the
-    // affected cells, and is a metadata read when nothing is pending
-    if (ivf.isDefined)
-      b += ("ivf_apply" -> (if (graft.ops.IvfIndex
-          .applyDeletes(spark, ivfDir)) "applied" else "none pending"))
-    if (pq.isDefined)
-      b += ("ivfpq_apply" -> (if (graft.ops.PqIndex
-          .applyDeletesIvfPq(spark, pqDir)) "applied" else "none pending"))
+    def applied(fired: Boolean) = if (fired) "applied" else "none pending"
+    def retrained(fired: Boolean, skew: => Option[Double]) =
+      if (fired) "fired"
+      else s"skipped (skew ${skew.map(v => f"$v%.1f").getOrElse("n/a")})"
     // the postings family's apply is the LSM fold itself
     // ([[graft.ops.Lexical.compact]] — it rewrites the whole postings
     // table, not just affected partitions), so it runs only when a
     // driver-side metadata probe says tombstones are actually pending
-    if (graft.ops.Lexical.pendingTombstones(spark, lexDir)) {
-      graft.ops.Lexical.compact(spark, lexDir)
-      b += ("lexical_apply" -> "applied")
-    } else b += ("lexical_apply" -> "none pending")
-    retrainSkew.foreach { t =>
-      def skewStr(s: Option[Double]) =
-        s.map(v => f"$v%.1f").getOrElse("n/a")
-      b += ("ivf_retrain" -> (if (retrainIvf(t)) "fired"
-        else s"skipped (skew ${skewStr(ivfSkew())})"))
-      b += ("ivfpq_retrain" -> (if (retrainPq(t)) "fired"
-        else s"skipped (skew ${skewStr(pqSkew())})"))
+    val lexicalLeg = () => {
+      val arm = new FamilyArm(lastLexMode = _)
+      ensureLexical(arm)
+      val pending = graft.ops.Lexical.pendingTombstones(spark, lexDir)
+      if (pending) graft.ops.Lexical.compact(spark, lexDir)
+      Seq("lexical" -> s"current (${arm.mode})",
+        "lexical_apply" -> applied(pending))
     }
+    // physical tombstone apply on the cell-partitioned families: a
+    // retract fold (or an explicit artifact delete) leaves pending
+    // tombstones the probes anti-join; applying them rewrites ONLY the
+    // affected cells, and is a metadata read when nothing is pending
+    val ivfLeg = () => {
+      val arm = new FamilyArm(lastIvfMode = _)
+      val ivf = ensureIvf(arm)
+      Seq("ivf" -> ivf.map(c => s"current (${arm.mode}, nlist ${c.length})")
+          .getOrElse("empty")) ++
+        ivf.map(_ => "ivf_apply" ->
+          applied(graft.ops.IvfIndex.applyDeletes(spark, ivfDir))) ++
+        retrainSkew.map(t =>
+          "ivf_retrain" -> retrained(retrainIvf(t), ivfSkew()))
+    }
+    val pqLeg = () => {
+      val arm = new FamilyArm(lastPqMode = _)
+      val pq = ensurePq(arm)
+      Seq("ivfpq" -> pq.map(c =>
+          s"current (${arm.mode}, nlist ${c._1.length})").getOrElse("empty")) ++
+        pq.map(_ => "ivfpq_apply" ->
+          applied(graft.ops.PqIndex.applyDeletesIvfPq(spark, pqDir))) ++
+        retrainSkew.map(t =>
+          "ivfpq_retrain" -> retrained(retrainPq(t), pqSkew()))
+    }
+    // the dup-group labeling is maintained only for stores that asked
+    // for it (its spec file records the registered threshold) — maintain
+    // never CREATES the artifact, it brings an existing one current. It
+    // rides the signature leg: its walk re-walks the signatures first.
+    val signatureLeg = () => {
+      val arm = new FamilyArm(lastSigMode = _)
+      ensureSignatures(arm)
+      ("signatures" -> s"current (${arm.mode})") +:
+        ArtifactMeta.read(spark, dupDir, DupSpecFile)
+          .flatMap(_.stripPrefix("j").toDoubleOption).map { j =>
+            dupGroups(j)
+            "dupgroups" -> s"current (j $j)"
+          }.toSeq
+    }
+    val b = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    MemoEngine.legs(spark)(lexicalLeg, ivfLeg, pqLeg, signatureLeg)
+      .foreach(b ++= _)
     refreshViews().foreach { case (n, st) => b += (s"view:$n" -> st) }
     // compaction AFTER the refresh walk: fragmentation is a property of
     // the just-published layout, and a compact before the refresh would
@@ -5563,12 +5597,13 @@ object MemoEngine {
   private val scanMemo = new java.util.concurrent.ConcurrentHashMap[
     (String, String, String, Long, String), DataFrame]()
 
-  /** Daemon pool for overlapping the two independent segment writes of
-    * one commit attempt (the index embed and the records write share no
-    * data dependency — each is its own Spark job, and the scheduler
-    * back-fills executor slots freed by the other's tail). Cached, not
-    * fixed: concurrent writers each park at most one leg here, and an
-    * idle pool holds no threads. */
+  /** Daemon pool for overlapping independent legs of one call: the
+    * segment writes of a commit attempt (the index embed and the records
+    * write share no data dependency — each is its own Spark job, and the
+    * scheduler back-fills executor slots freed by the other's tail) and
+    * the four artifact-family walks of [[MemoEngine.maintain]]. Cached,
+    * not fixed: each caller parks at most its legs here, and an idle
+    * pool holds no threads. */
   private lazy val commitPool =
     java.util.concurrent.Executors.newCachedThreadPool(r => {
       val t = new Thread(r, "graft-commit-write")
@@ -5576,24 +5611,38 @@ object MemoEngine {
       t
     })
 
-  /** Run `a` on [[commitPool]] while `b` runs on the calling thread, and
-    * wait for BOTH before returning (a leg must never outlive the commit
-    * attempt — the caller's `finally deleteTree(staging)` would race an
-    * in-flight write). `b`'s failure wins; `a`'s surfaces when `b`
-    * succeeded. */
-  private[memo] def bothWrites(a: => Unit, b: => Unit): Unit = {
-    val fa = commitPool.submit(new java.util.concurrent.Callable[Unit] {
-      override def call(): Unit = a
-    })
-    try b
-    catch { case t: Throwable =>
-      try fa.get() catch { case _: Throwable => () } // drain, keep b's
-      throw t
-    }
-    try fa.get()
-    catch { // unwrap: the caller's retry/reclassify matches on the cause
-      case e: java.util.concurrent.ExecutionException => throw e.getCause
-    }
+  /** Run `first` on the calling thread and every leg of `rest` on
+    * [[commitPool]], and wait for ALL of them before returning (a leg
+    * must never outlive the call — a commit's `finally
+    * deleteTree(staging)` would race an in-flight write). Each pooled
+    * leg runs under the caller's Spark thread-locals, captured at submit
+    * time: local properties (job group, description, scheduler pool),
+    * the active session and its SQL conf. A cached pool thread would
+    * otherwise keep the properties of whichever caller first spawned
+    * it, filing this call's jobs under a stale job group. On failure
+    * every leg is drained first, then the first failure in leg order is
+    * rethrown unwrapped (a commit's retry/reclassify matches on the
+    * cause). Returns the legs' results in leg order. */
+  private[memo] def legs[A](spark: SparkSession)(first: () => A,
+      rest: (() => A)*): Seq[A] = {
+    val session =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val pooled = rest.map(leg => org.apache.spark.sql.execution.SQLExecution
+      .withThreadLocalCaptured(session, commitPool)(leg()))
+    var failure: Throwable = null
+    def drain(leg: => A): Option[A] =
+      try Some(leg)
+      catch { case t: Throwable =>
+        if (failure == null) failure = t
+        None
+      }
+    val outs = drain(first()) +: pooled.map(f => drain(
+      try f.get()
+      catch {
+        case e: java.util.concurrent.ExecutionException => throw e.getCause
+      }))
+    if (failure != null) throw failure
+    outs.flatten
   }
   @inline private[memo] def commitPhase[A](phase: String)(f: => A): A =
     if (commitPhaseHook == null) f

@@ -1968,8 +1968,9 @@ class MemoEngineSpec extends SparkTestBase {
     assert(engine.lastDupMode.contains("rebuild"), engine.lastDupMode)
     assert(engine.lastRetractRoute.exists(_.startsWith("rebuild(")),
       engine.lastRetractRoute)
-    engine.maintain()
+    val rebuilt = engine.maintain()
     assert(engine.lastLexMode.contains("rebuild"), engine.lastLexMode)
+    assert(rebuilt("lexical") == "current (rebuild)", rebuilt)
     // a METADATA-ONLY patch under the same floor is a zero-touch window:
     // free fold in every family, never a rebuild, route never consulted
     engine.lastRetractRoute = None
@@ -1981,8 +1982,9 @@ class MemoEngineSpec extends SparkTestBase {
       r.getLong(0) -> r.getLong(1)).toMap == oracle())
     assert(engine.lastSigMode.contains("retract"), engine.lastSigMode)
     assert(engine.lastDupMode.contains("retract"), engine.lastDupMode)
-    engine.maintain()
+    val folded = engine.maintain()
     assert(engine.lastLexMode.contains("retract"), engine.lastLexMode)
+    assert(folded("lexical") == "current (retract)", folded)
     assert(engine.lastRetractRoute.isEmpty, engine.lastRetractRoute)
     // floor dropped: the next delete patch takes the fold and the route
     // seam says so

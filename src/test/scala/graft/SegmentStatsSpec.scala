@@ -377,6 +377,64 @@ class SegmentStatsSpec extends SparkTestBase {
     engine.clean()
   }
 
+  test("a segment written by another tool with an all-null key: the " +
+      "compacting commit drops the key from its sidecar, marks the set " +
+      "incomplete, and every filter answers as the unpruned scan") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    val engine = freshEngine()
+    engine.save(doc("alpha one", "a") + doc("alpha two", "a"))
+    engine.save(doc("beta one", "b") + doc("beta two", "b"))
+    def segDirs(): Seq[java.nio.file.Path] = engine.records.inputFiles.toSeq
+      .map(f => Paths.get(f.stripPrefix("file:")).getParent).distinct.sorted
+    // rewrite the second segment as another tool would: the same rows
+    // plus a key "nk" whose every value is a null map value, under new
+    // file names and with no stats sidecar (the id range is kept)
+    val seg = segDirs().last
+    val rows = spark.read.schema(graft.memo.YamlIO.recordSchema)
+      .parquet(seg.toString).collect().toSeq.map(r => Row(r.getLong(0),
+        r.getString(1), r.getMap[String, String](2).toMap +
+          ("nk" -> (null: String))))
+    val out = Files.createTempDirectory("foreign_seg").resolve("out")
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+      graft.memo.YamlIO.recordSchema).write.parquet(out.toString)
+    Files.list(seg).iterator().asScala.toSeq
+      .filter(_.getFileName.toString != "_idrange").foreach(Files.delete)
+    Files.list(out).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .foreach(p => Files.copy(p, seg.resolve("foreign-" + p.getFileName)))
+    // the CURRENT stamp keys the engine's scan memo: move it so no plan
+    // over the old file listing is reused
+    val current = Paths.get(engine.records.inputFiles.head
+      .stripPrefix("file:")).getParent.getParent.getParent.resolve("CURRENT")
+    Files.setLastModifiedTime(current, java.nio.file.attribute.FileTime
+      .fromMillis(Files.getLastModifiedTime(current).toMillis + 5000))
+    // the compacting commit computes the new segment's sidecar over the
+    // null-valued key (the sidecar write used to throw on its null bound)
+    engine.reindex()
+    val st = SegmentStats.decode(Files.readString(
+      segDirs().head.resolve("_metastats"))).get
+    assert(!st.keysComplete && !st.keys.contains("nk") &&
+      st.keys.contains("category"), st)
+    engine.save(doc("gamma one", "c"))
+    // recorded keys still prune the compacted segment; the dropped key
+    // keeps it (unknown), and the complete gamma segment prunes on it
+    assert(engine.segmentPrune("category: c") == (1, 2))
+    assert(engine.segmentPrune("nk: x") == (1, 2))
+    for (f <- Seq("nk: x", "nk: {$ne: x}", "category: a", "category: c",
+        "category: {$ne: a}", "{nk: x, category: b}",
+        "{$or: [{nk: x}, {category: b}]}")) {
+      val pruned = engine.analyzeProject(f, Seq("id"))
+        .collect().map(_.getLong(0)).toSeq
+      val unpruned = graft.memo.MemoOps.analyzeProject(
+        engine.records, f, Seq("id")).collect().map(_.getLong(0)).toSeq
+      assert(pruned == unpruned, s"filter $f")
+      assert(engine.analyzeCount(f) == unpruned.size, s"filter $f")
+    }
+    assert(engine.analyzeCount("category: {$ne: a}") == 3)
+    engine.clean()
+  }
+
   test("patch commits write stats; pruning tracks the patched values") {
     import spark.implicits._
     val engine = freshEngine()
