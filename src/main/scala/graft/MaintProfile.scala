@@ -8,9 +8,9 @@ import org.apache.spark.sql.SparkSession
   * `reindex`/`vacuum` cost against that history?
   *
   * Shape: build a store by looping `save` (one commit = one segment; the
-  * segment cap is raised so the chain never auto-folds), warm all four
-  * maintained artifact families (postings / IVF / IVF-PQ / minhash
-  * signatures) to the live version, then repeatedly commit ONE more
+  * segment cap is raised so the chain never auto-folds), warm all three
+  * maintained artifact families (postings / the IVF-PQ ANN artifact /
+  * minhash signatures) to the live version, then repeatedly commit ONE more
   * segment and time each family's first post-commit serving call — that
   * call pays exactly one segment of catch-up. If the catch-up were
   * secretly a function of store size (a re-scan of the corpus, a
@@ -433,7 +433,6 @@ object MaintProfile {
         "lexical" -> timed(
           engine.hybridRecall("maintenance corpus concern1", k = 3).collect()),
         "ivf" -> timed(engine.annRecall("maintenance corpus", k = 3).collect()),
-        "ivfpq" -> timed(engine.pqRecall("maintenance corpus", k = 3).collect()),
         "signatures" -> timed { engine.admitNew(probeBatch(tag)).collect(); () })
     }
     touchAll("warm") // initial builds — every family pays its full build here

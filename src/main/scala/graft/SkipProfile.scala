@@ -95,7 +95,7 @@ object SkipProfile {
     // the cost that matters at scale: ROWS the fixed-nprobe probe scans
     // (probed cells' occupancy) — latency at this corpus size is mostly
     // fixed job overhead, row counts are the 100× signal
-    val ivfPath = base.resolve("db").resolve("_ivf").toString
+    val ivfPath = base.resolve("db").resolve("_ann").toString
     def probedRows(): Long = {
       val ctr = graft.ops.IvfIndex.readCentroids(spark, ivfPath).get
       val occ = graft.ops.IvfIndex.readOccupancy(spark, ivfPath).get
@@ -335,9 +335,9 @@ object SkipProfile {
     // phases 2..n: one probe pass per rung against a pre-cached mask
     val mask = engine.annMask(filter).cache()
     val survivors = mask.count()
-    val centroids = graft.ops.IvfIndex.readCentroids(spark, engine.ivfDir)
+    val centroids = graft.ops.IvfIndex.readCentroids(spark, engine.annDir)
       .getOrElse(sys.error("no IVF artifact"))
-    val idx = graft.ops.IvfIndex.load(spark, engine.ivfDir)
+    val idx = graft.ops.IvfIndex.load(spark, engine.annDir)
     val qv = graft.functions.VectorKernels.hashEmbedFloats(
       q, graft.functions.VectorKernels.DefaultDim)
     val ladder = Iterator.iterate(1)(_ * 2)

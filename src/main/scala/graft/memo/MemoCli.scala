@@ -101,16 +101,12 @@ object MemoCli {
             }
           case "retrain" :: retrainArgs =>
             retrainArgs match {
-              case opts if opts.forall(a => a == "--pq" ||
-                    a.toDoubleOption.exists(_ >= 1.0)) &&
-                  opts.count(_ != "--pq") <= 1 =>
+              case opts if opts.forall(_.toDoubleOption.exists(_ >= 1.0)) &&
+                  opts.size <= 1 =>
                 cmdRetrain(engine, baseOpt.get,
-                  pq = opts.contains("--pq"),
-                  maxSkew = opts.find(_ != "--pq")
-                    .map(_.toDouble).getOrElse(4.0))
+                  opts.headOption.map(_.toDouble).getOrElse(4.0))
               case _ =>
-                System.err.println(
-                  "Error: retrain takes [--pq] [maxSkew >= 1.0]")
+                System.err.println("Error: retrain takes [maxSkew >= 1.0]")
                 1
             }
           case "dups" :: dupsArgs =>
@@ -171,10 +167,10 @@ object MemoCli {
     println("  import              Replace the store from a full-DB YAML/JSONL file or dir (migration)")
     println("  export              Write the store as sharded full-DB YAML/JSONL (migration)")
     println("  cluster             Re-layout records by metadata key(s) <key[,key2,..]> [nClusters] (filtered reads prune; multi-key = Z-order)")
-    println("  retrain             Rebalance the maintained ANN index if cell occupancy drifted past [maxSkew] (default 4.0); --pq targets the compressed index")
+    println("  retrain             Rebalance the maintained ANN index (centroids and PQ codebooks) if cell occupancy drifted past [maxSkew] (default 4.0)")
     println("  dups                Print the maintained transitive duplicate groups ([minJaccard] default 0.8): one 'component: id id ...' line per group")
     println("  dedup               Keep-one-per-duplicate-group compaction ([minJaccard] default 0.8): reindex that also drops non-representative group members")
-    println("  maintain            Bring every maintained artifact current (postings/IVF/IVF-PQ/signatures/views); [retrainSkew] also retrains drifted quantizers; --compact re-grids fragmented view state")
+    println("  maintain            Bring every maintained artifact current (postings/ANN/signatures/views); [retrainSkew] also retrains drifted quantizers; --compact re-grids fragmented view state")
     println()
     println("Options:")
     println("  -f <base>           REQUIRED DB base directory")
@@ -639,23 +635,21 @@ object MemoCli {
     0
   }
 
-  /** `retrain [--pq] [maxSkew]` — the drift maintenance op
-    * ([[MemoEngine.retrainIvf]]/[[MemoEngine.retrainPq]]): report the
-    * stored occupancy skew (a driver-side metadata read), rebalance
-    * only if it exceeds the threshold. */
+  /** `retrain [maxSkew]` — the drift maintenance op
+    * ([[MemoEngine.retrainIvf]]): report the stored occupancy skew (a
+    * driver-side metadata read), rebalance the one ANN artifact —
+    * centroids and codebooks together — only if it exceeds the
+    * threshold. */
   private def cmdRetrain(engine: MemoEngine, base: String,
-      pq: Boolean, maxSkew: Double): Int = {
+      maxSkew: Double): Int = {
     if (!engine.exists) {
       System.err.println(s"Error: no database at $base")
       return 1
     }
-    val which = if (pq) "pq" else "ann"
-    val fired =
-      if (pq) engine.retrainPq(maxSkew) else engine.retrainIvf(maxSkew)
-    val skew = if (pq) engine.pqSkew() else engine.ivfSkew()
-    val s = skew.map(v => f"$v%.1f").getOrElse("n/a")
-    if (fired) println(s"Retrained $which index (skew now $s)")
-    else println(s"No retrain needed for $which index (skew $s <= $maxSkew)")
+    val fired = engine.retrainIvf(maxSkew)
+    val s = engine.ivfSkew().map(v => f"$v%.1f").getOrElse("n/a")
+    if (fired) println(s"Retrained ann index (skew now $s)")
+    else println(s"No retrain needed for ann index (skew $s <= $maxSkew)")
     0
   }
 

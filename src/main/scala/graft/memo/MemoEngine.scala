@@ -833,7 +833,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
   /** [[streamSink]] with AMORTIZED MAINTENANCE: every `maintainEvery`-th
     * COMMITTED micro-batch runs the one-call [[maintain]] walk after its
     * commit, so a continuous ingest pipeline keeps the engine-maintained
-    * artifacts (postings / IVF / IVF-PQ / signatures / labeling / views)
+    * artifacts (postings / ANN / signatures / labeling / views)
     * near-current instead of leaving the first post-ingest read to pay
     * the whole catch-up. Exactly-once semantics are UNCHANGED: the
     * maintenance runs outside the commit (each family's watermark walk
@@ -982,7 +982,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
   private[graft] var beforeLexicalBuildHook: () => Unit = () => ()
 
   /** The version-watermark maintenance skeleton every engine-maintained
-    * artifact family shares (lexical postings, IVF, IVF-PQ, minhash
+    * artifact family shares (lexical postings, the ANN artifact, minhash
     * signatures). Fast path: the recorded watermark equals the live
     * version → serve lock-free, touching nothing. Stale path, under the
     * artifact's build lock (double-checked): if the live `kind` manifest
@@ -1077,133 +1077,137 @@ class MemoEngine(spark: SparkSession, basePath: String,
     ()
   }
 
-  private[graft] def ivfDir: String = base.resolve("_ivf").toString
+  /** The engine's one ANN artifact: an [[graft.ops.IvfIndex]] built with
+    * codes — one trained coarse quantizer plus PQ codebooks, and one
+    * `partitionBy(cell_id)` parquet of (id, embedding, code) that both
+    * the IVF and the IVF-PQ routes probe. */
+  private[graft] def annDir: String = base.resolve("_ann").toString
 
   /** [[ensureLexical]]'s version-watermark idiom generalized to the
-    * vector-artifact family: keep a persisted IVF index
-    * ([[graft.ops.IvfIndex]]) in lockstep with the store's committed
-    * `index` chain, so a memo store serves ANN without hand-built
-    * indexes. Same three-arm shape:
+    * vector family: keep the persisted ANN artifact ([[annDir]]) in
+    * lockstep with the store's committed `index` chain, so a memo store
+    * serves ANN without hand-built indexes. Same three-arm shape:
     *
-    *  - watermark current → serve the stored centroids lock-free (no
+    *  - watermark current → serve the stored quantizers lock-free (no
     *    corpus scan, no stamp re-validation — the version file IS the
     *    freshness proof);
     *  - append-only chain growth → O(new segments) catch-up via
-    *    [[graft.ops.IvfIndex.append]] (centroids reused, new rows land
-    *    as new files in existing cell partitions; a coarse quantizer
-    *    does not need retraining for an ingest increment);
+    *    [[graft.ops.IvfIndex.append]] (centroids and codebooks reused,
+    *    new rows land as new files in existing cell partitions; a
+    *    quantizer does not need retraining for an ingest increment);
     *  - chain rewrite (reindex/import/overwrite) or torn artifact →
     *    full rebuild from the CAPTURED version's segments (not the live
     *    view — the [[ensureLexical]] race argument verbatim), with
-    *    nlist re-derived from the corpus size.
+    *    nlist and ksub re-derived from the corpus size.
     *
-    * Returns the centroid matrix, or None for an empty corpus (no cells
-    * to probe — callers fall back to the exact ranking). */
+    * Returns (centroids, codebooks), or None for an empty corpus (no
+    * cells to probe — callers fall back to the exact ranking). */
   private def ensureIvf(arm: FamilyArm = new FamilyArm(lastIvfMode = _))
-      : Option[Array[Array[Float]]] =
-    ensureArtifact(ivfDir, "index")(
+      : Option[(Array[Array[Float]], Array[Array[Array[Float]]])] =
+    ensureArtifact(annDir, "index")(
       appendSeg = (seg, _) => {
         arm("append")
         graft.ops.IvfIndex.append(
-          readSegments("index", Seq(seg)), "id", "embedding", ivfDir)
+          readSegments("index", Seq(seg)), "id", "embedding", annDir)
         ()
       },
       rebuild = v => {
         // RETRACT arm ([[familyRetract]]): a pure-delete/add patch
         // tombstones dead vectors (probes anti-join them until
         // [[graft.ops.IvfIndex.applyDeletes]] compacts the affected
-        // cells) and cell-appends added vectors — O(touched), centroids
-        // untouched (a delete perturbs the coarse quantizer no more than
-        // an ingest increment; occupancy drift is the retrain trigger's
-        // job either way)
-        if (familyWatermark(ivfDir).exists(v0 =>
-            familyRetract(ivfDir, v0, v, vector = true)(
-              d => graft.ops.IvfIndex.delete(d, "id", "embedding", ivfDir))(
-              a => { graft.ops.IvfIndex.append(a, "id", "embedding", ivfDir)
+        // cells) and cell-appends added vectors — O(touched), quantizers
+        // untouched (a delete perturbs them no more than an ingest
+        // increment; occupancy drift is the retrain trigger's job
+        // either way)
+        if (familyWatermark(annDir).exists(v0 =>
+            familyRetract(annDir, v0, v, vector = true)(
+              d => graft.ops.IvfIndex.delete(d, "id", "embedding", annDir))(
+              a => { graft.ops.IvfIndex.append(a, "id", "embedding", annDir)
                      () }))) {
           arm("retract")
-          graft.ops.IvfIndex.readCentroids(spark, ivfDir)
+          annQuantizers()
         } else {
           arm("rebuild")
           val out = rebuildIvf(v)
           if (out.isDefined)
-            ArtifactMeta.delete(spark, ivfDir, RetractJournal)
+            ArtifactMeta.delete(spark, annDir, RetractJournal)
           out
         }
       },
-      serve = () => graft.ops.IvfIndex.readCentroids(spark, ivfDir))
+      serve = () => annQuantizers())
+
+  private def annQuantizers()
+      : Option[(Array[Array[Float]], Array[Array[Array[Float]]])] =
+    graft.ops.IvfIndex.metaAt(spark, annDir)
+      .flatMap(m => m.codebooks.map((m.centroids, _)))
 
   /** Rebuild arm of [[ensureIvf]]: train + persist from the captured
-    * version's index segments. nlist scales as min(default, corpus size)
-    * so tiny stores train (trainCentroids requires sample ≥ nlist) and
-    * grown stores keep bounded cells. */
-  private def rebuildIvf(v: Long): Option[Array[Array[Float]]] = {
+    * version's index segments. nlist and ksub scale as min(default,
+    * corpus size) so tiny stores train (training requires sample ≥ nlist
+    * and ≥ ksub) and grown stores keep bounded cells. A store written by
+    * a build that kept IVF and IVF-PQ as two artifacts (`_ivf`,
+    * `_ivfpq`) reaches this arm on its first ANN call, since [[annDir]]
+    * has no watermark yet; the superseded dirs go once the new artifact
+    * is written. */
+  private def rebuildIvf(v: Long)
+      : Option[(Array[Array[Float]], Array[Array[Array[Float]]])] = {
     val corpus = scanOf(v, "index")
     val n = corpus.count()
     if (n == 0) None
-    else Some(graft.ops.IvfIndex.buildIfAbsent(corpus, "id", "embedding",
-      math.min(MemoEngine.AnnNlist.toLong, n).toInt, ivfDir))
+    else {
+      graft.ops.IvfIndex.buildIfAbsent(corpus, "id", "embedding",
+        math.min(MemoEngine.AnnNlist.toLong, n).toInt, annDir,
+        pq = Some((MemoEngine.AnnPqM,
+          math.min(MemoEngine.AnnPqKsub.toLong, n).toInt)))
+      Seq("_ivf", "_ivfpq").map(base.resolve(_)).foreach(deleteTree)
+      annQuantizers()
+    }
   }
 
-  /** Occupancy-drift statistic of the maintained IVF artifact:
+  /** Occupancy-drift statistic of the maintained ANN artifact:
     * max/median occupancy over non-empty cells (1.0 = perfectly
     * balanced), read straight off the artifact's stamp file — driver
     * metadata, NO Spark job (build, append, and apply each refresh the
     * stored occupancy). [[ensureIvf]]'s append arm deliberately reuses
-    * the trained quantizer forever (the right call per ingest
+    * the trained quantizers forever (the right call per ingest
     * increment), so a DRIFTING data distribution piles rows into hot
     * cells and probe cost quietly degrades toward O(hot cell); this is
     * the cheap signal an operator (or [[retrainIvf]]) watches. None
     * when no artifact exists. */
   def ivfSkew(): Option[Double] =
-    graft.ops.IvfIndex.readOccupancy(spark, ivfDir)
+    graft.ops.IvfIndex.readOccupancy(spark, annDir)
       .map(o => graft.ops.IvfIndex.occupancySkew(o.toSeq))
 
-  /** [[ivfSkew]] on the compressed (IVF-PQ) artifact. */
-  def pqSkew(): Option[Double] =
-    graft.ops.PqIndex.readOccupancy(spark, pqDir)
-      .map(o => graft.ops.IvfIndex.occupancySkew(o.toSeq))
+  /** [[ivfSkew]] under its former IVF-PQ name: the IVF and IVF-PQ routes
+    * probe one artifact, so the two read the same occupancy. Kept only
+    * because the store benchmark reports it as `ops.pq_skew`. */
+  def pqSkew(): Option[Double] = ivfSkew()
 
-  /** Retrain-on-drift maintenance for the IVF family: bring the
-    * artifact current (the standard [[ensureIvf]] walk), then — ONLY if
-    * its stored occupancy skew exceeds `maxSkew` (the metadata-only
-    * check; a no-drift call never touches data) — retrain the coarse
-    * quantizer and rewrite through [[graft.ops.IvfIndex.compact]]. The
-    * corpus is the artifact's RECORDED watermark version's index chain,
-    * re-read under the artifact build lock (reentrant), never the live
-    * version: retraining against a newer corpus would race a concurrent
-    * catch-up into double-counting appended rows. Probe parity: the
-    * retrain runs the same fixed-seed bounded-sample k-means a fresh
-    * build over the same corpus runs, so the post-retrain index serves
-    * identically to a from-scratch build (spec-pinned). The reference
-    * retrains implicitly on every rebuild (memo_cli.py:272-285); this is
-    * that policy made incremental — appends stay O(batch), the retrain
-    * fires only on measured drift. Returns true iff a rewrite
-    * happened. */
+  /** Retrain-on-drift maintenance for the ANN artifact: bring it current
+    * (the standard [[ensureIvf]] walk), then — ONLY if its stored
+    * occupancy skew exceeds `maxSkew` (the metadata-only check; a
+    * no-drift call never touches data) — retrain the coarse quantizer
+    * and the codebooks together and rewrite through
+    * [[graft.ops.IvfIndex.compact]] (old codes are meaningless under new
+    * centroids). The corpus is the artifact's RECORDED watermark
+    * version's index chain, re-read under the artifact build lock
+    * (reentrant), never the live version: retraining against a newer
+    * corpus would race a concurrent catch-up into double-counting
+    * appended rows. Probe parity: the retrain runs the same fixed-seed
+    * bounded-sample k-means a fresh build over the same corpus runs, so
+    * the post-retrain index serves identically to a from-scratch build
+    * (spec-pinned). The reference retrains implicitly on every rebuild
+    * (memo_cli.py:272-285); this is that policy made incremental —
+    * appends stay O(batch), the retrain fires only on measured drift.
+    * Returns true iff a rewrite happened. */
   def retrainIvf(maxSkew: Double = 4.0): Boolean = {
     if (ensureIvf().isEmpty) return false
-    ArtifactMeta.withBuildLock(spark, ivfDir) {
-      ArtifactMeta.read(spark, ivfDir, LexVersionFile)
+    ArtifactMeta.withBuildLock(spark, annDir) {
+      ArtifactMeta.read(spark, annDir, LexVersionFile)
         .flatMap(_.toLongOption).exists { v0 =>
           graft.ops.IvfIndex.compact(
             scanOf(v0, "index"),
-            "id", "embedding", ivfDir, maxSkew)
-        }
-    }
-  }
-
-  /** [[retrainIvf]] on the compressed artifact ([[ensurePq]] +
-    * [[graft.ops.PqIndex.compactIvfPq]] — coarse quantizer AND
-    * codebooks retrain together; ADC codes are meaningless under new
-    * centroids). */
-  def retrainPq(maxSkew: Double = 4.0): Boolean = {
-    if (ensurePq().isEmpty) return false
-    ArtifactMeta.withBuildLock(spark, pqDir) {
-      ArtifactMeta.read(spark, pqDir, LexVersionFile)
-        .flatMap(_.toLongOption).exists { v0 =>
-          graft.ops.PqIndex.compactIvfPq(
-            scanOf(v0, "index"),
-            "id", "embedding", pqDir, maxSkew)
+            "id", "embedding", annDir, maxSkew)
         }
     }
   }
@@ -1285,7 +1289,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
   /** An opened probe artifact: its cell count plus the three kernels the
     * probe bodies call — one single-query search returning (id, score,
     * …) ≤ k rows, and the batch search with and without the exact-fill
-    * ladder over (query_id, qv) queries. The IVF and IVF-PQ families
+    * ladder over (query_id, qv) queries. The IVF and IVF-PQ routes
     * differ ONLY here ([[AnnFamily]]). */
   private abstract class AnnProbe(val nlist: Int) {
     def search(qv: Array[Float], k: Int, nprobe: Int,
@@ -1297,19 +1301,18 @@ class MemoEngine(spark: SparkSession, basePath: String,
         : (DataFrame, (Int, Int))
   }
 
-  /** A probed vector family — the engine-maintained IVF artifact (raw
-    * vectors re-ranked in the probed cells) or the IVF-PQ artifact (ADC
-    * codes cut to k×refine candidates, then the raw re-rank). `route`
-    * is the name [[lastServeRoute]] reports; `open` brings the artifact
-    * current ([[ensureIvf]] / [[ensurePq]]) and loads it, None on an
-    * empty/uncommitted store. */
+  /** A probe route over the engine-maintained ANN artifact — IVF (raw
+    * vectors re-ranked in the probed cells) or IVF-PQ (ADC codes cut to
+    * k×refine candidates, then the raw re-rank). `route` is the name
+    * [[lastServeRoute]] reports; `open` brings the artifact current
+    * ([[ensureIvf]]) and loads it, None on an empty/uncommitted store. */
   private abstract class AnnFamily(val route: String) {
     def open(): Option[AnnProbe]
   }
 
   private object IvfFamily extends AnnFamily("ann") {
-    def open(): Option[AnnProbe] = ensureIvf().map { centroids =>
-      val idx = graft.ops.IvfIndex.load(spark, ivfDir)
+    def open(): Option[AnnProbe] = ensureIvf().map { case (centroids, _) =>
+      val idx = graft.ops.IvfIndex.load(spark, annDir)
       new AnnProbe(centroids.length) {
         def search(qv: Array[Float], k: Int, nprobe: Int,
             allowed: Option[DataFrame], floor: Option[Double]) =
@@ -1329,30 +1332,29 @@ class MemoEngine(spark: SparkSession, basePath: String,
     }
   }
 
-  /** The compressed family at `refine` candidates per result row; the
-    * refine stage re-ranks against the live store's [[index]]. */
+  /** The compressed route at `refine` candidates per result row: ADC
+    * over the artifact's `code` column, then the exact re-rank against
+    * the same loaded artifact's `embedding` — candidates and refine
+    * vectors come from one version. */
   private final class PqFamily(refine: Int) extends AnnFamily("pq") {
-    def open(): Option[AnnProbe] = ensurePq().map {
+    def open(): Option[AnnProbe] = ensureIvf().map {
       case (centroids, codebooks) =>
-        val codes = graft.ops.PqIndex.loadCodes(spark, pqDir)
+        val idx = graft.ops.IvfIndex.load(spark, annDir)
         new AnnProbe(centroids.length) {
           def search(qv: Array[Float], k: Int, nprobe: Int,
               allowed: Option[DataFrame], floor: Option[Double]) =
-            graft.ops.PqIndex.searchIvfPq(codes, index, "id", "embedding",
-              centroids, codebooks, qv, k, nprobe, refine, allowed,
-              rawFloor = floor)
+            graft.ops.PqIndex.searchIvfPq(idx, centroids, codebooks, qv, k,
+              nprobe, refine, allowed, rawFloor = floor)
           def searchBatch(q: DataFrame, k: Int, nprobe: Int,
               floor: Option[Double]) =
-            graft.ops.PqIndex.searchBatchIvfPq(codes, index, "id",
-              "embedding", centroids, codebooks, q, "query_id", "qv", k,
-              nprobe, refine, rawFloor = floor)
+            graft.ops.PqIndex.searchBatchIvfPq(idx, centroids, codebooks, q,
+              "query_id", "qv", k, nprobe, refine, rawFloor = floor)
           def searchBatchFill(q: DataFrame, k: Int, nprobe: Int,
               mask: DataFrame, floor: Option[Double],
               track: DataFrame => Unit) =
-            graft.ops.PqIndex.searchBatchFillIvfPq(codes, index, "id",
-              "embedding", centroids, codebooks, q, "query_id", "qv", k,
-              nprobe, refine, allowed = Some(mask), rawFloor = floor,
-              track = track)
+            graft.ops.PqIndex.searchBatchFillIvfPq(idx, centroids,
+              codebooks, q, "query_id", "qv", k, nprobe, refine,
+              allowed = Some(mask), rawFloor = floor, track = track)
         }
     }
   }
@@ -1684,10 +1686,10 @@ class MemoEngine(spark: SparkSession, basePath: String,
       nprobe, filterExpr, floor, adaptive = false, withBody = true)
 
   /** The BATCH twin of [[pqRecall]] — [[annRecallBatch]]'s contract on
-    * the engine-maintained IVF-PQ artifact: queries embed IN THE PLAN,
-    * the probed cells' m-byte codes pay the ADC candidate stage (~32×
-    * narrower than the raw vectors), and only the ≤ k×refine survivors
-    * per query touch raw vectors for the exact re-rank
+    * the codes of the engine-maintained ANN artifact: queries embed IN
+    * THE PLAN, the probed cells' m-byte codes pay the ADC candidate stage
+    * (~32× narrower than the raw vectors), and only the ≤ k×refine
+    * survivors per query touch raw vectors for the exact re-rank
     * ([[graft.ops.PqIndex.searchBatchIvfPq]]). The filter mask applies
     * BEFORE the ADC cut, so the cut can never starve the fill. Returns
     * (query_id, id, score, body), top-k SET per query, unordered.
@@ -1761,66 +1763,15 @@ class MemoEngine(spark: SparkSession, basePath: String,
     } finally endServingCall(srvTok)
   }
 
-  private def pqDir: String = base.resolve("_ivfpq").toString
-
-  /** [[ensureIvf]]'s idiom on the COMPRESSED vector family: keep a
-    * persisted IVF-PQ index ([[graft.ops.PqIndex]]) in lockstep with the
-    * store's committed `index` chain. Same three arms — watermark-current
-    * serves lock-free off the stored (centroids, codebooks); append-only
-    * growth catches up O(new segments) via
-    * [[graft.ops.PqIndex.appendIvfPq]] (both quantizers reused — an
-    * ingest increment does not retrain); a chain rewrite or torn
-    * artifact rebuilds from the CAPTURED version's segments (the
-    * [[ensureLexical]] race argument verbatim). nlist/ksub clamp to the
-    * corpus size on rebuild so tiny stores still train. */
-  private def ensurePq(arm: FamilyArm = new FamilyArm(lastPqMode = _))
-      : Option[(Array[Array[Float]], Array[Array[Array[Float]]])] =
-    ensureArtifact(pqDir, "index")(
-      appendSeg = (seg, _) => {
-        arm("append")
-        graft.ops.PqIndex.appendIvfPq(
-          readSegments("index", Seq(seg)), "id", "embedding", pqDir)
-      },
-      rebuild = v => {
-        // RETRACT arm — [[ensureIvf]]'s argument on the compressed
-        // family: tombstone dead codes, encode-append added vectors,
-        // both quantizers untouched
-        if (familyWatermark(pqDir).exists(v0 =>
-            familyRetract(pqDir, v0, v, vector = true)(
-              d => graft.ops.PqIndex.deleteIvfPq(d, "id", "embedding", pqDir))(
-              a => graft.ops.PqIndex.appendIvfPq(a, "id", "embedding", pqDir)))) {
-          arm("retract")
-          graft.ops.PqIndex.ivfPqMetaAt(spark, pqDir)
-        } else {
-          arm("rebuild")
-          val out = rebuildPq(v)
-          if (out.isDefined)
-            ArtifactMeta.delete(spark, pqDir, RetractJournal)
-          out
-        }
-      },
-      serve = () => graft.ops.PqIndex.ivfPqMetaAt(spark, pqDir))
-
-  /** Rebuild arm of [[ensurePq]]: train + encode from the captured
-    * version's index segments. */
-  private def rebuildPq(v: Long): Option[(Array[Array[Float]], Array[Array[Array[Float]]])] = {
-    val corpus = scanOf(v, "index")
-    val n = corpus.count()
-    if (n == 0) None
-    else Some(graft.ops.PqIndex.buildIfAbsentIvfPq(corpus, "id", "embedding",
-      nlist = math.min(MemoEngine.AnnNlist.toLong, n).toInt,
-      m = MemoEngine.AnnPqM,
-      ksub = math.min(MemoEngine.AnnPqKsub.toLong, n).toInt, pqDir))
-  }
-
-  /** Compressed ANN over the engine-MAINTAINED IVF-PQ artifact
-    * ([[ensurePq]]): probe cells prune at file-listing time, the ADC
+  /** Compressed ANN over the codes of the engine-MAINTAINED ANN artifact
+    * ([[ensureIvf]]): probe cells prune at file-listing time, the ADC
     * candidate stage reads the m-byte codes (~32× narrower than the raw
     * vectors), and only the k×refine survivors pay the exact cosine
-    * re-rank against the store's real embeddings — [[annRecall]]'s probe
-    * economics with the candidate scan compressed on top, which is the
-    * serving shape once even the probed cells' raw vectors outweigh the
-    * I/O budget. Same approximation contract as [[annRecall]] plus PQ
+    * re-rank against their raw vectors in the same cells —
+    * [[annRecall]]'s probe economics with the candidate scan compressed
+    * on top, which is the serving shape once even the probed cells' raw
+    * vectors outweigh the I/O budget. Same approximation contract as
+    * [[annRecall]] plus PQ
     * quantization error (absorbed by the refine re-rank at these data
     * scales; recall-vs-refine is pinned in PqIndexSpec). Falls back to
     * the exact [[recall]] ranking on an empty/uncommitted store.
@@ -1858,7 +1809,6 @@ class MemoEngine(spark: SparkSession, basePath: String,
   /** [[lastSigMode]]'s twins for the other maintained families. */
   private[graft] var lastLexMode: Option[String] = None
   private[graft] var lastIvfMode: Option[String] = None
-  private[graft] var lastPqMode: Option[String] = None
 
   /** The arm ONE family walk took ("fresh" | "append" | "retract" |
     * "rebuild"), held per call so a [[maintain]] leg reports its own
@@ -1871,7 +1821,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
   }
 
   /** One classified v0→v records diff, shared by every maintenance
-    * consumer of the window — the four [[familyRetract]] walks AND the
+    * consumer of the window — the three [[familyRetract]] walks AND the
     * dup-labeling fold ([[tryDupRetract]]) ride the same object, so a
     * patch pays its changefeed classification jobs exactly ONCE per
     * maintenance pass (pre-r19 the dup walk re-ran its own
@@ -2140,7 +2090,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * id blank at v) — emptiness is a runtime property this fold
     * deliberately does not probe (the probe was a per-side count job,
     * dropped r19). Every family's `deleteRows`/`appendRows` closure must
-    * therefore be a SAFE NO-OP on an empty frame: the four families
+    * therefore be a SAFE NO-OP on an empty frame: the three families
     * satisfy it structurally (tombstone append of an empty set writes an
     * empty delta, signature/postings/centroid appends of zero rows add
     * nothing, and stamp facts retreat by the empty set's zero totals) —
@@ -4333,18 +4283,19 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * "skipped" for a meta this build can't decode). */
   /** One-call POST-INGEST maintenance — the nightly-maintenance shape
     * at scale: bring EVERY engine-maintained artifact current against
-    * the live committed version (BM25 postings, IVF, IVF-PQ, admission
-    * signatures, every registered view), so subsequent serving calls
-    * pay ZERO catch-up, and optionally retrain the vector quantizers
-    * when their stored occupancy skew exceeds `retrainSkew` (the drift
-    * policy — a metadata-only check when balanced, see [[retrainIvf]]).
+    * the live committed version (BM25 postings, the IVF/IVF-PQ
+    * artifact, admission signatures, every registered view), so
+    * subsequent serving calls pay ZERO catch-up, and optionally retrain
+    * the vector quantizers when their stored occupancy skew exceeds
+    * `retrainSkew` (the drift policy — a metadata-only check when
+    * balanced, see [[retrainIvf]]).
     * Each family runs its own documented watermark walk: a fresh family
     * costs two metadata reads, a behind family exactly its catch-up
     * arm — this op adds no machinery, it schedules the machinery so an
     * ingest pipeline can pay maintenance at a chosen time instead of on
     * the first post-commit read.
     *
-    * The four families run as CONCURRENT legs ([[MemoEngine.legs]]),
+    * The three families run as CONCURRENT legs ([[MemoEngine.legs]]),
     * each walk followed by its own tombstone apply / retrain / labeling
     * step: their small jobs and driver-side work (planning, k-means,
     * Parquet writes) overlap instead of queueing. The legs share no
@@ -4382,22 +4333,14 @@ class MemoEngine(spark: SparkSession, basePath: String,
     val ivfLeg = () => {
       val arm = new FamilyArm(lastIvfMode = _)
       val ivf = ensureIvf(arm)
-      Seq("ivf" -> ivf.map(c => s"current (${arm.mode}, nlist ${c.length})")
-          .getOrElse("empty")) ++
+      Seq("ivf" -> ivf.map { case (c, cb) =>
+          s"current (${arm.mode}, nlist ${c.length}, " +
+            s"pq ${cb.length}x${cb(0).length})"
+        }.getOrElse("empty")) ++
         ivf.map(_ => "ivf_apply" ->
-          applied(graft.ops.IvfIndex.applyDeletes(spark, ivfDir))) ++
+          applied(graft.ops.IvfIndex.applyDeletes(spark, annDir))) ++
         retrainSkew.map(t =>
           "ivf_retrain" -> retrained(retrainIvf(t), ivfSkew()))
-    }
-    val pqLeg = () => {
-      val arm = new FamilyArm(lastPqMode = _)
-      val pq = ensurePq(arm)
-      Seq("ivfpq" -> pq.map(c =>
-          s"current (${arm.mode}, nlist ${c._1.length})").getOrElse("empty")) ++
-        pq.map(_ => "ivfpq_apply" ->
-          applied(graft.ops.PqIndex.applyDeletesIvfPq(spark, pqDir))) ++
-        retrainSkew.map(t =>
-          "ivfpq_retrain" -> retrained(retrainPq(t), pqSkew()))
     }
     // the dup-group labeling is maintained only for stores that asked
     // for it (its spec file records the registered threshold) — maintain
@@ -4414,7 +4357,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
           }.toSeq
     }
     val b = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    MemoEngine.legs(spark)(lexicalLeg, ivfLeg, pqLeg, signatureLeg)
+    MemoEngine.legs(spark)(lexicalLeg, ivfLeg, signatureLeg)
       .foreach(b ++= _)
     refreshViews().foreach { case (n, st) => b += (s"view:$n" -> st) }
     // compaction AFTER the refresh walk: fragmentation is a property of
@@ -4750,7 +4693,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * The streaming watermark deliberately does NOT carry over: the clone
     * is a new lineage, and inheriting the source's batch-id high-water
     * mark would silently drop the first batches of any stream pointed at
-    * it. Maintained artifacts (_ivf/_ivfpq/postings/signatures) are not
+    * it. Maintained artifacts (_ann/postings/signatures) are not
     * cloned; the clone's `ensure*` rebuild them lazily off the copied
     * index — no re-embedding there either.
     *
@@ -5601,7 +5544,7 @@ object MemoEngine {
     * segment writes of a commit attempt (the index embed and the records
     * write share no data dependency — each is its own Spark job, and the
     * scheduler back-fills executor slots freed by the other's tail) and
-    * the four artifact-family walks of [[MemoEngine.maintain]]. Cached,
+    * the three artifact-family walks of [[MemoEngine.maintain]]. Cached,
     * not fixed: each caller parks at most its legs here, and an idle
     * pool holds no threads. */
   private lazy val commitPool =
@@ -5714,7 +5657,7 @@ object MemoEngine {
     * so tiny stores still train. */
   val AnnNlist = 16
 
-  /** PQ geometry for the engine-maintained IVF-PQ artifact
+  /** PQ geometry of the engine-maintained ANN artifact's codes
     * ([[MemoEngine.pqRecall]]): m sub-quantizers over the 384-dim hash
     * embedding, ksub centroids each (one code byte per subspace); ksub
     * clamps to the corpus size on rebuild so tiny stores still train. */

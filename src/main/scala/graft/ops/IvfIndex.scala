@@ -170,15 +170,29 @@ object IvfIndex {
     * iterations suffice: cells only gate which partitions a probe reads. */
   def trainCentroids(corpus: DataFrame, embCol: String, nlist: Int,
       sampleFraction: Double = 1.0, seed: Long = 42L,
-      maxSample: Int = 20000, maxIter: Int = 8): Array[Array[Float]] = {
-    val sampled = (if (sampleFraction < 1.0)
+      maxSample: Int = 20000, maxIter: Int = 8): Array[Array[Float]] =
+    centroidsOf(trainingSample(corpus, embCol, sampleFraction, seed,
+      maxSample), nlist, maxIter)
+
+  /** The bounded driver sample both quantizers train on: up to
+    * `maxSample` vectors in xxhash64 order, a deterministic order
+    * independent of partition layout. [[trainCentroids]] and
+    * [[PqIndex.trainCodebooks]] each collect it; a build that trains
+    * both collects it once. */
+  private[ops] def trainingSample(corpus: DataFrame, embCol: String,
+      sampleFraction: Double = 1.0, seed: Long = 42L,
+      maxSample: Int = 20000): Array[Array[Float]] =
+    (if (sampleFraction < 1.0)
         corpus.sample(withReplacement = false, sampleFraction, seed)
       else corpus)
       .select(col(embCol).as("e"))
-      // deterministic order independent of partition layout
       .withColumn("h", xxhash64(col("e")))
       .orderBy("h").limit(maxSample)
       .collect().map(_.getSeq[Float](0).toArray)
+
+  /** Lloyd's iterations of [[trainCentroids]] over a collected sample. */
+  private def centroidsOf(sampled: Array[Array[Float]], nlist: Int,
+      maxIter: Int): Array[Array[Float]] = {
     require(sampled.length >= nlist, s"sample ${sampled.length} < nlist $nlist")
     val dim = sampled(0).length
     // init: hash-ordered sample is pseudo-random → take the first nlist
@@ -282,10 +296,17 @@ object IvfIndex {
   /** Assign every vector to its cell; result is hash-partitioned by cell so
     * each query's probe touches few partitions. Assignment is the codegen
     * [[graft.functions.NearestCentroid]] expression — the one full-corpus
-    * pass stays inside whole-stage codegen, no per-row UDF serialization. */
+    * pass stays inside whole-stage codegen, no per-row UDF serialization.
+    * With `codebooks` the same pass also emits each row's m-byte PQ
+    * `code` ([[graft.functions.PqEncode]]) — the cell-partitioned
+    * IVF-PQ layout (FAISS's IndexIVFPQ: one coarse quantizer, codes in
+    * its cells), which [[PqIndex.searchIvfPq]] scans through Parquet
+    * column pruning without reading the raw vectors. */
   def build(corpus: DataFrame, idCol: String, embCol: String,
-      centroids: Array[Array[Float]]): DataFrame =
-    corpus.select(col(idCol).as("id"), col(embCol).as("embedding"))
+      centroids: Array[Array[Float]],
+      codebooks: Option[Array[Array[Array[Float]]]] = None): DataFrame =
+    corpus.select(Seq(col(idCol).as("id"), col(embCol).as("embedding")) ++
+        codebooks.map(cb => pqEncode(col(embCol), cb).as("code")): _*)
       .withColumn("cell_id", nearestCentroid(col("embedding"), centroids))
       .repartition(col("cell_id"))
 
@@ -314,14 +335,11 @@ object IvfIndex {
     * (a bare [[persist]]ed layout). HEADER-ONLY: probes call this on
     * every read, so the stream stops at the first matrix row — the
     * centroid/codebook floats (the bulk of the file) are never read, let
-    * alone materialized. Shared with [[PqIndex]]'s `_ivfpq_meta` (same
-    * header layout: stamp line, optional `occ:`, manifest lines, matrix
-    * rows). */
+    * alone materialized. */
   private[graft] def readHeaderManifest(
       conf: org.apache.hadoop.conf.Configuration,
-      path: String, metaName: String): CellManifest = {
-    val metaPath = new org.apache.hadoop.fs.Path(path, metaName)
-    val fs = metaPath.getFileSystem(conf)
+      path: String): CellManifest = {
+    val (fs, metaPath) = metaFile(conf, path)
     if (!fs.exists(metaPath)) CellManifest.Ungated
     else {
       val in = fs.open(metaPath)
@@ -369,20 +387,19 @@ object IvfIndex {
     * the caller's action) remain the caller-visible transient class the
     * churn specs pin. */
   private[ops] def stableRead(spark: org.apache.spark.sql.SparkSession,
-      path: String, metaName: String,
-      construct: CellManifest => DataFrame): DataFrame = {
+      path: String, construct: CellManifest => DataFrame): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
     var attempts = 0
     var lastTransient: Throwable = null
     while (attempts < 5) {
-      val m = readHeaderManifest(conf, path, metaName)
+      val m = readHeaderManifest(conf, path)
       val df =
         try Some(construct(m))
         catch { case e: Throwable if isLoudTransient(e) =>
           lastTransient = e; None }
       df match {
         case Some(d)
-            if readHeaderManifest(conf, path, metaName).gen == m.gen =>
+            if readHeaderManifest(conf, path).gen == m.gen =>
           return d
         case _ => attempts += 1
       }
@@ -416,9 +433,12 @@ object IvfIndex {
     * ([[stableRead]]: complete-old-or-complete-new visibility even
     * against back-to-back [[applyDeletes]]/[[append]] pairs), excluding
     * any docs retracted by [[delete]] that the apply has not yet folded
-    * away ([[ArtifactMeta.excludeTombstones]]). */
+    * away ([[ArtifactMeta.excludeTombstones]]). An artifact with codes
+    * reads (id, embedding, code, cell_id): the IVF probe projects
+    * `embedding`, the ADC scan `code`, and column pruning keeps each
+    * read to its own column. */
   def load(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    stableRead(spark, path, MetaName, m =>
+    stableRead(spark, path, m =>
       ArtifactMeta.excludeTombstones(resolveCellData(spark, path, m),
         tombDir(path), "id"))
 
@@ -435,74 +455,86 @@ object IvfIndex {
     * count-only freshness hole: data regenerated IN PLACE with an
     * identical row count now invalidates the index, at the cost of one
     * column scan per build check. Training stays a bounded driver sample
-    * ([[trainCentroids]]); the assignment pass is distributed codegen. */
+    * ([[trainCentroids]]); the assignment pass is distributed codegen.
+    *
+    * `pq = Some((m, ksub))` gives the artifact its codes half: PQ
+    * codebooks ([[PqIndex.trainCodebooks]], same sample rule) are trained
+    * beside the centroids, every row carries its `code` ([[build]]), and
+    * the stamp and meta record m/ksub plus the codebook rows
+    * ([[metaAt]]). Without it the artifact and its meta are the plain
+    * IVF layout. */
   def buildIfAbsent(corpus: DataFrame, idCol: String, embCol: String,
       nlist: Int, path: String, sampleFraction: Double = 1.0,
-      refineIters: Int = 0): Array[Array[Float]] = {
-    val (fs, metaPath) = metaLocation(corpus, path)
+      refineIters: Int = 0,
+      pq: Option[(Int, Int)] = None): Array[Array[Float]] = {
+    val conf = hconf(corpus)
     val (n, fp) = ArtifactMeta.fingerprint(corpus, Seq(idCol, embCol))
     // refineIters rides in the stamp: changing the refinement config must
     // invalidate like any other config change, and a paid refinement must
     // not be silently discarded by the next freshness check
-    val stamp = s"$n:$nlist:$sampleFraction:$refineIters:fp$fp"
+    val stamp = Stamp(n, nlist, sampleFraction, refineIters, pq, fp)
     // a pending journal that contradicts the live stamp marks a torn
     // append (crash between data write and stamp advance): the stamp can
     // no longer be trusted to describe the data — force the rebuild arm
-    def torn() = ArtifactMeta.journalTorn(corpus.sparkSession, path, Journal,
-      readMeta(fs, metaPath).map(_.stamp).getOrElse(""))
-    readMeta(fs, metaPath) match {
-      case Some(m) if m.stamp == stamp && !torn() => m.centroids // fresh: lock-free
-      case _ => ArtifactMeta.withBuildLock(corpus, path) {
+    def fresh(): Option[Array[Array[Float]]] = readMeta(conf, path)
+      .filter(m => m.stamp == stamp.render && !ArtifactMeta.journalTorn(
+        corpus.sparkSession, path, Journal, m.stamp))
+      .map(_.centroids)
+    fresh().getOrElse { // fresh: lock-free
+      ArtifactMeta.withBuildLock(corpus, path) {
         // double-checked: a racing builder may have finished while we
         // waited for the lock — its stamp validates and we reuse
-        readMeta(fs, metaPath) match {
-          case Some(m) if m.stamp == stamp && !torn() => m.centroids
-          case _ =>
-            val sampled = trainCentroids(corpus, embCol, nlist,
-              sampleFraction = sampleFraction)
-            val centroids =
-              if (refineIters > 0) refineCentroids(corpus, embCol, sampled,
-                refineIters)
-              else sampled
-            persist(build(corpus, idCol, embCol, centroids), path)
-            val fm = freshManifest(corpus.sparkSession, path)
-            writeMeta(fs, metaPath,
-              Meta(stamp,
-                Some(cellOccupancyOf(corpus.sparkSession, path, fm, nlist)),
-                centroids, fm))
-            centroids
-        }
+        fresh().getOrElse(rewrite(corpus, idCol, embCol, path, stamp))
       }
     }
   }
 
+  /** Train the quantizers `stamp` names over `corpus` — the centroids
+    * (plus distributed refinement when configured) and, for an artifact
+    * with codes, the PQ codebooks — then rewrite the whole artifact and
+    * publish its meta. The one full-rewrite path of [[buildIfAbsent]]
+    * and [[compact]]: old codes are meaningless under new centroids, so
+    * codebooks always retrain together with them. Returns the
+    * centroids. */
+  private def rewrite(corpus: DataFrame, idCol: String, embCol: String,
+      path: String, stamp: Stamp): Array[Array[Float]] = {
+    val spark = corpus.sparkSession
+    val sample = trainingSample(corpus, embCol, stamp.sampleFraction)
+    val sampled = centroidsOf(sample, stamp.nlist, maxIter = 8)
+    val centroids =
+      if (stamp.refineIters > 0) refineCentroids(corpus, embCol, sampled,
+        stamp.refineIters)
+      else sampled
+    val codebooks = stamp.pq.map { case (m, ksub) =>
+      PqIndex.codebooksOf(sample, m, ksub, maxIter = 8) }
+    persist(build(corpus, idCol, embCol, centroids, codebooks), path)
+    val fm = freshManifest(spark, path)
+    writeMeta(hconf(corpus), path, Meta(stamp.render,
+      Some(cellOccupancyOf(spark, path, fm, stamp.nlist)), centroids, fm,
+      codebooks))
+    centroids
+  }
+
   /** Append a batch to a persisted index WITHOUT retraining or rewriting —
     * the maintenance path [[buildIfAbsent]]'s full-rebuild stamp check
-    * doesn't cover. Centroids are REUSED from the stored stamp file (a
-    * coarse quantizer does not need retraining for an ingest increment;
-    * cell balance drifts only as the data distribution does), the batch is
-    * codegen-assigned to cells, and its rows land as NEW files inside the
-    * existing `cell_id=` partition directories (`mode("append")` +
-    * `partitionBy` — existing files are never read or rewritten, so the
-    * cost is O(batch) regardless of index size). The stamp's row count is
-    * advanced so a later [[buildIfAbsent]] over the grown corpus validates
-    * against the index instead of retraining it.
+    * doesn't cover. Centroids (and codebooks, on an artifact with codes)
+    * are REUSED from the stored meta (a quantizer does not need
+    * retraining for an ingest increment; cell balance and quantization
+    * error drift only as the data distribution does), the batch is
+    * codegen-assigned to cells (and encoded), and its rows land as NEW
+    * files inside the existing `cell_id=` partition directories
+    * (`mode("append")` + `partitionBy` — existing files are never read
+    * or rewritten, so the cost is O(batch) regardless of index size).
+    * The stamp's row count is advanced so a later [[buildIfAbsent]] over
+    * the grown corpus validates against the index instead of retraining
+    * it.
     *
     * Returns the (reused) centroids. */
   def append(batch: DataFrame, idCol: String, embCol: String,
       path: String): Array[Array[Float]] =
       ArtifactMeta.withBuildLock(batch, path) {
-    val (fs, metaPath) = metaLocation(batch, path)
-    val meta = readMeta(fs, metaPath).getOrElse(
-      throw new IllegalStateException(
-        s"no IVF index at $path — run buildIfAbsent before append"))
-    val Array(count, nlist, sampleFraction, refineIters, fp) =
-      meta.stamp.split(":", 5) match {
-        case a if a.length == 5 && a(4).startsWith("fp") => a
-        case _ => throw new IllegalStateException(
-          s"IVF index at $path predates refinement-aware stamps — " +
-            "delete it (or its _ivf_centroids) and rebuild")
-      }
+    val conf = hconf(batch)
+    val meta = requireMeta(conf, path, "append")
     val spark = batch.sparkSession
     // journal protocol (the Lexical shape): a crash between the data
     // write and the stamp advance must be DETECTABLE — without it the
@@ -516,10 +548,10 @@ object IvfIndex {
     ArtifactMeta.requireNoPendingTombstones(batch, idCol, tombDir(path),
       "run applyDeletes first")
     val (bn, bfp) = ArtifactMeta.fingerprint(batch, Seq(idCol, embCol))
-    val next = s"${count.toLong + bn}:$nlist:$sampleFraction:$refineIters" +
-      s":fp${BigInt(fp.drop(2)) + bfp}"
+    val next = stampOf(meta, path).plus(bn, bfp).render
     ArtifactMeta.write(spark, path, Journal, next)
-    val built = build(batch, idCol, embCol, meta.centroids).cache()
+    val built = build(batch, idCol, embCol, meta.centroids, meta.codebooks)
+      .cache()
     val batchCells = built.select("cell_id").distinct()
       .collect().map(_.getInt(0)).toSeq
     // a root cell dir that exists but is NOT in base is a crashed
@@ -527,6 +559,7 @@ object IvfIndex {
     // adopting it wholesale would duplicate them, so it dies BEFORE the
     // batch writes into that cell (invisible to probes, safe under the
     // lock)
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
     meta.manifest.base.foreach { b =>
       batchCells.filterNot(b.contains).foreach { c =>
         val d = new org.apache.hadoop.fs.Path(path, s"cell_id=$c")
@@ -543,9 +576,10 @@ object IvfIndex {
     // stamp advances additively in O(batch); occupancy is re-read from the
     // grown layout (a partition-column-only scan — parquet answers it from
     // directory names + footer row counts, no data pages)
-    writeMeta(fs, metaPath, Meta(next,
-      Some(cellOccupancyOf(spark, path, grownManifest, nlist.toInt)),
-      meta.centroids, grownManifest))
+    writeMeta(conf, path, meta.copy(stamp = next,
+      occupancy = Some(cellOccupancyOf(spark, path, grownManifest,
+        meta.centroids.length)),
+      manifest = grownManifest))
     ArtifactMeta.delete(spark, path, Journal)
     meta.centroids
   }
@@ -568,24 +602,14 @@ object IvfIndex {
   def delete(batch: DataFrame, idCol: String, embCol: String,
       path: String): Unit = ArtifactMeta.withBuildLock(batch, path) {
     val spark = batch.sparkSession
-    val (fs, metaPath) = metaLocation(batch, path)
-    val meta = readMeta(fs, metaPath).getOrElse(
-      throw new IllegalStateException(
-        s"no IVF index at $path — run buildIfAbsent before delete"))
+    val conf = hconf(batch)
+    val meta = requireMeta(conf, path, "delete")
     ArtifactMeta.journalGuard(spark, path, Journal, meta.stamp)
-    val parts = meta.stamp.split(":", 5) match {
-      case a if a.length == 5 && a(4).startsWith("fp") => a
-      case _ => throw new IllegalStateException(
-        s"IVF index at $path predates refinement-aware stamps — " +
-          "delete it (or its _ivf_centroids) and rebuild")
-    }
     val (bn, bfp) = ArtifactMeta.fingerprint(batch, Seq(idCol, embCol))
-    val n = parts(0).toLong - bn
-    require(n >= 0, s"delete batch exceeds index contents at $path " +
-      s"(${parts(0)} rows, $bn deleted) — id contract violated")
-    val next = (s"$n:${parts(1)}:${parts(2)}:${parts(3)}" +
-      s":fp${BigInt(parts(4).drop(2)) - bfp}")
-    ArtifactMeta.write(spark, path, Journal, next)
+    val next = stampOf(meta, path).plus(-bn, -bfp)
+    require(next.count >= 0, s"delete batch exceeds index contents at " +
+      s"$path (${next.count + bn} rows, $bn deleted) — id contract violated")
+    ArtifactMeta.write(spark, path, Journal, next.render)
     batch.select(col(idCol).as("id")).distinct()
       .write.mode("append").parquet(tombDir(path))
     // legacy (pre-manifest) artifacts get their manifest PINNED here,
@@ -595,8 +619,7 @@ object IvfIndex {
     val gated =
       if (meta.manifest.gated) meta.manifest
       else freshManifest(spark, path)
-    writeMeta(fs, metaPath,
-      Meta(next, meta.occupancy, meta.centroids, gated))
+    writeMeta(conf, path, meta.copy(stamp = next.render, manifest = gated))
     ArtifactMeta.delete(spark, path, Journal)
   }
 
@@ -615,15 +638,12 @@ object IvfIndex {
     * count-ladder pin). Crash anywhere leaves the OLD manifest serving
     * correct rows — cells only lose already-tombstoned rows and
     * [[load]]'s anti-join masks the same ids — plus invisible orphans
-    * the next apply sweeps under the lock. */
+    * the next apply sweeps under the lock. Codes move with their rows,
+    * so they still decode under the stored codebooks. */
   def applyDeletes(spark: org.apache.spark.sql.SparkSession,
       path: String): Boolean = ArtifactMeta.withBuildLock(spark, path) {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metaPath = new org.apache.hadoop.fs.Path(path, "_ivf_centroids")
-    val meta = readMeta(fs, metaPath).getOrElse(
-      throw new IllegalStateException(
-        s"no IVF index at $path — run buildIfAbsent before applyDeletes"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val meta = requireMeta(conf, path, "applyDeletes")
     ArtifactMeta.journalGuard(spark, path, Journal, meta.stamp)
     readTombstones(spark, path) match {
       case None => false
@@ -633,19 +653,20 @@ object IvfIndex {
         // pre-swap manifest and republish paths the cleanup just
         // deleted, bricking every later probe
         val published = swapAffectedCells(spark, path, tomb, meta.manifest,
-          publish = m => writeMeta(fs, metaPath, meta.copy(manifest = m)))
+          publish = m => writeMeta(conf, path, meta.copy(manifest = m)))
           .getOrElse(meta.manifest)
-        fs.delete(new org.apache.hadoop.fs.Path(tombDir(path)), true)
-        val nlist = meta.stamp.split(":", 5)(1).toInt
-        writeMeta(fs, metaPath, meta.copy(manifest = published,
-          occupancy = Some(cellOccupancyOf(spark, path, published, nlist))))
+        val tombPath = new org.apache.hadoop.fs.Path(tombDir(path))
+        tombPath.getFileSystem(conf).delete(tombPath, true)
+        writeMeta(conf, path, meta.copy(manifest = published,
+          occupancy = Some(cellOccupancyOf(spark, path, published,
+            meta.centroids.length))))
         true
     }
   }
 
-  /** The cell-partition swap shared by the IVF and IVF-PQ tombstone
-    * applies — MANIFEST-GATED ([[Lexical]]'s visibility contract on the
-    * `cell_id=` layout): rewrite ONLY the partitions containing
+  /** The cell-partition swap of [[applyDeletes]] — MANIFEST-GATED
+    * ([[Lexical]]'s visibility contract on the `cell_id=` layout):
+    * rewrite ONLY the partitions containing
     * tombstoned ids, staged under an invisible `_apply_<tag>` parent,
     * published by ONE atomic meta swap (`publish` writes the caller's
     * stamp file with the new [[CellManifest]]), and only THEN are the
@@ -656,7 +677,7 @@ object IvfIndex {
     * anywhere leaves the OLD manifest serving correct rows (tombstones
     * still mask the dead ids) with only invisible orphans to sweep —
     * which the next apply does, under the lock. */
-  private[ops] def swapAffectedCells(
+  private def swapAffectedCells(
       spark: org.apache.spark.sql.SparkSession, path: String,
       tomb: DataFrame, manifest0: CellManifest,
       publish: CellManifest => Unit): Option[CellManifest] = {
@@ -742,8 +763,7 @@ object IvfIndex {
   def cellOccupancy(spark: org.apache.spark.sql.SparkSession, path: String,
       nlist: Int): Array[Long] =
     cellOccupancyOf(spark, path,
-      readHeaderManifest(spark.sparkContext.hadoopConfiguration, path,
-        MetaName), nlist)
+      readHeaderManifest(spark.sparkContext.hadoopConfiguration, path), nlist)
 
   /** [[cellOccupancy]] against an explicit manifest (callers mid-meta-
     * write that know the layout better than the file does). */
@@ -771,106 +791,148 @@ object IvfIndex {
 
   /** Rebalance a persisted index whose cell occupancy has drifted past
     * `maxSkew` — the maintenance op [[append]] needs: append reuses the
-    * stored centroids forever, so a drifting data distribution piles new
-    * rows into a few hot cells and probe cost/recall degrade silently.
+    * stored quantizers forever, so a drifting data distribution piles
+    * new rows into a few hot cells (probe cost/recall degrade silently)
+    * and ages the codebooks (ADC candidate quality degrades).
     *
     * The skew CHECK is metadata-only (occupancy rides in the stamp file,
     * maintained by build and every append); only when it trips does the
-    * index pay a retrain (bounded driver sample, as always) + full
-    * rewrite. Returns true iff a rewrite happened. After compaction the
-    * stamp carries the corpus fingerprint, so a following [[buildIfAbsent]]
-    * over the same corpus validates without rebuilding. */
+    * index pay a retrain (bounded driver sample, as always) of the
+    * centroids AND, on an artifact with codes, the codebooks, plus a full
+    * rewrite ([[rewrite]]). Returns true iff a rewrite happened. After
+    * compaction the stamp carries the corpus fingerprint, so a following
+    * [[buildIfAbsent]] over the same corpus validates without
+    * rebuilding. */
   def compact(corpus: DataFrame, idCol: String, embCol: String,
       path: String, maxSkew: Double = 4.0): Boolean =
       ArtifactMeta.withBuildLock(corpus, path) {
-    val (fs, metaPath) = metaLocation(corpus, path)
-    val meta = readMeta(fs, metaPath).getOrElse(
-      throw new IllegalStateException(
-        s"no IVF index at $path — run buildIfAbsent before compact"))
+    val meta = requireMeta(hconf(corpus), path, "compact")
     ArtifactMeta.journalGuard(corpus.sparkSession, path, Journal, meta.stamp)
-    val parts = meta.stamp.split(":", 5)
-    val nlist = parts(1).toInt
+    val stamp = stampOf(meta, path)
     // old artifacts without stored occupancy: one partition-column scan
-    val occ = meta.occupancy.getOrElse(
-      cellOccupancy(corpus.sparkSession, path, nlist))
+    val occ = meta.occupancy.getOrElse(cellOccupancyOf(corpus.sparkSession,
+      path, meta.manifest, stamp.nlist))
     if (occupancySkew(occ.toSeq) <= maxSkew) false
     else {
-      val sampleFraction = parts(2).toDouble
-      // pre-refinement stamps (4 fields) compact to refineIters = 0
-      val refineIters =
-        if (parts.length == 5 && !parts(3).startsWith("fp")) parts(3).toInt
-        else 0
-      val sampled = trainCentroids(corpus, embCol, nlist,
-        sampleFraction = sampleFraction)
-      val centroids =
-        if (refineIters > 0) refineCentroids(corpus, embCol, sampled,
-          refineIters)
-        else sampled
-      persist(build(corpus, idCol, embCol, centroids), path)
       val (n, fp) = ArtifactMeta.fingerprint(corpus, Seq(idCol, embCol))
-      val fm = freshManifest(corpus.sparkSession, path)
-      writeMeta(fs, metaPath,
-        Meta(s"$n:$nlist:$sampleFraction:$refineIters:fp$fp",
-          Some(cellOccupancyOf(corpus.sparkSession, path, fm, nlist)),
-          centroids, fm))
+      rewrite(corpus, idCol, embCol, path, stamp.copy(count = n, fp = fp))
       true
     }
   }
 
+  /** The validity stamp, rendered `count:nlist:sampleFraction:refineIters
+    * :fp<sum>` — or, on an artifact with codes,
+    * `count:nlist:sampleFraction:refineIters:m:ksub:fp<sum>`. `count` and
+    * the (id, embedding) fingerprint `fp` move additively with append and
+    * delete; the config between them round-trips verbatim. */
+  private final case class Stamp(count: Long, nlist: Int,
+      sampleFraction: Double, refineIters: Int, pq: Option[(Int, Int)],
+      fp: BigInt) {
+    def render: String =
+      s"$count:$nlist:$sampleFraction:$refineIters" +
+        pq.fold("") { case (m, ksub) => s":$m:$ksub" } + s":fp$fp"
+    def plus(n: Long, dfp: BigInt): Stamp =
+      copy(count = count + n, fp = fp + dfp)
+  }
+
+  private object Stamp {
+    def parse(s: String): Option[Stamp] = s.split(":") match {
+      case Array(n, nlist, sf, ri, fp) if fp.startsWith("fp") =>
+        Some(Stamp(n.toLong, nlist.toInt, sf.toDouble, ri.toInt, None,
+          BigInt(fp.drop(2))))
+      case Array(n, nlist, sf, ri, m, ksub, fp) if fp.startsWith("fp") =>
+        Some(Stamp(n.toLong, nlist.toInt, sf.toDouble, ri.toInt,
+          Some((m.toInt, ksub.toInt)), BigInt(fp.drop(2))))
+      case _ => None
+    }
+  }
+
+  private def stampOf(meta: Meta, path: String): Stamp =
+    Stamp.parse(meta.stamp).getOrElse(throw new IllegalStateException(
+      s"IVF index at $path predates refinement-aware stamps — " +
+        s"delete it (or its $MetaName) and rebuild"))
+
   /** Parsed `_ivf_centroids` content: validity stamp, per-cell occupancy
     * (absent on pre-compaction artifacts), cell manifest (ungated until
-    * the first physical apply), centroid matrix. */
+    * the first physical apply), centroid matrix, and — on an artifact
+    * with codes — the PQ codebooks `[subspace][code][subdim]`. */
   private[graft] case class Meta(stamp: String, occupancy: Option[Array[Long]],
       centroids: Array[Array[Float]],
-      manifest: CellManifest = CellManifest.Ungated)
+      manifest: CellManifest = CellManifest.Ungated,
+      codebooks: Option[Array[Array[Array[Float]]]] = None)
 
-  private def metaLocation(df: DataFrame, path: String) = {
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    val metaPath = new org.apache.hadoop.fs.Path(path, "_ivf_centroids")
+  private def hconf(df: DataFrame) =
+    df.sparkSession.sparkContext.hadoopConfiguration
+
+  /** The one location of an artifact's meta file: every meta read and
+    * write, header-only or whole, goes through it. */
+  private def metaFile(conf: org.apache.hadoop.conf.Configuration,
+      path: String)
+      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
+    val metaPath = new org.apache.hadoop.fs.Path(path, MetaName)
     (metaPath.getFileSystem(conf), metaPath)
   }
 
   /** Parse the lines of an `_ivf_centroids` file: stamp line, optional
-    * `occ:` line, centroid rows. Exposed so an oracle exporter can read a
-    * persisted index's centroids straight off disk (the oracle map must be
-    * a pure function of on-disk state, not of JVM history). */
+    * `occ:` line, manifest lines, the `nlist` centroid rows, then — when
+    * the stamp names m/ksub — the m×ksub codebook rows (j-major). Exposed
+    * so an oracle exporter can read a persisted index's matrices straight
+    * off disk (the oracle map must be a pure function of on-disk state,
+    * not of JVM history). */
   private[graft] def parseMetaLines(lines: Seq[String]): Option[Meta] =
-    lines.headOption.map { stamp =>
+    lines.headOption.flatMap { stamp =>
       val (occ, rest0) = lines.tail match {
         case o +: rest if o.startsWith("occ:") =>
           (Some(o.drop(4).split(",").filter(_.nonEmpty).map(_.toLong)), rest)
         case rest => (None, rest)
       }
-      val (manifest, ctrLines) = CellManifest.parse(rest0)
-      Meta(stamp, occ, ctrLines.map(_.split(",").map(_.toFloat)).toArray,
-        manifest)
+      val (manifest, matrixLines) = CellManifest.parse(rest0)
+      val rows = matrixLines.map(_.split(",").map(_.toFloat)).toArray
+      Stamp.parse(stamp).flatMap(_.pq) match {
+        case None => Some(Meta(stamp, occ, rows, manifest))
+        case Some((m, ksub)) =>
+          val nlist = rows.length - m * ksub
+          if (nlist < 1) None
+          else Some(Meta(stamp, occ, rows.take(nlist), manifest,
+            Some(Array.tabulate(m)(j =>
+              Array.tabulate(ksub)(c => rows(nlist + j * ksub + c))))))
+      }
     }
 
-  /** Centroids of a persisted index straight off its stamp file — the
+  /** [[parseMetaLines]]'s inverse. */
+  private def renderMeta(meta: Meta): String =
+    (meta.stamp +:
+      (meta.occupancy.map("occ:" + _.mkString(",")).toSeq ++
+        CellManifest.render(meta.manifest) ++
+        meta.centroids.toSeq.map(_.mkString(",")) ++
+        meta.codebooks.toSeq.flatMap(_.toSeq.flatten).map(_.mkString(","))))
+      .mkString("", "\n", "\n")
+
+  /** A persisted index's whole meta straight off its stamp file — the
     * serving read for a caller that maintains freshness EXTERNALLY (the
     * engine's version watermark): no corpus scan, no stamp
-    * re-validation, no lock. Returns None when no index exists. */
+    * re-validation, no lock. None when no index exists. */
+  private[graft] def metaAt(spark: org.apache.spark.sql.SparkSession,
+      path: String): Option[Meta] =
+    readMeta(spark.sparkContext.hadoopConfiguration, path)
+
+  /** Centroids of a persisted index off its stamp file ([[metaAt]]). */
   private[graft] def readCentroids(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[Array[Array[Float]]] = {
-    val metaPath = new org.apache.hadoop.fs.Path(path, "_ivf_centroids")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    readMeta(fs, metaPath).map(_.centroids).filter(_.nonEmpty)
-  }
+      path: String): Option[Array[Array[Float]]] =
+    metaAt(spark, path).map(_.centroids).filter(_.nonEmpty)
 
   /** Per-cell occupancy straight off the stamp file's `occ:` line —
-    * [[readCentroids]]'s contract for the drift signal: driver-side
-    * metadata, NO Spark job (build, append, and apply all refresh the
-    * stored occupancy). None when no artifact exists or a pre-occupancy
+    * [[metaAt]]'s contract for the drift signal: driver-side metadata,
+    * NO Spark job (build, append, and apply all refresh the stored
+    * occupancy). None when no artifact exists or a pre-occupancy
     * artifact never recorded it. */
   private[graft] def readOccupancy(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[Array[Long]] = {
-    val metaPath = new org.apache.hadoop.fs.Path(path, "_ivf_centroids")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    readMeta(fs, metaPath).flatMap(_.occupancy)
-  }
+      path: String): Option[Array[Long]] =
+    metaAt(spark, path).flatMap(_.occupancy)
 
-  private def readMeta(fs: org.apache.hadoop.fs.FileSystem,
-      metaPath: org.apache.hadoop.fs.Path): Option[Meta] = {
+  private def readMeta(conf: org.apache.hadoop.conf.Configuration,
+      path: String): Option[Meta] = {
+    val (fs, metaPath) = metaFile(conf, path)
     if (!fs.exists(metaPath)) return None
     val in = fs.open(metaPath)
     val lines =
@@ -879,21 +941,22 @@ object IvfIndex {
     parseMetaLines(lines)
   }
 
+  private def requireMeta(conf: org.apache.hadoop.conf.Configuration,
+      path: String, op: String): Meta =
+    readMeta(conf, path).getOrElse(throw new IllegalStateException(
+      s"no IVF index at $path — run buildIfAbsent before $op"))
+
   /** Meta writes are ATOMIC (temp + rename): the stamp file doubles as
     * the cell manifest, so a reader racing a swap must see the complete
     * old or complete new content, never a torn file. Every write mints a
     * fresh generation nonce ([[newGen]]) — minted HERE, not at call
     * sites, so no maintenance path can forget to bump it; [[stableRead]]
     * relies on "any meta write changes gen". */
-  private def writeMeta(fs: org.apache.hadoop.fs.FileSystem,
-      metaPath: org.apache.hadoop.fs.Path, meta: Meta): Unit = {
-    val stamped = meta.manifest.copy(gen = newGen())
-    val body = (meta.stamp +:
-        (meta.occupancy.map("occ:" + _.mkString(",")).toSeq ++
-          CellManifest.render(stamped) ++
-          meta.centroids.toSeq.map(_.mkString(","))))
-      .mkString("", "\n", "\n")
-    ArtifactMeta.writeAtomicFs(fs, metaPath, body)
+  private def writeMeta(conf: org.apache.hadoop.conf.Configuration,
+      path: String, meta: Meta): Unit = {
+    val (fs, metaPath) = metaFile(conf, path)
+    ArtifactMeta.writeAtomicFs(fs, metaPath, renderMeta(
+      meta.copy(manifest = meta.manifest.copy(gen = newGen()))))
   }
 
   /** Probe order of cells for a query vector (driver-side, nlist small).

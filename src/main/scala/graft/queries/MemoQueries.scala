@@ -1151,7 +1151,7 @@ object MemoQueries {
       require(skew2 < skew1,
         s"q116 retrain must lower the skew: $skew1 -> $skew2")
       val occ = graft.ops.IvfIndex.readOccupancy(s,
-        base.resolve("db").resolve("_ivf").toString).get
+        base.resolve("db").resolve("_ann").toString).get
       require(occ.sum == 96L,
         s"q116 occupancy ${occ.sum} != corpus 96 after retrain")
       // floor guard + route parity: full-probe ANN == filtered brute

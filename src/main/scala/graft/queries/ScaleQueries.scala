@@ -127,9 +127,10 @@ object ScaleQueries {
     val handle = SessionHandles.cached(s, s"q68_ivfpq:$dir") {
       val emb = Tables(s, dir, "embeddings")
       val path = ivfPqPath(dir)
-      val (cents, cbs) = PqIndex.buildIfAbsentIvfPq(emb, "vec_id",
-        "embedding", nlist = 16, m = PqM, ksub = PqKsub, path)
-      (PqIndex.loadCodes(s, path), cents, cbs)
+      val cents = IvfIndex.buildIfAbsent(emb, "vec_id", "embedding",
+        nlist = 16, path, pq = Some((PqM, PqKsub)))
+      (IvfIndex.load(s, path), cents,
+        IvfIndex.metaAt(s, path).flatMap(_.codebooks).get)
     }
     lastIvfPqMeta = Some((handle._2, handle._3))
     handle
@@ -141,10 +142,10 @@ object ScaleQueries {
     * that scale the candidate stage reads ~1/4 of the files at ~1/32 of
     * the bytes per row before any ranking work. */
   private val q68IvfPq: Q = (s, dir) => {
-    val (codes, cents, cbs) = ivfPqIndex(s, dir)
-    PqIndex.searchIvfPq(codes, Tables(s, dir, "embeddings"), "vec_id",
-      "embedding", cents, cbs, pqQueryVec(s, dir), k = 10, nprobe = 4,
-      refine = 4)
+    val (idx, cents, cbs) = ivfPqIndex(s, dir)
+    PqIndex.searchIvfPq(idx, cents, cbs, pqQueryVec(s, dir), k = 10,
+        nprobe = 4, refine = 4)
+      .select(col("id").as("vec_id"), col("score"))
   }
 
   /** Batch ADC serving over the IVF-PQ artifact (q37's shape on compressed
@@ -152,10 +153,10 @@ object ScaleQueries {
     * probed cells' code files — decode-once-per-row, dot per probing
     * query, bounded-heap top-k before the only shuffle. */
   private val q69PqBatch: Q = (s, dir) => {
-    val (codes, cents, cbs) = ivfPqIndex(s, dir)
+    val (idx, cents, cbs) = ivfPqIndex(s, dir)
     val queries = Tables(s, dir, "embeddings").filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    PqIndex.searchBatchAdc(codes, cents, cbs, queries, "query_id", "qv",
+    PqIndex.searchBatchAdc(idx, cents, cbs, queries, "query_id", "qv",
         k = 3, nprobe = 4)
       .select(col("query_id"), col("id").as("vec_id"), col("adc_score"))
       .orderBy(col("query_id"), desc("adc_score"), col("vec_id"))
@@ -269,14 +270,13 @@ object ScaleQueries {
     * quantization affects only which candidates the cut keeps, and with
     * every survivor kept it cannot affect the result at all. */
   private val q108PqBatchFill: Q = (s, dir) => {
-    val (codes, cents, cbs) = ivfPqIndex(s, dir)
+    val (idx, cents, cbs) = ivfPqIndex(s, dir)
     val queries = Tables(s, dir, "embeddings").filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val mask = Tables(s, dir, "embeddings").filter(col("vec_id") < 8)
       .select(col("vec_id").as("id"))
-    val (hits, (np, rungs)) = PqIndex.searchBatchFillIvfPq(codes,
-      Tables(s, dir, "embeddings"), "vec_id", "embedding", cents, cbs,
-      queries, "query_id", "qv", k = 10,
+    val (hits, (np, rungs)) = PqIndex.searchBatchFillIvfPq(idx, cents,
+      cbs, queries, "query_id", "qv", k = 10,
       nprobe = math.max(cents.length / 2, 1), refine = 4,
       allowed = Some(mask))
     require(rungs >= 1 && np == cents.length,
@@ -857,8 +857,9 @@ object ScaleQueries {
   /** Matrices of the most recently written persisted q68 index —
     * [[centroidsFromDisk]]'s IVF-PQ twin. */
   private def ivfPqMetaFromDisk: Option[(Array[Array[Float]], Array[Array[Array[Float]]])] =
-    newestMetaFromDisk("graft_q68_ivfpq_", "_ivfpq_meta")(
-      PqIndex.parseIvfPqMetaLines(_).map(m => (m.centroids, m.codebooks)))
+    newestMetaFromDisk("graft_q68_ivfpq_", IvfIndex.MetaName)(
+      IvfIndex.parseMetaLines(_).flatMap(m =>
+        m.codebooks.map((m.centroids, _))))
 
   /** Codebooks of the most recently written persisted q39 codes artifact —
     * [[centroidsFromDisk]]'s PQ twin. */
@@ -869,7 +870,7 @@ object ScaleQueries {
   /** Centroid matrix of the most recently written persisted q36 index, off
     * its `_ivf_centroids` stamp file. */
   private def centroidsFromDisk: Option[Array[Array[Float]]] =
-    newestMetaFromDisk("graft_q36_ivf_", "_ivf_centroids")(
+    newestMetaFromDisk("graft_q36_ivf_", IvfIndex.MetaName)(
       IvfIndex.parseMetaLines(_).map(_.centroids).filter(_.nonEmpty))
 
   /** Static oracles + the dynamically exported IVF, PQ, and IVF-PQ

@@ -477,7 +477,7 @@ class CliSpec extends SparkTestBase {
   }
 
   test("retrain verb: reports the stored skew, fires only past the " +
-      "threshold, --pq targets the compressed index, errors on bad args") {
+      "threshold, one ANN index (no --pq), errors on bad args") {
     withDb { db =>
       // no database yet
       val (c0, _) = run("-f", db, "retrain")
@@ -487,8 +487,12 @@ class CliSpec extends SparkTestBase {
       val (c1, o1) = run("-f", db, "retrain")
       assert(c1 == 0 && o1.startsWith("No retrain needed for ann index " +
         "(skew "), o1)
-      val (c2, o2) = run("-f", db, "retrain", "--pq", "2.0")
-      assert(c2 == 0 && o2.contains("pq index"), o2)
+      val (c2, o2) = run("-f", db, "retrain", "2.0")
+      assert(c2 == 0 && o2.contains("ann index"), o2)
+      // the IVF and IVF-PQ routes share one artifact: there is no
+      // separate compressed index to target
+      assert(run("-f", db, "retrain", "--pq")._1 == 1)
+      assert(run("-f", db, "retrain", "--pq", "2.0")._1 == 1)
       // arity/arg errors
       assert(run("-f", db, "retrain", "nope")._1 == 1)
       assert(run("-f", db, "retrain", "0.5")._1 == 1)
@@ -505,13 +509,13 @@ class CliSpec extends SparkTestBase {
       run("-f", db, "save", batch)
       val (c1, o1) = run("-f", db, "maintain")
       assert(c1 == 0, o1)
-      Seq("lexical: current", "ivf: current", "ivfpq: current",
-        "signatures: current").foreach(l =>
-        assert(o1.contains(l), s"missing '$l' in:\n$o1"))
+      Seq("lexical: current", "ivf: current", "signatures: current")
+        .foreach(l => assert(o1.contains(l), s"missing '$l' in:\n$o1"))
+      assert(!o1.contains("ivfpq"), o1)
       assert(!o1.contains("retrain"), "no threshold → no retrain lines")
       val (c2, o2) = run("-f", db, "maintain", "1000000.0")
       assert(c2 == 0 && o2.contains("ivf_retrain: skipped") &&
-        o2.contains("ivfpq_retrain: skipped"), o2)
+        !o2.contains("ivfpq"), o2)
       assert(run("-f", db, "maintain", "0.5")._1 == 1)
       assert(run("-f", db, "maintain", "2.0", "3.0")._1 == 1)
       // --compact composes with the retrain threshold in either order

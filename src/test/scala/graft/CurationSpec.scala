@@ -192,7 +192,7 @@ class CurationSpec extends SparkTestBase {
     // no existing index file touched, both stamps advanced so the next
     // cycle validates both artifacts without rebuild
     import graft.functions.VectorKernels
-    import graft.ops.{Dedup, PqIndex}
+    import graft.ops.{Dedup, IvfIndex}
     import spark.implicits._
     val corpus = docs.select(col("doc_id"), col("text"))
     val emb = Tables(spark, sfDir, "embeddings")
@@ -201,8 +201,8 @@ class CurationSpec extends SparkTestBase {
     val sigPath = base.resolve("minhash").toString
     val idxPath = base.resolve("ivfpq").toString
     Dedup.writeSignatures(corpus, "doc_id", "text", sigPath)
-    PqIndex.buildIfAbsentIvfPq(emb, "vec_id", "embedding",
-      nlist = 8, m = 8, ksub = 16, idxPath)
+    IvfIndex.buildIfAbsent(emb, "vec_id", "embedding", 8, idxPath,
+      pq = Some((8, 16)))
     def indexFiles() = {
       import scala.jdk.CollectionConverters._
       val s = java.nio.file.Files.walk(java.nio.file.Paths.get(idxPath))
@@ -230,13 +230,13 @@ class CurationSpec extends SparkTestBase {
     // vector side: embed only the ADMITTED rows, append to the index
     val admittedVecs = admitted.select(col("doc_id").as("vec_id"),
       vecNormalize(embedText(col("text"), dim)).as("embedding"))
-    PqIndex.appendIvfPq(admittedVecs, "vec_id", "embedding", idxPath)
+    IvfIndex.append(admittedVecs, "vec_id", "embedding", idxPath)
     val filesAfter = indexFiles()
     filesBefore.foreach { case (f, m) =>
       assert(filesAfter.contains(f) && filesAfter(f) == m,
         s"index append rewrote or removed $f during ingest")
     }
-    assert(PqIndex.loadCodes(spark, idxPath).count() ==
+    assert(IvfIndex.load(spark, idxPath).count() ==
       emb.count() + admitted.count(), "index lost rows through the cycle")
     // both stamps advanced: the next cycle's freshness checks validate
     val grownCorpus = corpus.unionByName(admitted)

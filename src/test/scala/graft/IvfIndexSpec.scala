@@ -4,12 +4,35 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-import graft.ops.IvfIndex
+import graft.ops.{IvfIndex, PqIndex}
 
 /** IVF ANN quality: deterministic build, acceptable recall vs exact, and
   * the storage story — a persisted `partitionBy(cell_id)` index whose probe
-  * prunes at the partition level. */
+  * prunes at the partition level. The lifecycle specs (append, delete,
+  * apply, compact, torn journal, churn, generation nonce) run each
+  * artifact twice: plain IVF, and with codes (the IVF-PQ layout), where
+  * they also pin what the codes half adds — appends reuse the codebooks,
+  * compaction retrains them, codes still decode after an apply. */
 class IvfIndexSpec extends SparkTestBase {
+
+  /** The two artifact layouts: plain IVF, and IVF with m = 8 / ksub = 16
+    * PQ codes. */
+  private val layouts: Seq[Option[(Int, Int)]] = Seq(None, Some((8, 16)))
+
+  private def codebooks(path: String) =
+    IvfIndex.metaAt(spark, path).flatMap(_.codebooks)
+      .map(_.map(_.map(_.toSeq).toSeq).toSeq)
+
+  /** Every stored row's code equals its embedding encoded under the
+    * artifact's stored codebooks (a no-op for a plain IVF artifact). */
+  private def assertCodesDecode(path: String): Unit =
+    IvfIndex.metaAt(spark, path).flatMap(_.codebooks).foreach { cbs =>
+      val idx = IvfIndex.load(spark, path)
+      val stale = idx.filter(!(col("code") ===
+        graft.functions.GraftFunctions.pqEncode(col("embedding"), cbs)))
+      assert(stale.count() == 0,
+        "a stored code no longer matches its embedding under the codebooks")
+    }
 
   test("ivf search recall@10 >= 0.5 with nprobe=4/16 cells") {
     val emb = Tables(spark, sfDir, "embeddings")
@@ -230,12 +253,16 @@ class IvfIndexSpec extends SparkTestBase {
   }
 
   test("append reuses centroids and never rewrites existing cell files") {
+    layouts.foreach(pq => withClue(s"codes $pq: ") {
     val emb = Tables(spark, sfDir, "embeddings")
     val seed = emb.filter(col("vec_id") % 2 === 0)
     val batch = emb.filter(col("vec_id") % 2 === 1)
     val path = java.nio.file.Files.createTempDirectory("ivf_app")
       .resolve("idx").toString
-    val c1 = IvfIndex.buildIfAbsent(seed, "vec_id", "embedding", 8, path)
+    val c1 = IvfIndex.buildIfAbsent(seed, "vec_id", "embedding", 8, path,
+      pq = pq)
+    val cb1 = codebooks(path)
+    assert(cb1.isDefined == pq.isDefined)
     def dataFiles() = {
       val root = java.nio.file.Paths.get(path)
       import scala.jdk.CollectionConverters._
@@ -249,6 +276,8 @@ class IvfIndexSpec extends SparkTestBase {
     val c2 = IvfIndex.append(batch, "vec_id", "embedding", path)
     assert(c1.map(_.toSeq).toSeq == c2.map(_.toSeq).toSeq,
       "append must reuse the stored centroids")
+    assert(codebooks(path) == cb1, "append must reuse the stored codebooks")
+    assertCodesDecode(path)
     val after = dataFiles()
     before.foreach { case (f, mtime) =>
       assert(after.contains(f), s"append removed existing file $f")
@@ -259,7 +288,8 @@ class IvfIndexSpec extends SparkTestBase {
     assert(idx.count() == emb.count(), "appended index lost rows")
     // stamp advanced: buildIfAbsent over the grown corpus validates the
     // appended index instead of retraining + rewriting
-    val c3 = IvfIndex.buildIfAbsent(emb, "vec_id", "embedding", 8, path)
+    val c3 = IvfIndex.buildIfAbsent(emb, "vec_id", "embedding", 8, path,
+      pq = pq)
     assert(c3.map(_.toSeq).toSeq == c1.map(_.toSeq).toSeq,
       "grown-corpus buildIfAbsent retrained despite a valid appended stamp")
     assert(dataFiles() == after, "grown-corpus buildIfAbsent rewrote files")
@@ -275,13 +305,16 @@ class IvfIndexSpec extends SparkTestBase {
     val grown = IvfIndex.search(idx, c2, query, k = 10, nprobe = 8)
       .collect().map(_.getLong(0)).toSet
     assert(grown == exact, "full-probe search over appended index drifted")
+    })
   }
 
   test("delete tombstones probes out; applyDeletes rewrites only affected cells") {
+    layouts.foreach(pq => withClue(s"codes $pq: ") {
     val emb = Tables(spark, sfDir, "embeddings")
     val path = java.nio.file.Files.createTempDirectory("ivf_del")
       .resolve("idx").toString
-    IvfIndex.buildIfAbsent(emb, "vec_id", "embedding", 8, path)
+    IvfIndex.buildIfAbsent(emb, "vec_id", "embedding", 8, path, pq = pq)
+    val cb0 = codebooks(path)
     def dataFiles() = {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(java.nio.file.Paths.get(path))
@@ -309,7 +342,8 @@ class IvfIndexSpec extends SparkTestBase {
     assert(served.intersect(victimIds.toSet).isEmpty, "tombstoned ids served")
     assert(served.size == emb.count() - victimIds.length)
     // the retreated stamp validates for corpus ∖ batch: NO rebuild
-    IvfIndex.buildIfAbsent(survivors, "vec_id", "embedding", 8, path)
+    IvfIndex.buildIfAbsent(survivors, "vec_id", "embedding", 8, path,
+      pq = pq)
     assert(dataFiles() == before,
       "buildIfAbsent over the surviving corpus must reuse, not retrain")
     // physical apply rewrites ONLY the affected cell's partition
@@ -332,16 +366,23 @@ class IvfIndexSpec extends SparkTestBase {
     // and no victim row survives in ANY live directory of the manifest
     assert(phys.intersect(victimIds.toSet).isEmpty,
       "victim rows still physically present after apply")
+    // codebooks survive the apply, and the rewritten cells' codes still
+    // decode under them
+    assert(codebooks(path) == cb0, "apply changed the stored codebooks")
+    assertCodesDecode(path)
     // and the stamp still validates (apply preserves it)
-    IvfIndex.buildIfAbsent(survivors, "vec_id", "embedding", 8, path)
+    IvfIndex.buildIfAbsent(survivors, "vec_id", "embedding", 8, path,
+      pq = pq)
     assert(dataFiles() == after, "post-apply buildIfAbsent rebuilt")
+    })
   }
 
   test("a tombstoned id is refused by append until applyDeletes") {
+    layouts.foreach(pq => withClue(s"codes $pq: ") {
     val emb = Tables(spark, sfDir, "embeddings")
     val path = java.nio.file.Files.createTempDirectory("ivf_reuse")
       .resolve("idx").toString
-    IvfIndex.buildIfAbsent(emb, "vec_id", "embedding", 8, path)
+    IvfIndex.buildIfAbsent(emb, "vec_id", "embedding", 8, path, pq = pq)
     val victims = emb.filter(col("vec_id") % 13 === 0)
     IvfIndex.delete(victims, "vec_id", "embedding", path)
     // old rows still live in the cells: a re-append of a pending-delete
@@ -357,6 +398,7 @@ class IvfIndexSpec extends SparkTestBase {
     val served = IvfIndex.load(spark, path).select("id")
       .collect().map(_.getLong(0))
     assert(served.count(_ == vid) == 1, "re-added id must serve exactly once")
+    })
   }
 
   test("tombstoned load keeps partition pruning AND broadcasts the anti-join") {
@@ -387,10 +429,11 @@ class IvfIndexSpec extends SparkTestBase {
   }
 
   test("a torn append (journal ≠ stamp) is refused and forces a rebuild") {
+    layouts.foreach(pq => withClue(s"codes $pq: ") {
     val emb = Tables(spark, sfDir, "embeddings")
     val path = java.nio.file.Files.createTempDirectory("ivf_torn")
       .resolve("idx").toString
-    IvfIndex.buildIfAbsent(emb, "vec_id", "embedding", 8, path)
+    IvfIndex.buildIfAbsent(emb, "vec_id", "embedding", 8, path, pq = pq)
     // simulate a crash between the data write and the stamp advance
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(path, "_ivf_journal"), "999:8:1.0:0:fp0\n")
@@ -399,13 +442,14 @@ class IvfIndexSpec extends SparkTestBase {
     }
     assert(e.getMessage.contains("incomplete append"))
     // freshness check sees the torn artifact as stale → rebuild arm
-    IvfIndex.buildIfAbsent(emb, "vec_id", "embedding", 8, path)
+    IvfIndex.buildIfAbsent(emb, "vec_id", "embedding", 8, path, pq = pq)
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(path, "_ivf_journal")),
       "rebuild must clear the journal")
     // healthy again: append round-trips
     val ids = IvfIndex.load(spark, path).count()
     assert(ids == emb.count())
+    })
   }
 
   test("training is deterministic under the fixed seed") {
@@ -457,11 +501,12 @@ class IvfIndexSpec extends SparkTestBase {
   }
 
   test("compact: metadata-only no-op when balanced, rebalance when skewed") {
+    layouts.foreach(pq => withClue(s"codes $pq: ") {
     import spark.implicits._
     val emb = Tables(spark, sfDir, "embeddings")
     val path = java.nio.file.Files.createTempDirectory("ivf_cmp")
       .resolve("idx").toString
-    IvfIndex.buildIfAbsent(emb, "vec_id", "embedding", 8, path)
+    IvfIndex.buildIfAbsent(emb, "vec_id", "embedding", 8, path, pq = pq)
     def files() = {
       import scala.jdk.CollectionConverters._
       val s = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
@@ -485,6 +530,7 @@ class IvfIndexSpec extends SparkTestBase {
       (10000L + i, v)
     }.toDF("vec_id", "embedding")
     IvfIndex.append(hot, "vec_id", "embedding", path)
+    val cbBefore = codebooks(path)
     val occBefore = IvfIndex.cellOccupancy(spark, path, 8)
     val skewBefore = IvfIndex.occupancySkew(occBefore.toSeq)
     assert(skewBefore > 4.0,
@@ -498,9 +544,21 @@ class IvfIndexSpec extends SparkTestBase {
     assert(skewAfter < skewBefore,
       s"retrain did not rebalance: $skewBefore -> $skewAfter")
     assert(occAfter.sum == grown.count(), "compaction lost rows")
+    // the codebooks retrain WITH the centroids: they are the grown
+    // corpus's codebooks now, and every code was rewritten under them
+    pq.foreach { case (m, ksub) =>
+      val retrained = PqIndex.trainCodebooks(grown, "embedding", m, ksub)
+        .map(_.map(_.toSeq).toSeq).toSeq
+      assert(codebooks(path).contains(retrained),
+        "compact must retrain the codebooks over the corpus")
+      assert(!cbBefore.contains(retrained),
+        "the hot cluster should have moved the codebooks")
+    }
+    assertCodesDecode(path)
 
     // the compacted index still answers exactly at full probe...
-    val meta = IvfIndex.buildIfAbsent(grown, "vec_id", "embedding", 8, path)
+    val meta = IvfIndex.buildIfAbsent(grown, "vec_id", "embedding", 8, path,
+      pq = pq)
     assert(files().nonEmpty)
     // score with search()'s own round4: the hot cluster is a wall of
     // near-ties, so the comparison must use the same rounding + id
@@ -518,6 +576,7 @@ class IvfIndexSpec extends SparkTestBase {
       k = 10, nprobe = 4).collect().map(_.getLong(0)).toSet
     assert(part.intersect(exact).size >= 5,
       s"recall@10 after compaction = ${part.intersect(exact).size / 10.0}")
+    })
   }
 
   test("buildIfAbsent validates the compacted stamp without rebuilding") {
@@ -586,9 +645,10 @@ class IvfIndexSpec extends SparkTestBase {
     // attempts under churn).
     val emb = Tables(spark, sfDir, "embeddings").cache()
     val n = emb.count()
+    layouts.foreach(pq => withClue(s"codes $pq: ") {
     val path = java.nio.file.Files.createTempDirectory("ivf_churn")
       .resolve("idx").toString
-    IvfIndex.buildIfAbsent(emb, "vec_id", "embedding", 8, path)
+    IvfIndex.buildIfAbsent(emb, "vec_id", "embedding", 8, path, pq = pq)
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val probeErrors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val probeOk = new java.util.concurrent.atomic.AtomicLong(0)
@@ -656,6 +716,8 @@ class IvfIndexSpec extends SparkTestBase {
     val finalIds = IvfIndex.load(spark, path)
       .select("id").collect().map(_.getLong(0)).toSet
     assert(finalIds == allIds.toSet, "post-churn contents diverged")
+    assertCodesDecode(path)
+    })
     emb.unpersist()
     ()
   }
@@ -667,11 +729,12 @@ class IvfIndexSpec extends SparkTestBase {
     // op published mid-resolution. Pin the bump across the lifecycle
     // (build → delete → apply → append → compact), each write distinct.
     val emb = Tables(spark, sfDir, "embeddings").cache()
+    layouts.foreach(pq => withClue(s"codes $pq: ") {
     val path = java.nio.file.Files.createTempDirectory("ivf_gen")
       .resolve("idx").toString
     val conf = spark.sparkContext.hadoopConfiguration
-    def gen() = IvfIndex.readHeaderManifest(conf, path, IvfIndex.MetaName).gen
-    IvfIndex.buildIfAbsent(emb, "vec_id", "embedding", 8, path)
+    def gen() = IvfIndex.readHeaderManifest(conf, path).gen
+    IvfIndex.buildIfAbsent(emb, "vec_id", "embedding", 8, path, pq = pq)
     val g0 = gen()
     assert(g0.nonEmpty, "build wrote no generation nonce")
     val batch = emb.filter(col("vec_id") < 5)
@@ -686,6 +749,7 @@ class IvfIndexSpec extends SparkTestBase {
     val gens = Seq(g0, g1, g2, g3, g4)
     assert(gens.distinct.size == gens.size,
       s"meta writes reused a generation nonce: $gens")
+    })
     emb.unpersist()
     ()
   }

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions.lit
 
 import graft.{FilterCaseGen, SparkTestBase}
 
-/** [[MemoEngine.maintain]] runs its four artifact families (postings,
-  * IVF, IVF-PQ, signatures + labeling) as concurrent legs
+/** [[MemoEngine.maintain]] runs its three artifact families (postings,
+  * the IVF/IVF-PQ artifact, signatures + labeling) as concurrent legs
   * ([[MemoEngine.legs]]). These specs pin what the concurrency must not
   * change or break: the artifacts equal a one-family-at-a-time walk,
   * every Spark job lands in its caller's job group, a failing leg fails
@@ -23,7 +23,7 @@ import graft.{FilterCaseGen, SparkTestBase}
   * Lives in package graft.memo to reach the build-hook seam. */
 class MaintainLegsSpec extends SparkTestBase {
 
-  private val families = Seq("_lexical", "_ivf", "_ivfpq", "_minhash")
+  private val families = Seq("_lexical", "_ann", "_minhash")
 
   /** `n` docs of generator metadata in three CDC batches (three
     * segments); every fifth body repeats a cluster text so the labeling
@@ -58,8 +58,8 @@ class MaintainLegsSpec extends SparkTestBase {
     }.mkString("|")).sorted.mkString("\n")
 
   /** Everything a family walk leaves behind, generation nonces masked:
-    * watermarks, IVF / IVF-PQ stamps, occupancy, centroids, codebooks
-    * and live rows, the postings stamp, postings and term stats, the
+    * watermarks, the ANN artifact's stamp, occupancy, centroids,
+    * codebooks and live rows (id, embedding, code, cell), the postings stamp, postings and term stats, the
     * signature stamp and rows. */
   private def artifacts(db: String): Map[String, String] = {
     def text(rel: String): String = {
@@ -68,18 +68,15 @@ class MaintainLegsSpec extends SparkTestBase {
     }
     def lines(rel: String) =
       Files.readAllLines(Paths.get(db, rel)).asScala.toSeq
-    val ivf = graft.ops.IvfIndex.parseMetaLines(lines("_ivf/_ivf_centroids")).get
-    val pq = graft.ops.PqIndex.parseIvfPqMetaLines(lines("_ivfpq/_ivfpq_meta")).get
+    val ann = graft.ops.IvfIndex.parseMetaLines(
+      lines(s"_ann/${graft.ops.IvfIndex.MetaName}")).get
     def m(a: Array[Array[Float]]) = a.map(_.toSeq).toSeq
     Map(
       "watermarks" -> (families :+ "_dupgroups")
         .map(f => s"$f=${watermark(db, f)}").mkString(","),
-      "ivf.meta" -> (ivf.stamp, ivf.occupancy.map(_.toSeq), m(ivf.centroids))
-        .toString,
-      "ivf.rows" -> table(graft.ops.IvfIndex.load(spark, s"$db/_ivf")),
-      "ivfpq.meta" -> (pq.stamp, pq.occupancy.map(_.toSeq), m(pq.centroids),
-        pq.codebooks.map(m).toSeq).toString,
-      "ivfpq.rows" -> table(graft.ops.PqIndex.loadCodes(spark, s"$db/_ivfpq")),
+      "ann.meta" -> (ann.stamp, ann.occupancy.map(_.toSeq),
+        m(ann.centroids), ann.codebooks.map(_.toSeq.map(m))).toString,
+      "ann.rows" -> table(graft.ops.IvfIndex.load(spark, s"$db/_ann")),
       // generation pointers end in a random nonce
       "lexical.meta" -> text("_lexical/_lex_meta")
         .replaceAll("_[0-9a-f]{8}\\b", "_<gen>"),
@@ -127,8 +124,7 @@ class MaintainLegsSpec extends SparkTestBase {
       e.pqRecall("corpus topic3", k = 8).collect()
       e.hybridRecall("cluster1 alpha corpus", k = 8).collect()
       e.dupGroups().collect()
-      graft.ops.IvfIndex.applyDeletes(spark, s"$db/_ivf")
-      graft.ops.PqIndex.applyDeletesIvfPq(spark, s"$db/_ivfpq")
+      graft.ops.IvfIndex.applyDeletes(spark, s"$db/_ann")
       if (graft.ops.Lexical.pendingTombstones(spark, s"$db/_lexical"))
         graft.ops.Lexical.compact(spark, s"$db/_lexical")
     }
@@ -136,7 +132,7 @@ class MaintainLegsSpec extends SparkTestBase {
     sequential(b, dbB)
     assert(r1("lexical") == "current (rebuild)", r1)
     assert(r1("ivf").startsWith("current (rebuild, nlist "), r1)
-    assert(r1("ivfpq").startsWith("current (rebuild, nlist "), r1)
+    assert(!r1.contains("ivfpq"), r1)
     assert(r1("signatures") == "current (fresh)", r1)
     assertSameArtifacts(dbA, dbB, "rebuild")
     assert(answers(a) == answers(b))
@@ -150,8 +146,7 @@ class MaintainLegsSpec extends SparkTestBase {
     sequential(b, dbB)
     Seq("lexical", "signatures").foreach(f =>
       assert(r2(f) == "current (append)", r2))
-    Seq("ivf", "ivfpq").foreach(f =>
-      assert(r2(f).startsWith("current (append, nlist "), r2))
+    assert(r2("ivf").startsWith("current (append, nlist "), r2)
     assertSameArtifacts(dbA, dbB, "append")
     assert(answers(a) == answers(b))
     // retract arm: a pure-delete patch, folded (route floor 0)
@@ -166,8 +161,7 @@ class MaintainLegsSpec extends SparkTestBase {
     sequential(b, dbB)
     Seq("lexical", "signatures").foreach(f =>
       assert(r3(f) == "current (retract)", r3))
-    Seq("ivf", "ivfpq").foreach(f =>
-      assert(r3(f).startsWith("current (retract, nlist "), r3))
+    assert(r3("ivf").startsWith("current (retract, nlist "), r3)
     assert(r3("ivf_apply") == "applied" && r3("lexical_apply") == "applied", r3)
     assertSameArtifacts(dbA, dbB, "retract")
     assert(answers(a) == answers(b))
@@ -222,15 +216,14 @@ class MaintainLegsSpec extends SparkTestBase {
     val thrown = intercept[IllegalStateException](e.maintain())
     assert(thrown eq boom)
     val live = e.versions.max.toString
-    Seq("_ivf", "_ivfpq", "_minhash").foreach(f =>
+    Seq("_ann", "_minhash").foreach(f =>
       assert(watermark(db, f).contains(live),
         s"$f was not brought current before the failure surfaced"))
     assert(watermark(db, "_lexical").isEmpty, "the failed family moved")
     e.beforeLexicalBuildHook = () => ()
     val report = e.maintain()
     assert(report("lexical") == "current (rebuild)", report)
-    Seq("ivf", "ivfpq").foreach(f =>
-      assert(report(f).startsWith("current (fresh, nlist "), report))
+    assert(report("ivf").startsWith("current (fresh, nlist "), report)
     assert(report("signatures") == "current (fresh)", report)
     families.foreach(f => assert(watermark(db, f).contains(live), f))
     e.clean()

@@ -392,7 +392,7 @@ class MemoConcurrencySpec extends SparkTestBase {
       // watermark under the lock, so no appended row may be in the
       // index twice (or missing): stored occupancy == live corpus
       e1.annRecall("racing append doc", k = 3).collect()
-      val ivfPath = Paths.get(db).resolve("_ivf").toString
+      val ivfPath = Paths.get(db).resolve("_ann").toString
       val occ = graft.ops.IvfIndex.readOccupancy(spark, ivfPath).get
       assert(occ.sum == e1.index.count(),
         s"occupancy ${occ.sum} != corpus ${e1.index.count()} — a " +

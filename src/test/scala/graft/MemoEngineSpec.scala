@@ -511,7 +511,7 @@ class MemoEngineSpec extends SparkTestBase {
       .mkString)
     def ivfFiles() = {
       import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(s"$db/_ivf")
+      val root = java.nio.file.Paths.get(s"$db/_ann")
       if (!java.nio.file.Files.exists(root)) Map.empty[String, Long]
       else java.nio.file.Files.walk(root).iterator().asScala
         .filter(_.toString.endsWith(".parquet"))
@@ -660,18 +660,18 @@ class MemoEngineSpec extends SparkTestBase {
       .map(_.getLong(0)).toSet
     assert(hits.map(_.getLong(0)).toSet == exact,
       "full-probe full-refine PQ ANN must agree with the exact ranking")
-    val files1 = artifactFiles(db, "_ivfpq")
+    val files1 = artifactFiles(db, "_ann")
     assert(files1.nonEmpty, "no persisted IVF-PQ artifact after pqRecall")
     // committed store, current watermark: serving touches NOTHING
     engine.pqRecall("topic1 theme2", k = 5).collect()
-    assert(artifactFiles(db, "_ivfpq") == files1,
+    assert(artifactFiles(db, "_ann") == files1,
       "a warm pqRecall rewrote the artifact")
     // append-only commit: O(new segments) catch-up — quantizers reused,
     // prior files untouched, the batch lands as NEW files
     engine.save("---\nbody: fresh doc about topic1 theme2\n")
     val grown = engine.pqRecall("topic1 theme2", k = 5,
       nprobe = MemoEngine.AnnNlist, refine = 9).collect()
-    val files2 = artifactFiles(db, "_ivfpq")
+    val files2 = artifactFiles(db, "_ann")
     files1.foreach { case (f, mtime) =>
       assert(files2.get(f).contains(mtime),
         s"append-only catch-up rewrote $f — not O(new segments)")
@@ -687,9 +687,9 @@ class MemoEngineSpec extends SparkTestBase {
     assert(rebuilt.map(_.getLong(0)).toSet ==
       engine.recall("topic1 theme2", k = 5).collect().map(_.getLong(0)).toSet,
       "post-reindex PQ ANN diverged from the exact ranking")
-    val files3 = artifactFiles(db, "_ivfpq")
+    val files3 = artifactFiles(db, "_ann")
     engine.pqRecall("topic1 theme2", k = 5).collect()
-    assert(artifactFiles(db, "_ivfpq") == files3,
+    assert(artifactFiles(db, "_ann") == files3,
       "post-rebuild warm serving touched the artifact")
     engine.clean()
   }
@@ -1284,7 +1284,7 @@ class MemoEngineSpec extends SparkTestBase {
     assert(java.nio.file.Files.isDirectory(
       java.nio.file.Paths.get(engine.records.inputFiles.head
         .stripPrefix("file:")).getParent.getParent.getParent
-        .resolve("_ivf")),
+        .resolve("_ann")),
       "ann=true hybrid never built/served the IVF artifact")
     engine.clean()
   }
@@ -1500,15 +1500,19 @@ class MemoEngineSpec extends SparkTestBase {
     engine.viewState("mview", "metadata['part']",
       where = Some("{part: p1}"))
     val r1 = engine.maintain()
-    assert(Seq("lexical", "ivf", "ivfpq", "signatures")
+    assert(Seq("lexical", "ivf", "signatures")
       .forall(r1.contains), s"families missing from report: $r1")
+    assert(!r1.keySet.exists(_.startsWith("ivfpq")),
+      s"the IVF-PQ route has no artifact of its own to report: $r1")
+    assert(r1("ivf").matches("current \\(rebuild, nlist \\d+, pq 8x16\\)"),
+      r1("ivf"))
     assert(r1("view:mview") == "fresh" || r1("view:mview") == "incremental")
     // every artifact watermark is the live version
     def watermark(art: String): Option[String] = graft.ops.ArtifactMeta
       .read(spark, java.nio.file.Paths.get(db).resolve(art).toString,
         "_store_version")
     val live = engine.versions.max.toString
-    Seq("_lexical", "_ivf", "_ivfpq", "_minhash").foreach { art =>
+    Seq("_lexical", "_ann", "_minhash").foreach { art =>
       assert(watermark(art).contains(live),
         s"$art watermark ${watermark(art)} != live $live after maintain")
     }
@@ -1518,7 +1522,7 @@ class MemoEngineSpec extends SparkTestBase {
     val r2 = engine.maintain()
     val live2 = engine.versions.max.toString
     assert(live2 != live)
-    Seq("_lexical", "_ivf", "_ivfpq", "_minhash").foreach { art =>
+    Seq("_lexical", "_ann", "_minhash").foreach { art =>
       assert(watermark(art).contains(live2),
         s"$art not caught up by maintain: ${watermark(art)} vs $live2")
     }
@@ -1531,7 +1535,7 @@ class MemoEngineSpec extends SparkTestBase {
     def mtimes(): Map[String, Long] = {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(java.nio.file.Paths.get(db)
-          .resolve("_ivf")).iterator().asScala
+          .resolve("_ann")).iterator().asScala
         .filter(java.nio.file.Files.isRegularFile(_))
         .map(p => p.toString ->
           java.nio.file.Files.getLastModifiedTime(p).toMillis).toMap
@@ -1539,7 +1543,7 @@ class MemoEngineSpec extends SparkTestBase {
     val before = mtimes()
     val r3 = engine.maintain(retrainSkew = Some(1e9))
     assert(r3("ivf_retrain").startsWith("skipped") &&
-      r3("ivfpq_retrain").startsWith("skipped"), s"got $r3")
+      !r3.contains("ivfpq_retrain"), s"got $r3")
     assert(mtimes() == before,
       "a skipped retrain must not touch artifact files")
     // serving correctness is unchanged by the maintenance call
@@ -1577,7 +1581,7 @@ class MemoEngineSpec extends SparkTestBase {
     // METADATA-ONLY: the statistic answers with the cell DATA gone —
     // it reads the stamp file, never the parquet (stronger than a
     // job-count pin; restored below)
-    val ivfPath = java.nio.file.Paths.get(db).resolve("_ivf")
+    val ivfPath = java.nio.file.Paths.get(db).resolve("_ann")
     val hidden = java.nio.file.Files.createTempDirectory("ivf_hide")
     val cellDirs = java.nio.file.Files.list(ivfPath).iterator().asScala
       .filter(_.getFileName.toString.startsWith("cell_id=")).toList
@@ -1590,6 +1594,10 @@ class MemoEngineSpec extends SparkTestBase {
           ivfPath.resolve(d.getFileName)))
     assert(skewHidden == skew1,
       "ivfSkew must read only the stamp metadata")
+    // the IVF-PQ route probes the same artifact: pqSkew is ivfSkew
+    assert(engine.pqSkew().contains(skew1))
+    val codebooks0 = graft.ops.IvfIndex.metaAt(spark, ivfPath.toString).get
+      .codebooks.get.map(_.map(_.toSeq).toSeq).toSeq
     // below-threshold retrain is a NO-OP: every artifact file untouched
     def mtimes(): Map[String, Long] =
       java.nio.file.Files.walk(ivfPath).iterator().asScala
@@ -1618,6 +1626,17 @@ class MemoEngineSpec extends SparkTestBase {
     assert(retrained.length == fresh.length &&
       retrained.zip(fresh).forall { case (a, b) => a.sameElements(b) },
       "post-retrain centroids must equal a fresh build's")
+    // the codebook half: the codes retrain together with the centroids
+    // (old codes are meaningless under new cells) — equal to a fresh
+    // training over the same corpus, and moved by the drifted appends
+    val codebooks1 = graft.ops.IvfIndex.metaAt(spark, ivfPath.toString).get
+      .codebooks.get.map(_.map(_.toSeq).toSeq).toSeq
+    assert(codebooks1 == graft.ops.PqIndex.trainCodebooks(engine.index,
+        "embedding", MemoEngine.AnnPqM, MemoEngine.AnnPqKsub)
+      .map(_.map(_.toSeq).toSeq).toSeq,
+      "post-retrain codebooks must equal a fresh training's")
+    assert(codebooks1 != codebooks0, "retrain left the codebooks stale")
+    assert(engine.pqSkew().contains(skew2))
     // and the maintained artifact still serves exactly at full probe
     val nlist = retrained.length
     val viaAnn = engine.annRecall("drifted repeated narrow", k = 5,
@@ -1626,6 +1645,10 @@ class MemoEngineSpec extends SparkTestBase {
       .collect().map(_.getLong(0)).toSet
     assert(viaAnn == viaBrute,
       s"full-probe ANN diverged from brute after retrain")
+    val viaPq = engine.pqRecall("drifted repeated narrow", k = 5,
+        nprobe = nlist, refine = 64).collect().map(_.getLong(0)).toSet
+    assert(viaPq == viaBrute,
+      "full-probe PQ diverged from brute after retrain")
     // the watermark survives the retrain: a following append catches up
     // without double-counting (occupancy total == corpus size)
     engine.save("---\nbody: post retrain append probe doc\n")
@@ -1634,35 +1657,6 @@ class MemoEngineSpec extends SparkTestBase {
       .readOccupancy(spark, ivfPath.toString).get
     assert(occ.sum == engine.index.count(),
       s"occupancy ${occ.sum} != corpus after post-retrain append")
-    engine.clean()
-  }
-
-  test("pqSkew / retrainPq: the drift policy on the compressed artifact " +
-      "— retrain rebalances and full-probe serving stays exact") {
-    val (engine, db) = freshEngine()
-    engine.save((0 until 48).map(i =>
-      s"---\nbody: pq seed topic$i theme${i % 7} subject${i % 11} " +
-        s"angle${i % 5} facet$i\n").mkString)
-    engine.pqRecall("pq seed topic1 theme1", k = 3).collect()
-    val skew0 = engine.pqSkew()
-    assert(skew0.isDefined)
-    (0 until 3).foreach(b => engine.save((0 until 40).map(i =>
-      s"---\nbody: drifted pq narrow phrase cluster " +
-        s"variant${i % 2} nuance$b$i\n").mkString))
-    engine.pqRecall("pq seed topic1 theme1", k = 3).collect()
-    val skew1 = engine.pqSkew().get
-    assert(skew1 > 2.0, s"drift must raise pq skew, got $skew1")
-    assert(!engine.retrainPq(maxSkew = skew1 + 1.0))
-    assert(engine.retrainPq(maxSkew = math.max(1.1, skew1 - 0.5)))
-    assert(engine.pqSkew().get < skew1)
-    // full-probe refine serving stays exact vs brute
-    val viaPq = engine.pqRecall("drifted pq narrow", k = 5,
-        nprobe = 1024, refine = 64).collect()
-      .map(_.getLong(0)).toSet
-    val viaBrute = engine.recall("drifted pq narrow", k = 5)
-      .collect().map(_.getLong(0)).toSet
-    assert(viaPq == viaBrute,
-      "full-probe PQ diverged from brute after retrain")
     engine.clean()
   }
 
@@ -2253,7 +2247,7 @@ class MemoEngineSpec extends SparkTestBase {
       .map(_.getAs[String]("body")).contains(victim))
     assert(engine.admitNew(Seq((900L, victim)).toDF("id", "body"))
       .count() == 0)
-    val before = Seq("_lexical", "_ivf", "_ivfpq", "_minhash")
+    val before = Seq("_lexical", "_ann", "_minhash")
       .map(f => f -> artifactFiles(db, f)).toMap
     // pure-delete patch: the victim leaves via CDC apply
     engine.applyChanges(Seq(
@@ -2270,8 +2264,9 @@ class MemoEngineSpec extends SparkTestBase {
     assert(ann.nonEmpty &&
       !ann.map(_.getAs[String]("body")).contains(victim),
       "IVF retract left the victim findable")
+    // the PQ route probes the artifact the IVF walk just retracted
     val pq = engine.pqRecall(victim, k = 5).collect()
-    assert(engine.lastPqMode.contains("retract"), engine.lastPqMode)
+    assert(engine.lastIvfMode.contains("fresh"), engine.lastIvfMode)
     assert(pq.nonEmpty &&
       !pq.map(_.getAs[String]("body")).contains(victim),
       "PQ retract left the victim findable")
@@ -2296,7 +2291,7 @@ class MemoEngineSpec extends SparkTestBase {
     // body-indexing family: retract arms fire, nothing rewrites
     engine.save("---\nid: 5\nbody: retract corpus doc 5 about concept5 " +
       "and aspect1\nmetadata: {tag: retagged}\n")
-    val mid = Seq("_lexical", "_ivf", "_ivfpq", "_minhash")
+    val mid = Seq("_lexical", "_ann", "_minhash")
       .map(f => f -> artifactFiles(db, f)).toMap
     engine.hybridRecall("concept5", k = 3).collect()
     engine.annRecall("retract corpus doc 5", k = 3).collect()
@@ -2307,11 +2302,9 @@ class MemoEngineSpec extends SparkTestBase {
       engine.lastLexMode.contains("fresh"), engine.lastLexMode)
     assert(!engine.lastLexMode.contains("rebuild") &&
       !engine.lastIvfMode.contains("rebuild") &&
-      !engine.lastPqMode.contains("rebuild") &&
       !engine.lastSigMode.contains("rebuild"),
       s"metadata-only patch forced a rebuild: lex=${engine.lastLexMode} " +
-        s"ivf=${engine.lastIvfMode} pq=${engine.lastPqMode} " +
-        s"sig=${engine.lastSigMode}")
+        s"ivf=${engine.lastIvfMode} sig=${engine.lastSigMode}")
     mid.foreach { case (fam, files) =>
       val after = artifactFiles(db, fam)
       files.foreach { case (f, m) =>
@@ -2345,21 +2338,19 @@ class MemoEngineSpec extends SparkTestBase {
       .toDF("id", "body")).collect()
     assert(engine.lastSigMode.contains("retract"), engine.lastSigMode)
     // maintain() applies the pending VECTOR tombstones physically:
-    // ensureIvf/ensurePq first retract-fold the two delete patches the
-    // vector families haven't walked yet, then the apply pass rewrites
+    // ensureIvf first retract-folds the two delete patches the vector
+    // family hasn't walked yet, then the apply pass rewrites
     // only the affected cells and drops the tombstone dirs — and a
     // second maintain has nothing pending
     val rep = engine.maintain()
     assert(engine.lastIvfMode.contains("retract"), engine.lastIvfMode)
     assert(rep.get("ivf_apply").contains("applied"), rep)
-    assert(rep.get("ivfpq_apply").contains("applied"), rep)
     assert(rep.get("lexical_apply").contains("applied"), rep)
     assert(!java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(s"$db/_ivf/_tombstones")),
+        java.nio.file.Paths.get(s"$db/_ann/_tombstones")),
       "ivf tombstones must be swept by the apply")
     val rep2 = engine.maintain()
     assert(rep2.get("ivf_apply").contains("none pending"), rep2)
-    assert(rep2.get("ivfpq_apply").contains("none pending"), rep2)
     assert(rep2.get("lexical_apply").contains("none pending"), rep2)
     // the applied artifacts still serve exactly the survivors
     val post = engine.annRecall("retract corpus doc 6", k = 5).collect()
@@ -2440,19 +2431,15 @@ class MemoEngineSpec extends SparkTestBase {
     Thread.sleep(1500)
     stop.set(true); probers.foreach(_.join())
     assert(errors.isEmpty, errors.toArray.mkString("\n"))
-    // quiesced: one more catch-up, then both artifacts hold exactly the
+    // quiesced: one more catch-up, then the artifact holds exactly the
     // store's rows — nothing missing, nothing duplicated
     engine.annRecall("churn", k = 1).collect()
     engine.pqRecall("churn", k = 1).collect()
     val n = engine.index.count()
-    val ivfIds = graft.ops.IvfIndex.load(spark, s"$db/_ivf")
+    val ivfIds = graft.ops.IvfIndex.load(spark, s"$db/_ann")
       .select("id").collect().map(_.getLong(0)).toSeq
     assert(ivfIds.length.toLong == n && ivfIds.distinct.length.toLong == n,
-      s"IVF artifact holds ${ivfIds.length} rows for a $n-row store")
-    val pqIds = graft.ops.PqIndex.loadCodes(spark, s"$db/_ivfpq")
-      .select("id").collect().map(_.getLong(0)).toSeq
-    assert(pqIds.length.toLong == n && pqIds.distinct.length.toLong == n,
-      s"IVF-PQ artifact holds ${pqIds.length} rows for a $n-row store")
+      s"ANN artifact holds ${ivfIds.length} rows for a $n-row store")
     engine.clean()
   }
 
@@ -2685,7 +2672,7 @@ class MemoEngineSpec extends SparkTestBase {
       s"---\nbody: branch corpus item $i about theme${i % 4}\n").mkString)
     // warm the SOURCE artifact first so both stores have one
     engine.annRecall("branch corpus theme1", k = 2).collect()
-    val srcIvf = java.nio.file.Paths.get(db, "_ivf")
+    val srcIvf = java.nio.file.Paths.get(db, "_ann")
     def mtimes(p: java.nio.file.Path): Map[String, Long] = {
       val walk = java.nio.file.Files.walk(p)
       try {
@@ -2701,7 +2688,7 @@ class MemoEngineSpec extends SparkTestBase {
     val got = branch.annRecall("branch corpus theme1", k = 2).collect()
     assert(got.nonEmpty)
     assert(java.nio.file.Files.isDirectory(
-      java.nio.file.Paths.get(target, "_ivf")),
+      java.nio.file.Paths.get(target, "_ann")),
       "branch ANN artifact must live under the branch base")
     assert(mtimes(srcIvf) == before,
       "branch ensureIvf touched the SOURCE artifact")

@@ -169,23 +169,32 @@ class PqIndexSpec extends SparkTestBase {
     assert(res.count() == 10)
   }
 
+  /** Build (or reuse) an IVF artifact with m = 8 / ksub = 16 codes at
+    * `path`; returns its (centroids, codebooks). */
+  private def ivfPq(corpus: org.apache.spark.sql.DataFrame, idCol: String,
+      nlist: Int, path: String, m: Int = 8, ksub: Int = 16)
+      : (Array[Array[Float]], Array[Array[Array[Float]]]) = {
+    val cents = IvfIndex.buildIfAbsent(corpus, idCol, "embedding", nlist,
+      path, pq = Some((m, ksub)))
+    (cents, IvfIndex.metaAt(spark, path).flatMap(_.codebooks).get)
+  }
+
+  private def tmpPath(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).resolve("idx").toString
+
   test("ivf-pq probe: partition prune AND narrow scan on the same read") {
-    val path = java.nio.file.Files.createTempDirectory("ivfpq")
-      .resolve("idx").toString
-    val (cents, cbs) = PqIndex.buildIfAbsentIvfPq(emb, "vec_id", "embedding",
-      nlist = 16, m = 8, ksub = 16, path)
-    val codes = PqIndex.loadCodes(spark, path)
+    val path = tmpPath("ivfpq")
+    val (cents, cbs) = ivfPq(emb, "vec_id", nlist = 16, path)
+    val idx = IvfIndex.load(spark, path)
     val q = queryVec(1)
-    val res = PqIndex.searchIvfPq(codes, emb, "vec_id", "embedding",
-      cents, cbs, q, k = 10, nprobe = 4)
+    val res = PqIndex.searchIvfPq(idx, cents, cbs, q, k = 10, nprobe = 4)
     val scans = (res.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.initialPlan
       case p => p
     }).collect { case f: FileSourceScanExec => f }
-    // the codes scan: pruned to the probed cells at file-listing time AND
+    // the ADC scan: pruned to the probed cells at file-listing time AND
     // reading only (id, code) — both scale levers on one read
-    val codeScan = scans.find(_.relation.location.rootPaths
-      .exists(_.toString.contains("ivfpq"))).get
+    val codeScan = scans.find(_.requiredSchema.fieldNames.contains("code")).get
     assert(codeScan.partitionFilters.exists(
       _.references.exists(_.name == "cell_id")),
       s"cell filter not a partition filter: ${codeScan.partitionFilters}")
@@ -196,10 +205,20 @@ class PqIndexSpec extends SparkTestBase {
       s"no partition pruning: ${pruned.length} of ${total.length}")
     assert(codeScan.requiredSchema.fieldNames.toSet.subsetOf(Set("id", "code")),
       s"codes scan reads beyond (id, code): ${codeScan.requiredSchema.fieldNames.toSeq}")
+    // the refine scan reads the raw vectors of the same probed cells only
+    val refineScan = scans.find(_.requiredSchema.fieldNames
+      .contains("embedding")).get
+    assert(refineScan.requiredSchema.fieldNames.toSet
+      .subsetOf(Set("id", "embedding")),
+      s"refine scan reads beyond (id, embedding): " +
+        refineScan.requiredSchema.fieldNames.toSeq)
+    assert(refineScan.relation.location.listFiles(
+      refineScan.partitionFilters, refineScan.dataFilters).length <= 4,
+      "the refine scan is not pruned to the probed cells")
     // full probe + full refine degenerates to exact search
     val n = emb.count().toInt
-    val full = PqIndex.searchIvfPq(codes, emb, "vec_id", "embedding",
-        cents, cbs, q, k = 10, nprobe = 16, refine = n / 10 + 1)
+    val full = PqIndex.searchIvfPq(idx, cents, cbs, q, k = 10, nprobe = 16,
+        refine = n / 10 + 1)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val exact = emb
       .withColumn("score", round4(vecCosine(col("embedding"), lit(q))))
@@ -224,12 +243,11 @@ class PqIndexSpec extends SparkTestBase {
     }
   }
 
+
   test("batch ADC at full probe matches flat per-query ADC ranking") {
-    val path = java.nio.file.Files.createTempDirectory("ivfpq")
-      .resolve("idx").toString
-    val (cents, cbs) = PqIndex.buildIfAbsentIvfPq(emb, "vec_id", "embedding",
-      nlist = 16, m = 8, ksub = 16, path)
-    val codes = PqIndex.loadCodes(spark, path)
+    val path = tmpPath("ivfpq")
+    val (cents, cbs) = ivfPq(emb, "vec_id", nlist = 16, path)
+    val codes = IvfIndex.load(spark, path)
     val queries = emb.filter(col("vec_id") < 4)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val batch = PqIndex.searchBatchAdc(codes, cents, cbs, queries,
@@ -247,11 +265,9 @@ class PqIndexSpec extends SparkTestBase {
   }
 
   test("batch ADC with a candidate mask: survivors only, equals masked flat") {
-    val path = java.nio.file.Files.createTempDirectory("ivfpq_mask")
-      .resolve("idx").toString
-    val (cents, cbs) = PqIndex.buildIfAbsentIvfPq(emb, "vec_id", "embedding",
-      nlist = 16, m = 8, ksub = 16, path)
-    val codes = PqIndex.loadCodes(spark, path)
+    val path = tmpPath("ivfpq_mask")
+    val (cents, cbs) = ivfPq(emb, "vec_id", nlist = 16, path)
+    val codes = IvfIndex.load(spark, path)
     val queries = emb.filter(col("vec_id") < 4)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val mask = emb.filter(col("vec_id") % 2 === 0)
@@ -280,11 +296,9 @@ class PqIndexSpec extends SparkTestBase {
   test("batch refine (searchBatchIvfPq) equals per-query searchIvfPq; " +
       "the fill ladder widens a starving mask to the exact filtered " +
       "ranking") {
-    val path = java.nio.file.Files.createTempDirectory("ivfpq_bref")
-      .resolve("idx").toString
-    val (cents, cbs) = PqIndex.buildIfAbsentIvfPq(emb, "vec_id", "embedding",
-      nlist = 16, m = 8, ksub = 16, path)
-    val codes = PqIndex.loadCodes(spark, path)
+    val path = tmpPath("ivfpq_bref")
+    val (cents, cbs) = ivfPq(emb, "vec_id", nlist = 16, path)
+    val idx = IvfIndex.load(spark, path)
     val queries = emb.filter(col("vec_id") < 4)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     def grouped(rows: Array[(Long, Long, Double)]) = rows
@@ -293,13 +307,12 @@ class PqIndexSpec extends SparkTestBase {
       .toMap
     // full probe, unmasked: the batch refine must equal the single-path
     // ADC→refine recipe per query — ids AND exact-cosine scores
-    val batch = grouped(PqIndex.searchBatchIvfPq(codes, emb, "vec_id",
-        "embedding", cents, cbs, queries, "query_id", "qv", k = 5,
-        nprobe = 16, refine = 4)
+    val batch = grouped(PqIndex.searchBatchIvfPq(idx, cents, cbs, queries,
+        "query_id", "qv", k = 5, nprobe = 16, refine = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))
     (0L until 4L).foreach { qid =>
-      val single = PqIndex.searchIvfPq(codes, emb, "vec_id", "embedding",
-          cents, cbs, queryVec(qid), k = 5, nprobe = 16, refine = 4)
+      val single = PqIndex.searchIvfPq(idx, cents, cbs, queryVec(qid),
+          k = 5, nprobe = 16, refine = 4)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(batch(qid) == single,
         s"batch refine for query $qid diverges from searchIvfPq")
@@ -308,17 +321,16 @@ class PqIndexSpec extends SparkTestBase {
     // walk to the full probe, where the ADC cut passes every survivor
     // and the result is the EXACT filtered cosine ranking per query
     val mask = emb.filter(col("vec_id") < 7).select(col("vec_id").as("id"))
-    val (hits, (np, rungs)) = PqIndex.searchBatchFillIvfPq(codes, emb,
-      "vec_id", "embedding", cents, cbs, queries, "query_id", "qv",
-      k = 10, nprobe = 1, refine = 4, allowed = Some(mask))
+    val (hits, (np, rungs)) = PqIndex.searchBatchFillIvfPq(idx, cents, cbs,
+      queries, "query_id", "qv", k = 10, nprobe = 1, refine = 4,
+      allowed = Some(mask))
     assert(rungs >= 1 && np == 16,
       s"expected the ladder to reach the full probe, got ($np, $rungs)")
     val filled = grouped(hits.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))
     (0L until 4L).foreach { qid =>
-      val exact = PqIndex.searchIvfPq(codes, emb, "vec_id", "embedding",
-          cents, cbs, queryVec(qid), k = 10, nprobe = 16, refine = 4,
-          allowed = Some(mask))
+      val exact = PqIndex.searchIvfPq(idx, cents, cbs, queryVec(qid),
+          k = 10, nprobe = 16, refine = 4, allowed = Some(mask))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(filled(qid) == exact,
         s"fill ladder for query $qid diverges from the full-probe " +
@@ -329,11 +341,9 @@ class PqIndexSpec extends SparkTestBase {
   }
 
   test("batch ADC range-splits above maxBatch with identical results") {
-    val path = java.nio.file.Files.createTempDirectory("ivfpq")
-      .resolve("idx").toString
-    val (cents, cbs) = PqIndex.buildIfAbsentIvfPq(emb, "vec_id", "embedding",
-      nlist = 16, m = 8, ksub = 16, path)
-    val codes = PqIndex.loadCodes(spark, path)
+    val path = tmpPath("ivfpq")
+    val (cents, cbs) = ivfPq(emb, "vec_id", nlist = 16, path)
+    val codes = IvfIndex.load(spark, path)
     val queries = emb.filter(col("vec_id") < 6)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     def run(maxBatch: Int) =
@@ -345,159 +355,52 @@ class PqIndexSpec extends SparkTestBase {
   }
 
   test("ivf-pq artifact: stamp round-trips both matrices, content change rebuilds") {
-    val path = java.nio.file.Files.createTempDirectory("ivfpq")
-      .resolve("idx").toString
-    val (cents, cbs) = PqIndex.buildIfAbsentIvfPq(emb, "vec_id", "embedding",
-      nlist = 16, m = 8, ksub = 16, path)
-    val (cents2, cbs2) = PqIndex.buildIfAbsentIvfPq(emb, "vec_id", "embedding",
-      nlist = 16, m = 8, ksub = 16, path)
+    val path = tmpPath("ivfpq")
+    val (cents, cbs) = ivfPq(emb, "vec_id", nlist = 16, path)
+    val (cents2, cbs2) = ivfPq(emb, "vec_id", nlist = 16, path)
     assert(cents.flatten.toSeq == cents2.flatten.toSeq)
     assert(cbs.flatten.flatten.toSeq == cbs2.flatten.flatten.toSeq)
-    val offDisk = PqIndex.ivfPqMetaAt(spark, path).get
-    assert(offDisk._1.flatten.toSeq == cents.flatten.toSeq)
-    assert(offDisk._2.flatten.flatten.toSeq == cbs.flatten.flatten.toSeq)
+    // the matrices are the two trainers' own outputs over the corpus
+    assert(cents.map(_.toSeq).toSeq == IvfIndex.trainCentroids(emb,
+      "embedding", nlist = 16).map(_.toSeq).toSeq)
+    assert(cbs.flatten.flatten.toSeq == PqIndex.trainCodebooks(emb,
+      "embedding", m = 8, ksub = 16).flatten.flatten.toSeq)
+    val metaFile = java.nio.file.Paths.get(path, IvfIndex.MetaName)
+    val offDisk = IvfIndex.parseMetaLines(scala.jdk.CollectionConverters
+      .ListHasAsScala(java.nio.file.Files.readAllLines(metaFile)).asScala
+      .toSeq).get
+    assert(offDisk.stamp.split(":").slice(4, 6).toSeq == Seq("8", "16"),
+      s"stamp does not record m:ksub: ${offDisk.stamp}")
+    assert(offDisk.centroids.flatten.toSeq == cents.flatten.toSeq)
+    assert(offDisk.codebooks.get.flatten.flatten.toSeq ==
+      cbs.flatten.flatten.toSeq)
+    // every row carries its cell and its code
+    val rows = IvfIndex.load(spark, path)
+      .withColumn("want_cell", nearestCentroid(col("embedding"), cents))
+      .withColumn("want_code", pqEncode(col("embedding"), cbs))
+    assert(rows.filter(col("cell_id") =!= col("want_cell") ||
+      !(col("code") === col("want_code"))).count() == 0)
+    // a plain IVF stamp over the same corpus is a different config
+    assert(IvfIndex.buildIfAbsent(emb, "vec_id", "embedding", 16, path)
+      .flatten.toSeq == cents.flatten.toSeq)
+    assert(IvfIndex.metaAt(spark, path).get.codebooks.isEmpty,
+      "a build without codes kept the codebook block")
+    ivfPq(emb, "vec_id", nlist = 16, path)
     // content change with identical row count → rebuild
-    val before = java.nio.file.Files.getLastModifiedTime(
-      java.nio.file.Paths.get(path, "_ivfpq_meta"))
+    val before = java.nio.file.Files.getLastModifiedTime(metaFile)
     val shifted = emb.withColumn("vec_id", col("vec_id") + 1)
-    PqIndex.buildIfAbsentIvfPq(shifted, "vec_id", "embedding",
-      nlist = 16, m = 8, ksub = 16, path)
-    val after = java.nio.file.Files.getLastModifiedTime(
-      java.nio.file.Paths.get(path, "_ivfpq_meta"))
+    ivfPq(shifted, "vec_id", nlist = 16, path)
+    val after = java.nio.file.Files.getLastModifiedTime(metaFile)
     assert(after.compareTo(before) > 0,
       "content change with identical row count did not rebuild")
-    // embedding-only regeneration must also rebuild ([[stampOf]] contract)
+    // embedding-only regeneration must also rebuild (the codes are a
+    // function of the vectors, so the stamp fingerprints them)
     val reEmbedded = shifted.withColumn("embedding",
       transform(col("embedding"), x => x * lit(2f)))
-    PqIndex.buildIfAbsentIvfPq(reEmbedded, "vec_id", "embedding",
-      nlist = 16, m = 8, ksub = 16, path)
-    val after2 = java.nio.file.Files.getLastModifiedTime(
-      java.nio.file.Paths.get(path, "_ivfpq_meta"))
+    ivfPq(reEmbedded, "vec_id", nlist = 16, path)
+    val after2 = java.nio.file.Files.getLastModifiedTime(metaFile)
     assert(after2.compareTo(after) > 0,
       "embedding regeneration with identical ids did not rebuild")
-  }
-
-  test("ivf-pq append lands in existing cell partitions; compact rebalances") {
-    import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("ivfpq_app")
-      .resolve("idx").toString
-    val (cents, cbs) = PqIndex.buildIfAbsentIvfPq(emb, "vec_id", "embedding",
-      nlist = 8, m = 8, ksub = 16, path)
-    // balanced: the compact check is metadata-only and must no-op
-    val fresh = dataFilesWithMtime(path)
-    assert(!PqIndex.compactIvfPq(emb, "vec_id", "embedding", path,
-      maxSkew = 1e9), "compact must no-op when occupancy is within bounds")
-    assert(dataFilesWithMtime(path) == fresh, "a no-op compact rewrote files")
-
-    // a drifting ingest: a tight cluster the frozen centroids funnel into
-    // one hot cell (IvfIndexSpec's compaction shape on the PQ artifact)
-    val v0 = queryVec(1)
-    val hot = (0 until 500).map { i =>
-      val v = v0.clone()
-      v(i % v.length) += 0.002f * ((i % 7) + 1)
-      (10000L + i, v)
-    }.toDF("vec_id", "embedding")
-    val (cents2, cbs2) = PqIndex.appendIvfPq(hot, "vec_id", "embedding", path)
-    assert(cents2.flatten.toSeq == cents.flatten.toSeq &&
-      cbs2.flatten.flatten.toSeq == cbs.flatten.flatten.toSeq,
-      "append must reuse both stored quantizers")
-    val after = dataFilesWithMtime(path)
-    fresh.foreach { case (f, mtime) =>
-      assert(after.contains(f) && after(f) == mtime,
-        s"append rewrote or removed existing file $f")
-    }
-    assert(PqIndex.loadCodes(spark, path).count() == emb.count() + 500,
-      "appended index lost rows")
-    val skewBefore = IvfIndex.occupancySkew(
-      IvfIndex.cellOccupancy(spark, path, 8).toSeq)
-    assert(skewBefore > 4.0,
-      s"hot-cluster append should skew occupancy, got $skewBefore")
-
-    val grown = emb.select(col("vec_id"), col("embedding")).unionAll(hot)
-    assert(PqIndex.compactIvfPq(grown, "vec_id", "embedding", path,
-      maxSkew = 4.0), "compact must trigger above the skew threshold")
-    val skewAfter = IvfIndex.occupancySkew(
-      IvfIndex.cellOccupancy(spark, path, 8).toSeq)
-    assert(skewAfter < skewBefore,
-      s"retrain did not rebalance: $skewBefore -> $skewAfter")
-    assert(PqIndex.loadCodes(spark, path).count() == grown.count(),
-      "compaction lost rows")
-    // compacted stamp validates: buildIfAbsentIvfPq must not rebuild
-    val compacted = dataFilesWithMtime(path)
-    PqIndex.buildIfAbsentIvfPq(grown, "vec_id", "embedding",
-      nlist = 8, m = 8, ksub = 16, path)
-    assert(dataFilesWithMtime(path) == compacted,
-      "buildIfAbsentIvfPq rebuilt over a freshly compacted index")
-    // serving still works end-to-end on the compacted index: full probe +
-    // full refine degenerates to exact search
-    val meta = PqIndex.ivfPqMetaAt(spark, path).get
-    val exact = grown
-      .withColumn("score", round4(vecCosine(col("embedding"), lit(v0))))
-      .orderBy(desc("score"), col("vec_id"))
-      .limit(10).collect().map(_.getLong(0)).toSet
-    val viaIdx = PqIndex.searchIvfPq(PqIndex.loadCodes(spark, path), grown,
-        "vec_id", "embedding", meta._1, meta._2, v0, k = 10, nprobe = 8,
-        refine = grown.count().toInt / 10 + 1)
-      .collect().map(_.getLong(0)).toSet
-    assert(viaIdx == exact,
-      "full-probe full-refine search drifted through compaction")
-  }
-
-  test("a tombstoned id is refused by both append paths until applied") {
-    val vid = emb.agg(min("vec_id")).head().getLong(0)
-    val reAdd = emb.filter(col("vec_id") === vid)
-    // ivf-pq: applyDeletesIvfPq clears the way
-    val ivfpq = java.nio.file.Files.createTempDirectory("ivfpq_reuse")
-      .resolve("idx").toString
-    PqIndex.buildIfAbsentIvfPq(emb, "vec_id", "embedding",
-      nlist = 8, m = 8, ksub = 16, ivfpq)
-    PqIndex.deleteIvfPq(reAdd, "vec_id", "embedding", ivfpq)
-    val e2 = intercept[IllegalStateException] {
-      PqIndex.appendIvfPq(reAdd, "vec_id", "embedding", ivfpq)
-    }
-    assert(e2.getMessage.contains("pending delete"), e2.getMessage)
-    assert(PqIndex.applyDeletesIvfPq(spark, ivfpq))
-    PqIndex.appendIvfPq(reAdd, "vec_id", "embedding", ivfpq) // now legal
-    val served = PqIndex.loadCodes(spark, ivfpq).select("id")
-      .collect().map(_.getLong(0))
-    assert(served.count(_ == vid) == 1, "re-added id must serve exactly once")
-  }
-
-  test("ivf-pq delete + applyDeletes rewrites only affected cells") {
-    val path = java.nio.file.Files.createTempDirectory("ivfpq_del")
-      .resolve("idx").toString
-    val (centroids, cbs) = PqIndex.buildIfAbsentIvfPq(emb, "vec_id",
-      "embedding", nlist = 8, m = 8, ksub = 16, path)
-    val victims = emb.filter(col("vec_id") % 11 === 0)
-    val victimIds = victims.select("vec_id").collect().map(_.getLong(0)).toSet
-    PqIndex.deleteIvfPq(victims, "vec_id", "embedding", path)
-    // probes exclude immediately
-    val served = PqIndex.loadCodes(spark, path)
-      .select("id").collect().map(_.getLong(0)).toSet
-    assert(served.intersect(victimIds).isEmpty)
-    assert(served.size == emb.count() - victimIds.size)
-    // physical apply: tombstones gone; with them cleared, loadCodes IS
-    // the raw physical state, resolved through the cell manifest (the
-    // rewritten cells live under _apply_<tag> parents a plain root read
-    // would miss)
-    assert(PqIndex.applyDeletesIvfPq(spark, path))
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(path, "_tombstones")))
-    val phys = PqIndex.loadCodes(spark, path)
-      .select("id").collect().map(_.getLong(0)).toSet
-    assert(phys == served, "physical apply changed the served set")
-    assert(phys.intersect(victimIds).isEmpty,
-      "victim rows still physically present after apply")
-    // matrices still round-trip and serving still works
-    val meta = PqIndex.ivfPqMetaAt(spark, path)
-    assert(meta.exists { case (c, b) =>
-      c.map(_.toSeq).toSeq == centroids.map(_.toSeq).toSeq &&
-        b.flatten.flatten.toSeq == cbs.flatten.flatten.toSeq })
-    val q = queryVec(3)
-    val hits = PqIndex.searchIvfPq(PqIndex.loadCodes(spark, path), emb,
-      "vec_id", "embedding", centroids, cbs, q, k = 10, nprobe = 8,
-      refine = 4)
-    assert(hits.collect().map(_.getLong(0)).toSet.intersect(victimIds).isEmpty)
   }
 
   test("a torn append journal blocks maintenance and forces a rebuild") {
@@ -511,141 +414,20 @@ class PqIndexSpec extends SparkTestBase {
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(path, "_pq_journal")))
     assert(PqIndex.loadCodes(spark, path).count() == emb.count())
-    // ivf-pq: a torn journal refuses the next append until a rebuild
-    val ivfpq = java.nio.file.Files.createTempDirectory("ivfpq_torn")
-      .resolve("idx").toString
-    PqIndex.buildIfAbsentIvfPq(emb, "vec_id", "embedding",
-      nlist = 8, m = 8, ksub = 16, ivfpq)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(ivfpq, "_ivfpq_journal"),
-      "999:8:8:16:1.0:fp0\n")
-    val e = intercept[IllegalStateException] {
-      PqIndex.appendIvfPq(emb.limit(5), "vec_id", "embedding", ivfpq)
-    }
-    assert(e.getMessage.contains("incomplete append"))
-    PqIndex.buildIfAbsentIvfPq(emb, "vec_id", "embedding",
-      nlist = 8, m = 8, ksub = 16, ivfpq)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(ivfpq, "_ivfpq_journal")))
-    assert(PqIndex.loadCodes(spark, ivfpq).count() == emb.count())
   }
 
   test("append refuses a path with no artifact (both layouts)") {
+    // both IVF layouts — plain and with codes — refuse an append or a
+    // compaction where no artifact was built
     val none = java.nio.file.Files.createTempDirectory("pq_none").toString
     val e2 = intercept[IllegalStateException] {
-      PqIndex.appendIvfPq(emb, "vec_id", "embedding", s"$none/ivfpq")
+      IvfIndex.append(emb, "vec_id", "embedding", s"$none/ivfpq")
     }
-    assert(e2.getMessage.contains("buildIfAbsentIvfPq"))
+    assert(e2.getMessage.contains("buildIfAbsent"))
     val e3 = intercept[IllegalStateException] {
-      PqIndex.compactIvfPq(emb, "vec_id", "embedding", s"$none/ivfpq")
+      IvfIndex.compact(emb, "vec_id", "embedding", s"$none/ivfpq")
     }
-    assert(e3.getMessage.contains("buildIfAbsentIvfPq"))
-  }
-
-  test("adversarial ivf-pq apply churn: probes never silently lose a cell") {
-    // The IVF churn spec's twin on the COMPOSED artifact: each cycle
-    // deletes 5 rows, applies tombstones physically (cells rewritten out
-    // of base into _apply parents), then appends the same rows back —
-    // recreating root `cell_id=` dirs, the stale-manifest trap
-    // IvfIndex.stableRead's generation re-check closes (the IVF-PQ meta
-    // mints its gen through renderIvfPqMeta; this pins the wiring for
-    // the second meta file). Every successful loadCodes().count() must
-    // sit inside [n-5, n]; a silently lost cell would read ~60 short.
-    val corpus = emb.cache()
-    val n = corpus.count()
-    val path = java.nio.file.Files.createTempDirectory("ivfpq_churn")
-      .resolve("idx").toString
-    PqIndex.buildIfAbsentIvfPq(corpus, "vec_id", "embedding",
-      nlist = 8, m = 8, ksub = 16, path)
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val probeErrors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val probeOk = new java.util.concurrent.atomic.AtomicLong(0)
-    val prober = new Thread(() => {
-      while (!stop.get()) {
-        try {
-          val c = PqIndex.loadCodes(spark, path).count()
-          if (c < n - 5 || c > n)
-            probeErrors.add(s"probe saw count $c outside [${n - 5}, $n] " +
-              "— a cell went silently missing")
-          probeOk.incrementAndGet()
-        } catch {
-          case e: Throwable =>
-            val s = e.toString + Option(e.getCause).fold("")(_.toString)
-            // "NoSuchFile": the java.nio shape of the same mid-scan
-            // delete on a Linux local FS (FAILED_READ_FILE wrapping a
-            // vanished parquet or .crc in a superseded dir)
-            if (!s.contains("FileNotFound") && !s.contains("NoSuchFile") &&
-                !s.contains("does not exist") &&
-                !s.contains("FILE_NOT_EXIST") && !s.contains("PATH_NOT_FOUND") &&
-                !s.contains("basePath") && !s.contains("Invalid directory") &&
-                !s.contains("manifest generation"))
-              probeErrors.add(s"unexpected probe failure: $s")
-        }
-      }
-    })
-    val allIds = corpus.select("vec_id").collect().map(_.getLong(0)).sorted
-    prober.start()
-    try {
-      for (i <- 0 until 8) {
-        val victims = allIds.slice(i * 5, i * 5 + 5).toSeq
-        val batch = corpus.filter(col("vec_id").isin(victims: _*))
-        PqIndex.deleteIvfPq(batch, "vec_id", "embedding", path)
-        assert(PqIndex.applyDeletesIvfPq(spark, path))
-        PqIndex.appendIvfPq(batch, "vec_id", "embedding", path)
-      }
-      val tailDeadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (probeOk.get() <= 10 && System.nanoTime() < tailDeadline)
-        Thread.sleep(100)
-    } finally {
-      stop.set(true)
-      prober.join()
-    }
-    assert(probeErrors.isEmpty, probeErrors.toArray.mkString("\n"))
-    assert(probeOk.get() > 10, s"only ${probeOk.get()} probes completed")
-    val finalIds = PqIndex.loadCodes(spark, path)
-      .select("id").collect().map(_.getLong(0)).toSet
-    assert(finalIds == allIds.toSet, "post-churn contents diverged")
-    corpus.unpersist()
-    ()
-  }
-
-  test("every ivf-pq meta write bumps the manifest generation nonce") {
-    val path = java.nio.file.Files.createTempDirectory("ivfpq_gen")
-      .resolve("idx").toString
-    val conf = spark.sparkContext.hadoopConfiguration
-    def gen() = graft.ops.IvfIndex
-      .readHeaderManifest(conf, path, "_ivfpq_meta").gen
-    PqIndex.buildIfAbsentIvfPq(emb, "vec_id", "embedding",
-      nlist = 8, m = 8, ksub = 16, path)
-    val g0 = gen()
-    assert(g0.nonEmpty, "build wrote no generation nonce")
-    val batch = emb.filter(col("vec_id") < 5)
-    PqIndex.deleteIvfPq(batch, "vec_id", "embedding", path)
-    PqIndex.applyDeletesIvfPq(spark, path)
-    val g2 = gen()
-    PqIndex.appendIvfPq(batch, "vec_id", "embedding", path)
-    val g3 = gen()
-    // delete passes raw meta lines through (no dir mutation — gen may
-    // hold); every dir-mutating op (build/apply/append) must bump
-    val gens = Seq(g0, g2, g3)
-    assert(gens.distinct.size == gens.size,
-      s"dir-mutating meta writes reused a generation nonce: $gens")
-  }
-
-  private def dataFilesWithMtime(path: String): Map[String, Long] = {
-    import scala.jdk.CollectionConverters._
-    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
-    try s.iterator().asScala
-      .filter(_.toString.endsWith(".parquet"))
-      .map(p => p.toString ->
-        java.nio.file.Files.getLastModifiedTime(p).toMillis)
-      .toMap
-    finally s.close()
-  }
-
-  private def codeFiles(path: String): Set[String] = {
-    val d = new java.io.File(path)
-    d.listFiles().filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
+    assert(e3.getMessage.contains("buildIfAbsent"))
   }
 
   test("rawFloor cuts on the refine stage's RAW cosine — the IVF family's " +
@@ -659,29 +441,31 @@ class PqIndexSpec extends SparkTestBase {
       Seq(x.toFloat, math.sqrt(math.max(0.0, 1 - x * x)).toFloat)
     val tiny = Seq((1L, v(-0.90004)), (2L, v(-0.89996)), (3L, v(0.5)))
       .toDF("id", "embedding")
-    val path = java.nio.file.Files.createTempDirectory("ivfpq_floor")
-      .resolve("idx").toString
-    val (cents, cbs) = PqIndex.buildIfAbsentIvfPq(tiny, "id", "embedding",
-      nlist = 2, m = 2, ksub = 2, path)
-    val codes = PqIndex.loadCodes(spark, path)
+    val path = tmpPath("ivfpq_floor")
+    val (cents, cbs) = ivfPq(tiny, "id", nlist = 2, path, m = 2, ksub = 2)
+    val idx = IvfIndex.load(spark, path)
     val q = Array(1f, 0f)
-    val unfloored = PqIndex.searchIvfPq(codes, tiny, "id", "embedding",
-        cents, cbs, q, k = 10, nprobe = 2, refine = 4)
+    val unfloored = PqIndex.searchIvfPq(idx, cents, cbs, q, k = 10,
+        nprobe = 2, refine = 4)
       .collect().map(_.getLong(0)).toSet
     assert(unfloored == Set(1L, 2L, 3L))
-    val floored = PqIndex.searchIvfPq(codes, tiny, "id", "embedding",
-        cents, cbs, q, k = 10, nprobe = 2, refine = 4,
-        rawFloor = Some(-0.9))
+    val floored = PqIndex.searchIvfPq(idx, cents, cbs, q, k = 10,
+        nprobe = 2, refine = 4, rawFloor = Some(-0.9))
       .collect().map(_.getLong(0)).toSet
     assert(floored == Set(2L, 3L),
       "raw −0.90004 rounds to −0.9000 but must not pass the raw floor")
     // batch twin, floor before the per-query top-k: the sub-floor row
     // must not occupy a k=2 slot
     val batchQ = Seq((9L, q.toSeq)).toDF("query_id", "qv")
-    val batch = PqIndex.searchBatchIvfPq(codes, tiny, "id", "embedding",
-        cents, cbs, batchQ, "query_id", "qv", k = 2, nprobe = 2,
-        refine = 4, rawFloor = Some(-0.9))
+    val batch = PqIndex.searchBatchIvfPq(idx, cents, cbs, batchQ,
+        "query_id", "qv", k = 2, nprobe = 2, refine = 4,
+        rawFloor = Some(-0.9))
       .collect().map(_.getLong(1)).toSet
     assert(batch == Set(2L, 3L), s"sub-floor row wasted a top-k slot: $batch")
+  }
+
+  private def codeFiles(path: String): Set[String] = {
+    val d = new java.io.File(path)
+    d.listFiles().filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
   }
 }
