@@ -1660,6 +1660,38 @@ class MemoEngineSpec extends SparkTestBase {
     engine.clean()
   }
 
+  test("pqSkew / retrainPq: the drift policy on the compressed artifact " +
+      "— retrain rebalances and full-probe serving stays exact") {
+    // the IVF-PQ route probes the one ANN artifact: pqSkew reads its
+    // occupancy and retrainIvf (which replaced retrainPq) retrains the
+    // coarse quantizer and the codebooks together
+    val (engine, _) = freshEngine()
+    engine.save((0 until 48).map(i =>
+      s"---\nbody: pq seed topic$i theme${i % 7} subject${i % 11} " +
+        s"angle${i % 5} facet$i\n").mkString)
+    engine.pqRecall("pq seed topic1 theme1", k = 3).collect()
+    val skew0 = engine.pqSkew()
+    assert(skew0.isDefined)
+    (0 until 3).foreach(b => engine.save((0 until 40).map(i =>
+      s"---\nbody: drifted pq narrow phrase cluster " +
+        s"variant${i % 2} nuance$b$i\n").mkString))
+    engine.pqRecall("pq seed topic1 theme1", k = 3).collect()
+    val skew1 = engine.pqSkew().get
+    assert(skew1 > 2.0, s"drift must raise pq skew, got $skew1")
+    assert(!engine.retrainIvf(maxSkew = skew1 + 1.0))
+    assert(engine.retrainIvf(maxSkew = math.max(1.1, skew1 - 0.5)))
+    assert(engine.pqSkew().get < skew1)
+    // full-probe refine serving stays exact vs brute
+    val viaPq = engine.pqRecall("drifted pq narrow", k = 5,
+        nprobe = 1024, refine = 64).collect()
+      .map(_.getLong(0)).toSet
+    val viaBrute = engine.recall("drifted pq narrow", k = 5)
+      .collect().map(_.getLong(0)).toSet
+    assert(viaPq == viaBrute,
+      "full-probe PQ diverged from brute after retrain")
+    engine.clean()
+  }
+
   test("analyze Matched count served from a covering view: any group " +
       "key's doc_count sums to the matched count; WHERE-less views " +
       "cover the match-all ask; the route stays fresh across commits") {

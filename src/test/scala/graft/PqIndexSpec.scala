@@ -10,8 +10,12 @@ import graft.functions.GraftFunctions._
 /** Product quantization: deterministic training/encode, the ADC exactness
   * property on codebook-aligned vectors, refine recall vs exact, and the
   * storage story — the ADC scan reads only (id, code), never the raw
-  * vectors. */
-class PqIndexSpec extends SparkTestBase {
+  * vectors. The IVF artifact's lifecycle checks run here on the layout
+  * with codes ([[IvfLifecycleChecks]]). */
+class PqIndexSpec extends SparkTestBase with IvfLifecycleChecks {
+
+  /** The IVF-PQ layout the lifecycle checks run on. */
+  private val codes = Some((8, 16))
 
   private def emb = Tables(spark, sfDir, "embeddings")
 
@@ -403,6 +407,21 @@ class PqIndexSpec extends SparkTestBase {
       "embedding regeneration with identical ids did not rebuild")
   }
 
+  test("ivf-pq append lands in existing cell partitions; compact rebalances") {
+    checkAppend(codes)
+    checkCompact(codes)
+  }
+
+  test("a tombstoned id is refused by both append paths until applied") {
+    // one append path now writes both halves of the artifact (cells and
+    // codes); this is its check on the layout with codes
+    checkTombstoneRefusal(codes)
+  }
+
+  test("ivf-pq delete + applyDeletes rewrites only affected cells") {
+    checkDeleteApply(codes)
+  }
+
   test("a torn append journal blocks maintenance and forces a rebuild") {
     val path = java.nio.file.Files.createTempDirectory("pq_torn")
       .resolve("codes").toString
@@ -428,6 +447,14 @@ class PqIndexSpec extends SparkTestBase {
       IvfIndex.compact(emb, "vec_id", "embedding", s"$none/ivfpq")
     }
     assert(e3.getMessage.contains("buildIfAbsent"))
+  }
+
+  test("adversarial ivf-pq apply churn: probes never silently lose a cell") {
+    checkApplyChurn(codes)
+  }
+
+  test("every ivf-pq meta write bumps the manifest generation nonce") {
+    checkGenNonce(codes)
   }
 
   test("rawFloor cuts on the refine stage's RAW cosine — the IVF family's " +
