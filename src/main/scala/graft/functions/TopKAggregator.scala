@@ -15,6 +15,14 @@ import org.apache.spark.sql.expressions.Aggregator
   */
 object TopKAggregator {
 
+  /** The (score desc, id asc) order over driver-side (id, score) pairs,
+    * with doubles compared as Spark SQL sorts them (NaN largest,
+    * −0.0 = 0.0). */
+  val ScoreOrder: Ordering[(Long, Double)] = (a, b) => {
+    val bySc = if (a._2 == b._2) 0 else java.lang.Double.compare(b._2, a._2)
+    if (bySc != 0) bySc else java.lang.Long.compare(a._1, b._1)
+  }
+
   /** Buffer = fixed-capacity min-heap on score (ties broken by larger id,
     * so the kept set prefers smaller ids, matching orderBy(score desc, id)). */
   case class Heap(k: Int, ids: Array[Long], scores: Array[Double], var size: Int)

@@ -5,11 +5,12 @@ import java.util.Comparator
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.filter.FilterAlgebra
 import graft.functions.GraftFunctions._
+import graft.functions.TopKAggregator.ScoreOrder
 import graft.functions.VectorKernels
 import graft.ops.ArtifactMeta
 
@@ -996,7 +997,10 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * there yet, and the next catch-up would re-append them (duplicate
     * rows, the disjoint-id contract violated). The watermark advances
     * only when the family has something to serve (`out.isDefined`), so
-    * an empty corpus re-evaluates next call instead of caching absence. */
+    * an empty corpus re-evaluates next call instead of caching absence.
+    * A watermark naming the live version is trusted only while `serve()`
+    * answers: an artifact whose meta was lost or cannot be read is not
+    * current, so its watermark is dropped and the family rebuilds. */
   private def ensureArtifact[A](artDir: String, kind: String,
       beforeLocked: () => Unit = () => ())(
       appendSeg: (String, Long) => Unit, rebuild: Long => Option[A],
@@ -1004,10 +1008,11 @@ class MemoEngine(spark: SparkSession, basePath: String,
     currentVersion.flatMap { v =>
       def recorded = ArtifactMeta.read(spark, artDir, LexVersionFile)
         .flatMap(_.toLongOption)
-      if (recorded.contains(v)) serve()
-      else ArtifactMeta.withBuildLock(spark, artDir) {
-        if (recorded.contains(v)) serve() // double-checked under the lock
-        else {
+      def current: Option[A] = if (recorded.contains(v)) serve() else None
+      current.orElse(ArtifactMeta.withBuildLock(spark, artDir) {
+        current.orElse { // double-checked under the lock
+          if (recorded.contains(v))
+            ArtifactMeta.delete(spark, artDir, LexVersionFile)
           beforeLocked()
           val segVersion = ("^.*/v(\\d+)/" + kind + "$").r
           // each delta segment is (path, the store version that committed
@@ -1037,7 +1042,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
             ArtifactMeta.write(spark, artDir, LexVersionFile, v.toString)
           out
         }
-      }
+      })
     }
 
   private def bodyCorpus(paths: Seq[String]): DataFrame =
@@ -1267,11 +1272,10 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * entirely. */
   private def widenToFill(k: Int, nprobe: Int, nlist: Int,
       survivors: Long, adaptive: Boolean)(
-      pass: Int => Array[org.apache.spark.sql.Row])
-      : Array[org.apache.spark.sql.Row] = {
+      pass: Int => Seq[(Long, Double)]): Seq[(Long, Double)] = {
     if (survivors == 0) {
       lastFilteredAnnProbe = Some((0, 0))
-      return Array.empty
+      return Nil
     }
     val (np0, jumped) = startProbe(k, nprobe, nlist, survivors, adaptive)
     var np = np0
@@ -1297,7 +1301,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
     def searchBatch(q: DataFrame, k: Int, nprobe: Int,
         floor: Option[Double]): DataFrame
     def searchBatchFill(q: DataFrame, k: Int, nprobe: Int, mask: DataFrame,
-        floor: Option[Double], track: DataFrame => Unit)
+        floor: Option[Double], finish: DataFrame => DataFrame)
         : (DataFrame, (Int, Int))
   }
 
@@ -1324,10 +1328,10 @@ class MemoEngine(spark: SparkSession, basePath: String,
             "qv", k, nprobe, rawFloor = floor)
         def searchBatchFill(q: DataFrame, k: Int, nprobe: Int,
             mask: DataFrame, floor: Option[Double],
-            track: DataFrame => Unit) =
+            finish: DataFrame => DataFrame) =
           graft.ops.IvfIndex.searchBatchFill(idx, centroids, q, "query_id",
             "qv", k, nprobe, allowed = Some(mask), rawFloor = floor,
-            track = track)
+            finish = finish)
       }
     }
   }
@@ -1351,10 +1355,10 @@ class MemoEngine(spark: SparkSession, basePath: String,
               "query_id", "qv", k, nprobe, refine, rawFloor = floor)
           def searchBatchFill(q: DataFrame, k: Int, nprobe: Int,
               mask: DataFrame, floor: Option[Double],
-              track: DataFrame => Unit) =
+              finish: DataFrame => DataFrame) =
             graft.ops.PqIndex.searchBatchFillIvfPq(idx, centroids,
               codebooks, q, "query_id", "qv", k, nprobe, refine,
-              allowed = Some(mask), rawFloor = floor, track = track)
+              allowed = Some(mask), rawFloor = floor, finish = finish)
         }
     }
   }
@@ -1385,127 +1389,81 @@ class MemoEngine(spark: SparkSession, basePath: String,
       nprobe: Int = 4, filterExpr: Option[String] = None,
       floor: Option[Double] = None): DataFrame =
     probeRecall(IvfFamily, query, k, nprobe, filterExpr, floor,
-      adaptive = false, withBody = true)
+      adaptive = false)
 
   /** The ONE single-query probe body both families share ([[annRecall]],
     * [[pqRecall]], the serve front doors, `hybridRecall(ann = true)`):
     * unfiltered → one probe at `nprobe`; filtered → the mask, CACHED so
-    * every widening pass (and the body join) reuses it without
-    * re-scanning the matching segments, driven through [[widenToFill]].
-    * `adaptive` starts the ladder bound-aware ([[startProbe]]);
-    * `withBody = false` elides the body join/sort — the hybrid fusion
-    * tails consume only (id, score) and rejoin bodies once AFTER fusion
-    * (the fused ranking is bit-identical either way). An empty store
+    * every widening pass reuses it without re-scanning the matching
+    * segments, driven through [[widenToFill]] and released before
+    * return. `adaptive` starts the ladder bound-aware ([[startProbe]]).
+    * Returns the ≤ k collected (id, score) hits, or None on an
+    * empty/uncommitted store (no artifact to probe). */
+  private def probeHits(family: AnnFamily, query: String, k: Int,
+      nprobe: Int, filterExpr: Option[String], floor: Option[Double],
+      adaptive: Boolean): Option[Seq[(Long, Double)]] =
+    family.open().map { probe =>
+      val qv = VectorKernels.hashEmbedFloats(query, VectorKernels.DefaultDim)
+      filterExpr match {
+        case None =>
+          hitsOf(probe.search(qv, k, math.min(nprobe, probe.nlist), None,
+            floor))
+        case Some(f) =>
+          val mask = annMask(f).cache()
+          try widenToFill(k, nprobe, probe.nlist, mask.count(), adaptive) {
+            np => hitsOf(probe.search(qv, k, np, Some(mask), floor))
+          } finally mask.unpersist()
+      }
+    }
+
+  /** [[probeHits]] as a door's answer: (id, score, body) over local rows,
+    * the bodies joined on the driver ([[withBodies]]). An empty store
     * falls back to the exact [[recall]] ranking. */
   private def probeRecall(family: AnnFamily, query: String, k: Int,
       nprobe: Int, filterExpr: Option[String], floor: Option[Double],
-      adaptive: Boolean, withBody: Boolean): DataFrame =
-    family.open() match {
-      case Some(probe) =>
-        val qv = VectorKernels.hashEmbedFloats(query, VectorKernels.DefaultDim)
-        def bodies(ranked: DataFrame): DataFrame =
-          if (!withBody) ranked
-          else ranked
-            .join(filterExpr.fold(records)(recordsForFilter)
-              .select(col("id"), col("body")), Seq("id"))
-            .orderBy(desc("score"), col("id"))
-        filterExpr match {
-          case None =>
-            bodies(probe.search(qv, k, math.min(nprobe, probe.nlist), None,
-              floor).select(col("id"), col("score")))
-          case Some(f) =>
-            val mask = annMask(f).cache()
-            try {
-              val hits = widenToFill(k, nprobe, probe.nlist, mask.count(),
-                  adaptive) { np =>
-                probe.search(qv, k, np, Some(mask), floor).collect()
-              }
-              import spark.implicits._
-              bodies(spark.createDataset(hits.toSeq.map(r =>
-                  (r.getAs[Long]("id"), r.getAs[Double]("score"))))
-                .toDF("id", "score"))
-            } finally mask.unpersist()
-        }
-      case None =>
-        recall(query, k, filterExpr)
-          .select(col("id"), col("score"), col("body"))
+      adaptive: Boolean): DataFrame =
+    probeHits(family, query, k, nprobe, filterExpr, floor, adaptive)
+      .fold(recall(query, k, filterExpr))(
+        withBodies(_, filterExpr.fold(records)(recordsForFilter)))
+
+  /** A ranked frame's (id, score) rows, collected. */
+  private def hitsOf(ranked: DataFrame): Seq[(Long, Double)] =
+    ranked.select(col("id"), col("score")).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+
+  /** Bodies of a serving answer's final ids, from `from`'s records: ONE
+    * lookup plan for every door, a semi-join against a broadcast local
+    * id frame. The ids ride as data: an `isin` over them would inline
+    * each answer's ids into generated code and compile new classes per
+    * query. */
+  private def bodiesOf(ids: Seq[Long], from: DataFrame)
+      : Map[Long, Seq[String]] =
+    if (ids.isEmpty) Map.empty
+    else {
+      import spark.implicits._
+      from.select(col("id"), col("body"))
+        .join(broadcast(ids.distinct.toDF("id")), Seq("id"), "left_semi")
+        .collect().toSeq.groupMap(_.getLong(0))(_.getString(1))
     }
+
+  /** (id, score, body) of `hits` in (score desc, id) order over local
+    * rows; a hit without a record in `from` drops, as an inner join
+    * would drop it. */
+  private def withBodies(hits: Seq[(Long, Double)],
+      from: DataFrame): DataFrame = {
+    import org.apache.spark.sql.types._
+    val bodies = bodiesOf(hits.map(_._1), from)
+    localFrame(hits.sorted(ScoreOrder).flatMap { case (id, s) =>
+      bodies.getOrElse(id, Nil).map(b => Row(id, s, b))
+    }, StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("score", DoubleType, nullable = false),
+      StructField("body", StringType))))
+  }
 
   /** Test seam: which arm the last [[serveRoute]] decision took
     * ("brute" | "ann" | "pq") and the survivor upper bound it decided
     * on. Production never reads it. */
   private[graft] var lastServeRoute: Option[(String, Long)] = None
-
-  /** Widening-rung caches, keyed by SERVING-CALL TOKEN. A fill ladder
-    * caches each rung (a widening rung's fill-count job materializes
-    * it; the final full-probe rung skips that job and materializes at
-    * first consumption, reading the batch entry points' eagerly
-    * checkpointed filter mask), and the union is LAZY — the rungs must
-    * stay pinned until the caller has consumed the result, so the
-    * ladder can't unpersist them itself. Unbounded
-    * accumulation across calls is the failure mode this registry kills,
-    * WITHOUT letting concurrent servers thrash each other: every batch
-    * serving entry point takes a token ([[beginServingCall]]), registers
-    * its rungs under it, and retires it on return — a new call drains
-    * only rungs whose call is neither IN FLIGHT nor the MOST RECENTLY
-    * RETIRED one (kept pinned for its caller's lazy consumption, the
-    * single-caller semantics generalized). A long-running serving
-    * process therefore pins at most (in-flight calls + 1) ladders
-    * (≤ log₂(nlist)+1 frames each), and a concurrent server's entry can
-    * never unpersist another call's still-in-flight rungs.
-    * [[releaseServingCaches]] releases retired ladders eagerly;
-    * unpersisting a frame a slow reader still holds is safe — its
-    * blocks recompute from lineage, correctness never depended on the
-    * cache. */
-  private[graft] val servingCaches =
-    scala.collection.mutable.Buffer.empty[(Long, DataFrame)]
-  private val servingCallSeq =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-  private[graft] val activeServingCalls =
-    scala.collection.mutable.Set.empty[Long]
-  private[graft] var lastRetiredServingCall: Option[Long] = None
-
-  /** Open a serving-call scope: allocate its token and drain rungs of
-    * calls that are done AND superseded (not in flight, not the most
-    * recently retired). */
-  private def beginServingCall(): Long = servingCaches.synchronized {
-    val tok = servingCallSeq.incrementAndGet()
-    val keep: Set[Long] =
-      activeServingCalls.toSet ++ lastRetiredServingCall
-    val (kept, drop) = servingCaches.partition(e => keep.contains(e._1))
-    drop.foreach(_._2.unpersist())
-    servingCaches.clear(); servingCaches ++= kept
-    activeServingCalls += tok
-    tok
-  }
-
-  private def endServingCall(tok: Long): Unit =
-    servingCaches.synchronized {
-      activeServingCalls -= tok
-      lastRetiredServingCall = Some(tok)
-    }
-
-  private def registerServingCache(tok: Long)(df: DataFrame): Unit =
-    servingCaches.synchronized { servingCaches += ((tok, df)); () }
-
-  /** Test seam: invoked after a batch ladder registered its rungs,
-    * BEFORE the call's token retires — lets a concurrency spec hold one
-    * serve open while another thread enters. Production never sets it. */
-  private[graft] var afterServingLadderHook: Long => Unit = _ => ()
-
-  /** Unpersist the widening-rung caches of COMPLETED batch serving
-    * calls (see [[servingCaches]]); in-flight calls' rungs are never
-    * touched, so this is safe to call from any thread at any time.
-    * Superseded ladders drain automatically on the next batch serving
-    * call; call this directly after consuming a batch result to release
-    * executor memory immediately. */
-  def releaseServingCaches(): Unit = servingCaches.synchronized {
-    val (kept, drop) =
-      servingCaches.partition(e => activeServingCalls.contains(e._1))
-    drop.foreach(_._2.unpersist())
-    servingCaches.clear(); servingCaches ++= kept
-    lastRetiredServingCall = None
-  }
 
   /** The filter-aware serving FRONT DOOR — the BENCH_NOTES r14
     * selectivity leg's finding as code: [[serveRoute]] picks the arm
@@ -1529,22 +1487,25 @@ class MemoEngine(spark: SparkSession, basePath: String,
       filterExpr: Option[String] = None, nprobe: Int = 4,
       bruteRows: Long = 4096L,
       pqBytes: Long = MemoEngine.DefaultServePqBytes): DataFrame =
-    serveLeg(query, k, filterExpr, nprobe, bruteRows, pqBytes,
-      withBody = true)
-
-  /** The routed single-query semantic leg of [[recallServe]] and
-    * [[hybridServe]]: the brute arm is [[recall]]; the probe arms run
-    * [[probeRecall]] with the serving floor and the bound-aware ladder
-    * start. */
-  private def serveLeg(query: String, k: Int, filterExpr: Option[String],
-      nprobe: Int, bruteRows: Long, pqBytes: Long,
-      withBody: Boolean): DataFrame =
+    // the brute arm is [[recall]]; the probe arms run [[probeRecall]]
+    // with the serving floor and the bound-aware ladder start
     serveRoute(filterExpr, bruteRows, pqBytes) match {
       case None => recall(query, k, filterExpr)
       case Some(family) =>
         probeRecall(family, query, k, nprobe, filterExpr,
-          floor = Some(MemoOps.ScoreFloor), adaptive = true, withBody)
+          floor = Some(MemoOps.ScoreFloor), adaptive = true)
     }
+
+  /** A single-query semantic leg as ranked (id, score) hits — the
+    * hybrid doors' vector list: the probe of `route`, or the exact
+    * [[recall]] ranking when there is no route (brute) or nothing to
+    * probe. */
+  private def semanticHits(route: Option[AnnFamily], query: String, k: Int,
+      nprobe: Int, filterExpr: Option[String], floor: Option[Double],
+      adaptive: Boolean): Seq[(Long, Double)] =
+    route.flatMap(probeHits(_, query, k, nprobe, filterExpr, floor,
+        adaptive))
+      .getOrElse(hitsOf(recall(query, k, filterExpr)))
 
   /** THE route decision of every serving door. Which arm is cheaper is
     * decided by BOUNDED numbers, not the corpus: the filter's surviving
@@ -1625,7 +1586,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
     serveLegBatch(queries, queryIdCol, queryTextCol, k, filterExpr, nprobe,
       bruteRows, pqBytes, withBody = true)
 
-  /** [[serveLeg]]'s batch twin, shared by [[recallServeBatch]] and
+  /** [[recallServe]]'s batch leg, shared by [[recallServeBatch]] and
     * [[hybridServeBatch]]: brute → [[bruteVecBatch]], probe →
     * [[probeRecallBatch]] with the serving floor and bound-aware start. */
   private def serveLegBatch(queries: DataFrame, queryIdCol: String,
@@ -1636,7 +1597,8 @@ class MemoEngine(spark: SparkSession, basePath: String,
       case None =>
         val ranked = bruteVecBatch(queries, queryIdCol, queryTextCol, k,
           filterExpr)
-        if (!withBody) ranked else batchBodies(ranked, filterExpr)
+        if (!withBody) ranked
+        else graft.ops.IvfIndex.collectLocal(batchBodies(ranked, filterExpr))
       case Some(family) =>
         probeRecallBatch(family, queries, queryIdCol, queryTextCol, k,
           nprobe, filterExpr, floor = Some(MemoOps.ScoreFloor),
@@ -1703,22 +1665,16 @@ class MemoEngine(spark: SparkSession, basePath: String,
       withBody = true)
 
   /** The ONE batch probe body both families share. The filtered arm's
-    * mask is eagerly MATERIALIZED (localCheckpoint), not cache()d: the
-    * ladder's final full-probe rung stays lazy (its fill-count job
-    * decides nothing and is skipped), so the mask must survive until
-    * the caller consumes the result — a CacheManager entry would need
-    * unpersist bookkeeping (and identical filter plans across calls
-    * SHARE one entry, so a drain could uncache an in-flight twin);
-    * checkpointed blocks are reclaimed by the ContextCleaner when the
-    * result frame becomes unreachable. Queries the first probe
-    * under-fills re-run at doubled nprobe (the kernels' per-query-id
-    * fill ladder), so every query returns min(k, its matching
-    * survivors) rows while filled queries keep their one-pass cost; the
-    * start width is [[startProbe]]'s (≤ k survivors jump every query
-    * to the full probe), and an empty mask returns no rows with zero
-    * scans. The ladder's rung caches register under this call's
-    * serving token ([[servingCaches]]). `withBody = false` returns
-    * (query_id, id, score) for the hybrid fusion tail. */
+    * mask is CACHED for the ladder and released before return. Queries
+    * the first probe under-fills re-run at doubled nprobe (the kernels'
+    * per-query-id fill ladder), so every query returns min(k, its
+    * matching survivors) rows while filled queries keep their one-pass
+    * cost; the start width is [[startProbe]]'s (≤ k survivors jump every
+    * query to the full probe), and an empty mask returns no rows with
+    * zero scans. The ladder's answer, body join included, is collected
+    * in one plan while its rungs are still cached; the ladder then
+    * releases them, so nothing stays pinned past the call. `withBody =
+    * false` returns (query_id, id, score) for the hybrid fusion tail. */
   private def probeRecallBatch(family: AnnFamily, queries: DataFrame,
       queryIdCol: String, queryTextCol: String, k: Int, nprobe: Int,
       filterExpr: Option[String], floor: Option[Double], adaptive: Boolean,
@@ -1727,12 +1683,12 @@ class MemoEngine(spark: SparkSession, basePath: String,
     val outSchema = StructType(Seq(
       StructField("query_id", LongType), StructField("id", LongType),
       StructField("score", DoubleType), StructField("body", StringType)))
-    def bodies(ranked: DataFrame): DataFrame =
-      if (!withBody)
-        ranked.select(col("query_id"), col("id"), col("score"))
-      else batchBodies(ranked, filterExpr)
-    val srvTok = beginServingCall()
-    try family.open() match {
+    def ranked(hits: DataFrame): DataFrame =
+      hits.select(col("query_id"), col("id"), col("score"))
+    def answer(hits: DataFrame): DataFrame =
+      graft.ops.IvfIndex.collectLocal(
+        if (withBody) batchBodies(hits, filterExpr) else ranked(hits))
+    family.open() match {
       case Some(probe) =>
         val q = queries.select(
           col(queryIdCol).cast("long").as("query_id"),
@@ -1740,27 +1696,29 @@ class MemoEngine(spark: SparkSession, basePath: String,
             .as("qv"))
         filterExpr match {
           case None =>
-            bodies(probe.searchBatch(q, k, math.min(nprobe, probe.nlist),
-              floor))
+            val hits = probe.searchBatch(q, k, math.min(nprobe, probe.nlist),
+              floor)
+            if (withBody) answer(hits) else ranked(hits)
           case Some(f) =>
-            val mask = annMask(f).localCheckpoint(true)
-            val survivors = mask.count()
-            if (survivors == 0) {
-              lastBatchWiden = Some((0, 0))
-              emptyFrame(outSchema)
-            } else {
-              val (np0, jumped) =
-                startProbe(k, nprobe, probe.nlist, survivors, adaptive)
-              val (hits, widen) = probe.searchBatchFill(q, k, np0, mask,
-                floor, registerServingCache(srvTok))
-              lastBatchWiden =
-                Some(if (jumped) (widen._1, widen._2 + 1) else widen)
-              afterServingLadderHook(srvTok)
-              bodies(hits)
-            }
+            val mask = annMask(f).cache()
+            try {
+              val survivors = mask.count()
+              if (survivors == 0) {
+                lastBatchWiden = Some((0, 0))
+                emptyFrame(outSchema)
+              } else {
+                val (np0, jumped) =
+                  startProbe(k, nprobe, probe.nlist, survivors, adaptive)
+                val (out, widen) =
+                  probe.searchBatchFill(q, k, np0, mask, floor, answer)
+                lastBatchWiden =
+                  Some(if (jumped) (widen._1, widen._2 + 1) else widen)
+                out
+              }
+            } finally mask.unpersist()
         }
       case None => emptyFrame(outSchema)
-    } finally endServingCall(srvTok)
+    }
   }
 
   /** Compressed ANN over the codes of the engine-MAINTAINED ANN artifact
@@ -1790,7 +1748,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
       refine: Int = 4, filterExpr: Option[String] = None,
       floor: Option[Double] = None): DataFrame =
     probeRecall(new PqFamily(refine), query, k, nprobe, filterExpr, floor,
-      adaptive = false, withBody = true)
+      adaptive = false)
 
   private def sigDir: String = base.resolve("_minhash").toString
 
@@ -2657,13 +2615,10 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * spec-pinned). */
   def hybridRecall(query: String, k: Int = MemoOps.DefaultK,
       filterExpr: Option[String] = None, perList: Int = 50,
-      ann: Boolean = false, annNprobe: Int = 4): DataFrame = {
-    val vecBase =
-      if (ann) probeRecall(IvfFamily, query, perList, annNprobe, filterExpr,
-        floor = None, adaptive = false, withBody = false)
-      else recall(query, perList, filterExpr)
-    hybridFuse(query, k, filterExpr, perList, vecBase)
-  }
+      ann: Boolean = false, annNprobe: Int = 4): DataFrame =
+    hybridFuse(query, k, filterExpr, perList,
+      semanticHits(if (ann) Some(IvfFamily) else None, query, perList,
+        annNprobe, filterExpr, floor = None, adaptive = false))
 
   /** The SERVING front door for hybrid retrieval — [[recallServe]]'s
     * selectivity-aware routing applied to [[hybridRecall]]'s SEMANTIC
@@ -2689,29 +2644,26 @@ class MemoEngine(spark: SparkSession, basePath: String,
       filterExpr: Option[String] = None, perList: Int = 50,
       nprobe: Int = 4, bruteRows: Long = 4096L,
       pqBytes: Long = MemoEngine.DefaultServePqBytes): DataFrame =
-    // body-less probe arms: the fusion tail consumes (id, score) only and
-    // rejoins bodies once after fusion — same fused ranking, one records
-    // scan + global sort fewer per serve
     hybridFuse(query, k, filterExpr, perList,
-      serveLeg(query, perList, filterExpr, nprobe, bruteRows, pqBytes,
-        withBody = false))
+      semanticHits(serveRoute(filterExpr, bruteRows, pqBytes), query,
+        perList, nprobe, filterExpr, floor = Some(MemoOps.ScoreFloor),
+        adaptive = true))
 
-  /** [[hybridRecall]]'s fusion tail, shared with [[hybridServe]]: rank
-    * the semantic leg, probe the postings artifact for the lexical leg,
-    * fuse by reciprocal rank, join bodies. `vecBase` is the semantic
-    * leg's (id, score, …) frame — the ONLY part the entry points
-    * choose. */
+  /** [[hybridRecall]]'s fusion tail, shared with [[hybridServe]], run on
+    * the driver over the two collected lists (≤ `perList` rows each):
+    * rank the semantic leg's hits, probe the postings artifact for the
+    * lexical leg, fuse by reciprocal rank ([[graft.ops.Lexical.rrfFuseLocal]]
+    * — [[graft.ops.Lexical.rrfFuse]]'s arithmetic bit for bit), look up
+    * the k bodies, and return (id, rrf_score, [r_bm25,] r_vec, body) in
+    * (rrf_score desc, id) order over local rows. `vec` is the semantic
+    * leg's hits — the ONLY part the entry points choose. */
   private def hybridFuse(query: String, k: Int,
       filterExpr: Option[String], perList: Int,
-      vecBase: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.orderBy(desc("score"), col("id"))
-    val vec = vecBase
-      .select(col("id"), col("score"))
-      .withColumn("rank", row_number().over(w))
+      vec: Seq[(Long, Double)]): DataFrame = {
+    import org.apache.spark.sql.types._
     val terms = VectorKernels.tokenize(query).toSeq.distinct
-    val lists =
-      if (terms.isEmpty) Seq("vec" -> vec)
+    val bm25 =
+      if (terms.isEmpty) None
       else {
         val scores =
           if (currentVersion.isDefined) {
@@ -2732,14 +2684,23 @@ class MemoEngine(spark: SparkSession, basePath: String,
                   .getOrElse(lit(true)))
                 .filter(!isBlank(col("body"))), "id", "body", terms,
               perList)
-        val bm = scores
-          .select(col("doc_id").as("id"), col("score"))
-          .withColumn("rank", row_number().over(w))
-        Seq("bm25" -> bm, "vec" -> vec)
+        Some("bm25" -> hitsOf(scores.select(col("doc_id").as("id"),
+          col("score"))))
       }
-    graft.ops.Lexical.rrfFuse(lists, k)
-      .join(records.select(col("id"), col("body")), Seq("id"))
-      .orderBy(desc("rrf_score"), col("id"))
+    val lists = (bm25.toSeq :+ ("vec" -> vec)).map { case (name, hits) =>
+      name -> hits.sorted(ScoreOrder).map(_._1).zipWithIndex
+        .map { case (id, i) => (id, i + 1) }
+    }
+    val fused = graft.ops.Lexical.rrfFuseLocal(lists.map(_._2), k)
+    val bodies = bodiesOf(fused.map(_._1), records)
+    localFrame(fused.flatMap { case (id, score, ranks) =>
+      bodies.getOrElse(id, Nil).map(b =>
+        Row.fromSeq((id +: score +: ranks.map(_.map(Int.box).orNull)) :+ b))
+    }, StructType(
+      Seq(StructField("id", LongType, nullable = false),
+        StructField("rrf_score", DoubleType, nullable = false)) ++
+      lists.map { case (name, _) => StructField(s"r_$name", IntegerType) } :+
+      StructField("body", StringType)))
   }
 
   /** The BATCH twin of [[hybridRecall]] — both legs batch, one probe
@@ -2959,9 +2920,13 @@ class MemoEngine(spark: SparkSession, basePath: String,
   }
 
   private def emptyFrame(schema: org.apache.spark.sql.types.StructType)
-      : DataFrame =
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+      : DataFrame = localFrame(Nil, schema)
+
+  /** Driver-side rows as a DataFrame over a local relation: what a
+    * serving door returns once its bounded tail ran on the driver. */
+  private def localFrame(rows: Seq[Row],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
 
   /** [[records]] with provably-unmatchable segments dropped for
     * `filterExpr` — same rows out of every filtered read (the
@@ -3080,20 +3045,39 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * sums with [[MemoOps.statsTopK]]'s exact formulas (two raw
     * encodings can share a rendering), so a registered covering view
     * serves this API O(state) exactly like the CLI stats block;
-    * uncovered asks scan as before. */
+    * uncovered asks scan as before. Spark runs the one aggregation and
+    * collects one row ([[statsTail]]); the "other" row and the final
+    * (cnt desc, value) order are derived on the driver, and the answer
+    * is a frame over local rows. */
   def analyzeStats(filterExpr: String, key: String): DataFrame = {
+    import graft.functions.StatsTopAggregator.Order
     val counts = statsPairs(filterExpr, key)
       .select(graft.functions.GraftFunctions.metaDisplay(col("raw"))
         .as("value"), col("cnt"))
       .groupBy(col("value")).agg(sum(col("cnt")).as("cnt"))
-    val top = counts.orderBy(desc("cnt"), col("value")).limit(4)
-    val other = counts
-      .join(top.select(col("value")), Seq("value"), "left_anti")
-      .agg(sum(col("cnt")).as("cnt"))
-      .filter(col("cnt").isNotNull)
-      .select(lit("other").as("value"), col("cnt"))
-    top.unionByName(other).orderBy(desc("cnt"), col("value"))
+    val tail = statsTail(counts).collect().head.getStruct(0)
+    val top = tail.getSeq[Row](0).map(r =>
+      (r.getString(0), if (r.isNullAt(1)) None else Some(r.getLong(1))))
+    // "other" sums every row the value anti-join leaves outside the top:
+    // a null value never matches that join, so a null-valued top row is
+    // counted there as well; no such non-null count → no "other" row
+    val matched = top.filter(_._1 != null).flatMap(_._2)
+    val other =
+      if (tail.getLong(2) > matched.size)
+        Seq(("other", Some(tail.getLong(1) - matched.sum)))
+      else Nil
+    localFrame((top ++ other).sorted(Order).map { case (v, c) =>
+      Row(v, c.map(Long.box).orNull)
+    }, counts.schema)
   }
+
+  /** [[analyzeStats]]'s collected plan over the (value, cnt) counts: ONE
+    * row holding the top 4 counts, the sum of all counts and how many
+    * are non-null ([[graft.functions.StatsTopAggregator]]) — never one
+    * row per distinct value. */
+  private[graft] def statsTail(counts: DataFrame): DataFrame =
+    counts.agg(graft.functions.StatsTopAggregator
+      .column(col("value"), col("cnt"), 4).as("top"))
 
   /** Exact PERCENTILES of `key`'s numeric values under `filterExpr` —
     * the maintained-quantiles ask on the reference's numeric rollup

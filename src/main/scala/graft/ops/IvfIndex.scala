@@ -1123,23 +1123,25 @@ object IvfIndex {
     * mask semi-join and the slice-size guard are hoisted OUT of the
     * ladder (one masked-index frame reused by every rung's plan; the
     * guard count runs once, not per rung). Each rung's result is
-    * cached — its fill-count job materializes it — so consuming the
-    * returned union reads cached blocks (an evicted block recomputes
-    * from lineage; correctness never depends on the cache).
+    * cached — its fill-count job materializes it — and `finish` consumes
+    * the union while the rungs are cached; the ladder releases them
+    * before it returns. The default `finish` collects the union into a
+    * frame over local rows (≤ k rows per query by construction).
     *
-    * Returns (frame, (final nprobe, widening rungs)) — the probe
-    * telemetry the serving layer's seams and oracle builds assert on.
-    * Rungs = 0 means every query filled in one pass. */
+    * Returns (finished frame, (final nprobe, widening rungs)) — the
+    * probe telemetry the serving layer's seams and oracle builds assert
+    * on. Rungs = 0 means every query filled in one pass. */
   def searchBatchFill(index: DataFrame, centroids: Array[Array[Float]],
       queries: DataFrame, queryIdCol: String, qvCol: String,
       k: Int, nprobe: Int, maxBatch: Int = 8192,
       allowed: Option[DataFrame] = None,
       rawFloor: Option[Double] = None,
-      track: DataFrame => Unit = _ => ()): (DataFrame, (Int, Int)) = {
+      finish: DataFrame => DataFrame = collectLocal)
+      : (DataFrame, (Int, Int)) = {
     val idx = allowed.fold(index)(m =>
       index.join(m.select(col("id")), Seq("id"), "left_semi"))
     fillLadder(queries, queryIdCol, qvCol, k, nprobe, centroids.length,
-      maxBatch, track) { (qf, np, small) =>
+      maxBatch, finish) { (qf, np, small) =>
       if (small) searchBatchSlice(idx, centroids, qf, k, np, rawFloor)
       else searchBatch(idx, centroids, qf, "query_id", "qv", k, np,
         maxBatch, rawFloor = rawFloor)
@@ -1156,20 +1158,15 @@ object IvfIndex {
     * pass's output must carry a `query_id` column with ≤ k rows per
     * query.
     *
-    * `track` receives every rung frame this ladder caches (a widening
-    * rung's fill-count job materializes it; the FINAL full-probe rung
-    * skips that job and materializes at first consumption). The caches
-    * must OUTLIVE this call — the union is lazy — so the ladder cannot
-    * unpersist them itself;
-    * callers register them and release when the result has been
-    * consumed (the engine drains the previous serving call's rungs at
-    * the next call, bounding a long-running server's cache to one
-    * call's ladder — see `MemoEngine.releaseServingCaches`). An
-    * unpersisted rung recomputes from lineage; correctness never
-    * depends on the cache. */
+    * Every rung the ladder caches (a widening rung's fill-count job
+    * materializes it; the FINAL full-probe rung skips that job and
+    * materializes inside `finish`) is released in a `finally` once
+    * `finish` has consumed the union, so `finish` must return a frame
+    * that no longer reads the rungs — a collected one. Nothing stays
+    * pinned past the call. */
   private[ops] def fillLadder(queries: DataFrame, queryIdCol: String,
       qvCol: String, k: Int, nprobe: Int, nlist: Int, maxBatch: Int,
-      track: DataFrame => Unit = _ => ())(
+      finish: DataFrame => DataFrame)(
       pass: (DataFrame, Int, Boolean) => DataFrame)
       : (DataFrame, (Int, Int)) = {
     val spark = queries.sparkSession
@@ -1186,38 +1183,48 @@ object IvfIndex {
         .map(r => (r.getLong(0), r.getLong(1))).toMap
     var np = math.min(math.max(nprobe, 1), nlist)
     var rungs = 0
-    var cur = pass(q, np, small).cache()
-    track(cur)
-    // a rung at FULL probe can never widen further, so its per-query
-    // fill-count job would decide NOTHING — skip it and leave the rung
-    // lazy (it materializes when the caller consumes the union; the
-    // engine's serving-cache registry pins whatever that consumption
-    // needs, the mask included). This cuts one job from every ladder
-    // that reaches the full probe — and from the selective-filter fast
-    // path, which STARTS there.
-    if (np >= nlist) return (cur, (np, 0))
-    var cnt = fills(cur)
-    // zero-hit queries never reach the pass output — starved derives
-    // from the id set, not from the counts
-    var starved = allIds.filter(id => cnt.getOrElse(id, 0L) < k)
-    val parts = scala.collection.mutable.Buffer.empty[DataFrame]
-    while (starved.nonEmpty && np < nlist) {
-      val sdf = broadcast(
-        spark.createDataset(starved.toSeq).toDF("query_id"))
-      parts += cur.join(sdf, Seq("query_id"), "left_anti")
-      np = math.min(np * 2, nlist)
-      rungs += 1
-      cur = pass(q.join(sdf, Seq("query_id"), "left_semi"), np, small)
-        .cache()
-      track(cur)
-      if (np < nlist) {
-        cnt = fills(cur)
-        starved = starved.filter(id => cnt.getOrElse(id, 0L) < k)
-      } else starved = Array.empty[Long] // full probe: the rung is final
+    val cached = scala.collection.mutable.Buffer.empty[DataFrame]
+    def rung(qf: DataFrame): DataFrame = {
+      val r = pass(qf, np, small).cache()
+      cached += r
+      r
     }
-    parts += cur // final rung: filled, or exact at full probe
-    (parts.reduce(_.unionAll(_)), (np, rungs))
+    try {
+      var cur = rung(q)
+      // a rung at FULL probe can never widen further, so its per-query
+      // fill-count job would decide NOTHING — skip it and let `finish`
+      // materialize the rung. This cuts one job from every ladder that
+      // reaches the full probe — and from the selective-filter fast
+      // path, which STARTS there.
+      if (np >= nlist) return (finish(cur), (np, 0))
+      var cnt = fills(cur)
+      // zero-hit queries never reach the pass output — starved derives
+      // from the id set, not from the counts
+      var starved = allIds.filter(id => cnt.getOrElse(id, 0L) < k)
+      val parts = scala.collection.mutable.Buffer.empty[DataFrame]
+      while (starved.nonEmpty && np < nlist) {
+        val sdf = broadcast(
+          spark.createDataset(starved.toSeq).toDF("query_id"))
+        parts += cur.join(sdf, Seq("query_id"), "left_anti")
+        np = math.min(np * 2, nlist)
+        rungs += 1
+        cur = rung(q.join(sdf, Seq("query_id"), "left_semi"))
+        if (np < nlist) {
+          cnt = fills(cur)
+          starved = starved.filter(id => cnt.getOrElse(id, 0L) < k)
+        } else starved = Array.empty[Long] // full probe: the rung is final
+      }
+      parts += cur // final rung: filled, or exact at full probe
+      (finish(parts.reduce(_.unionAll(_))), (np, rungs))
+    } finally cached.foreach(_.unpersist())
   }
+
+  /** `df` collected into a frame over local rows (a `LocalRelation`):
+    * [[fillLadder]]'s default `finish`, and how the engine's batch doors
+    * return their bounded answers. */
+  private[graft] def collectLocal(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(df.collect(): _*), df.schema)
 
   /** One bounded slice of [[searchBatch]] (queries already projected to
     * (query_id, qv)). */

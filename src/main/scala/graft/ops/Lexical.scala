@@ -1,7 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShims
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.GraftFunctions.tokensKernel
 
@@ -791,6 +794,19 @@ object Lexical {
       compactStats(spark, path)
     }
 
+  /** `term IN (terms)` as one set-membership predicate (Spark's
+    * `InSet`): parquet still prunes row groups by it, and its generated
+    * code reads the set as a reference object, so queries with different
+    * term counts share one compiled class — an `isin` of n literals
+    * compiles n comparisons, a new class per query length. The set is a
+    * `HashSet` at every size: the generated code casts the reference to
+    * the set's runtime class, and Scala's small sets have one class per
+    * size. */
+  private def termIn(terms: Seq[String]): Column =
+    GraftShims.column(InSet(GraftShims.expression(col("term")),
+      scala.collection.immutable.HashSet.from[Any](
+        terms.map(UTF8String.fromString))))
+
   /** BM25 top-k over the artifact for a bag of query terms.
     *
     * Per (doc, term): `idf(t) · tf·(k1+1) / (tf + k1·(1−b + b·dl/avgdl))`
@@ -830,7 +846,7 @@ object Lexical {
     val avgDl = if (st.n == 0) 0.0 else st.sumDl.toDouble / st.n.toDouble
     val postRaw = spark.read.schema(PostingsSchema)
       .parquet(dirs.post.map(n => s"${postingsPath(path)}/$n"): _*)
-      .filter(col("term").isin(terms: _*))
+      .filter(termIn(terms))
     // pending deletes excluded via a broadcast anti-join (bounded by
     // deletes since the last compactPostings)
     val post0 =
@@ -848,7 +864,7 @@ object Lexical {
       Seq("doc_id"), "left_semi"))
     val df = spark.read.schema(StatsSchema)
       .parquet(dirs.stats.map(n => s"${statsPath(path)}/$n"): _*)
-      .filter(col("term").isin(terms: _*))
+      .filter(termIn(terms))
       .groupBy("term").agg(sum("df").cast("double").as("df"))
     score(post, df, st.n, avgDl, k)
   }
@@ -961,7 +977,7 @@ object Lexical {
     require(sample.nonEmpty, "searchBm25Batch needs at least one query term")
     val small = sample.length <= isinTermLimit
     def pruneTerms(df: DataFrame): DataFrame =
-      if (small) df.filter(col("term").isin(sample: _*))
+      if (small) df.filter(termIn(sample))
       else df.join(broadcast(qterms), Seq("term"), "left_semi")
     val m = serveMeta(spark, path)
     val st = m.stamp
@@ -993,20 +1009,6 @@ object Lexical {
       outId = "doc_id")
   }
 
-  /** Reciprocal-rank fusion of ranked candidate lists (Cormack et al.
-    * 2009 — the standard hybrid-retrieval combiner): each list
-    * contributes `1/(c + rank)` for the ids it ranked, summed per id.
-    * Rank-based, so the two score scales (BM25 vs cosine) never need
-    * calibrating against each other.
-    *
-    * Inputs are (id, rank) frames whose rank column is 1-based and
-    * DENSE within each k-bounded list (the caller ranks its own top-k —
-    * a window over ≤ k rows, bounded driver-side cost zero). The
-    * contribution is floored to 8 decimals and summed as DECIMAL, the
-    * [[searchBm25]] determinism recipe: the fused score is independent
-    * of Spark's union/aggregation order and replayable bit-exactly by
-    * the oracle. Output: (id, rrf_score, r_1, …, r_n) with each list's
-    * rank carried through (null where a list missed the id). */
   /** [[rrfFuse]] per QUERY: inputs are (query_id, id, rank) frames,
     * ranks 1-based and dense WITHIN each (query, list); fusion and the
     * floor-8 DECIMAL determinism are identical, grouped on
@@ -1037,6 +1039,20 @@ object Lexical {
       .drop("_rn")
   }
 
+  /** Reciprocal-rank fusion of ranked candidate lists (Cormack et al.
+    * 2009 — the standard hybrid-retrieval combiner): each list
+    * contributes `1/(c + rank)` for the ids it ranked, summed per id.
+    * Rank-based, so the two score scales (BM25 vs cosine) never need
+    * calibrating against each other.
+    *
+    * Inputs are (id, rank) frames whose rank column is 1-based and
+    * DENSE within each k-bounded list (the caller ranks its own top-k —
+    * a window over ≤ k rows, bounded driver-side cost zero). The
+    * contribution is floored to 8 decimals and summed as DECIMAL, the
+    * [[searchBm25]] determinism recipe: the fused score is independent
+    * of Spark's union/aggregation order and replayable bit-exactly by
+    * the oracle. Output: (id, rrf_score, r_1, …, r_n) with each list's
+    * rank carried through (null where a list missed the id). */
   def rrfFuse(lists: Seq[(String, DataFrame)], k: Int,
       c: Int = 60): DataFrame = {
     require(lists.nonEmpty, "rrfFuse needs at least one ranked list")
@@ -1055,5 +1071,38 @@ object Lexical {
       .agg(sum(contrib).cast("double").as("rrf_score"), rankCols: _*)
       .orderBy(desc("rrf_score"), col("id"))
       .limit(k)
+  }
+
+  /** [[rrfFuse]] on the driver, for lists already collected: each list
+    * is its (id, rank) pairs, in [[rrfFuse]]'s list order. Same
+    * arithmetic bit for bit — each contribution floored to 8 decimals
+    * through Spark's own double → decimal(18,8) cast, summed exactly,
+    * read back as a double — and the same (rrf_score desc, id) top-k
+    * cut. Returns (id, rrf_score, each list's rank or None) rows in that
+    * order. */
+  def rrfFuseLocal(lists: Seq[Seq[(Long, Int)]], k: Int,
+      c: Int = 60): Seq[(Long, Double, Seq[Option[Int]])] = {
+    require(lists.nonEmpty, "rrfFuseLocal needs at least one ranked list")
+    def contrib(rank: Int): java.math.BigDecimal = {
+      val d = org.apache.spark.sql.types.Decimal(
+        math.floor(1.0 / (c.toDouble + rank.toDouble) * 100000000.0 + 0.5)
+          .toLong / 100000000.0)
+      d.changePrecision(18, 8)
+      d.toJavaBigDecimal
+    }
+    val fused = scala.collection.mutable.HashMap
+      .empty[Long, (java.math.BigDecimal, Array[Option[Int]])]
+    lists.zipWithIndex.foreach { case (hits, li) =>
+      hits.foreach { case (id, rank) =>
+        val (sum, ranks) = fused.getOrElse(id, (java.math.BigDecimal.ZERO,
+          Array.fill[Option[Int]](lists.size)(None)))
+        ranks(li) = Some(ranks(li).fold(rank)(math.min(_, rank)))
+        fused(id) = (sum.add(contrib(rank)), ranks)
+      }
+    }
+    fused.toSeq
+      .map { case (id, (sum, ranks)) => (id, sum.doubleValue, ranks.toSeq) }
+      .sortBy(r => (r._1, r._2))(graft.functions.TopKAggregator.ScoreOrder)
+      .take(k)
   }
 }

@@ -419,8 +419,9 @@ object PqIndex {
     * means the probed cells lack survivors — widening (never refine) is
     * the fill knob, exactly the single-path contract. At full probe
     * with ≤ k×refine survivors the ADC cut passes every survivor, so
-    * the result is the exact filtered ranking. Returns (frame, (final
-    * nprobe, rungs)). */
+    * the result is the exact filtered ranking. Returns (the `finish`ed
+    * frame — collected by default, see [[IvfIndex.searchBatchFill]] —
+    * (final nprobe, rungs)). */
   def searchBatchFillIvfPq(index: DataFrame,
       centroids: Array[Array[Float]],
       codebooks: Array[Array[Array[Float]]], queries: DataFrame,
@@ -428,11 +429,12 @@ object PqIndex {
       refine: Int = 4, maxBatch: Int = 8192,
       allowed: Option[DataFrame] = None,
       rawFloor: Option[Double] = None,
-      track: DataFrame => Unit = _ => ()): (DataFrame, (Int, Int)) = {
+      finish: DataFrame => DataFrame = IvfIndex.collectLocal)
+      : (DataFrame, (Int, Int)) = {
     val cds = allowed.fold(index)(m =>
       index.join(m.select(col("id")), Seq("id"), "left_semi"))
     IvfIndex.fillLadder(queries, queryIdCol, qvCol, k, nprobe,
-      centroids.length, maxBatch, track) { (qf, np, small) =>
+      centroids.length, maxBatch, finish) { (qf, np, small) =>
       val cand =
         if (small) searchBatchAdcSlice(cds, centroids, codebooks, qf,
           k * refine, np)

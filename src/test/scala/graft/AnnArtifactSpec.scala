@@ -155,4 +155,34 @@ class AnnArtifactSpec extends SparkTestBase {
     assert(IvfIndex.metaAt(spark, s"$db/_ann").get.codebooks.isDefined)
     engine.clean()
   }
+
+  test("a lost ANN meta under a current watermark is not current: the " +
+      "next serve rebuilds and probes instead of falling back to the " +
+      "empty-store exact ranking") {
+    val (engine, db) = buildStore(20261020L, 24)
+    val n = engine.index.count().toInt
+    val query = "note about topic2"
+    val exact = ranked(engine.recall(query, k = n))
+    engine.recallServe(query, k = 3).collect() // trains the artifact
+    Seq(("ann", MemoEngine.DefaultServePqBytes), ("pq", 1L)).foreach {
+      case (route, pqBytes) =>
+        withClue(s"route $route: ") {
+          engine.recallServe(query, k = 3, pqBytes = pqBytes).collect()
+          assert(engine.lastIvfMode.contains("fresh"), engine.lastIvfMode)
+          // the watermark still names the live version; the meta is gone
+          Files.delete(Paths.get(db, "_ann", "_ivf_centroids"))
+          assert(Files.readString(Paths.get(db, "_ann", "_store_version"))
+            .trim == engine.versions.max.toString)
+          val served = ranked(engine.recallServe(query, k = n,
+            nprobe = MemoEngine.AnnNlist, pqBytes = pqBytes))
+          assert(engine.lastServeRoute.map(_._1).contains(route),
+            engine.lastServeRoute)
+          assert(engine.lastIvfMode.contains("rebuild"), engine.lastIvfMode)
+          assert(IvfIndex.metaAt(spark, s"$db/_ann").isDefined,
+            "the rebuild must write the meta back")
+          assert(served == exact)
+        }
+    }
+    engine.clean()
+  }
 }

@@ -958,104 +958,95 @@ class MemoEngineSpec extends SparkTestBase {
     engine.clean()
   }
 
-  test("batch ladder rung caches: registered per call token, the most " +
-      "recently retired ladder stays pinned for lazy consumption, and a " +
-      "SUPERSEDED call's rungs drain on a later entry — a long-running " +
-      "server pins at most (in-flight + 1) ladders") {
+  /** Nothing a serving door cached outlives the call: no persisted RDD,
+    * no cache-manager entry. */
+  private def assertNothingPinned(door: String): Unit = {
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      s"$door left RDDs persisted: ${spark.sparkContext.getPersistentRDDs}")
+    assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty,
+      s"$door left a cache-manager entry")
+  }
+
+  test("serving doors return local frames and leave nothing pinned: no " +
+      "persisted RDD and no cached plan after any door returns, the " +
+      "widening batch ladder included") {
     import spark.implicits._
-    import org.apache.spark.storage.StorageLevel
     val engine = filteredAnnStore()
     val queries = Seq((0L, "topic1 theme2")).toDF("qid", "qtext")
-    def serveOnce(): Unit =
-      engine.annRecallBatch(queries, "qid", "qtext", k = 5, nprobe = 1,
-        filterExpr = Some("{part: p1}")).collect()
-    serveOnce() // nprobe=1 on p1 widens: >= 2 rungs cached
-    val first = engine.servingCaches.toList.map(_._2)
-    assert(first.size >= 2,
-      s"widening ladder must register its rung caches, got ${first.size}")
-    assert(first.forall(_.storageLevel != StorageLevel.NONE),
-      "rung frames must be cached while the result is live")
-    serveOnce() // call 1 is the most recently retired — still pinned
-    assert(first.forall(_.storageLevel != StorageLevel.NONE),
-      "the most recently retired call's rungs stay pinned until a later " +
-        "call supersedes it (its caller may still be consuming)")
-    val second = engine.servingCaches.toList.map(_._2)
-      .filterNot(d => first.exists(_ eq d))
-    assert(second.nonEmpty,
-      "second call must register its own rungs under its own token")
-    serveOnce() // call 3's entry supersedes call 1 — its rungs drain
-    assert(first.forall(_.storageLevel == StorageLevel.NONE),
-      "a superseded call's rung caches must be unpersisted by a later " +
-        "call's entry")
-    // explicit release: retired ladders drain, frames unpersist
-    // (consuming a released frame recomputes from lineage — correctness
-    // is unaffected)
-    engine.releaseServingCaches()
-    assert(engine.servingCaches.isEmpty)
-    assert(second.forall(_.storageLevel == StorageLevel.NONE))
+    val p1 = Some("{part: p1}")
+    def local(door: String, df: org.apache.spark.sql.DataFrame): Unit = {
+      assertNothingPinned(door)
+      assert(df.queryExecution.optimizedPlan.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+        s"$door did not return a frame over local rows")
+    }
+    // nprobe=1 on p1 widens: the ladder caches >= 2 rungs
+    val ladder = engine.annRecallBatch(queries, "qid", "qtext", k = 5,
+      nprobe = 1, filterExpr = p1)
+    assert(engine.lastBatchWiden.exists(_._2 >= 1),
+      s"the batch ladder must widen, got ${engine.lastBatchWiden}")
+    local("annRecallBatch (widening)", ladder)
+    // the answer reads no cache: consuming it twice gives one answer
+    assert(ladder.collect().toSet == ladder.collect().toSet)
+    local("pqRecallBatch (widening)", engine.pqRecallBatch(queries, "qid",
+      "qtext", k = 5, nprobe = 1, filterExpr = p1))
+    local("recallServeBatch", engine.recallServeBatch(queries, "qid",
+      "qtext", k = 5))
+    local("recallServeBatch (filtered)", engine.recallServeBatch(queries,
+      "qid", "qtext", k = 5, filterExpr = p1, bruteRows = 0L))
+    local("recallServeBatch (brute)", engine.recallServeBatch(queries,
+      "qid", "qtext", k = 5, filterExpr = p1))
+    Seq(None, p1).foreach { f =>
+      local(s"annRecall $f", engine.annRecall("topic1 theme2", k = 5,
+        nprobe = 1, filterExpr = f))
+      local(s"pqRecall $f", engine.pqRecall("topic1 theme2", k = 5,
+        nprobe = 1, filterExpr = f))
+      local(s"recallServe pq $f", engine.recallServe("topic1 theme2",
+        k = 5, filterExpr = f, bruteRows = 0L, pqBytes = 1L))
+      local(s"hybridServe $f", engine.hybridServe("topic1 theme2", k = 5,
+        filterExpr = f, bruteRows = 0L))
+      local(s"hybridRecall(ann) $f", engine.hybridRecall("topic1 theme2",
+        k = 5, filterExpr = f, ann = true, annNprobe = 1))
+    }
+    local("analyzeStats", engine.analyzeStats("{part: p1}", "hot"))
+    engine.hybridServeBatch(queries, "qid", "qtext", k = 5,
+      filterExpr = p1, nprobe = 1, bruteRows = 0L).collect()
+    assertNothingPinned("hybridServeBatch (widening)")
     engine.clean()
   }
 
-  test("concurrent batch serves: a second serving call entering while " +
-      "the first is IN FLIGHT never drains its rung caches — neither " +
-      "call's ladder recomputes") {
+  test("concurrent batch serves: two threads on the filtered batch " +
+      "ladder each equal the sequential baseline and leave nothing " +
+      "pinned") {
     import spark.implicits._
-    import org.apache.spark.storage.StorageLevel
     val engine = filteredAnnStore()
     val queries = Seq((0L, "topic1 theme2")).toDF("qid", "qtext")
+    def serve(): Set[(Long, Double)] =
+      engine.annRecallBatch(queries, "qid", "qtext", k = 5, nprobe = 1,
+          filterExpr = Some("{part: p1}"))
+        .collect().map(r => (r.getLong(1), r.getDouble(2))).toSet
     // sequential baseline for result parity
-    val baseline = engine.annRecallBatch(queries, "qid", "qtext", k = 5,
-        nprobe = 1, filterExpr = Some("{part: p1}"))
-      .collect().map(r => (r.getLong(1), r.getDouble(2))).toSet
-    engine.releaseServingCaches()
-    val ladderOpen = new java.util.concurrent.CountDownLatch(1)
-    val bDone = new java.util.concurrent.CountDownLatch(1)
-    @volatile var aTok = -1L
-    @volatile var aRungsDuringB: List[StorageLevel] = Nil
-    engine.afterServingLadderHook = tok => {
-      // only thread A (the first token to arrive) holds the door open
-      if (aTok == -1L || aTok == tok) {
-        aTok = tok
-        ladderOpen.countDown()
-        bDone.await(60, java.util.concurrent.TimeUnit.SECONDS); ()
-      }
-    }
+    val baseline = serve()
+    assert(engine.lastBatchWiden.exists(_._2 >= 1),
+      s"the baseline ladder must widen, got ${engine.lastBatchWiden}")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     try {
-      val fa = pool.submit(new java.util.concurrent.Callable[Set[(Long, Double)]] {
-        def call() = engine.annRecallBatch(queries, "qid", "qtext",
-            k = 5, nprobe = 1, filterExpr = Some("{part: p1}"))
-          .collect().map(r => (r.getLong(1), r.getDouble(2))).toSet
-      })
-      assert(ladderOpen.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "thread A never reached its ladder hook")
-      val fb = pool.submit(new java.util.concurrent.Callable[Set[(Long, Double)]] {
-        def call() = {
-          val r = engine.annRecallBatch(queries, "qid", "qtext",
-              k = 5, nprobe = 1, filterExpr = Some("{part: p1}"))
-            .collect().map(r => (r.getLong(1), r.getDouble(2))).toSet
-          // B ran begin/end WHILE A's token was active: A's registered
-          // rungs must still be cached (storage-level proof that B's
-          // entry did not drain an in-flight ladder)
-          aRungsDuringB = engine.servingCaches.synchronized {
-            engine.servingCaches.toList.collect {
-              case (t, d) if t == aTok => d.storageLevel } }
-          bDone.countDown()
-          r
+      (0 until 3).foreach { round =>
+        val start = new java.util.concurrent.CyclicBarrier(2)
+        val runs = (0 until 2).map(_ => pool.submit(
+          new java.util.concurrent.Callable[Set[(Long, Double)]] {
+            def call() = { start.await(); serve() }
+          }))
+        runs.zipWithIndex.foreach { case (f, t) =>
+          val got = f.get(120, java.util.concurrent.TimeUnit.SECONDS)
+          assert(got == baseline,
+            s"round $round thread $t diverged: $got vs $baseline")
         }
-      })
-      val rb = fb.get(120, java.util.concurrent.TimeUnit.SECONDS)
-      val ra = fa.get(120, java.util.concurrent.TimeUnit.SECONDS)
-      assert(aRungsDuringB.nonEmpty,
-        "thread A's ladder registered no rungs — vacuous")
-      assert(aRungsDuringB.forall(_ != StorageLevel.NONE),
-        "thread B's entry drained thread A's IN-FLIGHT rung caches")
-      assert(ra == baseline, s"thread A diverged: $ra vs $baseline")
-      assert(rb == baseline, s"thread B diverged: $rb vs $baseline")
+        assertNothingPinned(s"round $round")
+      }
     } finally {
-      engine.afterServingLadderHook = _ => ()
       pool.shutdownNow()
-      engine.releaseServingCaches()
       engine.clean()
     }
   }
