@@ -5,12 +5,16 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The stats rollup's bounded tail (A8, top-N + "other") as ONE aggregate
+/** The stats rollup's bounded tail (A8, top-4 + "other") as ONE aggregate
   * over (value, cnt) rows, one row per distinct value: it keeps the first
-  * N rows in Spark's `orderBy(desc("cnt"), col("value"))` order plus the
-  * sum and the number of the non-null counts — enough for a caller to
-  * derive the "other" row without collecting every distinct value. */
-object StatsTopAggregator {
+  * [[Size]] rows in Spark's `orderBy(desc("cnt"), col("value"))` order
+  * plus the sum and the number of the non-null counts — enough for the
+  * stats door to derive the "other" row without collecting every
+  * distinct value. */
+private[graft] object StatsTopAggregator {
+
+  /** How many values the rollup names before "other". */
+  val Size = 4
 
   /** (top rows in [[Order]], Σ non-null cnt, rows with a non-null cnt). */
   type Top = (Seq[(String, Option[Long])], Long, Long)
@@ -35,20 +39,19 @@ object StatsTopAggregator {
   }
 
   /** The aggregate over a (string value, long cnt) pair of columns. */
-  def column(value: Column, cnt: Column, n: Int): Column =
-    udaf(topN(n), Encoders.tuple(Encoders.STRING, Encoders.LONG))(value, cnt)
+  def column(value: Column, cnt: Column): Column =
+    udaf(top, Encoders.tuple(Encoders.STRING, Encoders.LONG))(value, cnt)
 
-  private def topN(n: Int)
-      : Aggregator[(String, java.lang.Long), Top, Top] =
+  private val top: Aggregator[(String, java.lang.Long), Top, Top] =
     new Aggregator[(String, java.lang.Long), Top, Top] {
       def zero: Top = (Nil, 0L, 0L)
       def reduce(b: Top, a: (String, java.lang.Long)): Top = {
         val c = Option(a._2).map(_.longValue)
-        ((b._1 :+ ((a._1, c))).sorted(Order).take(n),
+        ((b._1 :+ ((a._1, c))).sorted(Order).take(Size),
           b._2 + c.getOrElse(0L), b._3 + c.size)
       }
       def merge(x: Top, y: Top): Top =
-        ((x._1 ++ y._1).sorted(Order).take(n), x._2 + y._2, x._3 + y._3)
+        ((x._1 ++ y._1).sorted(Order).take(Size), x._2 + y._2, x._3 + y._3)
       def finish(b: Top): Top = b
       def bufferEncoder: Encoder[Top] = Encoders.product[Top]
       def outputEncoder: Encoder[Top] = Encoders.product[Top]

@@ -1423,8 +1423,14 @@ class MemoEngine(spark: SparkSession, basePath: String,
       nprobe: Int, filterExpr: Option[String], floor: Option[Double],
       adaptive: Boolean): DataFrame =
     probeHits(family, query, k, nprobe, filterExpr, floor, adaptive)
-      .fold(recall(query, k, filterExpr))(
-        withBodies(_, filterExpr.fold(records)(recordsForFilter)))
+      .fold(recall(query, k, filterExpr)) { hits =>
+        import org.apache.spark.sql.types._
+        withBodies(hits.sorted(ScoreOrder),
+          filterExpr.fold(records)(recordsForFilter),
+          StructType(Seq(StructField("id", LongType, nullable = false),
+            StructField("score", DoubleType, nullable = false),
+            StructField("body", StringType))))(Row(_, _, _))
+      }
 
   /** A ranked frame's (id, score) rows, collected. */
   private def hitsOf(ranked: DataFrame): Seq[(Long, Double)] =
@@ -1446,18 +1452,18 @@ class MemoEngine(spark: SparkSession, basePath: String,
         .collect().toSeq.groupMap(_.getLong(0))(_.getString(1))
     }
 
-  /** (id, score, body) of `hits` in (score desc, id) order over local
-    * rows; a hit without a record in `from` drops, as an inner join
-    * would drop it. */
-  private def withBodies(hits: Seq[(Long, Double)],
-      from: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types._
+  /** A single-query door's answer over local rows: `hits` are the
+    * answer's ids in answer order, each with its values, and `row`
+    * builds an answer row from an id, its values and its body (bodies
+    * from `from`, [[bodiesOf]]). A hit without a record in `from` drops,
+    * as an inner join would drop it. */
+  private def withBodies[A](hits: Seq[(Long, A)], from: DataFrame,
+      schema: org.apache.spark.sql.types.StructType)(
+      row: (Long, A, String) => Row): DataFrame = {
     val bodies = bodiesOf(hits.map(_._1), from)
-    localFrame(hits.sorted(ScoreOrder).flatMap { case (id, s) =>
-      bodies.getOrElse(id, Nil).map(b => Row(id, s, b))
-    }, StructType(Seq(StructField("id", LongType, nullable = false),
-      StructField("score", DoubleType, nullable = false),
-      StructField("body", StringType))))
+    graft.ops.IvfIndex.localFrame(spark, hits.flatMap { case (id, a) =>
+      bodies.getOrElse(id, Nil).map(row(id, a, _))
+    }, schema)
   }
 
   /** Test seam: which arm the last [[serveRoute]] decision took
@@ -1577,7 +1583,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * arms are the batch probe body (exact-fill ladder included) with the
     * floor re-applied, so the route choice never changes the result set
     * beyond ANN approximation. Returns (query_id, id, score, body),
-    * top-k SET per query, unordered. */
+    * top-k SET per query, unordered, over local rows: the answer is
+    * collected on every route, so the driver holds up to
+    * k × |queries| rows — slice a very large query set into batches. */
   def recallServeBatch(queries: DataFrame, queryIdCol: String,
       queryTextCol: String, k: Int = MemoOps.DefaultK,
       filterExpr: Option[String] = None, nprobe: Int = 4,
@@ -1639,7 +1647,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * an under-filled k means the probed cells genuinely lack rows and
     * widening is a quality (nprobe) choice, not a correctness one.
     * Returns (query_id, id, score, body), top-k SET per query,
-    * unordered. An empty/uncommitted store returns no rows. */
+    * unordered, over local rows: the driver holds up to k × |queries|
+    * rows, so slice a very large query set into batches. An
+    * empty/uncommitted store returns no rows. */
   def annRecallBatch(queries: DataFrame, queryIdCol: String,
       queryTextCol: String, k: Int = MemoOps.DefaultK, nprobe: Int = 4,
       filterExpr: Option[String] = None,
@@ -1654,7 +1664,8 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * survivors per query touch raw vectors for the exact re-rank
     * ([[graft.ops.PqIndex.searchBatchIvfPq]]). The filter mask applies
     * BEFORE the ADC cut, so the cut can never starve the fill. Returns
-    * (query_id, id, score, body), top-k SET per query, unordered.
+    * (query_id, id, score, body), top-k SET per query, unordered, over
+    * local rows ([[annRecallBatch]]'s driver-memory bound).
     * Empty/uncommitted store → no rows. */
   def pqRecallBatch(queries: DataFrame, queryIdCol: String,
       queryTextCol: String, k: Int = MemoOps.DefaultK, nprobe: Int = 4,
@@ -1665,16 +1676,17 @@ class MemoEngine(spark: SparkSession, basePath: String,
       withBody = true)
 
   /** The ONE batch probe body both families share. The filtered arm's
-    * mask is CACHED for the ladder and released before return. Queries
-    * the first probe under-fills re-run at doubled nprobe (the kernels'
-    * per-query-id fill ladder), so every query returns min(k, its
-    * matching survivors) rows while filled queries keep their one-pass
-    * cost; the start width is [[startProbe]]'s (≤ k survivors jump every
-    * query to the full probe), and an empty mask returns no rows with
-    * zero scans. The ladder's answer, body join included, is collected
-    * in one plan while its rungs are still cached; the ladder then
-    * releases them, so nothing stays pinned past the call. `withBody =
-    * false` returns (query_id, id, score) for the hybrid fusion tail. */
+    * mask is a copy private to the call ([[withCallCopy]]), released
+    * before return. Queries the first probe under-fills re-run at
+    * doubled nprobe (the kernels' per-query-id fill ladder), so every
+    * query returns min(k, its matching survivors) rows while filled
+    * queries keep their one-pass cost; the start width is
+    * [[startProbe]]'s (≤ k survivors jump every query to the full
+    * probe), and an empty mask returns no rows with zero scans. The
+    * ladder's answer, body join included, is collected in one plan
+    * while its rungs are still cached; the ladder then releases them,
+    * so nothing stays pinned past the call. `withBody = false` returns
+    * (query_id, id, score) for the hybrid fusion tail. */
   private def probeRecallBatch(family: AnnFamily, queries: DataFrame,
       queryIdCol: String, queryTextCol: String, k: Int, nprobe: Int,
       filterExpr: Option[String], floor: Option[Double], adaptive: Boolean,
@@ -1700,8 +1712,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
               floor)
             if (withBody) answer(hits) else ranked(hits)
           case Some(f) =>
-            val mask = annMask(f).cache()
-            try {
+            withCallCopy(annMask(f)) { mask =>
               val survivors = mask.count()
               if (survivors == 0) {
                 lastBatchWiden = Some((0, 0))
@@ -1715,9 +1726,28 @@ class MemoEngine(spark: SparkSession, basePath: String,
                   Some(if (jumped) (widen._1, widen._2 + 1) else widen)
                 out
               }
-            } finally mask.unpersist()
+            }
         }
       case None => emptyFrame(outSchema)
+    }
+  }
+
+  /** `use` over `df` materialized into blocks private to this call: a
+    * lazy local checkpoint, filled by the first action `use` runs (one
+    * job, as a cache() would take) and released once `use` returns.
+    * Not cache(): Spark keeps ONE cache entry for identical plans, so
+    * two concurrent calls over the same filter would share the mask and
+    * every rung cached over it, and the call that finished first would
+    * uncache them under the other. A checkpoint is a fresh RDD per
+    * call, so the mask and the plans over it are this call's alone.
+    * `use` must return nothing that still reads the copy. */
+  private def withCallCopy[T](df: DataFrame)(use: DataFrame => T): T = {
+    val copy = df.localCheckpoint(eager = false)
+    try use(copy)
+    finally copy.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+      case _ =>
     }
   }
 
@@ -2692,15 +2722,14 @@ class MemoEngine(spark: SparkSession, basePath: String,
         .map { case (id, i) => (id, i + 1) }
     }
     val fused = graft.ops.Lexical.rrfFuseLocal(lists.map(_._2), k)
-    val bodies = bodiesOf(fused.map(_._1), records)
-    localFrame(fused.flatMap { case (id, score, ranks) =>
-      bodies.getOrElse(id, Nil).map(b =>
-        Row.fromSeq((id +: score +: ranks.map(_.map(Int.box).orNull)) :+ b))
-    }, StructType(
-      Seq(StructField("id", LongType, nullable = false),
-        StructField("rrf_score", DoubleType, nullable = false)) ++
-      lists.map { case (name, _) => StructField(s"r_$name", IntegerType) } :+
-      StructField("body", StringType)))
+    withBodies(fused.map { case (id, score, ranks) => (id, (score, ranks)) },
+      records, StructType(
+        Seq(StructField("id", LongType, nullable = false),
+          StructField("rrf_score", DoubleType, nullable = false)) ++
+        lists.map { case (name, _) => StructField(s"r_$name", IntegerType) } :+
+        StructField("body", StringType))) { case (id, (score, ranks), b) =>
+      Row.fromSeq((id +: score +: ranks.map(_.map(Int.box).orNull)) :+ b)
+    }
   }
 
   /** The BATCH twin of [[hybridRecall]] — both legs batch, one probe
@@ -2920,13 +2949,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
   }
 
   private def emptyFrame(schema: org.apache.spark.sql.types.StructType)
-      : DataFrame = localFrame(Nil, schema)
-
-  /** Driver-side rows as a DataFrame over a local relation: what a
-    * serving door returns once its bounded tail ran on the driver. */
-  private def localFrame(rows: Seq[Row],
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.createDataFrame(rows.asJava, schema)
+      : DataFrame = graft.ops.IvfIndex.localFrame(spark, Nil, schema)
 
   /** [[records]] with provably-unmatchable segments dropped for
     * `filterExpr` — same rows out of every filtered read (the
@@ -3066,9 +3089,10 @@ class MemoEngine(spark: SparkSession, basePath: String,
       if (tail.getLong(2) > matched.size)
         Seq(("other", Some(tail.getLong(1) - matched.sum)))
       else Nil
-    localFrame((top ++ other).sorted(Order).map { case (v, c) =>
-      Row(v, c.map(Long.box).orNull)
-    }, counts.schema)
+    graft.ops.IvfIndex.localFrame(spark,
+      (top ++ other).sorted(Order).map { case (v, c) =>
+        Row(v, c.map(Long.box).orNull)
+      }, counts.schema)
   }
 
   /** [[analyzeStats]]'s collected plan over the (value, cnt) counts: ONE
@@ -3077,7 +3101,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * row per distinct value. */
   private[graft] def statsTail(counts: DataFrame): DataFrame =
     counts.agg(graft.functions.StatsTopAggregator
-      .column(col("value"), col("cnt"), 4).as("top"))
+      .column(col("value"), col("cnt")).as("top"))
 
   /** Exact PERCENTILES of `key`'s numeric values under `filterExpr` —
     * the maintained-quantiles ask on the reference's numeric rollup

@@ -1126,7 +1126,9 @@ object IvfIndex {
     * cached — its fill-count job materializes it — and `finish` consumes
     * the union while the rungs are cached; the ladder releases them
     * before it returns. The default `finish` collects the union into a
-    * frame over local rows (≤ k rows per query by construction).
+    * frame over local rows (≤ k rows per query by construction), so the
+    * driver holds up to k × |queries| rows: slice a very large query set
+    * into batches, or pass a `finish` that writes the union out.
     *
     * Returns (finished frame, (final nprobe, widening rungs)) — the
     * probe telemetry the serving layer's seams and oracle builds assert
@@ -1219,12 +1221,19 @@ object IvfIndex {
     } finally cached.foreach(_.unpersist())
   }
 
-  /** `df` collected into a frame over local rows (a `LocalRelation`):
+  /** Driver-side rows as a DataFrame over a local relation (a
+    * `LocalRelation`): what a serving door returns once its bounded
+    * tail ran on the driver. */
+  private[graft] def localFrame(spark: org.apache.spark.sql.SparkSession,
+      rows: Seq[org.apache.spark.sql.Row],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** `df` collected into a frame over local rows ([[localFrame]]):
     * [[fillLadder]]'s default `finish`, and how the engine's batch doors
     * return their bounded answers. */
   private[graft] def collectLocal(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(df.collect(): _*), df.schema)
+    localFrame(df.sparkSession, df.collect().toSeq, df.schema)
 
   /** One bounded slice of [[searchBatch]] (queries already projected to
     * (query_id, qv)). */

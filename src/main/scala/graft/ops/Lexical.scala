@@ -1009,6 +1009,10 @@ object Lexical {
       outId = "doc_id")
   }
 
+  /** The fusion constant `c` of every reciprocal-rank fusion's
+    * `1/(c + rank)`: 60, the value Cormack et al. fix. */
+  private val RrfC = 60
+
   /** [[rrfFuse]] per QUERY: inputs are (query_id, id, rank) frames,
     * ranks 1-based and dense WITHIN each (query, list); fusion and the
     * floor-8 DECIMAL determinism are identical, grouped on
@@ -1016,15 +1020,14 @@ object Lexical {
     * query's fused candidate set is ≤ Σ per-list k rows — the window
     * partitions never see the corpus). Output: (query_id, id,
     * rrf_score, r_1, …, r_n), top-k per query. */
-  def rrfFuseBatch(lists: Seq[(String, DataFrame)], k: Int,
-      c: Int = 60): DataFrame = {
+  def rrfFuseBatch(lists: Seq[(String, DataFrame)], k: Int): DataFrame = {
     require(lists.nonEmpty, "rrfFuseBatch needs at least one ranked list")
     val tagged = lists.map { case (name, df) =>
       df.select(col("query_id").cast("long").as("query_id"), col("id"),
         col("rank").cast("int").as("rank"), lit(name).as("src"))
     }.reduce(_ unionByName _)
     val contrib = (floor(
-      lit(1.0) / (lit(c.toDouble) + col("rank").cast("double"))
+      lit(1.0) / (lit(RrfC.toDouble) + col("rank").cast("double"))
         * 100000000.0 + 0.5) / 100000000.0).cast("decimal(18,8)")
     val rankCols = lists.map { case (name, _) =>
       min(when(col("src") === name, col("rank"))).as(s"r_$name")
@@ -1053,15 +1056,14 @@ object Lexical {
     * of Spark's union/aggregation order and replayable bit-exactly by
     * the oracle. Output: (id, rrf_score, r_1, …, r_n) with each list's
     * rank carried through (null where a list missed the id). */
-  def rrfFuse(lists: Seq[(String, DataFrame)], k: Int,
-      c: Int = 60): DataFrame = {
+  def rrfFuse(lists: Seq[(String, DataFrame)], k: Int): DataFrame = {
     require(lists.nonEmpty, "rrfFuse needs at least one ranked list")
     val tagged = lists.map { case (name, df) =>
       df.select(col("id"), col("rank").cast("int").as("rank"),
         lit(name).as("src"))
     }.reduce(_ unionByName _)
     val contrib = (floor(
-      lit(1.0) / (lit(c.toDouble) + col("rank").cast("double"))
+      lit(1.0) / (lit(RrfC.toDouble) + col("rank").cast("double"))
         * 100000000.0 + 0.5) / 100000000.0).cast("decimal(18,8)")
     val rankCols = lists.map { case (name, _) =>
       min(when(col("src") === name, col("rank"))).as(s"r_$name")
@@ -1080,12 +1082,12 @@ object Lexical {
     * read back as a double — and the same (rrf_score desc, id) top-k
     * cut. Returns (id, rrf_score, each list's rank or None) rows in that
     * order. */
-  def rrfFuseLocal(lists: Seq[Seq[(Long, Int)]], k: Int,
-      c: Int = 60): Seq[(Long, Double, Seq[Option[Int]])] = {
+  def rrfFuseLocal(lists: Seq[Seq[(Long, Int)]], k: Int)
+      : Seq[(Long, Double, Seq[Option[Int]])] = {
     require(lists.nonEmpty, "rrfFuseLocal needs at least one ranked list")
     def contrib(rank: Int): java.math.BigDecimal = {
       val d = org.apache.spark.sql.types.Decimal(
-        math.floor(1.0 / (c.toDouble + rank.toDouble) * 100000000.0 + 0.5)
+        math.floor(1.0 / (RrfC.toDouble + rank.toDouble) * 100000000.0 + 0.5)
           .toLong / 100000000.0)
       d.changePrecision(18, 8)
       d.toJavaBigDecimal
