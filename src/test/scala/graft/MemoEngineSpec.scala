@@ -1051,6 +1051,33 @@ class MemoEngineSpec extends SparkTestBase {
     }
   }
 
+  test("batch ladder mask is private to the call: another caller's " +
+      "cached twin of the mask plan survives a filtered batch serve") {
+    import spark.implicits._
+    import org.apache.spark.storage.StorageLevel
+    val engine = filteredAnnStore()
+    val queries = Seq((0L, "topic1 theme2")).toDF("qid", "qtext")
+    // Spark keeps ONE cache entry per plan: a door that cache()d this
+    // plan and unpersisted it on return would uncache the twin too —
+    // exactly what a concurrent call over the same filter would suffer
+    val twin = engine.annMask("{part: p1}").cache()
+    try {
+      twin.count()
+      val got = engine.annRecallBatch(queries, "qid", "qtext", k = 5,
+          nprobe = 1, filterExpr = Some("{part: p1}"))
+        .collect().map(r => (r.getLong(1), r.getDouble(2))).toSet
+      assert(engine.lastBatchWiden.exists(_._2 >= 1),
+        s"the ladder must widen, got ${engine.lastBatchWiden}")
+      assert(got.nonEmpty)
+      assert(twin.storageLevel != StorageLevel.NONE,
+        "the filtered batch serve uncached another caller's twin plan")
+    } finally {
+      twin.unpersist()
+      engine.clean()
+    }
+    assertNothingPinned("after the twin's release")
+  }
+
   test("pqRecallBatch: compressed batch serving with per-query parity, " +
       "filter mask, and the exact-fill ladder") {
     val engine = filteredAnnStore()
