@@ -843,7 +843,8 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * skipped, nothing committed) never counts toward the cadence and
     * never pays maintenance. Skipped/empty batches don't advance the
     * counter either — "every n-th" means n-th batch that actually
-    * landed rows. Measured in StreamProfile's `maintainevery` leg. */
+    * landed rows. The amortization is measured in BENCH_NOTES r19
+    * ("streamSink(maintainEvery): amortized in-stream maintenance"). */
   def streamSink(lineage: String, maintainEvery: Int)
       : (DataFrame, Long) => Unit = {
     require(maintainEvery >= 1,
@@ -1086,7 +1087,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * codes — one trained coarse quantizer plus PQ codebooks, and one
     * `partitionBy(cell_id)` parquet of (id, embedding, code) that both
     * the IVF and the IVF-PQ routes probe. */
-  private[graft] def annDir: String = base.resolve("_ann").toString
+  private def annDir: String = base.resolve("_ann").toString
 
   /** [[ensureLexical]]'s version-watermark idiom generalized to the
     * vector family: keep the persisted ANN artifact ([[annDir]]) in
@@ -1977,8 +1978,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * FIXED job count (classification + per-family tombstone/journal
     * writes) plus O(touched); the rebuild's is O(corpus) re-derivation.
     * Below a corpus size the fixed jobs dominate and the rebuild is
-    * genuinely cheaper — measured crossover in BENCH_NOTES (MaintProfile
-    * dupfold, r19) — so the route takes the fold only when
+    * genuinely cheaper — measured crossover in BENCH_NOTES r19/r20;
+    * RetractRouteFloorSpec pins that a fold's job count does not grow
+    * with the corpus — so the route takes the fold only when
     * `corpusIds >= retractRouteMinRows + touched * 4` (both sides priced
     * from driver metadata already in the memoized diff: zero extra
     * jobs). A zero-touch window (layout-only rewrite, metadata retags)
@@ -3530,7 +3532,17 @@ class MemoEngine(spark: SparkSession, basePath: String,
       measures: Seq[(String, String)] = Seq.empty,
       aggOf: Map[String, String] = Map.empty,
       where: Option[String] = None,
-      distinctCap: Option[Int] = None): DataFrame = {
+      distinctCap: Option[Int] = None): DataFrame =
+    viewStateArm(name, groupKey, measures, aggOf, where, distinctCap)._1
+
+  /** [[viewState]] plus the arm this call took — "fresh" | "incremental"
+    * | "incremental_rescan" | "rebuild" ("empty" on an empty store).
+    * Returned, not read back from [[lastViewRefresh]]: a concurrent view
+    * serve or refresh on the same engine writes that var too. */
+  private def viewStateArm(name: String, groupKey: String,
+      measures: Seq[(String, String)], aggOf: Map[String, String],
+      where: Option[String],
+      distinctCap: Option[Int]): (DataFrame, String) = {
     require(name.matches("[A-Za-z0-9][A-Za-z0-9_\\-]*"),
       s"view name must be [A-Za-z0-9_-]+, got '$name'")
     // PER-VIEW distinct cap: a dashboard mixing a coarse distinct view
@@ -3621,18 +3633,18 @@ class MemoEngine(spark: SparkSession, basePath: String,
         .parquet(paths: _*))
     }
     currentVersion match {
-      case None => asServed(spark.createDataFrame(
+      case None => (asServed(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        viewSchema(measures)))
+        viewSchema(measures))), "empty")
       case Some(_) =>
         readMeta match {
           case Some((v, h, st)) if currentVersion.contains(v) && h == spec =>
-            lastViewRefresh = Some(("fresh", Nil)); serve(st)
+            lastViewRefresh = Some(("fresh", Nil)); (serve(st), "fresh")
           case _ => ArtifactMeta.withBuildLock(spark, dirS) {
             val live = currentVersion.get // re-read under the lock
             readMeta match {
               case Some((v, h, st)) if v == live && h == spec =>
-                lastViewRefresh = Some(("fresh", Nil)); serve(st)
+                lastViewRefresh = Some(("fresh", Nil)); (serve(st), "fresh")
               case recorded =>
                 beforeViewBuildHook()
                 refreshView(name, groupKey, measures, aggOf, where, dCap,
@@ -3646,7 +3658,8 @@ class MemoEngine(spark: SparkSession, basePath: String,
   /** The locked refresh arm of [[viewState]]: merge-or-recompute, write
     * the new state under a fresh unique dir, loud negative-count check,
     * THEN advance the meta (a crash leaves the old state live), then
-    * sweep state dirs no longer referenced.
+    * sweep state dirs no longer referenced. Returns the served frame and
+    * the refresh mode.
     *
     * THE STATE IS SHARDED ON group_key's HASH CELL ([[viewCellCol]]):
     * each state's manifest maps cell intervals to shard parquet dirs,
@@ -3671,7 +3684,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
       measures: Seq[(String, String)], aggOf: Map[String, String],
       where: Option[String], dCap: Int, spec: String, live: Long,
       recorded: Option[(Long, String, String)],
-      serve: String => DataFrame): DataFrame = {
+      serve: String => DataFrame): (DataFrame, String) = {
     val dir = viewDir(name)
     val aggKind = measures.map { case (n, _) => n -> aggOf.getOrElse(n, "sum") }
     // the merge needs the reserve columns; the RETURNED frame never does
@@ -4086,7 +4099,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
       sweepViewStates(dir, Seq(stateDir) ++ recorded.map(_._3))
       lastViewRefresh = Some((mode, scanned))
       lastViewPublish = Some((newShards.size, carriedShards.size))
-      serve(stateDir)
+      (serve(stateDir), mode)
     } finally cached.foreach(_.unpersist())
   }
 
@@ -4390,8 +4403,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
           case _ => None
         })
       name -> decoded.map { case (gk, ms, aggs, where, cap) =>
-        viewState(name, gk, ms, aggs, where, cap)
-        lastViewRefresh.map(_._1).getOrElse("unknown")
+        viewStateArm(name, gk, ms, aggs, where, cap)._2
       }.getOrElse("skipped")
     }.toMap
 
@@ -5536,10 +5548,13 @@ class MemoEngine(spark: SparkSession, basePath: String,
 }
 
 object MemoEngine {
-  /** Profiling seam for the streaming commit path (IngestProfile — guide
-    * §1, measure before touching): when set, called with (phase, millis)
-    * per timed phase of [[MemoEngine.commitAppend]]/streamIngest. Null in
-    * production: the wrapper is a straight pass-through. */
+  /** Timing seam for the append commit path: when set, called with
+    * (phase, millis) per timed phase of [[MemoEngine.commitAppend]]
+    * (`idrange_stats`, `records_write`, `index_write`,
+    * `manifests_finalize`) and of streamIngest (`mint_shape`). The legs
+    * of one commit report from pool threads, so a hook must be
+    * thread-safe. Process-global; CommitPhaseHookSpec pins the phase
+    * list. Null in production: the wrapper is a straight pass-through. */
   private[graft] var commitPhaseHook: (String, Double) => Unit = null
 
   /** Process-wide scan-plan memo (see the instance [[MemoEngine.scanOf]]
@@ -5629,7 +5644,7 @@ object MemoEngine {
     * the retract fold's fixed job count (classification + per-family
     * tombstone/journal writes), which below this scale costs more wall
     * time than the O(corpus) rebuild it avoids. Calibrated from the
-    * MaintProfile dupfold table (BENCH_NOTES r19): after the r19 trims
+    * retract-walk tables in BENCH_NOTES r19 and r20: after the r19 trims
     * (shared classified diff, no per-family probe jobs, the fold's
     * edge set materialized once) a 10-delete fold costs ~3.7-4.4 s FLAT
     * across 9k→90k docs on a 32-thread local box while the rebuild
@@ -5637,8 +5652,10 @@ object MemoEngine {
     * floor sits at 2^13. At cluster scale the fold only gets relatively
     * cheaper (rebuild cost grows with data, the fold's job count
     * doesn't), so a floor erring low degrades gracefully — and an
-    * 8k-doc rebuild is trivial everywhere. Test seam: engines set
-    * `retractRouteMinRows = 0` to force the fold on tiny fixtures. */
+    * 8k-doc rebuild is trivial everywhere. RetractRouteFloorSpec pins
+    * the premise per family: a fold's job count does not grow with the
+    * corpus. Test seam: engines set `retractRouteMinRows = 0` to force
+    * the fold on tiny fixtures. */
   val DefaultRetractRouteMinRows = 8192L
 
   /** The index segments' at-rest schema — needed to read a pruned

@@ -49,7 +49,7 @@ object StreamBench {
     * harness cost, not transform/state/commit cost — including them
     * (cleanup file count grows with batches × partitions) would bias
     * events/sec downward by a run-dependent amount. */
-  private[streaming] def feedSeconds(input: MemoryStream[BenchEvent],
+  private def feedSeconds(input: MemoryStream[BenchEvent],
       q: org.apache.spark.sql.streaming.StreamingQuery,
       events: IndexedSeq[BenchEvent], nBatches: Int): Double = {
     val per = math.max(1, events.length / math.max(1, nBatches))
@@ -67,14 +67,14 @@ object StreamBench {
     * pays a per-micro-batch store commit (×4 stores for a stream-stream
     * join), so at ~12k-event micro-batches the commit count — not row
     * work — dominates at the session default of 32. Measured
-    * (StreamProfile, 100k events, 8 batches, this box): s93 summed
-    * state-commit ms/batch 109225 (32 parts) → 27632 (16) → 4159 (8) →
-    * 1465 (4); eps 853 → 1397 → 5068 → 6334. 8 is the knee where
-    * per-partition work still parallelizes but commit overhead stops
-    * dominating — the production guidance for state-heavy streams on
-    * small-to-medium per-batch volumes (at 100 TB ingest the same
-    * sizing argument runs per-volume: partitions ∝ events/batch, not
-    * cluster cores). */
+    * (BENCH_NOTES "Round 10: s93 settled", 100k events, 8 batches,
+    * 32 cpus): s93 summed state-commit ms/batch 109225 (32 parts) →
+    * 27632 (16) → 4159 (8) → 1465 (4); eps 853 → 1397 → 5068 → 6334.
+    * 8 is the knee where per-partition work still parallelizes but
+    * commit overhead stops dominating — the production guidance for
+    * state-heavy streams on small-to-medium per-batch volumes (at 100 TB
+    * ingest the same sizing argument runs per-volume: partitions ∝
+    * events/batch, not cluster cores). */
   val DefaultStateParts = 8
 
   /** Wall-clock seconds to stream `events` through `f` in `nBatches`
@@ -278,7 +278,7 @@ object StreamBench {
   /** Best-effort recursive delete of a throwaway directory: per-file
     * failures are ignored individually, and traversal failures must not
     * fail a measurement that already completed. */
-  private[streaming] def deleteTree(root: java.nio.file.Path): Unit =
+  private def deleteTree(root: java.nio.file.Path): Unit =
     try {
       val walk = java.nio.file.Files.walk(root)
       try {
