@@ -954,6 +954,121 @@ class MemoEngine(spark: SparkSession, basePath: String,
   private def lexDir: String = base.resolve("_lexical").toString
   private val LexVersionFile = "_store_version"
 
+  /** Test seam: fires inside [[ensureLexical]]'s locked catch-up arm,
+    * before any artifact work — lets a spec interleave a foreign store
+    * commit deterministically into the window (pinning that the catch-up
+    * is a function of its CAPTURED version, not the live view). Noop in
+    * production. */
+  private[graft] var beforeLexicalBuildHook: () => Unit = () => ()
+
+  /** One maintained artifact family as [[ensureArtifact]] walks it:
+    * its dir, the chain `kind` it follows, the `last*Mode` test seam
+    * every arm step is mirrored into, and its operations —
+    * `appendSeg` catches up one new segment (path, committing
+    * version), `retract(v0, v)` folds a v0→v patch O(touched) and
+    * answers whether it did, `rebuild(v)` builds from scratch at the
+    * captured version, `serve` loads the current artifact (None = not
+    * servable). `beforeLocked` runs under the build lock before any
+    * catch-up. */
+  private final class ArtifactFamily[A](val dir: String, val kind: String,
+      val seam: Option[String] => Unit,
+      val appendSeg: (String, Long) => Unit,
+      val retract: (Long, Long) => Boolean,
+      val rebuild: Long => Option[A], val serve: () => Option[A],
+      val beforeLocked: () => Unit = () => ())
+
+  /** The version-watermark maintenance walk every engine-maintained
+    * artifact family shares (lexical postings, the ANN artifact, minhash
+    * signatures, the dup-group labeling). Fast path: the recorded
+    * watermark equals the live version → serve lock-free, touching
+    * nothing. Stale path, under the artifact's build lock
+    * (double-checked): if the live `kind` manifest EXTENDS the recorded
+    * version's and every new segment path parses to a version
+    * (vacuumed/rewritten chains fall through), catch up O(new segments)
+    * via `appendSeg`; otherwise — or if an append trips on a
+    * torn/missing artifact (`IllegalStateException`) — try the family's
+    * `retract` fold from its watermark, and only when that declines
+    * `rebuild` from THE CAPTURED VERSION's segments, never the live
+    * view: a concurrent commit during the rebuild would otherwise land
+    * docs in the artifact that the recorded watermark below says are NOT
+    * there yet, and the next catch-up would re-append them (duplicate
+    * rows, the disjoint-id contract violated). A rebuild that produced
+    * an artifact sweeps the [[RetractJournal]]; one that produced
+    * nothing (empty corpus) leaves it, so a later fold can never replay
+    * against a half-folded artifact. The watermark advances only when
+    * the family has something to serve (`out.isDefined`), so an empty
+    * corpus re-evaluates next call instead of caching absence. A
+    * watermark naming the live version is trusted only while `serve()`
+    * answers: an artifact whose meta was lost or cannot be read is not
+    * current, so its watermark is dropped and the family rebuilds.
+    *
+    * Returns the served artifact and the arm this call took — "fresh" |
+    * "append" | "retract" | "rebuild" — held per call, so a [[maintain]]
+    * leg reports its own walk while other legs and callers run; each
+    * step is also mirrored into the family's shared seam. */
+  private def ensureArtifact[A](f: ArtifactFamily[A])
+      : (Option[A], String) = {
+    var arm = "fresh"
+    def step(m: String): Unit = { arm = m; f.seam(Some(m)) }
+    step(arm)
+    val out = currentVersion.flatMap { v =>
+      def recorded = ArtifactMeta.read(spark, f.dir, LexVersionFile)
+        .flatMap(_.toLongOption)
+      def current: Option[A] = if (recorded.contains(v)) f.serve() else None
+      current.orElse(ArtifactMeta.withBuildLock(spark, f.dir) {
+        current.orElse { // double-checked under the lock
+          if (recorded.contains(v))
+            ArtifactMeta.delete(spark, f.dir, LexVersionFile)
+          f.beforeLocked()
+          val segVersion = ("^.*/v(\\d+)/" + f.kind + "$").r
+          // each delta segment is (path, the store version that committed
+          // it) — ONE parse, validated and extracted together, so the
+          // gate and the batchId a family derives can never disagree
+          val delta = recorded.flatMap { v0 =>
+            val cur = segments(v, f.kind)
+            val old = segments(v0, f.kind)
+            val extra = cur.drop(old.size).map {
+              case seg @ segVersion(ver) => Some((seg, ver.toLong))
+              case _ => None
+            }
+            if (Files.exists(versionDir(v0)) && cur.startsWith(old) &&
+                extra.forall(_.isDefined))
+              Some(extra.flatten)
+            else None
+          }
+          def retractOrRebuild(): Option[A] =
+            if (familyWatermark(f.dir).exists(f.retract(_, v))) {
+              step("retract")
+              f.serve()
+            } else {
+              step("rebuild")
+              val built = f.rebuild(v)
+              if (built.isDefined)
+                ArtifactMeta.delete(spark, f.dir, RetractJournal)
+              built
+            }
+          val out = delta match {
+            case Some(extra) =>
+              try {
+                extra.foreach { case (seg, ver) =>
+                  step("append"); f.appendSeg(seg, ver) }
+                f.serve()
+              } catch { case _: IllegalStateException => retractOrRebuild() }
+            case None => retractOrRebuild()
+          }
+          if (out.isDefined)
+            ArtifactMeta.write(spark, f.dir, LexVersionFile, v.toString)
+          out
+        }
+      })
+    }
+    (out, arm)
+  }
+
+  private def bodyCorpus(paths: Seq[String]): DataFrame =
+    readSegments("records", paths)
+      .filter(!isBlank(col("body"))).select(col("id"), col("body"))
+
   /** Bring the postings artifact to the live store version — the
     * maintenance that makes [[hybridRecall]] O(probe) instead of two
     * corpus scans per call. Pull-based and exactly-once:
@@ -966,8 +1081,13 @@ class MemoEngine(spark: SparkSession, basePath: String,
     *    version under the `storev` lineage — O(new segments), and a
     *    crash-window replay repairs in place (the journal tag matches);
     *  - BEHIND on a rewrite (overwrite/reindex/import compacted the
-    *    chain, or the old version was vacuumed): full rebuild, same as
-    *    the first call.
+    *    chain, or the old version was vacuumed): a pure-delete/add
+    *    patch RETRACTS ([[familyRetract]]) — dead docs tombstone
+    *    (negative df deltas retreat the termstats, probes anti-join the
+    *    tombstones) and added docs append, O(touched) vs re-tokenizing
+    *    the corpus; BM25 keeps the Lucene deleted-docs convention
+    *    (idf/N/avgdl retreat exactly by the deleted docs' own stats).
+    *    Anything else rebuilds, same as the first call.
     *
     * Maintenance is charged to the reader that needs the artifact (the
     * streamAppend-rides-the-commit idiom would tax every CLI save for an
@@ -975,113 +1095,24 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * catch-up exactly-once regardless of when it runs. Corpus = records
     * with non-blank bodies, per segment — the same corpus
     * [[graft.ops.Lexical.scoreBm25]] sees, so the two hybrid paths rank
-    * identically (LexicalSpec's bit-exactness contract). */
-  /** Test seam: fires inside [[ensureLexical]]'s locked catch-up arm,
-    * before any artifact work — lets a spec interleave a foreign store
-    * commit deterministically into the window (pinning that the catch-up
-    * is a function of its CAPTURED version, not the live view). Noop in
-    * production. */
-  private[graft] var beforeLexicalBuildHook: () => Unit = () => ()
-
-  /** The version-watermark maintenance skeleton every engine-maintained
-    * artifact family shares (lexical postings, the ANN artifact, minhash
-    * signatures). Fast path: the recorded watermark equals the live
-    * version → serve lock-free, touching nothing. Stale path, under the
-    * artifact's build lock (double-checked): if the live `kind` manifest
-    * EXTENDS the recorded version's and every new segment path parses to
-    * a version (vacuumed/rewritten chains fall through to a rebuild),
-    * catch up O(new segments) via `appendSeg`; otherwise — or if an
-    * append trips on a torn/missing artifact (`IllegalStateException`) —
-    * `rebuild` from THE CAPTURED VERSION's segments, never the live
-    * view: a concurrent commit during the rebuild would otherwise land
-    * docs in the artifact that the recorded watermark below says are NOT
-    * there yet, and the next catch-up would re-append them (duplicate
-    * rows, the disjoint-id contract violated). The watermark advances
-    * only when the family has something to serve (`out.isDefined`), so
-    * an empty corpus re-evaluates next call instead of caching absence.
-    * A watermark naming the live version is trusted only while `serve()`
-    * answers: an artifact whose meta was lost or cannot be read is not
-    * current, so its watermark is dropped and the family rebuilds. */
-  private def ensureArtifact[A](artDir: String, kind: String,
-      beforeLocked: () => Unit = () => ())(
-      appendSeg: (String, Long) => Unit, rebuild: Long => Option[A],
-      serve: () => Option[A]): Option[A] =
-    currentVersion.flatMap { v =>
-      def recorded = ArtifactMeta.read(spark, artDir, LexVersionFile)
-        .flatMap(_.toLongOption)
-      def current: Option[A] = if (recorded.contains(v)) serve() else None
-      current.orElse(ArtifactMeta.withBuildLock(spark, artDir) {
-        current.orElse { // double-checked under the lock
-          if (recorded.contains(v))
-            ArtifactMeta.delete(spark, artDir, LexVersionFile)
-          beforeLocked()
-          val segVersion = ("^.*/v(\\d+)/" + kind + "$").r
-          // each delta segment is (path, the store version that committed
-          // it) — ONE parse, validated and extracted together, so the
-          // gate and the batchId a family derives can never disagree
-          val delta = recorded.flatMap { v0 =>
-            val cur = segments(v, kind)
-            val old = segments(v0, kind)
-            val extra = cur.drop(old.size).map { seg =>
-              seg match {
-                case segVersion(ver) => Some((seg, ver.toLong))
-                case _ => None
-              }
-            }
-            if (Files.exists(versionDir(v0)) && cur.startsWith(old) &&
-                extra.forall(_.isDefined))
-              Some(extra.flatten)
-            else None
-          }
-          val out = delta match {
-            case Some(extra) =>
-              try { extra.foreach((appendSeg).tupled); serve() }
-              catch { case _: IllegalStateException => rebuild(v) }
-            case None => rebuild(v)
-          }
-          if (out.isDefined)
-            ArtifactMeta.write(spark, artDir, LexVersionFile, v.toString)
-          out
-        }
-      })
-    }
-
-  private def bodyCorpus(paths: Seq[String]): DataFrame =
-    readSegments("records", paths)
-      .filter(!isBlank(col("body"))).select(col("id"), col("body"))
-
-  private def ensureLexical(
-      arm: FamilyArm = new FamilyArm(lastLexMode = _)): Unit = {
-    ensureArtifact[Unit](lexDir, "records", beforeLexicalBuildHook)(
-      appendSeg = (seg, ver) => {
-        arm("append")
-        graft.ops.Lexical.appendOnce(
-          bodyCorpus(Seq(seg)), "id", "body", lexDir,
-          batchId = ver, lineage = "storev")
-      },
+    * identically (LexicalSpec's bit-exactness contract). Returns the arm
+    * the walk took. */
+  private def ensureLexical(): String =
+    ensureArtifact(new ArtifactFamily[Unit](lexDir, "records",
+      lastLexMode = _,
+      appendSeg = (seg, ver) => graft.ops.Lexical.appendOnce(
+        bodyCorpus(Seq(seg)), "id", "body", lexDir,
+        batchId = ver, lineage = "storev"),
+      retract = (v0, v) => familyRetract(lexDir, v0, v, vector = false)(
+        d => graft.ops.Lexical.delete(d, "id", "body", lexDir))(
+        a => graft.ops.Lexical.append(a, "id", "body", lexDir)),
       rebuild = v => {
-        // RETRACT arm ([[familyRetract]]): a pure-delete/add patch
-        // tombstones dead docs (negative df deltas retreat the
-        // termstats, probes anti-join the tombstones) and appends added
-        // docs — O(touched) vs re-tokenizing the corpus. BM25 keeps the
-        // Lucene deleted-docs convention: idf/N/avgdl retreat exactly by
-        // the deleted docs' own stats.
-        if (familyWatermark(lexDir).exists(v0 =>
-            familyRetract(lexDir, v0, v, vector = false)(
-              d => graft.ops.Lexical.delete(d, "id", "body", lexDir))(
-              a => graft.ops.Lexical.append(a, "id", "body", lexDir))))
-          arm("retract")
-        else {
-          arm("rebuild")
-          graft.ops.Lexical.writeIndex(
-            bodyCorpus(segments(v, "records")), "id", "body", lexDir)
-          ArtifactMeta.delete(spark, lexDir, RetractJournal)
-        }
+        graft.ops.Lexical.writeIndex(
+          bodyCorpus(segments(v, "records")), "id", "body", lexDir)
         Some(())
       },
-      serve = () => Some(()))
-    ()
-  }
+      serve = () => Some(()),
+      beforeLocked = () => beforeLexicalBuildHook()))._2
 
   /** The engine's one ANN artifact: an [[graft.ops.IvfIndex]] built with
     * codes — one trained coarse quantizer plus PQ codebooks, and one
@@ -1092,7 +1123,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
   /** [[ensureLexical]]'s version-watermark idiom generalized to the
     * vector family: keep the persisted ANN artifact ([[annDir]]) in
     * lockstep with the store's committed `index` chain, so a memo store
-    * serves ANN without hand-built indexes. Same three-arm shape:
+    * serves ANN without hand-built indexes. Same arms:
     *
     *  - watermark current → serve the stored quantizers lock-free (no
     *    corpus scan, no stamp re-validation — the version file IS the
@@ -1101,46 +1132,31 @@ class MemoEngine(spark: SparkSession, basePath: String,
     *    [[graft.ops.IvfIndex.append]] (centroids and codebooks reused,
     *    new rows land as new files in existing cell partitions; a
     *    quantizer does not need retraining for an ingest increment);
-    *  - chain rewrite (reindex/import/overwrite) or torn artifact →
-    *    full rebuild from the CAPTURED version's segments (not the live
-    *    view — the [[ensureLexical]] race argument verbatim), with
-    *    nlist and ksub re-derived from the corpus size.
+    *  - a pure-delete/add patch → the retract fold below;
+    *  - any other chain rewrite (reindex/import/overwrite) or torn
+    *    artifact → full rebuild from the CAPTURED version's segments
+    *    (not the live view — the [[ensureLexical]] race argument
+    *    verbatim), with nlist and ksub re-derived from the corpus size.
     *
-    * Returns (centroids, codebooks), or None for an empty corpus (no
-    * cells to probe — callers fall back to the exact ranking). */
-  private def ensureIvf(arm: FamilyArm = new FamilyArm(lastIvfMode = _))
-      : Option[(Array[Array[Float]], Array[Array[Array[Float]]])] =
-    ensureArtifact(annDir, "index")(
-      appendSeg = (seg, _) => {
-        arm("append")
-        graft.ops.IvfIndex.append(
-          readSegments("index", Seq(seg)), "id", "embedding", annDir)
-        ()
-      },
-      rebuild = v => {
-        // RETRACT arm ([[familyRetract]]): a pure-delete/add patch
-        // tombstones dead vectors (probes anti-join them until
-        // [[graft.ops.IvfIndex.applyDeletes]] compacts the affected
-        // cells) and cell-appends added vectors — O(touched), quantizers
-        // untouched (a delete perturbs them no more than an ingest
-        // increment; occupancy drift is the retrain trigger's job
-        // either way)
-        if (familyWatermark(annDir).exists(v0 =>
-            familyRetract(annDir, v0, v, vector = true)(
-              d => graft.ops.IvfIndex.delete(d, "id", "embedding", annDir))(
-              a => { graft.ops.IvfIndex.append(a, "id", "embedding", annDir)
-                     () }))) {
-          arm("retract")
-          annQuantizers()
-        } else {
-          arm("rebuild")
-          val out = rebuildIvf(v)
-          if (out.isDefined)
-            ArtifactMeta.delete(spark, annDir, RetractJournal)
-          out
-        }
-      },
-      serve = () => annQuantizers())
+    * Returns (centroids, codebooks) — None for an empty corpus (no
+    * cells to probe — callers fall back to the exact ranking) — and the
+    * arm the walk took. */
+  private def ensureIvf()
+      : (Option[(Array[Array[Float]], Array[Array[Array[Float]]])], String) =
+    ensureArtifact(new ArtifactFamily(annDir, "index", lastIvfMode = _,
+      appendSeg = (seg, _) => graft.ops.IvfIndex.append(
+        readSegments("index", Seq(seg)), "id", "embedding", annDir),
+      // RETRACT arm ([[familyRetract]]): a pure-delete/add patch
+      // tombstones dead vectors (probes anti-join them until
+      // [[graft.ops.IvfIndex.applyDeletes]] compacts the affected cells)
+      // and cell-appends added vectors — O(touched), quantizers untouched
+      // (a delete perturbs them no more than an ingest increment;
+      // occupancy drift is the retrain trigger's job either way)
+      retract = (v0, v) => familyRetract(annDir, v0, v, vector = true)(
+        d => graft.ops.IvfIndex.delete(d, "id", "embedding", annDir))(
+        a => graft.ops.IvfIndex.append(a, "id", "embedding", annDir)),
+      rebuild = rebuildIvf,
+      serve = () => annQuantizers()))
 
   private def annQuantizers()
       : Option[(Array[Array[Float]], Array[Array[Array[Float]]])] =
@@ -1207,7 +1223,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * appends stay O(batch), the retrain fires only on measured drift.
     * Returns true iff a rewrite happened. */
   def retrainIvf(maxSkew: Double = 4.0): Boolean = {
-    if (ensureIvf().isEmpty) return false
+    if (ensureIvf()._1.isEmpty) return false
     ArtifactMeta.withBuildLock(spark, annDir) {
       ArtifactMeta.read(spark, annDir, LexVersionFile)
         .flatMap(_.toLongOption).exists { v0 =>
@@ -1316,7 +1332,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
   }
 
   private object IvfFamily extends AnnFamily("ann") {
-    def open(): Option[AnnProbe] = ensureIvf().map { case (centroids, _) =>
+    def open(): Option[AnnProbe] = ensureIvf()._1.map { case (centroids, _) =>
       val idx = graft.ops.IvfIndex.load(spark, annDir)
       new AnnProbe(centroids.length) {
         def search(qv: Array[Float], k: Int, nprobe: Int,
@@ -1342,7 +1358,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * the same loaded artifact's `embedding` — candidates and refine
     * vectors come from one version. */
   private final class PqFamily(refine: Int) extends AnnFamily("pq") {
-    def open(): Option[AnnProbe] = ensureIvf().map {
+    def open(): Option[AnnProbe] = ensureIvf()._1.map {
       case (centroids, codebooks) =>
         val idx = graft.ops.IvfIndex.load(spark, annDir)
         new AnnProbe(centroids.length) {
@@ -1783,13 +1799,6 @@ class MemoEngine(spark: SparkSession, basePath: String,
 
   private def sigDir: String = base.resolve("_minhash").toString
 
-  /** The version-watermark idiom on the DEDUP family: keep a persisted
-    * MinHash signature artifact ([[graft.ops.Dedup.writeSignatures]])
-    * in lockstep with the store's records, so admission checks scan 64
-    * longs/doc instead of re-minhashing the corpus. Append-only growth
-    * signs just the new segments ([[graft.ops.Dedup.appendSignatures]],
-    * O(batch)); rewrites rebuild from the captured version. Corpus =
-    * non-blank bodies (the [[ensureLexical]] corpus rule). */
   /** Test seam: which arm the last [[ensureSignatures]] walk took —
     * "fresh" | "append" | "retract" | "rebuild". Production never
     * reads it. */
@@ -1798,16 +1807,6 @@ class MemoEngine(spark: SparkSession, basePath: String,
   /** [[lastSigMode]]'s twins for the other maintained families. */
   private[graft] var lastLexMode: Option[String] = None
   private[graft] var lastIvfMode: Option[String] = None
-
-  /** The arm ONE family walk took ("fresh" | "append" | "retract" |
-    * "rebuild"), held per call so a [[maintain]] leg reports its own
-    * walk while other legs and other callers run; every step is also
-    * mirrored into the family's shared `last*Mode` seam. */
-  private final class FamilyArm(seam: Option[String] => Unit) {
-    var mode = "fresh"
-    seam(Some(mode))
-    def apply(m: String): Unit = { mode = m; seam(Some(m)) }
-  }
 
   /** One classified v0→v records diff, shared by every maintenance
     * consumer of the window — the three [[familyRetract]] walks AND the
@@ -2133,36 +2132,33 @@ class MemoEngine(spark: SparkSession, basePath: String,
     ArtifactMeta.read(spark, artDir, LexVersionFile)
       .flatMap(_.toLongOption).filter(_ >= 0)
 
-  private def ensureSignatures(
-      arm: FamilyArm = new FamilyArm(lastSigMode = _)): Unit = {
-    ensureArtifact[Unit](sigDir, "records")(
-      appendSeg = (seg, _) => {
-        arm("append")
-        graft.ops.Dedup.appendSignatures(
-          bodyCorpus(Seq(seg)), "id", "body", sigDir)
-      },
+  /** The version-watermark idiom on the DEDUP family: keep a persisted
+    * MinHash signature artifact ([[graft.ops.Dedup.writeSignatures]])
+    * in lockstep with the store's records, so admission checks scan 64
+    * longs/doc instead of re-minhashing the corpus. Append-only growth
+    * signs just the new segments ([[graft.ops.Dedup.appendSignatures]],
+    * O(batch)); a pure-delete/add patch retracts ([[familyRetract]]):
+    * dead rows tombstone ([[graft.ops.Dedup.deleteSignatures]] —
+    * [[graft.ops.Dedup.loadSignatures]] anti-joins them, so every
+    * signature consumer sees the retraction immediately) and added rows
+    * are signed, O(touched) instead of re-minhashing the corpus; other
+    * rewrites rebuild from the captured version. Corpus = non-blank
+    * bodies (the [[ensureLexical]] corpus rule). Returns the arm the
+    * walk took. */
+  private def ensureSignatures(): String =
+    ensureArtifact(new ArtifactFamily[Unit](sigDir, "records",
+      lastSigMode = _,
+      appendSeg = (seg, _) => graft.ops.Dedup.appendSignatures(
+        bodyCorpus(Seq(seg)), "id", "body", sigDir),
+      retract = (v0, v) => familyRetract(sigDir, v0, v, vector = false)(
+        d => graft.ops.Dedup.deleteSignatures(d, "id", "body", sigDir))(
+        a => graft.ops.Dedup.appendSignatures(a, "id", "body", sigDir)),
       rebuild = v => {
-        // RETRACT arm ([[familyRetract]]): a pure-delete/add patch
-        // tombstones dead rows ([[graft.ops.Dedup.deleteSignatures]] —
-        // [[graft.ops.Dedup.loadSignatures]] anti-joins them, so every
-        // signature consumer sees the retraction immediately) and signs
-        // added rows, O(touched) instead of re-minhashing the corpus
-        if (familyWatermark(sigDir).exists(v0 =>
-            familyRetract(sigDir, v0, v, vector = false)(
-              d => graft.ops.Dedup.deleteSignatures(d, "id", "body", sigDir))(
-              a => graft.ops.Dedup.appendSignatures(a, "id", "body", sigDir))))
-          arm("retract")
-        else {
-          arm("rebuild")
-          graft.ops.Dedup.writeSignatures(
-            bodyCorpus(segments(v, "records")), "id", "body", sigDir)
-          ArtifactMeta.delete(spark, sigDir, RetractJournal)
-        }
+        graft.ops.Dedup.writeSignatures(
+          bodyCorpus(segments(v, "records")), "id", "body", sigDir)
         Some(())
       },
-      serve = () => Some(()))
-    ()
-  }
+      serve = () => Some(())))._2
 
   /** Admission gate against the engine-MAINTAINED signature artifact
     * ([[ensureSignatures]]): the rows of `batch` (id, body) whose body
@@ -2212,13 +2208,28 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * shards carried by reference). Production never reads it. */
   private[graft] var lastDupPublish: Option[(Int, Int)] = None
 
-  /** Publish a FULL labeling generation (rebuild arm / first build):
-    * grid-sharded on the component's hash cell ([[viewCellCol]] — the
-    * view-state shard idiom on the labeling artifact), manifest written
-    * into the generation dir, THEN the pointer swing (a crash leaves the
-    * old labeling live), then the reference-aware TTL sweep. */
-  private def publishDupLabels(labels: DataFrame): Unit =
-    publishDupShards(labels, Nil, MemoEngine.ViewShardCells)
+  private def dupShards = new ShardedArtifact(Paths.get(dupDir), "labels-",
+    "component", countRows = false)
+
+  /** Publish a labeling generation through [[ShardedArtifact]] — the
+    * view-state shard idiom on the labeling artifact, grid-sharded on
+    * the component's hash cell: by default the FULL labeling (rebuild
+    * arm / first build); a fold passes the shards it `carried` by
+    * reference and its pitch cap. The manifest lands in the generation
+    * dir, THEN the pointer swings (a crash leaves the old labeling
+    * live), then the reference-aware TTL sweep. */
+  private def publishDupLabels(content: DataFrame,
+      carried: Seq[ViewShard] = Nil,
+      widthCap: Int = MemoEngine.ViewShardCells): Unit = {
+    val (_, nWritten) = dupShards.publish(
+        content.select(col("id").cast("long").as("id"),
+          col("component").cast("long").as("component")), "",
+        ArtifactMeta.read(spark, dupDir, DupLabelsPtr), carried,
+        widthCap) { (gen, _) =>
+      ArtifactMeta.write(spark, dupDir, DupLabelsPtr, gen)
+    }
+    lastDupPublish = Some((nWritten, carried.size))
+  }
 
   /** O(touched) publish of a fold's labeling DELTA — the [[refreshView]]
     * carry-by-reference idiom on the labeling artifact: `dropComps` is
@@ -2236,42 +2247,17 @@ class MemoEngine(spark: SparkSession, basePath: String,
   private def publishDupLabelsDelta(dropComps: DataFrame,
       upserts: DataFrame): Unit = {
     val dirP = Paths.get(dupDir)
-    val prior = ArtifactMeta.read(spark, dupDir, DupLabelsPtr)
-      .filter(ptr => Files.isDirectory(dirP.resolve(ptr)))
-    prior match {
-      case None => publishDupShards(upserts, Nil, MemoEngine.ViewShardCells)
+    ArtifactMeta.read(spark, dupDir, DupLabelsPtr)
+      .filter(ptr => Files.isDirectory(dirP.resolve(ptr))) match {
+      case None => publishDupLabels(upserts)
       case Some(ptr) =>
         val drops = dropComps
           .select(col("component").cast("long").as("component")).persist()
         val ups = upserts.select(col("id").cast("long").as("id"),
           col("component").cast("long").as("component")).persist()
         try {
-          // the delta's hash cells decide which shards the publish must
-          // read and rewrite — one bounded job (≤ ViewShardCells ints on
-          // the driver, whatever the delta size)
-          val cellsArr = drops
-            .select(viewCellCol(col("component")).as("c"))
-            .unionByName(ups.select(viewCellCol(col("component")).as("c")))
-            .distinct().collect().map(_.getInt(0)).sorted
-          def touchedIn(lo: Int, hi: Int): Boolean = {
-            var a = java.util.Arrays.binarySearch(cellsArr, lo)
-            if (a < 0) a = -a - 1
-            a < cellsArr.length && cellsArr(a) < hi
-          }
-          val priorShards = readShardManifest(dirP.resolve(ptr))
-            .getOrElse(Seq(ViewShard(0, MemoEngine.ViewShardCells, ptr)))
-          val (touchedShards, carried) =
-            priorShards.partition(s => touchedIn(s.lo, s.hi))
-          // a GAP-CELL delta (every upsert hashed into cells no prior
-          // shard covers) publishes at the prior state's own pitch, not
-          // a whole-space interval — a space-wide entry would intersect
-          // every future delta and erode the carry until its next
-          // rewrite re-split it (ownership is row-level either way;
-          // intervals only drive touch detection)
-          val touchedWidthMin = touchedShards.map(s => s.hi - s.lo)
-            .minOption
-            .orElse(priorShards.map(s => s.hi - s.lo).minOption)
-            .getOrElse(MemoEngine.ViewShardCells)
+          val (touchedShards, carried, widthCap) = dupShards.split(ptr,
+            drops.unionByName(ups.select(col("component"))))
           val old =
             if (touchedShards.isEmpty) emptyFrame(dupLabelsSchema)
             else spark.read.schema(dupLabelsSchema).parquet(
@@ -2284,72 +2270,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
           val survivors = old
             .join(broadcast(drops), Seq("component"), "left_anti")
             .join(broadcast(ups.select(col("id"))), Seq("id"), "left_anti")
-          publishDupShards(survivors.unionByName(ups), carried,
-            touchedWidthMin)
+          publishDupLabels(survivors.unionByName(ups), carried, widthCap)
         } finally { drops.unpersist(); ups.unpersist() }
     }
-  }
-
-  /** Shared publish tail of the labeling artifact: write `content`
-    * grid-sharded under a fresh generation dir (split-on-rewrite pitch,
-    * capped at the narrowest touched interval — [[refreshView]]'s grid
-    * rule verbatim), manifest it together with the carried shards, swing
-    * the pointer, sweep unreferenced generations past the staging TTL. */
-  private def publishDupShards(content: DataFrame,
-      carried: Seq[ViewShard], touchedWidthMin: Int): Unit = {
-    val dirP = Paths.get(dupDir)
-    Files.createDirectories(dirP)
-    val name = s"labels-${java.util.UUID.randomUUID.toString.take(8)}"
-    val statePath = dirP.resolve(name)
-    val typed = content.select(col("id").cast("long").as("id"),
-      col("component").cast("long").as("component")).persist()
-    try {
-      val written = typed.count()
-      val grid = {
-        var parts = 1
-        while (parts < MemoEngine.ViewShardCells &&
-            written / parts > viewShardRows) parts <<= 1
-        math.min(MemoEngine.ViewShardCells / parts, touchedWidthMin)
-      }
-      typed.withColumn("_shard",
-          (viewCellCol(col("component")) / lit(grid)).cast("int"))
-        .write.mode("overwrite").partitionBy("_shard")
-        .parquet(statePath.toString)
-      val newShards = listDir(statePath)
-        .filter(p => Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("_shard="))
-        .map { p =>
-          val q = p.getFileName.toString.stripPrefix("_shard=").toInt
-          ViewShard(q * grid, (q + 1) * grid, s"$name/${p.getFileName}")
-        }
-      writeShardManifest(statePath, carried ++ newShards)
-      val prev = ArtifactMeta.read(spark, dupDir, DupLabelsPtr)
-      ArtifactMeta.write(spark, dupDir, DupLabelsPtr, name)
-      lastDupPublish = Some((newShards.size, carried.size))
-      sweepDupGenerations(dirP, Seq(name) ++ prev)
-    } finally typed.unpersist()
-  }
-
-  /** TTL sweep of retired labeling generations: a generation dir stays
-    * while ANY keep-manifest references a shard inside it (carried
-    * shards keep reading older dirs in place, and a lock-free reader of
-    * the previous generation needs its references too) — the
-    * [[sweepViewStates]] discipline on the labeling artifact; "now" is
-    * the filesystem's clock (vacuum's probe idiom). */
-  private def sweepDupGenerations(dirP: Path, keep: Seq[String]): Unit = {
-    val referenced: Set[String] = keep.toSet ++
-      keep.flatMap(st => readShardManifest(dirP.resolve(st)).toSeq.flatten
-        .map(_.path.split('/').head))
-    val probe = dirP.resolve(".dup_probe")
-    Files.writeString(probe, "")
-    val fsNow = Files.getLastModifiedTime(probe).toMillis
-    Files.deleteIfExists(probe)
-    val cutoff = fsNow - MemoEngine.DefaultStagingTtlMs
-    listDir(dirP).filter(p => Files.isDirectory(p) &&
-        p.getFileName.toString.startsWith("labels-"))
-      .filterNot(p => referenced.contains(p.getFileName.toString))
-      .filter(p => Files.getLastModifiedTime(p).toMillis < cutoff)
-      .foreach(deleteTree)
   }
 
   /** RETRACT/PATCH fold of the dup-group labeling — the incremental arm
@@ -2473,8 +2396,13 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * (a different `minJaccard` invalidates the stamp under the lock and
     * rebuilds, the view spec-change discipline). Empty/uncommitted
     * stores serve the empty labeling. */
-  def dupGroups(minJaccard: Double = 0.8): DataFrame = {
-    if (currentVersion.isEmpty) return emptyFrame(dupLabelsSchema)
+  def dupGroups(minJaccard: Double = 0.8): DataFrame =
+    dupGroupsArm(minJaccard)._1
+
+  /** [[dupGroups]] with the arm its serving walk took ("empty" on an
+    * empty/uncommitted store) — what [[maintain]] reports. */
+  private def dupGroupsArm(minJaccard: Double): (DataFrame, String) = {
+    if (currentVersion.isEmpty) return (emptyFrame(dupLabelsSchema), "empty")
     val spec = s"j$minJaccard"
     // Validated serve under concurrent SPEC churn: a caller with a
     // different threshold can restamp the spec and republish between
@@ -2499,7 +2427,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
     var attempt = 0
     while (true) {
       attempt += 1
-      dupGroupsWalk(spec, minJaccard)
+      val arm = dupGroupsWalk(spec, minJaccard)
       val ptrBefore = ArtifactMeta.read(spark, dupDir, DupLabelsPtr)
       val out = serveDupLabels()
       val specOk = ArtifactMeta.read(spark, dupDir, DupSpecFile)
@@ -2507,7 +2435,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
       val markOk = ArtifactMeta.read(spark, dupDir, LexVersionFile)
         .flatMap(_.toLongOption).exists(_ >= 0)
       val ptrOk = ArtifactMeta.read(spark, dupDir, DupLabelsPtr) == ptrBefore
-      if (specOk && markOk && ptrOk) return out
+      if (specOk && markOk && ptrOk) return (out, arm)
       if (attempt >= 5) throw new IllegalStateException(
         s"dupGroups($minJaccard) could not serve a threshold-consistent " +
           s"labeling after $attempt attempts — concurrent callers are " +
@@ -2518,8 +2446,8 @@ class MemoEngine(spark: SparkSession, basePath: String,
 
   /** One maintenance walk of the dup-labeling artifact at a stamped
     * spec — [[dupGroups]]' body, factored out of its validated-serve
-    * retry loop. */
-  private def dupGroupsWalk(spec: String, minJaccard: Double): Unit = {
+    * retry loop. Returns the arm it took. */
+  private def dupGroupsWalk(spec: String, minJaccard: Double): String = {
     if (!ArtifactMeta.read(spark, dupDir, DupSpecFile).contains(spec))
       ArtifactMeta.withBuildLock(spark, dupDir) {
         if (!ArtifactMeta.read(spark, dupDir, DupSpecFile).contains(spec)) {
@@ -2527,20 +2455,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
           ArtifactMeta.write(spark, dupDir, DupSpecFile, spec)
         }
       }
-    lastDupMode = Some("fresh")
-    ensureArtifact[Unit](dupDir, "records",
-        // skip the signature re-walk when its watermark is already at
-        // the live version: the walk would be two metadata reads and a
-        // no-op, but it stomps [[lastSigMode]] to "fresh" — a maintain()
-        // pass that just took the retract/rebuild arm must keep its
-        // recorded mode (seam hygiene; the TOCTOU here is the same
-        // lock-free fresh-serve race ensureSignatures itself runs)
-        beforeLocked = () =>
-          if (!currentVersion.exists(v =>
-              familyWatermark(sigDir).contains(v)))
-            ensureSignatures())(
+    ensureArtifact(new ArtifactFamily[Unit](dupDir, "records",
+      lastDupMode = _,
       appendSeg = (seg, _) => {
-        lastDupMode = Some("append")
         val pairs = graft.ops.Dedup.signaturePairs(
           graft.ops.Dedup.loadSignatures(spark, sigDir),
           minJaccard = minJaccard,
@@ -2551,27 +2468,26 @@ class MemoEngine(spark: SparkSession, basePath: String,
           serveDupLabels(), pairs, "a", "b")
         publishDupLabelsDelta(chg, ups)
       },
-      rebuild = v => {
-        // the recorded watermark is still the PRE-walk version here
-        // (ensureArtifact stamps it only after this arm returns): with
-        // a resolvable prior, fold the patch incrementally
-        // ([[tryDupRetract]] — touched components only) before paying
-        // the corpus-wide from-scratch labeling
-        val v0 = ArtifactMeta.read(spark, dupDir, LexVersionFile)
-          .flatMap(_.toLongOption).filter(_ >= 0)
-        if (v0.exists(tryDupRetract(_, v, minJaccard)))
-          lastDupMode = Some("retract")
-        else {
-          lastDupMode = Some("rebuild")
-          val pairs = graft.ops.Dedup.signaturePairs(
-            graft.ops.Dedup.loadSignatures(spark, sigDir),
-            minJaccard = minJaccard)
-          publishDupLabels(graft.ops.Dedup.components(pairs, "a", "b"))
-        }
+      // a resolvable prior folds the patch incrementally (touched
+      // components only) before the corpus-wide from-scratch labeling
+      retract = (v0, v) => tryDupRetract(v0, v, minJaccard),
+      rebuild = _ => {
+        val pairs = graft.ops.Dedup.signaturePairs(
+          graft.ops.Dedup.loadSignatures(spark, sigDir),
+          minJaccard = minJaccard)
+        publishDupLabels(graft.ops.Dedup.components(pairs, "a", "b"))
         Some(())
       },
-      serve = () => Some(()))
-    ()
+      serve = () => Some(()),
+      // skip the signature re-walk when its watermark is already at the
+      // live version: the walk would be two metadata reads and a no-op,
+      // but it stomps [[lastSigMode]] to "fresh" — a maintain() pass that
+      // just took the retract/rebuild arm must keep its recorded mode
+      // (seam hygiene; the TOCTOU here is the same lock-free fresh-serve
+      // race ensureSignatures itself runs)
+      beforeLocked = () =>
+        if (!currentVersion.exists(v => familyWatermark(sigDir).contains(v)))
+          ensureSignatures()))._2
   }
 
   /** Probe the maintained postings artifact, absorbing the transient
@@ -3327,6 +3243,146 @@ class MemoEngine(spark: SparkSession, basePath: String,
       case None => Seq(dir.resolve(stateDir).toString)
     }
 
+  /** A grid-sharded artifact: generation dirs `<prefix>…` under `dir`,
+    * each holding `_shard=<q>` parquet dirs of rows whose `key` hash
+    * cell ([[viewCellCol]]) falls in [q·grid, (q+1)·grid), plus a shard
+    * manifest whose entries may point into OLDER generations (carry by
+    * reference). View states (`state-`, keyed on group_key) and the
+    * dup-group labeling (`labels-`, keyed on component) both publish
+    * through it. `countRows` records each written shard's row count in
+    * the manifest — one job over the cached content, paid only by views,
+    * whose [[viewFragmentation]] prices the state from those counts. */
+  private final class ShardedArtifact(dir: Path, prefix: String,
+      key: String, countRows: Boolean) {
+
+    /** Split generation `gen`'s shards — a legacy (pre-shard) generation
+      * reads as one shard over the whole cell space — by the hash cells
+      * of `keys`' key column (one bounded job: ≤ ViewShardCells ints on
+      * the driver, whatever the delta size) into (touched, carried,
+      * pitch cap). The cap is the narrowest touched width; a GAP-CELL
+      * delta (every key hashed into cells no prior shard covers) takes
+      * the prior generation's own narrowest pitch instead of the whole
+      * space — a space-wide entry would intersect every future delta and
+      * erode the carry until its next rewrite re-split it (ownership is
+      * row-level either way; intervals only drive touch detection). */
+    def split(gen: String, keys: DataFrame)
+        : (Seq[ViewShard], Seq[ViewShard], Int) = {
+      val cells = keys.select(viewCellCol(col(key)).as("c"))
+        .distinct().collect().map(_.getInt(0)).sorted
+      def touched(s: ViewShard): Boolean = {
+        var a = java.util.Arrays.binarySearch(cells, s.lo)
+        if (a < 0) a = -a - 1
+        a < cells.length && cells(a) < s.hi
+      }
+      val prior = readShardManifest(dir.resolve(gen))
+        .getOrElse(Seq(ViewShard(0, MemoEngine.ViewShardCells, gen)))
+      val (hit, carried) = prior.partition(touched)
+      def narrowest(ss: Seq[ViewShard]) = ss.map(s => s.hi - s.lo).minOption
+      (hit, carried, narrowest(hit).orElse(narrowest(prior))
+        .getOrElse(MemoEngine.ViewShardCells))
+    }
+
+    /** Publish `content` as a fresh generation `<prefix><tag><uuid>`:
+      * rows land at a grid pitch sized so each shard holds ≤
+      * [[viewShardRows]] rows (hash-uniform over keys), capped at
+      * `widthCap` so a narrow rewrite never publishes a wider interval
+      * than the region it rewrote — a shard that grew past the target
+      * splits into finer grid dirs the next time its region is
+      * rewritten (split-on-rewrite; a full publish re-grids the whole
+      * space uniformly). A single hash-skewed hot shard can exceed the
+      * target without splitting under this estimate — its rewrites stay
+      * O(its rows), a bounded degradation uniform hashing makes
+      * unlikely. The manifest lists the `carried` shards by reference
+      * next to the written ones; then `swing(gen, rows written)` makes
+      * the generation live (a throw there leaves the old one live), and
+      * [[sweep]] keeps the new and the `prev` generation's references.
+      * Returns the new generation's name and its written shard count. */
+    def publish(content: DataFrame, tag: String, prev: Option[String],
+        carried: Seq[ViewShard] = Nil,
+        widthCap: Int = MemoEngine.ViewShardCells)(
+        swing: (String, Long) => Unit): (String, Int) = {
+      Files.createDirectories(dir)
+      val gen = s"$prefix$tag${java.util.UUID.randomUUID.toString.take(8)}"
+      val genPath = dir.resolve(gen)
+      val cached = content.persist()
+      try {
+        val written = cached.count()
+        val grid = {
+          var parts = 1
+          while (parts < MemoEngine.ViewShardCells &&
+              written / parts > viewShardRows) parts <<= 1
+          math.min(MemoEngine.ViewShardCells / parts, widthCap)
+        }
+        // Column./ is double division; magnitudes ≤ 2^16 are exact in
+        // double, so the int cast IS the integer quotient
+        val sharded = cached.withColumn("_shard",
+          (viewCellCol(col(key)) / lit(grid)).cast("int"))
+        sharded.write.mode("overwrite").partitionBy("_shard")
+          .parquet(genPath.toString)
+        val rowsByShard: Map[Int, Long] =
+          if (!countRows || written == 0) Map.empty
+          else sharded.groupBy(col("_shard")).count().collect()
+            .map(r => r.getInt(0) -> r.getLong(1)).toMap
+        val shards = listDir(genPath)
+          .filter(p => Files.isDirectory(p) &&
+            p.getFileName.toString.startsWith("_shard="))
+          .map { p =>
+            val q = p.getFileName.toString.stripPrefix("_shard=").toInt
+            ViewShard(q * grid, (q + 1) * grid, s"$gen/${p.getFileName}",
+              rowsByShard.getOrElse(q, -1L))
+          }
+        writeShardManifest(genPath, carried ++ shards)
+        swing(gen, written)
+        sweep(gen +: prev.toSeq)
+        (gen, shards.size)
+      } finally cached.unpersist()
+    }
+
+    /** TTL sweep of retired generations: a generation dir stays while
+      * ANY manifest in `keep` references a shard in it (carried shards
+      * keep reading older dirs in place, and a lock-free reader of the
+      * previous generation needs that manifest's references too);
+      * anything else falls once older than the staging TTL. "Now" is the
+      * FILESYSTEM's clock (vacuum's probe idiom) — on a shared filesystem
+      * whose clock lags the driver's, a wall-clock cutoff could sweep a
+      * dir younger than the TTL out from under a lock-free reader.
+      *
+      * SHARD-level sweep inside kept dirs: a generation stays alive as
+      * long as ONE of its shards is carried, so its superseded sibling
+      * shards (rewritten or split away generations ago) would otherwise
+      * accumulate as dead files forever. Any `_shard=*` dir referenced by
+      * NO kept manifest falls under the same TTL discipline — a lock-free
+      * reader of a kept generation never reads an unreferenced shard, and
+      * older-generation readers get the dir-level sweep's window. */
+    def sweep(keep: Seq[String]): Unit = {
+      val refs = keep.map(st => st -> readShardManifest(dir.resolve(st))
+        .toSeq.flatten.map(_.path))
+      val keepDirs = refs.flatMap { case (st, ps) =>
+        st +: ps.map(_.split('/').head) }.toSet
+      val refShards = refs.flatMap(_._2).map(dir.resolve(_).toString).toSet
+      val probe = dir.resolve(".sweep_probe")
+      Files.writeString(probe, "")
+      val fsNow = Files.getLastModifiedTime(probe).toMillis
+      Files.deleteIfExists(probe)
+      val cutoff = fsNow - MemoEngine.DefaultStagingTtlMs
+      def aged(p: Path) = Files.getLastModifiedTime(p).toMillis < cutoff
+      def gens = listDir(dir).filter(p => Files.isDirectory(p) &&
+        p.getFileName.toString.startsWith(prefix))
+      gens.filterNot(p => keepDirs.contains(p.getFileName.toString))
+        .filter(aged).foreach(deleteTree)
+      gens.foreach { g =>
+        listDir(g).filter(p => Files.isDirectory(p) &&
+            p.getFileName.toString.startsWith("_shard="))
+          .filterNot(p => refShards.contains(p.toString))
+          .filter(aged).foreach(deleteTree)
+      }
+    }
+  }
+
+  private def viewShards(name: String) =
+    new ShardedArtifact(viewDir(name), "state-", "group_key",
+      countRows = true)
+
   /** Test seam: the last refresh's publish shape — (shards written,
     * shards carried by reference). Production never reads it. */
   private[graft] var lastViewPublish: Option[(Int, Int)] = None
@@ -3775,8 +3831,10 @@ class MemoEngine(spark: SparkSession, basePath: String,
       frame.groupBy(col("group_key")).agg(aggs.head, aggs.tail: _*)
     }
     val cached = scala.collection.mutable.Buffer.empty[DataFrame]
+    // an incremental merge's split: the prior shards it carries by
+    // reference and the pitch cap of the region it rewrites
     var carriedShards: Seq[ViewShard] = Nil
-    var touchedWidthMin: Int = MemoEngine.ViewShardCells
+    var widthCap: Int = MemoEngine.ViewShardCells
     try {
       val (mode, scanned, newState) = contribs match {
         case Some(delta) =>
@@ -3822,34 +3880,11 @@ class MemoEngine(spark: SparkSession, basePath: String,
             .agg(deltaAggs.head, deltaAggs.tail: _*).cache()
           cached += d
           // the delta's hash cells decide which shards the merge must
-          // read and rewrite — one bounded job over the cached delta
-          // aggregate (≤ ViewShardCells ints on the driver, whatever
-          // the delta size)
-          val cellsArr = d
-            .select(viewCellCol(col("group_key")).as("c"))
-            .distinct().collect().map(_.getInt(0)).sorted
-          def touchedIn(lo: Int, hi: Int): Boolean = {
-            var a = java.util.Arrays.binarySearch(cellsArr, lo)
-            if (a < 0) a = -a - 1
-            a < cellsArr.length && cellsArr(a) < hi
-          }
-          val priorShards = readShardManifest(dir.resolve(prior.get._2))
-            .getOrElse(Seq(ViewShard(0, MemoEngine.ViewShardCells,
-              prior.get._2))) // legacy whole-dir state: one wide shard
-          val (touchedShards, untouched) =
-            priorShards.partition(s => touchedIn(s.lo, s.hi))
+          // read and rewrite; the rest carry by reference
+          val (touchedShards, untouched, cap) =
+            viewShards(name).split(prior.get._2, d)
           carriedShards = untouched
-          // a GAP-CELL delta (every changed group hashed into cells no
-          // prior shard covers) publishes at the prior state's own pitch,
-          // not a whole-space interval — a space-wide entry would
-          // intersect every future delta and erode the carry until
-          // split-on-rewrite re-split it (the labels family's rule,
-          // [[publishDupLabelsDelta]], applied to its view-state origin)
-          touchedWidthMin = touchedShards
-            .map(s => s.hi - s.lo)
-            .minOption
-            .orElse(priorShards.map(s => s.hi - s.lo).minOption)
-            .getOrElse(MemoEngine.ViewShardCells)
+          widthCap = cap
           val o = readState(touchedShards
             .map(s => dir.resolve(s.path).toString))
           val oEx = col("o.doc_count").isNotNull // group_key can be null
@@ -4036,118 +4071,31 @@ class MemoEngine(spark: SparkSession, basePath: String,
               1, groupKey, measures, aggOf, where))
           ("rebuild", segs, full)
       }
-      val stateDir =
-        s"state-v$live-${java.util.UUID.randomUUID.toString.take(8)}"
-      val statePath = dir.resolve(stateDir)
-      val ns = newState.cache(); cached += ns
-      val written = ns.count()
-      // publish O(touched): only rewritten groups land in this state
-      // dir, partitioned at a grid pitch sized so each shard holds ≤
-      // viewShardRows groups (hash-uniform over keys) — a shard that
-      // grew past the target splits into finer grid dirs HERE, the next
-      // time its region is rewritten; untouched shards carry by
-      // reference below, never read, never rewritten
-      // pitch: the hash-uniform global estimate, CAPPED at the narrowest
-      // touched shard's width so a narrow refresh never publishes a
-      // wider interval than the region it rewrote (a space-wide entry
-      // would intersect every future delta and erode the carry). A
-      // single hash-skewed hot shard can exceed the target without
-      // splitting under this estimate — its rewrites stay O(its rows),
-      // a bounded degradation uniform hashing makes unlikely.
-      val grid = {
-        var parts = 1
-        while (parts < MemoEngine.ViewShardCells &&
-            written / parts > viewShardRows) parts <<= 1
-        math.min(MemoEngine.ViewShardCells / parts, touchedWidthMin)
+      // publish O(touched): only rewritten groups land in the new state
+      // dir; untouched shards carry by reference, never read, never
+      // rewritten. The negative-count tripwire checks exactly the
+      // written shards (carried shards passed it when they were written)
+      val (stateDir, nWritten) = viewShards(name).publish(newState,
+          s"v$live-", recorded.map(_._3), carriedShards, widthCap) {
+        (gen, written) =>
+          val negatives =
+            if (written == 0) 0L
+            else spark.read.parquet(dir.resolve(gen).toString)
+              .filter(col("doc_count") < 0L).count()
+          if (negatives > 0) {
+            deleteTree(dir.resolve(gen))
+            throw new IllegalStateException(
+              s"view '$name' refresh produced $negatives negative-count " +
+              s"groups — a retraction without a matching prior " +
+              s"contribution (feed and state disagree); old state left live")
+          }
+          ArtifactMeta.write(spark, dir.toString, ViewMetaFile,
+            s"$live|$spec|$gen")
       }
-      // Column./ is double division; magnitudes ≤ 2^16 are exact in
-      // double, so the int cast IS the integer quotient
-      val nsSharded = ns.withColumn("_shard",
-        (viewCellCol(col("group_key")) / lit(grid)).cast("int"))
-      nsSharded.write.mode("overwrite").partitionBy("_shard")
-        .parquet(statePath.toString)
-      // per-shard group counts for the manifest (one job over the CACHED
-      // frame, ≤ shard-count rows collected): carried entries keep their
-      // recorded counts — they are untouched by definition — so
-      // [[viewFragmentation]] prices the whole state driver-side
-      val rowsByShard: Map[Int, Long] =
-        if (written == 0) Map.empty
-        else nsSharded.groupBy(col("_shard")).count().collect()
-          .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val newShards = listDir(statePath)
-        .filter(p => Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("_shard="))
-        .map { p =>
-          val q = p.getFileName.toString.stripPrefix("_shard=").toInt
-          ViewShard(q * grid, (q + 1) * grid,
-            s"$stateDir/${p.getFileName}", rowsByShard.getOrElse(q, -1L))
-        }
-      writeShardManifest(statePath, carriedShards ++ newShards)
-      val negatives =
-        if (written == 0) 0L
-        else spark.read.parquet(statePath.toString)
-          .filter(col("doc_count") < 0L).count()
-      if (negatives > 0) {
-        deleteTree(statePath)
-        throw new IllegalStateException(
-          s"view '$name' refresh produced $negatives negative-count groups " +
-          s"— a retraction without a matching prior contribution (feed and " +
-          s"state disagree); old state left live")
-      }
-      ArtifactMeta.write(spark, dir.toString, ViewMetaFile,
-        s"$live|$spec|$stateDir")
-      sweepViewStates(dir, Seq(stateDir) ++ recorded.map(_._3))
       lastViewRefresh = Some((mode, scanned))
-      lastViewPublish = Some((newShards.size, carriedShards.size))
+      lastViewPublish = Some((nWritten, carriedShards.size))
       (serve(stateDir), mode)
     } finally cached.foreach(_.unpersist())
-  }
-
-  /** TTL sweep of a view dir's retired state: a state dir stays while
-    * ANY manifest in `keepStates` references a shard in it (carried
-    * shards keep reading older dirs in place, and a lock-free reader of
-    * the previous state needs that manifest's references too); anything
-    * else falls once older than the staging TTL. "Now" is the
-    * FILESYSTEM's clock (vacuum's probe idiom) — on a shared filesystem
-    * whose clock lags the driver's, a wall-clock cutoff could sweep a
-    * dir younger than the TTL out from under a lock-free reader.
-    *
-    * SHARD-level sweep inside kept dirs: a state dir stays alive as
-    * long as ONE of its shards is carried, so its superseded sibling
-    * shards (rewritten or split away generations ago) would otherwise
-    * accumulate as dead files forever. Any `_shard=*` dir referenced by
-    * NO kept manifest falls under the same TTL discipline — a lock-free
-    * reader of a kept state never reads an unreferenced shard, and
-    * older-generation readers get the dir-level sweep's window. */
-  private def sweepViewStates(dir: Path, keepStates: Seq[String]): Unit = {
-    def refDirs(st: String): Set[String] =
-      readShardManifest(dir.resolve(st))
-        .map(_.map(_.path.split('/').head).toSet)
-        .getOrElse(Set.empty[String]) + st
-    val keep = keepStates.flatMap(refDirs).toSet
-    val probe = dir.resolve(".view_probe")
-    Files.writeString(probe, "")
-    val fsNow = Files.getLastModifiedTime(probe).toMillis
-    Files.deleteIfExists(probe)
-    val cutoff = fsNow - MemoEngine.DefaultStagingTtlMs
-    listDir(dir).filter(p => Files.isDirectory(p) &&
-        p.getFileName.toString.startsWith("state-"))
-      .filterNot(p => keep.contains(p.getFileName.toString))
-      .filter(p => Files.getLastModifiedTime(p).toMillis < cutoff)
-      .foreach(deleteTree)
-    val refShardPaths: Set[String] =
-      keepStates.flatMap(st =>
-        readShardManifest(dir.resolve(st)).toSeq.flatten
-          .map(s => dir.resolve(s.path).toString)).toSet
-    listDir(dir).filter(p => Files.isDirectory(p) &&
-        p.getFileName.toString.startsWith("state-"))
-      .foreach { sd =>
-        listDir(sd).filter(p => Files.isDirectory(p) &&
-            p.getFileName.toString.startsWith("_shard="))
-          .filterNot(p => refShardPaths.contains(p.toString))
-          .filter(p => Files.getLastModifiedTime(p).toMillis < cutoff)
-          .foreach(deleteTree)
-      }
   }
 
   /** Fragmentation statistic of a view's sharded state: live shard
@@ -4207,40 +4155,14 @@ class MemoEngine(spark: SparkSession, basePath: String,
             if viewFragmentation(name).exists(_ > maxFragmentation) =>
           // shards of one spec share one schema; the plain parquet read
           // carries reserve/dictionary state columns through verbatim
-          val state = spark.read
-            .parquet(shardPaths(dir, st): _*).cache()
-          try {
-            val rows = state.count()
-            var parts = 1
-            while (parts < MemoEngine.ViewShardCells &&
-                rows / parts > viewShardRows) parts <<= 1
-            val grid = MemoEngine.ViewShardCells / parts
-            val newDir =
-              s"state-v$v-${java.util.UUID.randomUUID.toString.take(8)}"
-            val statePath = dir.resolve(newDir)
-            val sharded = state.withColumn("_shard",
-              (viewCellCol(col("group_key")) / lit(grid)).cast("int"))
-            sharded.write.mode("overwrite").partitionBy("_shard")
-              .parquet(statePath.toString)
-            val rowsByShard: Map[Int, Long] =
-              if (rows == 0) Map.empty
-              else sharded.groupBy(col("_shard")).count().collect()
-                .map(r => r.getInt(0) -> r.getLong(1)).toMap
-            val newShards = listDir(statePath)
-              .filter(p => Files.isDirectory(p) &&
-                p.getFileName.toString.startsWith("_shard="))
-              .map { p =>
-                val q = p.getFileName.toString.stripPrefix("_shard=").toInt
-                ViewShard(q * grid, (q + 1) * grid,
-                  s"$newDir/${p.getFileName}", rowsByShard.getOrElse(q, -1L))
-              }
-            writeShardManifest(statePath, newShards)
+          val (_, nWritten) = viewShards(name).publish(
+              spark.read.parquet(shardPaths(dir, st): _*), s"v$v-",
+              Some(st)) { (gen, _) =>
             ArtifactMeta.write(spark, dir.toString, ViewMetaFile,
-              s"$v|$spec|$newDir")
-            sweepViewStates(dir, Seq(newDir, st))
-            lastViewPublish = Some((newShards.size, 0))
-            true
-          } finally { state.unpersist(); () }
+              s"$v|$spec|$gen")
+          }
+          lastViewPublish = Some((nWritten, 0))
+          true
         case _ => false
       }
     }
@@ -4294,14 +4216,6 @@ class MemoEngine(spark: SparkSession, basePath: String,
     }
   }
 
-  /** Bring EVERY registered view to the live store version in one call —
-    * the post-batch maintenance hook (run after a bulk ingest instead of
-    * letting each view's next reader pay its catch-up). Each view's
-    * recorded spec is decoded from its own meta, so callers don't
-    * restate groupKey/measures; refreshes ride the standard locked path,
-    * each step's delta/feed read O(changed rows). Returns name → refresh
-    * mode ("fresh" / "incremental" / "incremental_rescan" / "rebuild";
-    * "skipped" for a meta this build can't decode). */
   /** One-call POST-INGEST maintenance — the nightly-maintenance shape
     * at scale: bring EVERY engine-maintained artifact current against
     * the live committed version (BM25 postings, the IVF/IVF-PQ
@@ -4327,7 +4241,8 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * watermark stays behind and the next call catches it up. Views
     * refresh (and compact) after the legs. Returns a per-family status
     * report; each family's value names the arm its walk took on this
-    * call, e.g. `current (append)` or `current (rebuild, nlist 64)`. */
+    * call, e.g. `current (append)`, `current (rebuild, nlist 64)` or
+    * `current (retract, j 0.8)`. */
   def maintain(retrainSkew: Option[Double] = None,
       compactFragmentation: Option[Double] = None): Map[String, String] = {
     if (currentVersion.isEmpty) return Map("store" -> "empty")
@@ -4340,11 +4255,10 @@ class MemoEngine(spark: SparkSession, basePath: String,
     // table, not just affected partitions), so it runs only when a
     // driver-side metadata probe says tombstones are actually pending
     val lexicalLeg = () => {
-      val arm = new FamilyArm(lastLexMode = _)
-      ensureLexical(arm)
+      val arm = ensureLexical()
       val pending = graft.ops.Lexical.pendingTombstones(spark, lexDir)
       if (pending) graft.ops.Lexical.compact(spark, lexDir)
-      Seq("lexical" -> s"current (${arm.mode})",
+      Seq("lexical" -> s"current ($arm)",
         "lexical_apply" -> applied(pending))
     }
     // physical tombstone apply on the cell-partitioned families: a
@@ -4352,10 +4266,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
     // tombstones the probes anti-join; applying them rewrites ONLY the
     // affected cells, and is a metadata read when nothing is pending
     val ivfLeg = () => {
-      val arm = new FamilyArm(lastIvfMode = _)
-      val ivf = ensureIvf(arm)
+      val (ivf, arm) = ensureIvf()
       Seq("ivf" -> ivf.map { case (c, cb) =>
-          s"current (${arm.mode}, nlist ${c.length}, " +
+          s"current ($arm, nlist ${c.length}, " +
             s"pq ${cb.length}x${cb(0).length})"
         }.getOrElse("empty")) ++
         ivf.map(_ => "ivf_apply" ->
@@ -4368,13 +4281,11 @@ class MemoEngine(spark: SparkSession, basePath: String,
     // never CREATES the artifact, it brings an existing one current. It
     // rides the signature leg: its walk re-walks the signatures first.
     val signatureLeg = () => {
-      val arm = new FamilyArm(lastSigMode = _)
-      ensureSignatures(arm)
-      ("signatures" -> s"current (${arm.mode})") +:
+      val arm = ensureSignatures()
+      ("signatures" -> s"current ($arm)") +:
         ArtifactMeta.read(spark, dupDir, DupSpecFile)
           .flatMap(_.stripPrefix("j").toDoubleOption).map { j =>
-            dupGroups(j)
-            "dupgroups" -> s"current (j $j)"
+            "dupgroups" -> s"current (${dupGroupsArm(j)._2}, j $j)"
           }.toSeq
     }
     val b = scala.collection.mutable.LinkedHashMap.empty[String, String]
@@ -4394,6 +4305,14 @@ class MemoEngine(spark: SparkSession, basePath: String,
     b.toMap
   }
 
+  /** Bring EVERY registered view to the live store version in one call —
+    * the post-batch maintenance hook (run after a bulk ingest instead of
+    * letting each view's next reader pay its catch-up). Each view's
+    * recorded spec is decoded from its own meta, so callers don't
+    * restate groupKey/measures; refreshes ride the standard locked path,
+    * each step's delta/feed read O(changed rows). Returns name → refresh
+    * mode ("fresh" / "incremental" / "incremental_rescan" / "rebuild";
+    * "skipped" for a meta this build can't decode). */
   def refreshViews(): Map[String, String] =
     views.map { name =>
       val decoded = ArtifactMeta

@@ -1977,6 +1977,13 @@ class MemoEngineSpec extends SparkTestBase {
     // maintain walks the REGISTERED threshold (the recorded spec)
     val report = engine.maintain()
     assert(report.get("dupgroups").exists(_.contains("0.5")), report)
+    assert(report.get("dupgroups").contains("current (fresh, j 0.5)"),
+      report)
+    // the report names the arm the labeling walk took on THIS call
+    engine.save(s"---\nbody: ${clusterBody(5)}\n")
+    val report2 = engine.maintain()
+    assert(report2.get("dupgroups").contains("current (append, j 0.5)"),
+      report2)
     engine.clean()
   }
 
@@ -2156,6 +2163,109 @@ class MemoEngineSpec extends SparkTestBase {
     filesApp.foreach { case (f, m) =>
       if (filesRet.contains(f))
         assert(filesRet(f) == m, s"retract fold rewrote prior file $f")
+    }
+    engine.clean()
+  }
+
+  test("dupGroups shard-level sweep: a superseded label shard inside a " +
+      "KEPT generation falls once past the TTL, while referenced shards " +
+      "survive and the labeling stays exact") {
+    import org.apache.spark.sql.functions.col
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("memo_lblswp").toString
+    val db = s"$dir/db"
+    val engine = new MemoEngine(spark, db, viewShardRows = 4)
+    def body(g: Int) = s"lblsweep$g alpha$g beta$g gamma$g delta$g"
+    engine.save((0 until 48).map(i => s"---\nbody: ${body(i / 3)}\n")
+      .mkString)
+    def oracle(): Map[Long, Long] =
+      graft.ops.Dedup.nearDupClusters(
+          engine.records.select(col("id"), col("body")), "id", "body")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def labels(): Map[Long, Long] = engine.dupGroups().collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val root = java.nio.file.Paths.get(db).resolve("_dupgroups")
+    def live(): String = graft.ops.ArtifactMeta.read(spark, root.toString,
+      "_labels_ptr").get
+    def refs(gen: String): Seq[String] =
+      engine.readShardManifest(root.resolve(gen)).get.map(_.path)
+    assert(labels() == oracle())
+    val gen0 = live()
+    // an append fold joins ONE existing group: it rewrites the shard
+    // holding that group into a new generation, which carries the rest
+    // of gen0 by reference — so gen0 stays, with a superseded shard
+    engine.save(s"---\nbody: ${body(7)}\n")
+    assert(labels() == oracle())
+    assert(engine.lastDupMode.contains("append"), engine.lastDupMode)
+    val refs1 = refs(live())
+    assert(refs1.exists(_.startsWith(s"$gen0/")),
+      s"the fold must carry gen0 shards by reference: $refs1")
+    val superseded = java.nio.file.Files.list(root.resolve(gen0))
+      .iterator().asScala
+      .filter(_.getFileName.toString.startsWith("_shard="))
+      .filterNot(d => refs1.contains(s"$gen0/${d.getFileName}"))
+      .toList
+    assert(superseded.nonEmpty,
+      s"expected a superseded shard in $gen0, manifest: $refs1")
+    // young superseded shards survive the next fold (TTL guard) — then
+    // age them past the TTL and fold again: they must fall, while every
+    // shard the live manifest references stays
+    engine.save(s"---\nbody: ${body(9)}\n")
+    assert(labels() == oracle())
+    superseded.foreach(d => assert(java.nio.file.Files.exists(d),
+      s"a young superseded shard must survive (TTL window): $d"))
+    superseded.foreach(d => java.nio.file.Files.setLastModifiedTime(d,
+      java.nio.file.attribute.FileTime.fromMillis(
+        System.currentTimeMillis() - 3L * 60 * 60 * 1000)))
+    engine.save(s"---\nbody: ${body(11)}\n")
+    assert(labels() == oracle())
+    superseded.foreach(d => assert(!java.nio.file.Files.exists(d),
+      s"an aged superseded shard must be swept: $d"))
+    refs(live()).foreach(rel =>
+      assert(java.nio.file.Files.isDirectory(root.resolve(rel)),
+        s"referenced shard $rel must survive the sweep"))
+    engine.clean()
+  }
+
+  test("retract journal, every family: a live journal refuses the fold " +
+      "for postings, ANN and signatures alike — the rebuild sweeps it, " +
+      "and the next delete patch retracts again") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    val (engine, db) = freshEngine()
+    engine.save((0 until 24).map(i =>
+      s"---\nbody: journal corpus doc $i about topic${i % 6} and " +
+        s"facet${i % 4}\n").mkString)
+    // (artifact dir, the door that walks it, the family's arm seam)
+    val families = Seq[(String, () => Unit, () => Option[String])](
+      ("_lexical", () => { engine.hybridRecall("topic1 facet2", k = 3)
+        .collect(); () }, () => engine.lastLexMode),
+      ("_ann", () => { engine.annRecall("journal corpus doc 3", k = 3)
+        .collect(); () }, () => engine.lastIvfMode),
+      ("_minhash", () => { engine.admitNew(Seq((900L, "a unique zebra"))
+        .toDF("id", "body")).collect(); () }, () => engine.lastSigMode))
+    families.foreach(_._2())
+    var commit = 0L
+    def removeOne(id: Long): Unit = {
+      engine.applyChanges(Seq((id, "removed", "", Map.empty[String, String]))
+        .toDF("id", "change", "body", "metadata")
+        .withColumn("commit_version", lit(commit)))
+      commit += 1
+    }
+    var victim = 0L
+    families.foreach { case (fam, door, seam) =>
+      // a crashed prior fold: the journal outlives its fold
+      graft.ops.ArtifactMeta.write(spark, s"$db/$fam", "_retract_journal",
+        "99")
+      removeOne(victim); victim += 1
+      door()
+      assert(seam().contains("rebuild"), s"$fam: ${seam()}")
+      assert(graft.ops.ArtifactMeta.read(spark, s"$db/$fam",
+          "_retract_journal").isEmpty,
+        s"$fam: the rebuild must sweep the crashed fold's journal")
+      removeOne(victim); victim += 1
+      door()
+      assert(seam().contains("retract"), s"$fam: ${seam()}")
     }
     engine.clean()
   }
