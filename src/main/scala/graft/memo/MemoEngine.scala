@@ -92,8 +92,8 @@ class MemoEngine(spark: SparkSession, basePath: String,
 
   /** Manifests are PREPARED in the staging dir but name the FINAL version
     * paths — they only have to be correct once the staging dir is promoted
-    * to v`v` by [[finalizeCommit]]'s rename. */
-  private def writeManifest(staging: Path, v: Long, kind: String,
+    * to its version dir by [[finalizeCommit]]'s rename. */
+  private def writeManifest(staging: Path, kind: String,
       segs: Seq[String]): Unit =
     Files.writeString(staging.resolve(s"$kind.manifest"),
       segs.mkString("", "\n", "\n"))
@@ -254,17 +254,23 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * memo lives on the companion (keyed by session + store path) because
     * callers construct a fresh engine handle per query — a per-instance
     * memo would never carry across calls. */
-  private def scanOf(v: Long, kind: String): DataFrame = {
-    val stamp =
-      try Files.getLastModifiedTime(currentFile).toInstant.toString
-      catch { case _: java.io.IOException =>
-        return readSegments(kind, segments(v, kind)) }
-    val memo = MemoEngine.scanMemo
-    if (memo.size > 128) memo.clear() // bound across long version chains
-    memo.computeIfAbsent(
-      (System.identityHashCode(spark).toString, basePath, stamp, v, kind),
-      _ => readSegments(kind, segments(v, kind)))
+  private def scanOf(v: Long, kind: String): DataFrame = incarnation match {
+    case None => readSegments(kind, segments(v, kind))
+    case Some(stamp) =>
+      val memo = MemoEngine.scanMemo
+      if (memo.size > 128) memo.clear() // bound across long version chains
+      memo.computeIfAbsent(
+        (System.identityHashCode(spark).toString, basePath, stamp, v, kind),
+        _ => readSegments(kind, segments(v, kind)))
   }
+
+  /** The CURRENT file's mtime: every pointer swing rewrites it, so a store
+    * dropped and recreated (whose version numbers restart over the same
+    * paths) never shares it with the old incarnation. None when there is
+    * no store. Keys [[scanOf]]'s memo and the max-id memo. */
+  private def incarnation: Option[String] =
+    try Some(Files.getLastModifiedTime(currentFile).toInstant.toString)
+    catch { case _: java.io.IOException => None }
 
   /** Committed segments of `kind` read under the writer's declared
     * schema: every records / index segment is written with exactly that
@@ -443,14 +449,49 @@ class MemoEngine(spark: SparkSession, basePath: String,
     }
   }
 
-  /** Write records (+ derived index) as the next version and publish via
-    * [[finalizeCommit]]. Index is written first (reference write order,
-    * memo_cli.py:448-449), but the promoting rename + pointer swap make
-    * the pair atomic. `expectedPrior` is the live version the caller
-    * derived `newRecords` from — the optimistic-concurrency token: if
-    * another writer commits in between, publication fails with
-    * [[MemoEngine.ConcurrentCommitException]] and the caller's
-    * [[MemoEngine.retryOnConflict]] re-runs the mutation from fresh state.
+  /** The store's one commit protocol — every write arm publishes through
+    * it. It numbers the new version after `expectedPrior`, opens a
+    * private staging dir, runs the arm's segment writes (`write`, which
+    * returns the new version's records and index manifests), then in the
+    * `manifests_finalize` phase writes both manifests, carries the stream
+    * watermark (`mark` overrides it for a committing stream batch) and
+    * publishes by compare-and-swap ([[finalizeCommit]]). `expectedPrior`
+    * is the live version the arm derived its writes from — the
+    * optimistic-concurrency token: if another writer commits in between,
+    * publication fails with [[MemoEngine.ConcurrentCommitException]] and
+    * the caller's [[MemoEngine.retryOnConflict]] re-runs the mutation from
+    * fresh state; a prep failure while the live version moved surfaces
+    * the same way ([[reclassifyRaceCollateral]]). The staging dir is
+    * deleted on every exit (a no-op once promoted). Returns the published
+    * version. */
+  private def publishVersion(expectedPrior: Option[Long],
+      mark: Option[(String, Long)])(
+      write: (Path, Long) => (Seq[String], Seq[String])): Long = {
+    val v = expectedPrior.getOrElse(-1L) + 1
+    val staging = newStaging()
+    try {
+      val (recordSegs, indexSegs) = write(staging, v)
+      commitPhase("manifests_finalize") {
+        writeManifest(staging, "records", recordSegs)
+        writeManifest(staging, "index", indexSegs)
+        carryStreamMarker(staging, mark)
+        finalizeCommit(staging, v, expectedPrior)
+      }
+      v
+    } catch reclassifyRaceCollateral(v, expectedPrior)
+    finally deleteTree(staging) // no-op when promoted
+  }
+
+  /** The manifests of snapshot version `v`: its own dirs, nothing
+    * carried by reference. */
+  private def snapshotSegs(v: Long): (Seq[String], Seq[String]) =
+    (Seq(versionDir(v).resolve("records").toString),
+      Seq(versionDir(v).resolve("index").toString))
+
+  /** Write records (+ derived index) as the next version, a compacting
+    * snapshot published by [[publishVersion]]. Index is written first
+    * (reference write order, memo_cli.py:448-449), but the promoting
+    * rename + pointer swap make the pair atomic.
     *
     * `changedIds` = the ids this mutation touched. When present and a prior
     * version exists, the index is derived INCREMENTALLY: prior index rows
@@ -469,10 +510,8 @@ class MemoEngine(spark: SparkSession, basePath: String,
   private def commit(newRecords: DataFrame,
       expectedPrior: Option[Long],
       changedIds: Option[DataFrame] = None,
-      markBatch: Option[(String, Long)] = None): Long = {
-    val v = expectedPrior.getOrElse(-1L) + 1
-    val staging = newStaging()
-    try {
+      markBatch: Option[(String, Long)] = None): Long =
+    publishVersion(expectedPrior, markBatch) { (staging, v) =>
       val recs = newRecords.select(col("id"), col("body"), col("metadata"))
       val embedded = (changedIds match {
         case Some(ids) if expectedPrior.isDefined =>
@@ -491,16 +530,8 @@ class MemoEngine(spark: SparkSession, basePath: String,
           writeIdRange(staging.resolve("records"))
         }, () => embedded.write.mode("overwrite")
           .parquet(staging.resolve("index").toString))
-      writeManifest(staging, v, "records",
-        Seq(versionDir(v).resolve("records").toString))
-      writeManifest(staging, v, "index",
-        Seq(versionDir(v).resolve("index").toString))
-      carryStreamMarker(staging, markBatch)
-      finalizeCommit(staging, v, expectedPrior)
-      v
-    } catch reclassifyRaceCollateral(v, expectedPrior)
-    finally deleteTree(staging) // no-op when promoted
-  }
+      snapshotSegs(v)
+    }
 
   /** Prep failures CAUSED by losing the race (e.g. the winner's vacuum
     * reclaimed segments this mutation was still reading) must surface as
@@ -523,18 +554,15 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * whole YAML file, memo_cli.py:436-448 — this path beats it on both).
     * Falls back to a compacting full commit when the chain reaches
     * `maxSegments`, bounding read fan-in. `expectedPrior` = the live
-    * version the batch was minted against (see [[commit]]). */
+    * version the batch was minted against (see [[publishVersion]]). */
   private def commitAppend(batch: DataFrame, batchIds: DataFrame,
-      expectedPrior: Long,
-      markBatch: Option[(String, Long)] = None,
-      batchRows: Option[Long] = None): Long = {
+      expectedPrior: Long, markBatch: Option[(String, Long)],
+      batchRows: Option[Long]): Long = {
     if (segments(expectedPrior, "records").size >= maxSegments)
       return commit(records.unionByName(batch), Some(expectedPrior),
         changedIds = Some(batchIds), // compact: reuses index, embeds batch only
         markBatch = markBatch)
-    val v = expectedPrior + 1
-    val staging = newStaging()
-    try {
+    publishVersion(Some(expectedPrior), markBatch) { (staging, v) =>
       val recs = batch.select(col("id"), col("body"), col("metadata"))
       // The segment writes are independent (guide §2.6: overlap
       // independent jobs). When the caller knows the batch row count
@@ -554,17 +582,17 @@ class MemoEngine(spark: SparkSession, basePath: String,
           if (parts > 1) recs.repartition(parts, col("id")) else recs
         case None => recs
       }
-      val indexLeg = () => MemoEngine.commitPhase("index_write") {
+      val indexLeg = () => commitPhase("index_write") {
         embedInput.filter(!isBlank(col("body")))
           .select(col("id"), embedText(col("body")).as("embedding"))
           .write.mode("overwrite")
           .parquet(staging.resolve("index").toString)
       }
-      val recordsLeg = () => MemoEngine.commitPhase("records_write") {
+      val recordsLeg = () => commitPhase("records_write") {
         recs.write.mode("overwrite")
           .parquet(staging.resolve("records").toString)
       }
-      val statsLeg = () => MemoEngine.commitPhase("idrange_stats") {
+      val statsLeg = () => commitPhase("idrange_stats") {
         writeIdRange(staging.resolve("records"),
           source = if (batchRows.isDefined) Some(recs) else None)
       }
@@ -572,19 +600,11 @@ class MemoEngine(spark: SparkSession, basePath: String,
         MemoEngine.legs(spark)(statsLeg, recordsLeg, indexLeg)
       else
         MemoEngine.legs(spark)(() => { recordsLeg(); statsLeg() }, indexLeg)
-      MemoEngine.commitPhase("manifests_finalize") {
-        writeManifest(staging, v, "records",
-          segments(expectedPrior, "records") :+
-            versionDir(v).resolve("records").toString)
-        writeManifest(staging, v, "index",
-          segments(expectedPrior, "index") :+
-            versionDir(v).resolve("index").toString)
-        carryStreamMarker(staging, markBatch)
-        finalizeCommit(staging, v, Some(expectedPrior))
-      }
-      v
-    } catch reclassifyRaceCollateral(v, Some(expectedPrior))
-    finally deleteTree(staging) // no-op when promoted
+      (segments(expectedPrior, "records") :+
+          versionDir(v).resolve("records").toString,
+        segments(expectedPrior, "index") :+
+          versionDir(v).resolve("index").toString)
+    }
   }
 
   private def swingPointer(v: Long): Unit = {
@@ -607,6 +627,24 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * deterministically instead of relying on thread timing. Noop in
     * production. */
   private[memo] var beforePublishHook: () => Unit = () => ()
+
+  /** Timing seam of this engine's write path: when set, called with
+    * (phase, millis) per timed phase — every commit's
+    * `manifests_finalize` ([[publishVersion]]), the append arm's
+    * `idrange_stats`, `records_write` and `index_write`
+    * ([[commitAppend]]), streamIngest's `mint_shape`, and
+    * [[applyChanges]]' `collapse`, `probe` and `commit`. The legs of one
+    * commit report from pool threads, so a hook must be thread-safe.
+    * CommitPhaseHookSpec pins the commit phases. Null in production: the
+    * wrapper is a straight pass-through. */
+  private[graft] var commitPhaseHook: (String, Double) => Unit = null
+
+  @inline private def commitPhase[A](phase: String)(f: => A): A =
+    if (commitPhaseHook == null) f
+    else {
+      val t0 = System.nanoTime()
+      try f finally commitPhaseHook(phase, (System.nanoTime() - t0) / 1e6)
+    }
 
   /** Publish a prepared staging directory as version `v` — the
     * compare-and-swap at the heart of the multi-writer contract. Under the
@@ -645,6 +683,28 @@ class MemoEngine(spark: SparkSession, basePath: String,
       finally walk.close()
     }
 
+  /** The arm choice every ingest door shares. A batch its caller PROVED
+    * append-only (every id fresh) lands as an append delta
+    * ([[commitAppend]], O(batch)). Otherwise the SEGMENT-PRUNED patch
+    * ([[patchMerge]]) rewrites only the segments holding the batch's ids,
+    * and where it cannot prove that scope the batch merges into a full
+    * compacting rewrite (latest wins by id). The index is derived
+    * incrementally either way: batch rows embed, nothing else. With no
+    * prior version the batch IS the store and commits as it is. `ids` =
+    * every id the batch touches (removes included), `batch` = the (id,
+    * body, metadata) rows that land. Returns the published version. */
+  private def upsert(v0: Option[Long], batch: DataFrame, ids: DataFrame,
+      appendOnly: Boolean, mark: Option[(String, Long)] = None,
+      batchRows: Option[Long] = None): Long = v0 match {
+    case None => commit(batch, None, markBatch = mark)
+    case Some(prior) if appendOnly =>
+      commitAppend(batch, ids, prior, mark, batchRows)
+    case Some(prior) =>
+      patchMerge(prior, ids, batch, mark).getOrElse(commit(
+        records.join(ids, Seq("id"), "left_anti").unionByName(batch),
+        v0, changedIds = Some(ids), markBatch = mark))
+  }
+
   /** Save a YAML batch: entries with `id` overwrite (must exist — whole
     * batch aborts otherwise, memo_cli.py:424-433); entries without append
     * with dense ids. Returns (id, note) per entry in input order.
@@ -662,50 +722,28 @@ class MemoEngine(spark: SparkSession, basePath: String,
       val v0 = currentVersion // the optimistic-concurrency token
       // Scale note: only driver-side state here is the (small) input
       // batch. Override validation probes the store for JUST the batch's
-      // ids; the max id comes from an aggregate — never a full id collect.
-      // Both are column-pruned id scans, so the live store is NOT pinned:
-      // a cache here would materialize every column (bodies included) of
-      // the whole corpus per save.
-      val existing = records
+      // ids; the max id comes from the max-id memo — never a full id
+      // collect. Both are column-pruned id scans, so the live store is
+      // NOT pinned: a cache here would materialize every column (bodies
+      // included) of the whole corpus per save.
       val overrideIds = entries.collect { case (Some(id), _, _) => id }
       if (overrideIds.nonEmpty) {
-        val found = existing.select("id")
+        val found = records.select("id")
           .filter(col("id").isin(overrideIds: _*)).as[Long].collect().toSet
         overrideIds.find(!found.contains(_)).foreach { id =>
           // message mirrors memo_cli.py:427
           throw new IllegalArgumentException(s"override id $id does not exist")
         }
       }
-      val maxId = existing.agg(max(col("id"))).collect()(0) match {
-        case r if r.isNullAt(0) => -1L
-        case r => r.getLong(0)
-      }
-      var nextId = maxId
+      var nextId = v0.fold(-1L)(storeMaxId(_))
       val resolved = entries.map {
         case (Some(id), body, meta) => (id, body, meta)
         case (None, body, meta) => nextId += 1; (nextId, body, meta)
       }
       val batchDf = resolved.toDF("id", "body", "metadata")
-      val idsDf = batchDf.select("id")
-      (v0, overrideIds.isEmpty) match {
-        case (Some(prior), true) =>
-          // pure append: new segment + manifest extension, O(batch) write
-          commitAppend(batchDf, idsDf, expectedPrior = prior)
-        case _ =>
-          // overwrite (or first save). A chain whose segments carry id
-          // ranges takes the SEGMENT-PRUNED patch — only the segments
-          // holding overwritten ids rewrite, everything else rides by
-          // reference ([[patchMerge]]); otherwise a fresh compacting
-          // snapshot for latest-wins reads. The index is derived
-          // incrementally either way (batch rows embed, nothing else).
-          val patched = v0.exists(prior =>
-            patchMerge(prior, idsDf, batchDf, mark = None))
-          if (!patched) {
-            val merged = existing.join(idsDf, Seq("id"), "left_anti")
-              .unionByName(batchDf)
-            commit(merged, v0, changedIds = Some(idsDf))
-          }
-      }
+      // overrides name existing ids, so the last minted id is the new max
+      noteMaxId(upsert(v0, batchDf, batchDf.select("id"),
+        appendOnly = overrideIds.isEmpty), nextId)
       // the reference echoes the FULL body, newlines and all
       // (memo_cli.py:430, 440: f"Memorized: '{note}' ...")
       resolved.map { case (id, body, _) => (id, body) }
@@ -735,7 +773,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
         .select("id").limit(1).collect()
       if (missing.nonEmpty) throw new IllegalArgumentException(
         s"override id ${missing(0).getLong(0)} does not exist") // memo_cli.py:427
-      val maxId = maxRecordId
+      val maxId = v0.fold(-1L)(storeMaxId(_))
       val hasOverrides = overrides.limit(1).count() > 0
       // fresh ids: dense, minted in input order (file, off, seq) —
       // distributed via sort + zipWithIndex, never a single-partition window
@@ -747,19 +785,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
         }
       val mintedDf = spark.createDataFrame(minted, YamlIO.saveEntrySchema)
       val resolved = overrides.unionByName(mintedDf).cache()
-      val batchDf = resolved.select("id", "body", "metadata")
-      val idsDf = resolved.select("id")
       try {
-        (v0, hasOverrides) match {
-          case (Some(prior), false) =>
-            commitAppend(batchDf, idsDf, expectedPrior = prior)
-          case _ => // segment-pruned when ranges prove the scope (see save)
-            val patched = v0.exists(prior =>
-              patchMerge(prior, idsDf, batchDf, mark = None))
-            if (!patched) commit(
-              records.join(idsDf, Seq("id"), "left_anti").unionByName(batchDf),
-              v0, changedIds = Some(idsDf))
-        }
+        upsert(v0, resolved.select("id", "body", "metadata"),
+          resolved.select("id"), appendOnly = !hasOverrides)
         val echo = resolved.orderBy(col("file"), col("off"), col("seq"))
           .select(col("id"), col("body")).as[(Long, String)]
           .toLocalIterator.asScala
@@ -782,22 +810,34 @@ class MemoEngine(spark: SparkSession, basePath: String,
     }
   }
 
-  /** max(id) over the live records — the dense-mint base. O(chain scan of
-    * one column); the streaming path avoids calling it per batch via
-    * [[mintCache]]. */
-  private def maxRecordId: Long =
-    records.agg(max(col("id"))).collect()(0) match {
-      case r if r.isNullAt(0) => -1L
-      case r => r.getLong(0)
-    }
+  /** The max-id memo: (store [[incarnation]], version, max id). It is the
+    * dense-mint base of [[save]], [[saveFromPath]] and [[streamIngest]],
+    * [[applyChanges]]' disjointness watermark, and the corpus-size gate
+    * of the retract classification. The incarnation in the key keeps a
+    * dropped-and-recreated store, whose versions restart at v0, from
+    * reading the old store's max. A miss costs one column-pruned max(id)
+    * aggregation over the chain AT `v`. A writer that knows the max after
+    * its own commit records it ([[noteMaxId]]), so its next mint costs no
+    * job; every other commit leaves the memo keyed to an older version,
+    * which then misses. `probe` reports a miss as [[applyChanges]]'
+    * `probe` phase. */
+  @volatile private var maxIdMemo: Option[(String, Long, Long)] = None
 
-  /** (live version, max id) as of this engine's last streaming commit —
-    * valid only while the live version is still the one the cache was
-    * advanced to; ANY interleaved commit (this engine or another writer)
-    * bumps the version and forces one recompute, and a stale hit that
-    * slips through is caught by the commit's optimistic verify. Spares a
-    * continuous stream the per-batch O(corpus) max-id scan. */
-  @volatile private var mintCache: Option[(Long, Long)] = None
+  private def storeMaxId(v: Long, probe: Boolean = false): Long = {
+    val stamp = incarnation
+    maxIdMemo match {
+      case Some((s, mv, m)) if stamp.contains(s) && mv == v => m
+      case _ =>
+        def scan = scanOf(v, "records").agg(max(col("id"))).collect()(0)
+        val r = if (probe) commitPhase("probe")(scan) else scan
+        val m = if (r.isNullAt(0)) -1L else r.getLong(0)
+        stamp.foreach(s => maxIdMemo = Some((s, v, m)))
+        m
+    }
+  }
+
+  private def noteMaxId(v: Long, m: Long): Unit =
+    incarnation.foreach(s => maxIdMemo = Some((s, v, m)))
 
   /** Exactly-once streaming ingestion — attach as a `foreachBatch` sink:
     *
@@ -826,8 +866,8 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * nothing. Expects columns (body STRING[, metadata
     * MAP<STRING,STRING>]). Other writers MAY commit while a stream is
     * attached — the optimistic-concurrency contract above serializes
-    * them; the stream's [[mintCache]] just takes an O(corpus) max-id
-    * rescan on the next batch after a foreign commit. */
+    * them; the stream's mint base ([[storeMaxId]]) just takes an
+    * O(corpus) max-id rescan on the next batch after a foreign commit. */
   def streamSink(lineage: String): (DataFrame, Long) => Unit =
     (batch, batchId) => { streamIngest(batch, batchId, lineage); () }
 
@@ -889,7 +929,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
       // micro-batch sorts in ONE task — no range-sampling job, no
       // 32-reducer exchange, and zipWithIndex's partition-offset job
       // vanishes at one partition — while a bulk batch spreads.
-      val shape = MemoEngine.commitPhase("mint_shape") {
+      val shape = commitPhase("mint_shape") {
         cleaned.agg(count(lit(1)), sum(octet_length(col("body"))))
           .collect()(0)
       }
@@ -903,10 +943,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
           math.max(1L, math.min(cap.toLong,
             bytes / MemoEngine.MintBytesPerPart + 1)).toInt
         }
-        val maxId = mintCache match {
-          case Some((ver, m)) if v0.contains(ver) => m
-          case _ => maxRecordId
-        }
+        val maxId = v0.fold(-1L)(storeMaxId(_))
         // mint in INTERNAL rows (`toRdd` + internalCreateDataFrame): the
         // external-Row round trip decoded every body AND converted every
         // metadata MapData to a Scala Map per row, then re-encoded both —
@@ -933,14 +970,8 @@ class MemoEngine(spark: SparkSession, basePath: String,
           .internalCreateDataFrame(spark, minted, YamlIO.recordSchema)
           .cache()
         try {
-          val v = v0 match {
-            case Some(prior) => commitAppend(batchDf, batchDf.select("id"),
-              expectedPrior = prior, markBatch = Some((lineage, batchId)),
-              batchRows = Some(n))
-            case None => commit(batchDf, v0,
-              markBatch = Some((lineage, batchId)))
-          }
-          mintCache = Some((v, maxId + n))
+          noteMaxId(upsert(v0, batchDf, batchDf.select("id"),
+            appendOnly = true, Some((lineage, batchId)), Some(n)), maxId + n)
           true
         } finally batchDf.unpersist()
       }
@@ -1897,7 +1928,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
         case _: org.apache.spark.sql.AnalysisException => return None
       }
     try {
-      val corpusIds = math.max(maxRecordId + 1, 1L)
+      val corpusIds = math.max(storeMaxId(v) + 1, 1L)
       val liveRows = math.max(liveRowsAt(v).getOrElse(corpusIds), 1L)
       val deadCond = col("change") === "removed" || isBlank(col("body"))
       val addCond = col("change") === "added" && !isBlank(col("body"))
@@ -3353,19 +3384,26 @@ class MemoEngine(spark: SparkSession, basePath: String,
       * accumulate as dead files forever. Any `_shard=*` dir referenced by
       * NO kept manifest falls under the same TTL discipline — a lock-free
       * reader of a kept generation never reads an unreferenced shard, and
-      * older-generation readers get the dir-level sweep's window. */
-    def sweep(keep: Seq[String]): Unit = {
-      val refs = keep.map(st => st -> readShardManifest(dir.resolve(st))
-        .toSeq.flatten.map(_.path))
-      val keepDirs = refs.flatMap { case (st, ps) =>
-        st +: ps.map(_.split('/').head) }.toSet
-      val refShards = refs.flatMap(_._2).map(dir.resolve(_).toString).toSet
+      * older-generation readers get the dir-level sweep's window.
+      *
+      * `ptr` is the live pointer file when the sweep runs apart from a
+      * publish ([[vacuum]]) and so keeps only the live generation: a
+      * lock-free reader may hold the generation before it until the
+      * pointer has aged past the same TTL, so a fresher pointer skips the
+      * sweep (the publish that swung it has just swept). */
+    def sweep(keep: Seq[String], ptr: Option[Path] = None): Unit = {
       val probe = dir.resolve(".sweep_probe")
       Files.writeString(probe, "")
       val fsNow = Files.getLastModifiedTime(probe).toMillis
       Files.deleteIfExists(probe)
       val cutoff = fsNow - MemoEngine.DefaultStagingTtlMs
       def aged(p: Path) = Files.getLastModifiedTime(p).toMillis < cutoff
+      if (ptr.exists(p => !aged(p))) return
+      val refs = keep.map(st => st -> readShardManifest(dir.resolve(st))
+        .toSeq.flatten.map(_.path))
+      val keepDirs = refs.flatMap { case (st, ps) =>
+        st +: ps.map(_.split('/').head) }.toSet
+      val refShards = refs.flatMap(_._2).map(dir.resolve(_).toString).toSet
       def gens = listDir(dir).filter(p => Files.isDirectory(p) &&
         p.getFileName.toString.startsWith(prefix))
       gens.filterNot(p => keepDirs.contains(p.getFileName.toString))
@@ -4477,9 +4515,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
     val v0 = currentVersion
     val recs = records
     val idx = index
-    val nv = v0.getOrElse(-1L) + 1
-    val staging = newStaging()
-    try {
+    publishVersion(v0, None) { (staging, nv) =>
       def keyCol(k: String) = metaPyStr(element_at(col("metadata"), k))
       // the range partitioner makes each partition a contiguous
       // interval of the sort value — the cluster ordinal IS the
@@ -4563,15 +4599,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
       }
       deleteTree(rcDir)
       deleteTree(staging.resolve("ic"))
-      writeManifest(staging, nv, "records",
-        clusters.map(c => versionDir(nv).resolve(s"records_c$c").toString))
-      writeManifest(staging, nv, "index",
+      (clusters.map(c => versionDir(nv).resolve(s"records_c$c").toString),
         clusters.map(c => versionDir(nv).resolve(s"index_c$c").toString))
-      carryStreamMarker(staging, None)
-      finalizeCommit(staging, nv, v0)
-      nv
-    } catch reclassifyRaceCollateral(nv, v0)
-    finally deleteTree(staging) // no-op when promoted
+    }
   }
 
   /** Roll the live table back to retained version `v` by COMMITTING its
@@ -4586,25 +4616,15 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * Fails loudly if `v` was vacuumed past ([[recordsAt]]). Returns the
     * new live version. */
   def restore(v: Long): Long = MemoEngine.retryOnConflict {
-    val v0 = currentVersion
     val recs = recordsAt(v)
     val idx = indexAt(v)
-    val nv = v0.getOrElse(-1L) + 1
-    val staging = newStaging()
-    try {
+    publishVersion(currentVersion, None) { (staging, nv) =>
       idx.write.mode("overwrite").parquet(staging.resolve("index").toString)
       recs.write.mode("overwrite")
         .parquet(staging.resolve("records").toString)
       writeIdRange(staging.resolve("records")) // patch/skip sidecars
-      writeManifest(staging, nv, "records",
-        Seq(versionDir(nv).resolve("records").toString))
-      writeManifest(staging, nv, "index",
-        Seq(versionDir(nv).resolve("index").toString))
-      carryStreamMarker(staging, None)
-      finalizeCommit(staging, nv, v0)
-      nv
-    } catch reclassifyRaceCollateral(nv, v0)
-    finally deleteTree(staging) // no-op when promoted
+      snapshotSegs(nv)
+    }
   }
 
   /** Branch this store: materialize version `v` (default live) as a brand
@@ -4668,8 +4688,10 @@ class MemoEngine(spark: SparkSession, basePath: String,
       throw new IllegalArgumentException(
         s"target $targetBase already holds a store (version " +
         s"${clone.currentVersion.get}) — clone refuses to overwrite")
-    val staging = clone.newStaging()
-    try {
+    // published with no prior version: no stream watermark to carry
+    clone.publishVersion(None, None) { (staging, cv) =>
+      Files.writeString(staging.resolve("cloned_from"),
+        s"$basePath@v$v${if (deep) " deep" else ""}\n")
       if (deep) {
         recordsAt(v).write.mode("overwrite")
           .parquet(staging.resolve("records").toString)
@@ -4678,19 +4700,10 @@ class MemoEngine(spark: SparkSession, basePath: String,
         clone.writeIdRange(staging.resolve("records"))
         indexAt(v).write.mode("overwrite")
           .parquet(staging.resolve("index").toString)
-        clone.writeManifest(staging, 0, "records",
-          Seq(clone.versionDir(0).resolve("records").toString))
-        clone.writeManifest(staging, 0, "index",
-          Seq(clone.versionDir(0).resolve("index").toString))
-      } else {
-        clone.writeManifest(staging, 0, "records", segments(v, "records"))
-        clone.writeManifest(staging, 0, "index", segments(v, "index"))
-      }
-      Files.writeString(staging.resolve("cloned_from"),
-        s"$basePath@v$v${if (deep) " deep" else ""}\n")
-      clone.finalizeCommit(staging, 0, None)
-      clone
-    } finally deleteTree(staging) // no-op when promoted
+        clone.snapshotSegs(cv)
+      } else (segments(v, "records"), segments(v, "index"))
+    }
+    clone
   }
 
   /** Provenance of a cloned store: `source@vN [deep]`, as long as the v0
@@ -4872,10 +4885,10 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * mints ascending ids, a follower is apply-only and preserves them)
     * makes `min upsert id > this store's max id` a sound proof that no
     * upsert can collide — no join against the id chain at all. The max
-    * id is memoized on the driver keyed by the version it was read at
-    * (self-invalidating: any foreign commit changes the version), so a
-    * long-lived follower pays the one column-pruned max(id) scan once
-    * and never again while it is the only writer. Batches that fail the
+    * id comes from the store's max-id memo ([[storeMaxId]]; any foreign
+    * commit invalidates it), so a long-lived follower pays the one
+    * column-pruned max(id) scan once and never again while it is the
+    * only writer. Batches that fail the
     * watermark test fall back to the aggregated overlap probe; anything
     * with updates/removes (or a replayed add whose id already landed)
     * takes the full-outer MERGE rewrite, the same cost class as a Delta
@@ -4915,10 +4928,10 @@ class MemoEngine(spark: SparkSession, basePath: String,
       // id (an update chain folded into one trigger) pays the window,
       // and its stats are recomputed post-collapse because per-id
       // history folding changes them.
-      var stats = timedPhase("collapse") { armStats(raw) }
+      var stats = commitPhase("collapse") { armStats(raw) }
       val latest =
         if (stats.getLong(0) == stats.getLong(1)) raw
-        else timedPhase("collapse") {
+        else commitPhase("collapse") {
           windowed = raw
             .withColumn("_rn", row_number().over(
               Window.partitionBy(col("id"))
@@ -4939,37 +4952,20 @@ class MemoEngine(spark: SparkSession, basePath: String,
       // all-`added` batch can be adds-only — update/remove batches go
       // straight to the merge arm without paying the id-chain probe (or
       // even the max-id priming scan) the watermark test would cost
-      val addsOnly = nNonAdded == 0L && v0.exists { prior =>
-        minUp > storeMaxId(prior) || timedPhase("probe") {
-          upserts.join(records.select("id"), Seq("id"), "left_semi").isEmpty
-        }
-      }
-      timedPhase("commit") {
-        v0 match {
-          case Some(prior) if addsOnly =>
-            // arm stats already counted the batch and `upserts` derives
-            // from the pinned feed cache — the three-leg parallel commit
-            // (embed spread + stats-from-frame) applies as in streamIngest
-            val nv = commitAppend(upserts, upserts.select("id"), prior,
-              mark, batchRows = Some(stats.getLong(0)))
-            // advance the memo through our own commit when the prior max
-            // is known; otherwise drop it and let the next batch re-prime
-            maxIdMemo = maxIdMemo match {
-              case Some((`prior`, m)) => Some((nv, math.max(m, maxUp)))
-              case _ => None
-            }
-          case _ =>
-            val patched = v0.exists(prior =>
-              patchMerge(prior, latest.select("id"), upserts, mark))
-            if (!patched) {
-              val merged = records
-                .join(latest.select("id"), Seq("id"), "left_anti")
-                .unionByName(upserts)
-              commit(merged, v0, changedIds = Some(latest.select("id")),
-                markBatch = mark)
-            }
-            maxIdMemo = None // a rewrite can move the max either way
-        }
+      val priorMax =
+        v0.filter(_ => nNonAdded == 0L).map(storeMaxId(_, probe = true))
+      val addsOnly = priorMax.exists(m => minUp > m || commitPhase("probe") {
+        upserts.join(records.select("id"), Seq("id"), "left_semi").isEmpty
+      })
+      commitPhase("commit") {
+        // arm stats already counted the batch and `upserts` derives from
+        // the pinned feed cache — the append arm's three-leg parallel
+        // commit (embed spread + stats-from-frame) applies as in
+        // streamIngest
+        val nv = upsert(v0, upserts, latest.select("id"), addsOnly, mark,
+          Some(stats.getLong(0)))
+        // only an append knows its max: a merge's removes can lower it
+        if (addsOnly) noteMaxId(nv, math.max(priorMax.get, maxUp))
       }
       true
     } finally {
@@ -4997,7 +4993,8 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * untouched index segments ride along by reference, so no unchanged
     * row re-embeds and no unchanged embedding rewrites.
     *
-    * Returns false — caller falls back to the full-rewrite commit — when
+    * Returns the published version, or None — [[upsert]] falls back to
+    * the full-rewrite commit — when
     * the pruning can't be proven or wouldn't pay: a segment without a
     * range sidecar (pre-sidecar store), records/index manifests that
     * don't pair positionally, every segment touched anyway, or a chain
@@ -5009,13 +5006,13 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * them; the test stays over-approximate — sound, at worst an extra
     * segment rewritten. */
   private def patchMerge(prior: Long, batchIds: DataFrame, upserts: DataFrame,
-      mark: Option[(String, Long)]): Boolean = {
+      mark: Option[(String, Long)]): Option[Long] = {
     val segsR = segments(prior, "records")
     val segsI = segments(prior, "index")
-    if (segsR.size != segsI.size || segsR.size <= 1) return false
-    if (segsR.size >= maxSegments) return false // fold via full rewrite
+    if (segsR.size != segsI.size || segsR.size <= 1) return None
+    if (segsR.size >= maxSegments) return None // fold via full rewrite
     val ranges = segsR.map(readIdRanges)
-    if (ranges.exists(_.isEmpty)) return false
+    if (ranges.exists(_.isEmpty)) return None
     val segRanges = ranges.map(_.get)
     def inSeg(rs: Seq[(Long, Long)]) =
       if (rs.isEmpty) lit(false)
@@ -5033,7 +5030,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
           sum(when(inSeg(rs), 1L).otherwise(0L)).as(s"_t$i")
         }): _*).collect()(0)
     val touched = segRanges.indices.filter(i => touchRow.getLong(i + 2) > 0L)
-    if (touched.isEmpty || touched.size == segsR.size) return false
+    if (touched.isEmpty || touched.size == segsR.size) return None
     val touchedSet = touched.toSet
     val keep = segsR.indices.filterNot(touchedSet.contains)
     // the patch segment's id set ⊆ (touched segments' intervals) ∪ (the
@@ -5044,11 +5041,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
     val patchRanges = mergeRanges(touched.flatMap(segRanges) ++
       (if (touchRow.isNullAt(0)) Nil
        else Seq((touchRow.getLong(0), touchRow.getLong(1)))))
-    val v = prior + 1
-    val staging = newStaging()
     val oldTouched = readSegments("records", touched.map(segsR))
       .cache() // read by the survivors write AND the feed materialization
-    try {
+    try Some(publishVersion(Some(prior), mark) { (staging, v) =>
       oldTouched
         .join(batchIds, Seq("id"), "left_anti")
         .unionByName(upserts)
@@ -5086,47 +5081,11 @@ class MemoEngine(spark: SparkSession, basePath: String,
           .select(col("id"), embedText(col("body")).as("embedding")))
         .write.mode("overwrite")
         .parquet(staging.resolve("index").toString)
-      writeManifest(staging, v, "records",
-        keep.map(segsR) :+ versionDir(v).resolve("records").toString)
-      writeManifest(staging, v, "index",
+      (keep.map(segsR) :+ versionDir(v).resolve("records").toString,
         keep.map(segsI) :+ versionDir(v).resolve("index").toString)
-      carryStreamMarker(staging, mark)
-      finalizeCommit(staging, v, Some(prior))
-      true
-    } catch reclassifyRaceCollateral(v, Some(prior))
-    finally {
-      oldTouched.unpersist()
-      deleteTree(staging) // no-op when promoted
-    }
+    })
+    finally oldTouched.unpersist()
   }
-
-  /** Driver-memoized max id of the records chain, keyed by the store
-    * version it was read at — a foreign commit moves the version and the
-    * memo self-invalidates. Read cost on miss is one column-pruned
-    * max(id) aggregation over the chain; every hit is free. */
-  @volatile private var maxIdMemo: Option[(Long, Long)] = None
-  private def storeMaxId(atVersion: Long): Long = maxIdMemo match {
-    case Some((v, m)) if v == atVersion => m
-    case _ =>
-      val r = timedPhase("probe") { records.agg(max(col("id"))).collect()(0) }
-      val m = if (r.isNullAt(0)) -1L else r.getLong(0)
-      maxIdMemo = Some((atVersion, m))
-      m
-  }
-
-  /** Profiling seam for [[applyChanges]]: when set, called with
-    * (phase, seconds) for each timed phase — collapse (feed read + arm
-    * stats, plus the row_number window only when the batch revisits an
-    * id), probe (id-chain work when the watermark can't prove
-    * disjointness), commit (the chosen arm's write path). Null in
-    * production: the timing wrapper is a straight pass-through. */
-  private[graft] var cdcPhaseHook: (String, Double) => Unit = null
-  @inline private def timedPhase[A](phase: String)(f: => A): A =
-    if (cdcPhaseHook == null) f
-    else {
-      val t0 = System.nanoTime()
-      try f finally cdcPhaseHook(phase, (System.nanoTime() - t0) / 1e9)
-    }
 
   /** First commit version still present in the CDC log at `logDir` —
     * 0 until [[pruneChangeLog]] raises it. A log whose earliest is > 0
@@ -5343,10 +5302,19 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * retries. The cutoff is derived from the FILESYSTEM's clock (a
     * just-touched probe file's mtime), not the caller's wall clock, so
     * clock skew between vacuum's host and the shared filesystem can
-    * never eat into a live writer's TTL budget. */
+    * never eat into a live writer's TTL budget.
+    *
+    * After the version pass, every grid-sharded artifact (each registered
+    * view's state and the dup labeling) runs its [[ShardedArtifact.sweep]]
+    * against its live pointer, under that artifact's build lock and
+    * outside the commit lock, once that pointer has aged past the TTL: a
+    * publish sweeps only when it runs, so an artifact that stops folding
+    * would otherwise keep its superseded shards and retired generations
+    * for good. That sweep keeps its own TTL (the staging default),
+    * whatever `stagingTtlMs` says. */
   def vacuum(stagingTtlMs: Long = MemoEngine.DefaultStagingTtlMs,
-      retainVersions: Int = 1, protectViews: Boolean = false): Int =
-    MemoEngine.withCommitLock(base) {
+      retainVersions: Int = 1, protectViews: Boolean = false): Int = {
+    val reclaimed = MemoEngine.withCommitLock(base) {
       if (Files.isDirectory(stagingRoot)) {
         // "now" in the same clock newestMtime reads — see TTL ASSUMPTION
         val probe = stagingRoot.resolve(".vacuum_probe")
@@ -5398,6 +5366,22 @@ class MemoEngine(spark: SparkSession, basePath: String,
           stale.size
       }
     }
+    views.foreach { n =>
+      val dir = viewDir(n).toString
+      ArtifactMeta.withBuildLock(spark, dir) {
+        ArtifactMeta.read(spark, dir, ViewMetaFile).map(_.split('|'))
+          .collect { case Array(_, _, st) => viewShards(n).sweep(Seq(st),
+            Some(viewDir(n).resolve(ViewMetaFile))) }
+      }
+    }
+    if (Files.isDirectory(Paths.get(dupDir)))
+      ArtifactMeta.withBuildLock(spark, dupDir) {
+        ArtifactMeta.read(spark, dupDir, DupLabelsPtr)
+          .foreach(ptr => dupShards.sweep(Seq(ptr),
+            Some(Paths.get(dupDir, DupLabelsPtr))))
+      }
+    reclaimed
+  }
 
   private def listDir(dir: Path): Seq[Path] = {
     val s = Files.list(dir)
@@ -5467,15 +5451,6 @@ class MemoEngine(spark: SparkSession, basePath: String,
 }
 
 object MemoEngine {
-  /** Timing seam for the append commit path: when set, called with
-    * (phase, millis) per timed phase of [[MemoEngine.commitAppend]]
-    * (`idrange_stats`, `records_write`, `index_write`,
-    * `manifests_finalize`) and of streamIngest (`mint_shape`). The legs
-    * of one commit report from pool threads, so a hook must be
-    * thread-safe. Process-global; CommitPhaseHookSpec pins the phase
-    * list. Null in production: the wrapper is a straight pass-through. */
-  private[graft] var commitPhaseHook: (String, Double) => Unit = null
-
   /** Process-wide scan-plan memo (see the instance [[MemoEngine.scanOf]]
     * scaladoc): (session UUID, store path, CURRENT mtime, version, kind)
     * → the resolved parquet relation. Logical plans only — never data. */
@@ -5529,12 +5504,6 @@ object MemoEngine {
     if (failure != null) throw failure
     outs.flatten
   }
-  @inline private[memo] def commitPhase[A](phase: String)(f: => A): A =
-    if (commitPhaseHook == null) f
-    else {
-      val t0 = System.nanoTime()
-      try f finally commitPhaseHook(phase, (System.nanoTime() - t0) / 1e6)
-    }
 
   /** Target body bytes per mint-sort partition (streamIngest): the sort
     * width is `batchBytes / this + 1`, capped at the session shuffle

@@ -147,13 +147,11 @@ object StreamBench {
     * parquet segment writes, manifest extension, and the CURRENT pointer
     * swing. A regression in the commit path (e.g. an accidental full
     * rewrite instead of an append delta) shows up only here. */
-  def ingestEps(spark: SparkSession, n: Int, nBatches: Int = 8,
-      metaStats: Boolean = true, feeds: Boolean = true): Double = {
+  def ingestEps(spark: SparkSession, n: Int, nBatches: Int = 8): Double = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = java.nio.file.Files.createTempDirectory("graft_stream_ingest")
-    val engine = new graft.memo.MemoEngine(spark, base.resolve("db").toString,
-      materializeFeeds = feeds, metaStatsSidecars = metaStats)
+    val engine = new graft.memo.MemoEngine(spark, base.resolve("db").toString)
     val input = MemoryStream[BenchEvent]
     val q = input.toDF()
       .select(org.apache.spark.sql.functions.concat_ws(" ",

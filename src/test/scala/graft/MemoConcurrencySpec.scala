@@ -537,6 +537,88 @@ class MemoConcurrencySpec extends SparkTestBase {
     } finally pool.shutdown()
   }
 
+  test("every commit arm publishes at one CAS point: a failure there " +
+      "leaves the store as it was, a foreign commit there is retried and " +
+      "survives") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{lit, map}
+    val db = freshStore()
+    val e1 = new MemoEngine(spark, db)
+    val e2 = new MemoEngine(spark, db)
+    def doc(body: String, part: Int) =
+      s"---\nbody: $body\nmetadata: {part: p$part}\n"
+    e1.save((0 until 6).map(i => doc(s"arm seed $i", i % 2)).mkString)
+    val staging = Paths.get(db, ".staging")
+    def live: Long = Files.readString(Paths.get(db, "CURRENT")).trim.toLong
+    def state = (live, e1.records.collect().map(_.toString).sorted.toSeq,
+      e1.history.collect().map(_.toString).toSeq)
+    def stagingEmpty =
+      !Files.exists(staging) || !Files.list(staging).iterator().hasNext
+    def feed(id: Long, body: String) = Seq((id, "updated", body))
+      .toDF("id", "change", "body")
+      .withColumn("metadata", map(lit("part"), lit("p0")))
+      .withColumn("commit_version", lit(0L))
+    var batch = -1L
+    def stream(body: String): Unit = {
+      batch += 1
+      e1.streamAppend(Seq(body).toDF("body"), batch)
+    }
+    val imported = (0 until 8).map(i =>
+      s"---\nid: $i\nbody: arm imported $i\nmetadata: {part: p${i % 2}}\n")
+      .mkString
+    val arms = Seq[(String, () => Any)](
+      ("full rewrite (importYaml)", () => e1.importYaml(imported)),
+      ("append save", () => e1.save(doc("arm appended", 1))),
+      ("overwrite save (patch)", () => e1.save(
+        "---\nid: 8\nbody: arm patched\nmetadata: {part: p0}\n")),
+      ("streamAppend", () => stream("arm streamed")),
+      ("applyChanges (merge)", () => e1.applyChanges(feed(1L, "arm applied"))),
+      ("restore", () => e1.restore(live - 1)),
+      ("clusterBy", () => e1.clusterBy("part", nClusters = 2)),
+      ("reindex", () => e1.reindex()))
+    arms.foreach { case (arm, call) =>
+      val before = state
+      e1.beforePublishHook = () => throw new IllegalStateException(arm)
+      val err = intercept[IllegalStateException](call())
+      e1.beforePublishHook = () => ()
+      assert(err.getMessage == arm, s"$arm failed elsewhere: $err")
+      assert(state == before, s"$arm: a failed publish changed the store")
+      assert(stagingEmpty, s"$arm: the failed attempt left staging behind")
+      call()
+      assert(live == before._1 + 1, s"$arm: no version published")
+      if (arm.contains("patch"))
+        assert(Files.isDirectory(Paths.get(db, s"v$live", "changefeed")),
+          s"$arm did not take the patch arm")
+    }
+    e1.save(doc("arm second segment", 1)) // reindex left one segment
+    val retried = Seq[(String, () => Any, String)](
+      ("overwrite save (patch)", () => e1.save(
+        "---\nid: 3\nbody: arm repatched\nmetadata: {part: p1}\n"),
+        "arm repatched"),
+      ("streamAppend", () => stream("arm restreamed"), "arm restreamed"),
+      ("applyChanges (merge)", () => e1.applyChanges(feed(2L, "arm reapplied")),
+        "arm reapplied"))
+    retried.foreach { case (arm, call, body) =>
+      var foreign = 0
+      e1.beforePublishHook = () => if (foreign == 0) {
+        foreign += 1
+        e2.save(s"---\nbody: foreign at $arm\n")
+      }
+      call()
+      e1.beforePublishHook = () => ()
+      assert(foreign == 1, s"$arm: the hook never ran")
+      val rows = e1.records.collect().map(r => (r.getLong(0), r.getString(1)))
+      assert(rows.map(_._2).toSet.contains(s"foreign at $arm"),
+        s"$arm lost the foreign commit: ${rows.toSeq}")
+      assert(rows.map(_._2).toSet.contains(body),
+        s"$arm lost its own write: ${rows.toSeq}")
+      assert(rows.map(_._1).distinct.length == rows.length,
+        s"$arm: duplicate ids after the retry: ${rows.toSeq}")
+      assert(stagingEmpty, s"$arm: the lost attempt left staging behind")
+    }
+    e1.clean()
+  }
+
   test("vacuum sweeps stale staging corpses, spares fresh attempts") {
     val db = freshStore()
     val engine = new MemoEngine(spark, db)

@@ -2227,6 +2227,61 @@ class MemoEngineSpec extends SparkTestBase {
     engine.clean()
   }
 
+  test("vacuum sweeps a labeling that stopped folding: an aged " +
+      "superseded label shard falls with no further fold, referenced " +
+      "shards survive and the served labeling is unchanged") {
+    import org.apache.spark.sql.functions.col
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("memo_lblvac").toString
+    val db = s"$dir/db"
+    val engine = new MemoEngine(spark, db, viewShardRows = 4)
+    def body(g: Int) = s"lblvac$g alpha$g beta$g gamma$g delta$g"
+    engine.save((0 until 48).map(i => s"---\nbody: ${body(i / 3)}\n")
+      .mkString)
+    def labels(): Map[Long, Long] = engine.dupGroups().collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val root = java.nio.file.Paths.get(db).resolve("_dupgroups")
+    def live(): String = graft.ops.ArtifactMeta.read(spark, root.toString,
+      "_labels_ptr").get
+    labels()
+    val gen0 = live()
+    // the last fold: it rewrites one shard of gen0 and carries the rest
+    engine.save(s"---\nbody: ${body(7)}\n")
+    val before = labels()
+    assert(engine.lastDupMode.contains("append"), engine.lastDupMode)
+    val gen1 = live()
+    val refs1 = engine.readShardManifest(root.resolve(gen1)).get.map(_.path)
+    val superseded = java.nio.file.Files.list(root.resolve(gen0))
+      .iterator().asScala
+      .filter(_.getFileName.toString.startsWith("_shard="))
+      .filterNot(d => refs1.contains(s"$gen0/${d.getFileName}"))
+      .toList
+    assert(superseded.nonEmpty,
+      s"expected a superseded shard in $gen0, manifest: $refs1")
+    def age(p: java.nio.file.Path) = java.nio.file.Files.setLastModifiedTime(
+      p, java.nio.file.attribute.FileTime.fromMillis(
+        System.currentTimeMillis() - 3L * 60 * 60 * 1000))
+    superseded.foreach(age)
+    engine.vacuum()
+    // the pointer was just swung: a lock-free reader may still hold gen0
+    superseded.foreach(d => assert(java.nio.file.Files.exists(d),
+      s"vacuum swept $d before the labeling pointer aged"))
+    age(root.resolve("_labels_ptr"))
+    engine.vacuum()
+    superseded.foreach(d => assert(!java.nio.file.Files.exists(d),
+      s"vacuum must sweep an aged superseded shard: $d"))
+    assert(live() == gen1, "vacuum moved the labeling pointer")
+    refs1.foreach(rel =>
+      assert(java.nio.file.Files.isDirectory(root.resolve(rel)),
+        s"referenced shard $rel must survive the sweep"))
+    val after = labels()
+    assert(after == before)
+    assert(after == graft.ops.Dedup.nearDupClusters(
+        engine.records.select(col("id"), col("body")), "id", "body")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    engine.clean()
+  }
+
   test("retract journal, every family: a live journal refuses the fold " +
       "for postings, ANN and signatures alike — the rebuild sweeps it, " +
       "and the next delete patch retracts again") {
@@ -3116,7 +3171,7 @@ class MemoEngineSpec extends SparkTestBase {
     import spark.implicits._
     val (follower, _) = freshEngine()
     val phases = scala.collection.mutable.Map[String, Int]()
-    follower.cdcPhaseHook =
+    follower.commitPhaseHook =
       (ph, _) => phases.synchronized { phases(ph) = phases.getOrElse(ph, 0) + 1 }
     def feed(rows: Seq[(Long, String, String)]) = rows
       .toDF("id", "change", "body")
@@ -3155,8 +3210,48 @@ class MemoEngineSpec extends SparkTestBase {
       follower.applyChanges(feed(Seq((1L, "removed", "wm one"))))
       assert(follower.records.orderBy("id").collect().map(_.getLong(0))
         .toSeq == Seq(0L, 2L, 3L))
-    } finally follower.cdcPhaseHook = null
+    } finally follower.commitPhaseHook = null
     follower.clean()
+  }
+
+  test("ids stay distinct after clean(): no mint and no add watermark " +
+      "reads the dropped store's max id, whether the same engine or a " +
+      "second one drops and refills the store") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{lit, map}
+    def feed(id: Long, body: String) = Seq((id, "added", body))
+      .toDF("id", "change", "body")
+      .withColumn("metadata", map(lit("k"), lit("v")))
+      .withColumn("commit_version", lit(0L))
+    def rows(e: MemoEngine): Seq[(Long, String)] = e.records.collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq.sortBy(_._1)
+    Seq(false, true).foreach { viaOther =>
+      // streamAppend mints from the memo its first batch left behind
+      val (e, db) = freshEngine()
+      val other = if (viaOther) new MemoEngine(spark, db) else e
+      e.streamAppend(Seq("stream before clean").toDF("body"), 0L)
+      other.clean()
+      other.save("---\nbody: s0\n---\nbody: s1\n---\nbody: s2\n")
+      e.streamAppend(Seq("stream after clean").toDF("body"), 1L)
+      assert(rows(e) == Seq((0L, "s0"), (1L, "s1"), (2L, "s2"),
+        (3L, "stream after clean")), s"viaOther=$viaOther: ${rows(e)}")
+      e.clean()
+    }
+    Seq(false, true).foreach { viaOther =>
+      // applyChanges proves adds disjoint from the memoized max id
+      val (e, db) = freshEngine()
+      val other = if (viaOther) new MemoEngine(spark, db) else e
+      e.applyChanges(feed(0L, "x0"))
+      e.applyChanges(feed(1L, "x1"))
+      other.clean()
+      other.save("---\nbody: p\n---\nbody: q\n")
+      other.save("---\nbody: r\n---\nbody: s\n")
+      e.applyChanges(feed(2L, "x2"))
+      // the add collides with the saved id 2, so it upserts over it
+      assert(rows(e) == Seq((0L, "p"), (1L, "q"), (2L, "x2"), (3L, "s")),
+        s"viaOther=$viaOther: ${rows(e)}")
+      e.clean()
+    }
   }
 
   test("branch CDC contract: a clone emits a NEW lineage with a full bootstrap") {

@@ -1601,6 +1601,55 @@ class MemoViewSpec extends SparkTestBase {
     engine.clean()
   }
 
+  test("vacuum sweeps a view that stopped folding: an aged superseded " +
+      "shard falls with no further refresh, referenced shards survive and " +
+      "the served frame is unchanged") {
+    val dir = Files.createTempDirectory("memo_view_vac").toString
+    val engine = new MemoEngine(spark, s"$dir/db", viewShardRows = 8)
+    val key = "metadata['g']"
+    def doc(g: Int, tag: String) =
+      s"---\nbody: vacuum doc $tag\nmetadata: {g: g$g}\n"
+    engine.save((0 until 64).map(i => doc(i, s"seed $i")).mkString)
+    engine.viewState("vs", key, Chars).collect()
+    val st0 = liveStateDir(s"$dir/db", "vs")
+    // the last fold: it supersedes ONE shard of st0 and carries the rest
+    engine.save(doc(7, "touch g7"))
+    val before = collected(engine.viewState("vs", key, Chars))
+    val st1 = liveStateDir(s"$dir/db", "vs")
+    val viewRoot = java.nio.file.Paths.get(s"$dir/db").resolve("_view_vs")
+    val lines1 = manifestLines(s"$dir/db", "vs", st1)
+    val superseded = java.nio.file.Files.list(viewRoot.resolve(st0))
+      .iterator().asScala
+      .filter(_.getFileName.toString.startsWith("_shard="))
+      .filterNot(d => lines1.exists(
+        _.split('|')(2) == s"$st0/${d.getFileName}"))
+      .toList
+    assert(superseded.size == 1,
+      s"expected exactly one superseded shard in $st0, got $superseded")
+    def age(p: java.nio.file.Path) = java.nio.file.Files.setLastModifiedTime(
+      p, java.nio.file.attribute.FileTime.fromMillis(
+        System.currentTimeMillis() - 3L * 60 * 60 * 1000))
+    age(superseded.head)
+    engine.vacuum()
+    // the pointer was just swung: a lock-free reader may still hold st0
+    assert(java.nio.file.Files.exists(superseded.head),
+      "vacuum swept a shard the previous state references before its " +
+        "pointer aged")
+    age(viewRoot.resolve("_view_meta"))
+    engine.vacuum()
+    assert(!java.nio.file.Files.exists(superseded.head),
+      "vacuum must sweep an aged superseded shard")
+    assert(liveStateDir(s"$dir/db", "vs") == st1, "vacuum moved the state")
+    lines1.foreach { l =>
+      val rel = l.split('|')(2)
+      assert(java.nio.file.Files.isDirectory(viewRoot.resolve(rel)),
+        s"referenced shard $rel must survive the sweep")
+    }
+    val after = collected(engine.viewState("vs", key, Chars))
+    assert(after == before && after == direct(engine, key))
+    engine.clean()
+  }
+
   test("legacy (pre-shard) state upgrades in place: served as one wide " +
       "shard, fully rewritten ONCE on the first refresh, sharded " +
       "thereafter") {
