@@ -30,6 +30,7 @@ import graft.ops.ArtifactMeta
   *                          by one atomic rename; crashed leftovers are
   *                          reclaimed by vacuum once stale)
   *   COMMIT_LOCK          — lock file serializing the publish step
+  *   STORE_ID             — the store's identity ([[storeId]])
   *
   * Every mutation writes a new version then atomically swings the CURRENT
   * pointer — a crash mid-write leaves the old version live, and the index
@@ -272,6 +273,19 @@ class MemoEngine(spark: SparkSession, basePath: String,
     try Some(Files.getLastModifiedTime(currentFile).toInstant.toString)
     catch { case _: java.io.IOException => None }
 
+  /** The store's identity: a random id its first publish writes
+    * ([[publishVersion]]) and [[clean]] drops with the base. Unlike
+    * [[incarnation]] it stays the same across commits, and a store
+    * dropped and recreated over the same paths gets a new one — the key
+    * of the per-engine memos of per-store facts (segment stats, the
+    * classified retract window). None when there is no store, or for a
+    * store written before the id existed. */
+  private def storeId: Option[String] =
+    try Some(Files.readString(storeIdFile))
+    catch { case _: java.io.IOException => None }
+
+  private def storeIdFile = base.resolve("STORE_ID")
+
   /** Committed segments of `kind` read under the writer's declared
     * schema: every records / index segment is written with exactly that
     * shape, so the read skips the footer schema-inference job (30-90 ms
@@ -462,14 +476,20 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * the caller's [[MemoEngine.retryOnConflict]] re-runs the mutation from
     * fresh state; a prep failure while the live version moved surfaces
     * the same way ([[reclassifyRaceCollateral]]). The staging dir is
-    * deleted on every exit (a no-op once promoted). Returns the published
-    * version. */
+    * deleted on every exit (a no-op once promoted). A first publish also
+    * writes the store's [[storeId]]. Returns the published version. */
   private def publishVersion(expectedPrior: Option[Long],
       mark: Option[(String, Long)])(
       write: (Path, Long) => (Seq[String], Seq[String])): Long = {
     val v = expectedPrior.getOrElse(-1L) + 1
     val staging = newStaging()
     try {
+      // written whole, then moved: a reader never sees a partial id,
+      // and the first of two racing first publishes keeps its id
+      if (expectedPrior.isEmpty && storeId.isEmpty)
+        try Files.move(Files.writeString(staging.resolve("STORE_ID"),
+          java.util.UUID.randomUUID().toString), storeIdFile)
+        catch { case _: java.nio.file.FileAlreadyExistsException => () }
       val (recordSegs, indexSegs) = write(staging, v)
       commitPhase("manifests_finalize") {
         writeManifest(staging, "records", recordSegs)
@@ -628,23 +648,22 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * production. */
   private[memo] var beforePublishHook: () => Unit = () => ()
 
-  /** Timing seam of this engine's write path: when set, called with
-    * (phase, millis) per timed phase — every commit's
-    * `manifests_finalize` ([[publishVersion]]), the append arm's
-    * `idrange_stats`, `records_write` and `index_write`
-    * ([[commitAppend]]), streamIngest's `mint_shape`, and
-    * [[applyChanges]]' `collapse`, `probe` and `commit`. The legs of one
-    * commit report from pool threads, so a hook must be thread-safe.
-    * CommitPhaseHookSpec pins the commit phases. Null in production: the
-    * wrapper is a straight pass-through. */
-  private[graft] var commitPhaseHook: (String, Double) => Unit = null
-
-  @inline private def commitPhase[A](phase: String)(f: => A): A =
-    if (commitPhaseHook == null) f
+  /** Time `f` as a write-path phase into the call's trace
+    * ([[OpTrace]]`.phases`, ms) — every commit's `manifests_finalize`
+    * ([[publishVersion]]), the append arm's `idrange_stats`,
+    * `records_write` and `index_write` ([[commitAppend]]),
+    * streamIngest's `mint_shape`, and [[applyChanges]]' `collapse`,
+    * `probe` and `commit`. The legs of one commit report from pool
+    * threads into the same trace. CommitPhaseHookSpec pins the commit
+    * phases. An untraced call runs `f` untimed. */
+  private def commitPhase[A](phase: String)(f: => A): A = {
+    val t = OpTrace.current
+    if (t == null) f
     else {
       val t0 = System.nanoTime()
-      try f finally commitPhaseHook(phase, (System.nanoTime() - t0) / 1e6)
+      try f finally t.phases.add((phase, (System.nanoTime() - t0) / 1e6))
     }
+  }
 
   /** Publish a prepared staging directory as version `v` — the
     * compare-and-swap at the heart of the multi-writer contract. Under the
@@ -993,16 +1012,17 @@ class MemoEngine(spark: SparkSession, basePath: String,
   private[graft] var beforeLexicalBuildHook: () => Unit = () => ()
 
   /** One maintained artifact family as [[ensureArtifact]] walks it:
-    * its dir, the chain `kind` it follows, the `last*Mode` test seam
-    * every arm step is mirrored into, and its operations —
+    * its `name` (the key its arm lands under in the call's trace,
+    * [[OpTrace]]`.arms`), its dir, the chain `kind` it follows, and its
+    * operations —
     * `appendSeg` catches up one new segment (path, committing
     * version), `retract(v0, v)` folds a v0→v patch O(touched) and
     * answers whether it did, `rebuild(v)` builds from scratch at the
     * captured version, `serve` loads the current artifact (None = not
     * servable). `beforeLocked` runs under the build lock before any
     * catch-up. */
-  private final class ArtifactFamily[A](val dir: String, val kind: String,
-      val seam: Option[String] => Unit,
+  private final class ArtifactFamily[A](val name: String, val dir: String,
+      val kind: String,
       val appendSeg: (String, Long) => Unit,
       val retract: (Long, Long) => Boolean,
       val rebuild: Long => Option[A], val serve: () => Option[A],
@@ -1036,11 +1056,11 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * Returns the served artifact and the arm this call took — "fresh" |
     * "append" | "retract" | "rebuild" — held per call, so a [[maintain]]
     * leg reports its own walk while other legs and callers run; each
-    * step is also mirrored into the family's shared seam. */
+    * step is also noted into the call's trace under the family's name. */
   private def ensureArtifact[A](f: ArtifactFamily[A])
       : (Option[A], String) = {
     var arm = "fresh"
-    def step(m: String): Unit = { arm = m; f.seam(Some(m)) }
+    def step(m: String): Unit = { arm = m; OpTrace.note(_.arms.put(f.name, m)) }
     step(arm)
     val out = currentVersion.flatMap { v =>
       def recorded = ArtifactMeta.read(spark, f.dir, LexVersionFile)
@@ -1129,8 +1149,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * identically (LexicalSpec's bit-exactness contract). Returns the arm
     * the walk took. */
   private def ensureLexical(): String =
-    ensureArtifact(new ArtifactFamily[Unit](lexDir, "records",
-      lastLexMode = _,
+    ensureArtifact(new ArtifactFamily[Unit]("lexical", lexDir, "records",
       appendSeg = (seg, ver) => graft.ops.Lexical.appendOnce(
         bodyCorpus(Seq(seg)), "id", "body", lexDir,
         batchId = ver, lineage = "storev"),
@@ -1174,7 +1193,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * arm the walk took. */
   private def ensureIvf()
       : (Option[(Array[Array[Float]], Array[Array[Array[Float]]])], String) =
-    ensureArtifact(new ArtifactFamily(annDir, "index", lastIvfMode = _,
+    ensureArtifact(new ArtifactFamily("ivf", annDir, "index",
       appendSeg = (seg, _) => graft.ops.IvfIndex.append(
         readSegments("index", Seq(seg)), "id", "embedding", annDir),
       // RETRACT arm ([[familyRetract]]): a pure-delete/add patch
@@ -1265,13 +1284,6 @@ class MemoEngine(spark: SparkSession, basePath: String,
     }
   }
 
-  /** Test seam for the FILTERED ANN serving paths ([[annRecall]]/
-    * [[pqRecall]] with a filter): (final nprobe, widening retries) of the
-    * last filtered query — lets specs pin that an under-filled first
-    * probe widened (and a well-filled one didn't). Production never
-    * reads it. */
-  private[graft] var lastFilteredAnnProbe: Option[(Int, Int)] = None
-
   /** The filter-as-mask candidate set for the ANN serving paths: ids of
     * live records matching `filterExpr` — derived O(matching segments)
     * (the frame under the compile is already segment-pruned, the
@@ -1317,12 +1329,13 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * path, which is exactly when users filter ANN — the result is the
     * exact ranking of the few survivors at the cost of one probe-all
     * pass instead of log₂(nlist) + 1; zero survivors skips the scan
-    * entirely. */
+    * entirely. Notes (final nprobe, retries) as the trace's
+    * `filteredAnnProbe`. */
   private def widenToFill(k: Int, nprobe: Int, nlist: Int,
       survivors: Long, adaptive: Boolean)(
       pass: Int => Seq[(Long, Double)]): Seq[(Long, Double)] = {
     if (survivors == 0) {
-      lastFilteredAnnProbe = Some((0, 0))
+      OpTrace.note(_.filteredAnnProbe = Some((0, 0)))
       return Nil
     }
     val (np0, jumped) = startProbe(k, nprobe, nlist, survivors, adaptive)
@@ -1334,7 +1347,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
       retries += 1
       hits = pass(np)
     }
-    lastFilteredAnnProbe = Some((np, retries))
+    OpTrace.note(_.filteredAnnProbe = Some((np, retries)))
     hits
   }
 
@@ -1356,7 +1369,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
   /** A probe route over the engine-maintained ANN artifact — IVF (raw
     * vectors re-ranked in the probed cells) or IVF-PQ (ADC codes cut to
     * k×refine candidates, then the raw re-rank). `route` is the name
-    * [[lastServeRoute]] reports; `open` brings the artifact current
+    * the trace's `serveRoute` reports; `open` brings the artifact current
     * ([[ensureIvf]]) and loads it, None on an empty/uncommitted store. */
   private abstract class AnnFamily(val route: String) {
     def open(): Option[AnnProbe]
@@ -1514,11 +1527,6 @@ class MemoEngine(spark: SparkSession, basePath: String,
     }, schema)
   }
 
-  /** Test seam: which arm the last [[serveRoute]] decision took
-    * ("brute" | "ann" | "pq") and the survivor upper bound it decided
-    * on. Production never reads it. */
-  private[graft] var lastServeRoute: Option[(String, Long)] = None
-
   /** The filter-aware serving FRONT DOOR — the BENCH_NOTES r14
     * selectivity leg's finding as code: [[serveRoute]] picks the arm
     * (exact pruned brute scan, IVF probe, or compressed IVF-PQ probe)
@@ -1576,7 +1584,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * exceed `pqBytes`, the COMPRESSED family (m-byte ADC codes, ~32×
     * narrower, only k×refine survivors touch raw vectors); under it,
     * the plain IVF probe reads the raw vectors directly. Reports its
-    * decision through [[lastServeRoute]]. */
+    * decision as the trace's `serveRoute` ([[OpTrace]]). */
   private def serveRoute(filterExpr: Option[String], bruteRows: Long,
       pqBytes: Long): Option[AnnFamily] = {
     val bound = serveBound(filterExpr)
@@ -1584,7 +1592,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
       if (filterExpr.isDefined && bound <= bruteRows) None
       else if (serveVecBytes(bound) > pqBytes) Some(new PqFamily(refine = 4))
       else Some(IvfFamily)
-    lastServeRoute = Some((route.fold("brute")(_.route), bound))
+    OpTrace.note(_.serveRoute = Some((route.fold("brute")(_.route), bound)))
     route
   }
 
@@ -1594,10 +1602,11 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * sidecar makes the bound unknowable → Long.MaxValue (price blind as
     * big). */
   private def serveBound(filterExpr: Option[String]): Long = {
+    val stats = readMetaStats(storeId) _
     def rowBound(kept: Seq[Int], segs: Seq[String]): Long =
       kept.foldLeft(0L) { (acc, i) =>
         if (acc == Long.MaxValue) acc
-        else readMetaStats(segs(i)) match {
+        else stats(segs(i)) match {
           case Some(st) => acc + st.rows
           case None => Long.MaxValue
         }
@@ -1670,11 +1679,6 @@ class MemoEngine(spark: SparkSession, basePath: String,
         .select(col("id"), col("body")), Seq("id"))
       .select(col("query_id"), col("id"), col("score"), col("body"))
 
-  /** Test seam for the FILTERED batch serving paths: (final nprobe,
-    * widening rungs) of the last batch ladder, either family — the batch
-    * twin of [[lastFilteredAnnProbe]]. Production never reads it. */
-  private[graft] var lastBatchWiden: Option[(Int, Int)] = None
-
   /** The BATCH twin of [[annRecall]] over the SAME maintained IVF
     * artifact — the pipeline serving shape (thousands of queries, ONE
     * pass over the probed cells) that per-query [[annRecall]] calls
@@ -1734,7 +1738,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * ladder's answer, body join included, is collected in one plan
     * while its rungs are still cached; the ladder then releases them,
     * so nothing stays pinned past the call. `withBody = false` returns
-    * (query_id, id, score) for the hybrid fusion tail. */
+    * (query_id, id, score) for the hybrid fusion tail. The filtered
+    * arm notes (final nprobe, widening rungs) as the trace's
+    * `batchWiden`. */
   private def probeRecallBatch(family: AnnFamily, queries: DataFrame,
       queryIdCol: String, queryTextCol: String, k: Int, nprobe: Int,
       filterExpr: Option[String], floor: Option[Double], adaptive: Boolean,
@@ -1763,15 +1769,15 @@ class MemoEngine(spark: SparkSession, basePath: String,
             withCallCopy(annMask(f)) { mask =>
               val survivors = mask.count()
               if (survivors == 0) {
-                lastBatchWiden = Some((0, 0))
+                OpTrace.note(_.batchWiden = Some((0, 0)))
                 emptyFrame(outSchema)
               } else {
                 val (np0, jumped) =
                   startProbe(k, nprobe, probe.nlist, survivors, adaptive)
                 val (out, widen) =
                   probe.searchBatchFill(q, k, np0, mask, floor, answer)
-                lastBatchWiden =
-                  Some(if (jumped) (widen._1, widen._2 + 1) else widen)
+                OpTrace.note(_.batchWiden =
+                  Some(if (jumped) (widen._1, widen._2 + 1) else widen))
                 out
               }
             }
@@ -1830,15 +1836,6 @@ class MemoEngine(spark: SparkSession, basePath: String,
 
   private def sigDir: String = base.resolve("_minhash").toString
 
-  /** Test seam: which arm the last [[ensureSignatures]] walk took —
-    * "fresh" | "append" | "retract" | "rebuild". Production never
-    * reads it. */
-  private[graft] var lastSigMode: Option[String] = None
-
-  /** [[lastSigMode]]'s twins for the other maintained families. */
-  private[graft] var lastLexMode: Option[String] = None
-  private[graft] var lastIvfMode: Option[String] = None
-
   /** One classified v0→v records diff, shared by every maintenance
     * consumer of the window — the three [[familyRetract]] walks AND the
     * dup-labeling fold ([[tryDupRetract]]) ride the same object, so a
@@ -1873,28 +1870,35 @@ class MemoEngine(spark: SparkSession, basePath: String,
     def touched: Long = nDead + nAdded + nEdited
   }
 
-  /** Memo of ONE classified retract diff per (v0, v) window, shared
-    * across the family walks of a maintenance pass — five walks over
-    * the same patch would otherwise re-run the same changefeed
+  /** Memo of ONE classified retract diff per (store, v0, v) window,
+    * shared across the family walks of a maintenance pass — five walks
+    * over the same patch would otherwise re-run the same changefeed
     * classification jobs. Version pairs are immutable once committed,
-    * so an entry can never go stale; the newest window evicts the
-    * previous one (the id frames are localCheckpointed, reclaimed by
-    * the ContextCleaner once unreferenced). Computation holds the lock:
-    * a concurrent family walk on the same window would only re-run the
-    * identical jobs it is waiting to skip. */
-  private var retractDiffMemo
-      : Option[(Long, Long, Option[RetractDiff])] = None
+    * and the [[storeId]] in the key keeps a dropped-and-recreated store,
+    * whose versions restart at v0, from replaying the old store's
+    * window; so an entry can never go stale. The newest window evicts
+    * the previous one (the id frames are localCheckpointed, reclaimed
+    * by the ContextCleaner once unreferenced). Computation holds the
+    * lock: a concurrent family walk on the same window would only
+    * re-run the identical jobs it is waiting to skip. A window the
+    * small-corpus pre-gate refused keeps its route (Left), and every
+    * caller that gets it, memo hit or not, notes that route into its
+    * own trace. */
+  private var retractDiffMemo: Option[((Option[String], Long, Long),
+    Either[Option[String], RetractDiff])] = None
   private val retractDiffLock = new Object
 
-  private def retractableDiff(v0: Long, v: Long)
-      : Option[RetractDiff] = retractDiffLock.synchronized {
-    retractDiffMemo match {
-      case Some((m0, m1, out)) if m0 == v0 && m1 == v => out
-      case _ =>
+  private def retractableDiff(v0: Long, v: Long): Option[RetractDiff] = {
+    val key = (storeId, v0, v)
+    val out = retractDiffLock.synchronized {
+      retractDiffMemo.filter(_._1 == key).map(_._2).getOrElse {
         val out = classifyRetractDiff(v0, v)
-        retractDiffMemo = Some((v0, v, out))
+        retractDiffMemo = Some((key, out))
         out
+      }
     }
+    out.left.foreach(_.foreach(r => OpTrace.note(_.retractRoute = Some(r))))
+    out.toOption
   }
 
   /** The chain's ROW COUNT at `v`, summed from the segments' stats
@@ -1906,7 +1910,8 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * (blank-bodied soft deletes included — they are scanned either
     * way), not ids ever minted. */
   private def liveRowsAt(v: Long): Option[Long] = {
-    val counts = segments(v, "records").map(s => readMetaStats(s).map(_.rows))
+    val stats = readMetaStats(storeId) _
+    val counts = segments(v, "records").map(s => stats(s).map(_.rows))
     if (counts.exists(_.isEmpty)) None else Some(counts.flatten.sum)
   }
 
@@ -1915,17 +1920,19 @@ class MemoEngine(spark: SparkSession, basePath: String,
       org.apache.spark.sql.types.StructField("id",
         org.apache.spark.sql.types.LongType))))
 
+  /** The v0→v window classified for the folds; Left when there is none
+    * to fold, carrying the small-corpus pre-gate's route if it refused. */
   private def classifyRetractDiff(v0: Long, v: Long)
-      : Option[RetractDiff] = {
-    if (v0 >= v || !Files.isDirectory(versionDir(v0))) return None
+      : Either[Option[String], RetractDiff] = {
+    if (v0 >= v || !Files.isDirectory(versionDir(v0))) return Left(None)
     val diff =
       // unresolvable priors surface as the checked refusal OR as an
       // analysis error from a half-vacuumed chain's missing paths —
       // both mean the same thing here: no incremental window, rebuild
       try changesBetween(v0, v).persist()
       catch {
-        case _: IllegalArgumentException => return None
-        case _: org.apache.spark.sql.AnalysisException => return None
+        case _: IllegalArgumentException => return Left(None)
+        case _: org.apache.spark.sql.AnalysisException => return Left(None)
       }
     try {
       val corpusIds = math.max(storeMaxId(v) + 1, 1L)
@@ -1948,7 +1955,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
         min(when(addCond, col("id"))).as("alo"),
         max(when(addCond, col("id"))).as("ahi"),
         count(when(updCond, 1)).as("nu")).collect()(0)
-      if (s.getLong(0) * 2 > corpusIds) return None
+      if (s.getLong(0) * 2 > corpusIds) return Left(None)
       val nDead = s.getLong(1)
       val nAdded = s.getLong(4)
       // SMALL-CORPUS PRE-GATE: a window that definitely mutates
@@ -1964,9 +1971,8 @@ class MemoEngine(spark: SparkSession, basePath: String,
       // corpus size.
       if (retractRouteMinRows > 0 && nDead + nAdded > 0 &&
           liveRows < retractRouteMinRows + (nDead + nAdded) * 4) {
-        lastRetractRoute = Some(
-          s"rebuild(pregate live=$liveRows touched>=${nDead + nAdded})")
-        return None
+        return Left(Some(
+          s"rebuild(pregate live=$liveRows touched>=${nDead + nAdded})"))
       }
       val dead =
         if (nDead == 0) emptyIdFrame
@@ -1991,9 +1997,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
             .select(col("id")).localCheckpoint(true)
           (e, e.count())
         } catch {
-          case _: org.apache.spark.sql.AnalysisException => return None
+          case _: org.apache.spark.sql.AnalysisException => return Left(None)
         }
-      Some(RetractDiff(
+      Right(RetractDiff(
         dead, nDead, if (s.isNullAt(2)) 0L else s.getLong(2),
         if (s.isNullAt(3)) -1L else s.getLong(3),
         added, nAdded, if (s.isNullAt(5)) 0L else s.getLong(5),
@@ -2022,14 +2028,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * The threshold is a test seam (`retractRouteMinRows <= 0` forces
     * the fold OUTRIGHT — the touched term is skipped too, so retract-arm
     * fixtures of any delete ratio stay on the fold) and the decision
-    * lands in [[lastRetractRoute]]. */
+    * lands in the trace's `retractRoute`. */
   private[graft] var retractRouteMinRows: Long =
     MemoEngine.DefaultRetractRouteMinRows
-
-  /** Test seam: the last consulted route decision —
-    * "retract(corpus=N touched=K)" or "rebuild(corpus=N touched=K)".
-    * Production never reads it. */
-  private[graft] var lastRetractRoute: Option[String] = None
 
   private def routeRetract(d: RetractDiff): Boolean = {
     // floor <= 0 is the test seam's FORCE-FOLD setting (the touched
@@ -2037,9 +2038,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
     // to the rebuild and break every retract-mode pin)
     val take = retractRouteMinRows <= 0 ||
       d.liveRows >= retractRouteMinRows + d.touched * 4
-    lastRetractRoute = Some(
+    OpTrace.note(_.retractRoute = Some(
       s"${if (take) "retract" else "rebuild"}" +
-        s"(live=${d.liveRows} touched=${d.touched})")
+        s"(live=${d.liveRows} touched=${d.touched})"))
     take
   }
 
@@ -2177,8 +2178,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * bodies (the [[ensureLexical]] corpus rule). Returns the arm the
     * walk took. */
   private def ensureSignatures(): String =
-    ensureArtifact(new ArtifactFamily[Unit](sigDir, "records",
-      lastSigMode = _,
+    ensureArtifact(new ArtifactFamily[Unit]("signatures", sigDir, "records",
       appendSeg = (seg, _) => graft.ops.Dedup.appendSignatures(
         bodyCorpus(Seq(seg)), "id", "body", sigDir),
       retract = (v0, v) => familyRetract(sigDir, v0, v, vector = false)(
@@ -2212,10 +2212,6 @@ class MemoEngine(spark: SparkSession, basePath: String,
   private val DupLabelsPtr = "_labels_ptr"
   private val DupSpecFile = "_dup_spec"
 
-  /** Test seam: which arm the last [[dupGroups]] walk took — "fresh" |
-    * "append" | "retract" | "rebuild". Production never reads it. */
-  private[graft] var lastDupMode: Option[String] = None
-
   private def dupLabelsSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("id",
       org.apache.spark.sql.types.LongType),
@@ -2235,10 +2231,6 @@ class MemoEngine(spark: SparkSession, basePath: String,
       case _ => emptyFrame(dupLabelsSchema)
     }
 
-  /** Test seam: the last labeling publish's shape — (shards written,
-    * shards carried by reference). Production never reads it. */
-  private[graft] var lastDupPublish: Option[(Int, Int)] = None
-
   private def dupShards = new ShardedArtifact(Paths.get(dupDir), "labels-",
     "component", countRows = false)
 
@@ -2248,7 +2240,8 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * arm / first build); a fold passes the shards it `carried` by
     * reference and its pitch cap. The manifest lands in the generation
     * dir, THEN the pointer swings (a crash leaves the old labeling
-    * live), then the reference-aware TTL sweep. */
+    * live), then the reference-aware TTL sweep. Notes (shards written,
+    * shards carried) as the trace's `dupPublish`. */
   private def publishDupLabels(content: DataFrame,
       carried: Seq[ViewShard] = Nil,
       widthCap: Int = MemoEngine.ViewShardCells): Unit = {
@@ -2259,7 +2252,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
         widthCap) { (gen, _) =>
       ArtifactMeta.write(spark, dupDir, DupLabelsPtr, gen)
     }
-    lastDupPublish = Some((nWritten, carried.size))
+    OpTrace.note(_.dupPublish = Some((nWritten, carried.size)))
   }
 
   /** O(touched) publish of a fold's labeling DELTA — the [[refreshView]]
@@ -2486,8 +2479,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
           ArtifactMeta.write(spark, dupDir, DupSpecFile, spec)
         }
       }
-    ensureArtifact(new ArtifactFamily[Unit](dupDir, "records",
-      lastDupMode = _,
+    ensureArtifact(new ArtifactFamily[Unit]("dupgroups", dupDir, "records",
       appendSeg = (seg, _) => {
         val pairs = graft.ops.Dedup.signaturePairs(
           graft.ops.Dedup.loadSignatures(spark, sigDir),
@@ -2512,10 +2504,10 @@ class MemoEngine(spark: SparkSession, basePath: String,
       serve = () => Some(()),
       // skip the signature re-walk when its watermark is already at the
       // live version: the walk would be two metadata reads and a no-op,
-      // but it stomps [[lastSigMode]] to "fresh" — a maintain() pass that
-      // just took the retract/rebuild arm must keep its recorded mode
-      // (seam hygiene; the TOCTOU here is the same lock-free fresh-serve
-      // race ensureSignatures itself runs)
+      // but it notes "fresh" over the trace's signatures arm — a
+      // maintain() pass that just took the retract/rebuild arm must
+      // keep its recorded arm (the TOCTOU here is the same lock-free
+      // fresh-serve race ensureSignatures itself runs)
       beforeLocked = () =>
         if (!currentVersion.exists(v => familyWatermark(sigDir).contains(v)))
           ensureSignatures()))._2
@@ -2617,8 +2609,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * amplifies list differences — which is why the floor parity matters
     * MORE here than on [[recallServe]]); at serving nprobe the residual
     * divergence is ANN approximation itself, never the floor and never
-    * the route. Reports its decision through the [[lastServeRoute]]
-    * seam. */
+    * the route. Reports its decision as the trace's `serveRoute`. */
   def hybridServe(query: String, k: Int = MemoOps.DefaultK,
       filterExpr: Option[String] = None, perList: Int = 50,
       nprobe: Int = 4, bruteRows: Long = 4096L,
@@ -2842,9 +2833,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
     parsed match {
       case None => (segs.indices.toSeq, segs, v)
       case Some(fm) =>
+        val stats = readMetaStats(storeId) _
         val kept = segs.indices.filter { i =>
-          readMetaStats(segs(i))
-            .forall(graft.filter.SegmentStats.canMatch(fm, _))
+          stats(segs(i)).forall(graft.filter.SegmentStats.canMatch(fm, _))
         }
         (kept.toSeq, segs, v)
     }
@@ -2853,15 +2844,17 @@ class MemoEngine(spark: SparkSession, basePath: String,
   /** A promoted segment dir is IMMUTABLE (commits prepare in private
     * staging and publish by rename), so its decoded stats — including
     * "has no sidecar", which a promoted dir can never gain — memoize
-    * per engine instance: a filtered read against a 100k-segment chain
-    * costs 100k sidecar file reads ONCE, not per query. Growth is
+    * per engine instance, keyed by (store [[storeId]], dir): a filtered
+    * read against a 100k-segment chain costs 100k sidecar file reads
+    * ONCE, not per query, and a store dropped and recreated over the
+    * same dirs never serves the old store's stats. Growth is
     * bounded GENERATION-scoped (see [[readMetaStats]]): past the
     * threshold, entries for dirs no longer in the live manifest are
     * dropped — the cache tracks the live chain, never the churn
     * history. */
   private[graft] var statsCacheMax = 8192 // eviction threshold; spec seam
   private val statsCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Option[graft.filter.SegmentStats]]()
+    (Option[String], String), Option[graft.filter.SegmentStats]]()
   private[graft] def statsCacheSize: Int = statsCache.size
   private[graft] val statsSidecarReads =
     new java.util.concurrent.atomic.AtomicLong(0) // spec observability
@@ -2877,15 +2870,16 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * once per live version, so a cold pass over an over-threshold chain
     * pays one sweep, not one per segment. A wholesale clear (or LRU,
     * which a sequential over-cap sweep thrashes to 100% miss) would
-    * forfeit the "100k sidecars read ONCE" contract on long chains. */
-  private def readMetaStats(segDir: String)
+    * forfeit the "100k sidecars read ONCE" contract on long chains.
+    * `store` is the caller's [[storeId]], read once per call. */
+  private def readMetaStats(store: Option[String])(segDir: String)
       : Option[graft.filter.SegmentStats] = {
-    val cached = statsCache.get(segDir)
+    val cached = statsCache.get((store, segDir))
     if (cached != null) return cached
     if (statsCache.size > statsCacheMax) currentVersion.foreach { v =>
       if (statsSweptAt.getAndSet(v) != v) {
         val live = segments(v, "records").toSet
-        statsCache.keySet.removeIf(k => !live.contains(k))
+        statsCache.keySet.removeIf(k => k._1 != store || !live.contains(k._2))
       }
     }
     statsSidecarReads.incrementAndGet()
@@ -2893,7 +2887,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
     val st =
       if (!Files.exists(p)) None
       else graft.filter.SegmentStats.decode(Files.readString(p))
-    statsCache.put(segDir, st)
+    statsCache.put((store, segDir), st)
     st
   }
 
@@ -2947,10 +2941,6 @@ class MemoEngine(spark: SparkSession, basePath: String,
       .map { case (kept, all, _) => (kept.size, all.size) }
       .getOrElse((0, 0))
 
-  /** Test seam: how the last [[analyzeCount]] ask was served
-    * ("view:<name>" | "scan"). Production never reads it. */
-  private[graft] var lastCountSource: Option[String] = None
-
   /** Parse-level canonical form of a filter ask, for view-coverage
     * comparison ([[analyzeCount]] / [[statsPairs]]): the Python str()
     * rendering of the parsed map AFTER
@@ -2978,7 +2968,8 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * no-metadata gate excludes (the reference skips metadata-less
     * records before evaluating ANY filter, memo_cli.py:670-672 —
     * `where = Some("{}")` carries that gate through compile; no where
-    * means no gate). Anything else scans. */
+    * means no gate). Anything else scans. Notes "view:<name>" | "scan"
+    * as the trace's `countSource`. */
   def analyzeCount(filterExpr: String): Long = {
     val ask = canonFilter(filterExpr)
     val viaView =
@@ -2993,13 +2984,13 @@ class MemoEngine(spark: SparkSession, basePath: String,
       }.collectFirst {
         case (name, Some((gk, ms, aggs, where, cap)))
             if where.exists(w => canonFilter(w) == ask) =>
-          lastCountSource = Some(s"view:$name")
+          OpTrace.note(_.countSource = Some(s"view:$name"))
           val r = viewState(name, gk, ms, aggs, where, cap)
             .agg(sum(col("doc_count"))).collect()(0)
           if (r.isNullAt(0)) 0L else r.getLong(0)
       }
     viaView.getOrElse {
-      lastCountSource = Some("scan")
+      OpTrace.note(_.countSource = Some("scan"))
       MemoOps.analyzeCount(recordsForFilter(filterExpr), filterExpr)
         .collect()(0).getLong(0)
     }
@@ -3090,10 +3081,6 @@ class MemoEngine(spark: SparkSession, basePath: String,
       .select(col("r.percent").as("percent"), col("r.value").as("value"))
   }
 
-  /** Test seam: how the last [[statsPairs]] ask was served
-    * ("view:<name>" | "scan"). Production never reads it. */
-  private[graft] var lastStatsSource: Option[String] = None
-
   /** The (raw typed value, row count) pairs of a stats key under a
     * filter — the SUFFICIENT STATISTIC for the whole `analyze --stats`
     * block: cardinality (A7), the top-4+other rollup (A8), and the
@@ -3121,7 +3108,8 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * and key-order permutations all cover each other, while any
     * genuinely different predicate — including operand-DICT insertion
     * order, which is semantic in the algebra's str() equality — stays
-    * uncovered and scans. */
+    * uncovered and scans. Notes "view:<name>" | "scan" as the trace's
+    * `statsSource`. */
   def statsPairs(filterExpr: String, key: String): DataFrame = {
     val canonical = s"metadata['$key']"
     val ask = canonFilter(filterExpr)
@@ -3149,12 +3137,12 @@ class MemoEngine(spark: SparkSession, basePath: String,
     }
     covering match {
       case Some((name, ms, aggs, where, cap)) =>
-        lastStatsSource = Some(s"view:$name")
+        OpTrace.note(_.statsSource = Some(s"view:$name"))
         viewState(name, canonical, ms, aggs, where, cap)
           .select(col("group_key").as("raw"), col("doc_count").as("cnt"))
           .filter(col("raw").isNotNull && col("raw") =!= "z")
       case None =>
-        lastStatsSource = Some("scan")
+        OpTrace.note(_.statsSource = Some("scan"))
         recordsForFilter(filterExpr)
           .filter(FilterAlgebra.compile(filterExpr, col("metadata")))
           .select(MemoOps.rawField(key).as("raw"))
@@ -3421,17 +3409,6 @@ class MemoEngine(spark: SparkSession, basePath: String,
     new ShardedArtifact(viewDir(name), "state-", "group_key",
       countRows = true)
 
-  /** Test seam: the last refresh's publish shape — (shards written,
-    * shards carried by reference). Production never reads it. */
-  private[graft] var lastViewPublish: Option[(Int, Int)] = None
-
-  /** Test seam: (mode, files the refresh actually scanned) — "fresh" |
-    * "incremental" | "incremental_rescan" | "rebuild". Lets specs pin
-    * that an append refresh read ONLY delta segments, a patch refresh
-    * ONLY the materialized feed, and that the rescan arm fires only on
-    * reserve exhaustion. Production reads it never. */
-  private[graft] var lastViewRefresh: Option[(String, Seq[String])] = None
-
   /** Test seam, [[beforeLexicalBuildHook]]'s twin for the view family. */
   private[graft] var beforeViewBuildHook: () => Unit = () => ()
 
@@ -3512,7 +3489,8 @@ class MemoEngine(spark: SparkSession, basePath: String,
     where.flatMap(w =>
         scala.util.Try(graft.filter.FilterAlgebra.parse(w)).toOption)
       .fold(segs) { fm =>
-        segs.filter(s => readMetaStats(s)
+        val stats = readMetaStats(storeId) _
+        segs.filter(s => stats(s)
           .forall(graft.filter.SegmentStats.canMatch(fm, _)))
       }
 
@@ -3631,8 +3609,11 @@ class MemoEngine(spark: SparkSession, basePath: String,
 
   /** [[viewState]] plus the arm this call took — "fresh" | "incremental"
     * | "incremental_rescan" | "rebuild" ("empty" on an empty store).
-    * Returned, not read back from [[lastViewRefresh]]: a concurrent view
-    * serve or refresh on the same engine writes that var too. */
+    * The call's trace also gets (mode, files the refresh scanned) as
+    * `viewRefresh` and a refresh's (shards written, carried) as
+    * `viewPublish`: specs pin that an append refresh read ONLY delta
+    * segments, a patch refresh ONLY the materialized feed, and that the
+    * rescan arm fires only on reserve exhaustion. */
   private def viewStateArm(name: String, groupKey: String,
       measures: Seq[(String, String)], aggOf: Map[String, String],
       where: Option[String],
@@ -3733,12 +3714,14 @@ class MemoEngine(spark: SparkSession, basePath: String,
       case Some(_) =>
         readMeta match {
           case Some((v, h, st)) if currentVersion.contains(v) && h == spec =>
-            lastViewRefresh = Some(("fresh", Nil)); (serve(st), "fresh")
+            OpTrace.note(_.viewRefresh = Some(("fresh", Nil)))
+            (serve(st), "fresh")
           case _ => ArtifactMeta.withBuildLock(spark, dirS) {
             val live = currentVersion.get // re-read under the lock
             readMeta match {
               case Some((v, h, st)) if v == live && h == spec =>
-                lastViewRefresh = Some(("fresh", Nil)); (serve(st), "fresh")
+                OpTrace.note(_.viewRefresh = Some(("fresh", Nil)))
+                (serve(st), "fresh")
               case recorded =>
                 beforeViewBuildHook()
                 refreshView(name, groupKey, measures, aggOf, where, dCap,
@@ -4130,8 +4113,10 @@ class MemoEngine(spark: SparkSession, basePath: String,
           ArtifactMeta.write(spark, dir.toString, ViewMetaFile,
             s"$live|$spec|$gen")
       }
-      lastViewRefresh = Some((mode, scanned))
-      lastViewPublish = Some((nWritten, carriedShards.size))
+      OpTrace.note { t =>
+        t.viewRefresh = Some((mode, scanned))
+        t.viewPublish = Some((nWritten, carriedShards.size))
+      }
       (serve(stateDir), mode)
     } finally cached.foreach(_.unpersist())
   }
@@ -4199,7 +4184,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
             ArtifactMeta.write(spark, dir.toString, ViewMetaFile,
               s"$v|$spec|$gen")
           }
-          lastViewPublish = Some((nWritten, 0))
+          OpTrace.note(_.viewPublish = Some((nWritten, 0)))
           true
         case _ => false
       }
@@ -5479,16 +5464,20 @@ object MemoEngine {
     * time: local properties (job group, description, scheduler pool),
     * the active session and its SQL conf. A cached pool thread would
     * otherwise keep the properties of whichever caller first spawned
-    * it, filing this call's jobs under a stale job group. On failure
-    * every leg is drained first, then the first failure in leg order is
-    * rethrown unwrapped (a commit's retry/reclassify matches on the
-    * cause). Returns the legs' results in leg order. */
+    * it, filing this call's jobs under a stale job group. The caller's
+    * [[OpTrace]] rides along the same way, and is cleared off the pool
+    * thread when the leg ends. On failure every leg is drained first,
+    * then the first failure in leg order is rethrown unwrapped (a
+    * commit's retry/reclassify matches on the cause). Returns the legs'
+    * results in leg order. */
   private[memo] def legs[A](spark: SparkSession)(first: () => A,
       rest: (() => A)*): Seq[A] = {
     val session =
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val trace = OpTrace.current
     val pooled = rest.map(leg => org.apache.spark.sql.execution.SQLExecution
-      .withThreadLocalCaptured(session, commitPool)(leg()))
+      .withThreadLocalCaptured(session, commitPool)(
+        OpTrace.within(trace)(leg())))
     var failure: Throwable = null
     def drain(leg: => A): Option[A] =
       try Some(leg)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.memo.MemoOps
+import graft.memo.{MemoOps, OpTrace}
 import graft.functions.GraftFunctions._
 
 /** Memo-engine surface (SURVEY.md §2.3-2.6) exercised over the driver's
@@ -329,13 +329,14 @@ object MemoQueries {
       engine.applyChanges(feed)
       java.nio.file.Files.createFile(done)
     }
-    val out = engine.viewState("bytag", "substring(metadata['tag'], 2)",
-      Seq("chars" -> "length(body)", "toks" -> "size(split(body, ' '))"))
+    val (out, trace) = OpTrace.traced(engine.viewState("bytag",
+      "substring(metadata['tag'], 2)",
+      Seq("chars" -> "length(body)", "toks" -> "size(split(body, ' '))")))
     // the point of the exercise, pinned loudly: on the build pass the
     // post-patch refresh must have been INCREMENTAL (feed retractions) —
     // if this ever reads "rebuild" the O(delta) path silently degraded
     if (buildPass) {
-      val mode = engine.lastViewRefresh.map(_._1).getOrElse("none")
+      val mode = trace.viewRefresh.map(_._1).getOrElse("none")
       require(mode == "incremental",
         s"q98 expected an incremental view refresh, got $mode")
     }
@@ -401,14 +402,14 @@ object MemoQueries {
       engine.applyChanges(feed)
       java.nio.file.Files.createFile(done)
     }
-    val out = view()
+    val (out, trace) = OpTrace.traced(view())
     // pinned loudly: the champion removal had no covering add, yet the
     // reserve holds the runner-up — the build-pass refresh must have
     // stayed INCREMENTAL. "rebuild" means the O(delta) maintenance
     // silently degraded; "incremental_rescan" means the reserve failed
     // to absorb a single champion retraction
     if (buildPass) {
-      val mode = engine.lastViewRefresh.map(_._1).getOrElse("none")
+      val mode = trace.viewRefresh.map(_._1).getOrElse("none")
       require(mode == "incremental",
         s"q99 expected a reserve-covered incremental refresh, got $mode")
     }
@@ -507,12 +508,12 @@ object MemoQueries {
       engine.applyChanges(feed)
       java.nio.file.Files.createFile(done)
     }
-    val out = view()
+    val (out, trace) = OpTrace.traced(view())
     // pinned loudly: AVG maintenance must ride the O(delta) SUM arm —
     // "rebuild" means the derived aggregate silently degraded the view
     // family's cost class
     if (buildPass) {
-      val mode = engine.lastViewRefresh.map(_._1).getOrElse("none")
+      val mode = trace.viewRefresh.map(_._1).getOrElse("none")
       require(mode == "incremental",
         s"q102 expected an incremental avg refresh, got $mode")
     }
@@ -571,12 +572,12 @@ object MemoQueries {
       engine.applyChanges(feed)
       java.nio.file.Files.createFile(done)
     }
-    val out = view()
+    val (out, trace) = OpTrace.traced(view())
     // pinned loudly: the distinct maintenance must ride the O(delta)
     // dictionary arm — "rebuild"/"incremental_rescan" would mean the
     // covered retractions silently degraded the view family's cost class
     if (buildPass) {
-      val mode = engine.lastViewRefresh.map(_._1).getOrElse("none")
+      val mode = trace.viewRefresh.map(_._1).getOrElse("none")
       require(mode == "incremental",
         s"q105 expected an incremental distinct refresh, got $mode")
     }
@@ -642,10 +643,10 @@ object MemoQueries {
       engine.applyChanges(feed)
       java.nio.file.Files.createFile(done)
     }
-    val out = view()
+    val (out, trace) = OpTrace.traced(view())
     // pinned loudly: boundary crossings must ride the O(delta) feed arm
     if (buildPass) {
-      val mode = engine.lastViewRefresh.map(_._1).getOrElse("none")
+      val mode = trace.viewRefresh.map(_._1).getOrElse("none")
       require(mode == "incremental",
         s"q107 expected an incremental filtered refresh, got $mode")
     }
@@ -706,10 +707,10 @@ object MemoQueries {
       engine.applyChanges(feed)
       java.nio.file.Files.createFile(done)
     }
-    val out = view()
+    val (out, trace) = OpTrace.traced(view())
     // pinned loudly: presence retraction must ride the O(delta) SUM arm
     if (buildPass) {
-      val mode = engine.lastViewRefresh.map(_._1).getOrElse("none")
+      val mode = trace.viewRefresh.map(_._1).getOrElse("none")
       require(mode == "incremental",
         s"q109 expected an incremental count refresh, got $mode")
     }
@@ -759,16 +760,15 @@ object MemoQueries {
           s"got ($kept, $total)")
       java.nio.file.Files.createFile(done)
     }
-    val out = engine.annRecall("shared topic language", k = 200,
-      nprobe = 1, filterExpr = Some("part: p1"))
-      .select(col("id")).orderBy(col("id"))
-    val ids = out // force the widening before reading the seam
-    ids.count()
+    val (out, trace) = OpTrace.traced(engine.annRecall(
+        "shared topic language", k = 200, nprobe = 1,
+        filterExpr = Some("part: p1"))
+      .select(col("id")).orderBy(col("id")))
     // … and the under-filled first probe must have WIDENED to fill
     // (k=200 exceeds the ~third survivors, so the loop must end at the
     // full cell set — if this reads (1, 0) the fill contract degraded
     // to a silently short post-filtered list)
-    val probe = engine.lastFilteredAnnProbe.getOrElse((0, 0))
+    val probe = trace.filteredAnnProbe.getOrElse((0, 0))
     require(probe._2 >= 1 && probe._1 > 1,
       s"q101 expected a probe-widening retry, got $probe")
     out
@@ -870,15 +870,16 @@ object MemoQueries {
     val f = Some("part: p1")
     val q = "shared topic language"
     def route(bruteRows: Long, pqBytes: Long, expect: String) = {
-      val out = engine.hybridServe(q, k = 120, filterExpr = f,
-          perList = 120, nprobe = graft.memo.MemoEngine.AnnNlist,
+      val (out, trace) = OpTrace.traced(engine.hybridServe(q, k = 120,
+          filterExpr = f, perList = 120,
+          nprobe = graft.memo.MemoEngine.AnnNlist,
           bruteRows = bruteRows, pqBytes = pqBytes)
         .select(col("id"), col("rrf_score"), col("r_bm25"), col("r_vec"))
         .collect()
         .map(r => (r.getLong(0), r.getDouble(1),
           if (r.isNullAt(2)) -1 else r.getInt(2),
-          if (r.isNullAt(3)) -1 else r.getInt(3))).toSeq
-      val got = engine.lastServeRoute.map(_._1).getOrElse("?")
+          if (r.isNullAt(3)) -1 else r.getInt(3))).toSeq)
+      val got = trace.serveRoute.map(_._1).getOrElse("?")
       require(got == expect, s"q111 expected route $expect, got $got")
       out
     }
@@ -963,10 +964,10 @@ object MemoQueries {
     val filter = "{lang: en}"
     def collect(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
-    val served = engine.statsPairs(filter, "src")
+    val (served, viewed) = OpTrace.traced(engine.statsPairs(filter, "src"))
     val servedRows = collect(served)
-    require(engine.lastStatsSource.exists(_.startsWith("view:")),
-      s"q112 expected the view route, got ${engine.lastStatsSource}")
+    require(viewed.statsSource.exists(_.startsWith("view:")),
+      s"q112 expected the view route, got ${viewed.statsSource}")
     // the view-served pairs must equal a direct corpus computation of
     // the same ask (the scan arm's exact frame, bypassing the router)
     val direct = collect(engine.records
@@ -978,9 +979,9 @@ object MemoQueries {
       s"q112 view-served pairs diverged from the scan: " +
         s"$servedRows vs $direct")
     // an uncovered ask (different key) exercises the scan fallback
-    engine.statsPairs(filter, "lang").collect()
-    require(engine.lastStatsSource.contains("scan"),
-      s"q112 expected the scan fallback, got ${engine.lastStatsSource}")
+    val scanned = OpTrace.traced(engine.statsPairs(filter, "lang").collect())._2
+    require(scanned.statsSource.contains("scan"),
+      s"q112 expected the scan fallback, got ${scanned.statsSource}")
     served.orderBy(col("raw"))
   }
 
@@ -1039,17 +1040,18 @@ object MemoQueries {
   private val q114CountFromView: Q = (s, dir) => {
     val engine = statsFixture(s, dir)
     val filter = "{lang: en}"
-    val matched = engine.analyzeCount(filter)
-    require(engine.lastCountSource.exists(_.startsWith("view:")),
-      s"q114 expected the view route, got ${engine.lastCountSource}")
+    val (matched, viewed) = OpTrace.traced(engine.analyzeCount(filter))
+    require(viewed.countSource.exists(_.startsWith("view:")),
+      s"q114 expected the view route, got ${viewed.countSource}")
     val direct = engine.records
       .filter(graft.filter.FilterAlgebra.compile(filter, col("metadata")))
       .count()
     require(matched == direct,
       s"q114 view-served count diverged: $matched vs $direct")
-    engine.analyzeCount("{src: s1}") // no view covers this filter
-    require(engine.lastCountSource.contains("scan"),
-      s"q114 expected the scan fallback, got ${engine.lastCountSource}")
+    // no view covers this filter
+    val scanned = OpTrace.traced(engine.analyzeCount("{src: s1}"))._2
+    require(scanned.countSource.contains("scan"),
+      s"q114 expected the scan fallback, got ${scanned.countSource}")
     import s.implicits._
     Seq(matched).toDF("matched")
   }
@@ -1081,17 +1083,16 @@ object MemoQueries {
       if (engine.exists) engine.clean() // torn prior build: start over
       engine.save(yamlOf(0 until 120))
       engine.save(yamlOf(120 until 240))
-      view().collect()
-      val (w0, _) = engine.lastViewPublish.get
+      val (w0, _) = OpTrace.traced(view().collect())._2.viewPublish.get
       require(w0 >= 4,
         s"q115 expected ≥ 4 shards from 60 groups at target 8, got $w0")
       engine.save(yamlOf(240 until 241)) // ONE doc, one touched group
-      val served = view().collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      require(engine.lastViewRefresh.exists(_._1 == "incremental"),
+      val (served, trace) = OpTrace.traced(view().collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet)
+      require(trace.viewRefresh.exists(_._1 == "incremental"),
         s"q115 expected an incremental refresh, " +
-          s"got ${engine.lastViewRefresh.map(_._1)}")
-      val (w1, c1) = engine.lastViewPublish.get
+          s"got ${trace.viewRefresh.map(_._1)}")
+      val (w1, c1) = trace.viewPublish.get
       require(w1 <= 2 && c1 >= w0 - 2,
         s"q115 expected a narrow publish with carried shards, " +
           s"got (wrote=$w1, carried=$c1)")
@@ -1203,14 +1204,15 @@ object MemoQueries {
     if (!java.nio.file.Files.exists(done)) {
       if (engine.exists) engine.clean() // torn prior build: start over
       engine.save(yamlOf(0 until 58))
-      engine.dupGroups().collect()
-      require(engine.lastDupMode.contains("rebuild"),
-        s"q119 expected the first walk to rebuild, got ${engine.lastDupMode}")
+      val built = OpTrace.traced(engine.dupGroups().collect())._2
+        .arm("dupgroups")
+      require(built.contains("rebuild"),
+        s"q119 expected the first walk to rebuild, got $built")
       engine.save(yamlOf(58 until 90))
-      val folded = engine.dupGroups().collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      require(engine.lastDupMode.contains("append"),
-        s"q119 expected the append fold, got ${engine.lastDupMode}")
+      val (folded, trace) = OpTrace.traced(engine.dupGroups().collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      require(trace.arm("dupgroups").contains("append"),
+        s"q119 expected the append fold, got ${trace.arm("dupgroups")}")
       val scratch = graft.ops.Dedup.nearDupClusters(
           engine.records.select(col("id"), col("body")), "id", "body")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -1316,12 +1318,12 @@ object MemoQueries {
       engine.applyChanges(feed)
       java.nio.file.Files.createFile(done)
     }
-    val out = view()
+    val (out, trace) = OpTrace.traced(view())
     // pinned loudly: percentile maintenance must ride the O(delta)
     // dictionary arm — "rebuild"/"incremental_rescan" would mean the
     // covered retractions silently degraded the view family's cost class
     if (buildPass) {
-      val mode = engine.lastViewRefresh.map(_._1).getOrElse("none")
+      val mode = trace.viewRefresh.map(_._1).getOrElse("none")
       require(mode == "incremental",
         s"q121 expected an incremental percentile refresh, got $mode")
     }
@@ -1370,19 +1372,21 @@ object MemoQueries {
     // scan arm first (no covering view yet on the build pass; on replay
     // passes the view exists, so only pin the arm when it CAN be pinned)
     val viewless = !engine.views.contains("spw")
-    val scanned = engine.analyzePercentiles(ask, "w", percents)
-      .orderBy("percent").collect()
+    val (scanned, scanTrace) = OpTrace.traced(
+      engine.analyzePercentiles(ask, "w", percents)
+        .orderBy("percent").collect())
     if (viewless) require(
-      engine.lastStatsSource.contains("scan"),
-      s"q122 expected the scan arm, got ${engine.lastStatsSource}")
+      scanTrace.statsSource.contains("scan"),
+      s"q122 expected the scan arm, got ${scanTrace.statsSource}")
     // covering view: same where, groupKey = metadata['w'] → the pairs
     // ARE its state and the ask serves O(state)
     engine.viewState("spw", "metadata['w']", Seq.empty, Map.empty,
       where = Some(ask)).count()
-    val served = engine.analyzePercentiles(ask, "w", percents)
+    val (served, viewed) =
+      OpTrace.traced(engine.analyzePercentiles(ask, "w", percents))
     val viaView = served.orderBy("percent").collect()
-    require(engine.lastStatsSource.exists(_.startsWith("view:")),
-      s"q122 expected the view arm, got ${engine.lastStatsSource}")
+    require(viewed.statsSource.exists(_.startsWith("view:")),
+      s"q122 expected the view arm, got ${viewed.statsSource}")
     require(viaView.map(r => (r.getDouble(0), r.getDouble(1))).toSeq ==
       scanned.map(r => (r.getDouble(0), r.getDouble(1))).toSeq,
       "q122 view-served percentiles diverged from the scan arm")

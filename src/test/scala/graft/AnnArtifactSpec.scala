@@ -55,18 +55,21 @@ class AnnArtifactSpec extends SparkTestBase {
     val ann = s"$db/_ann"
     val query = "note about topic3"
     var trainedOn: DataFrame = null
-    def check(step: String): Unit = withClue(s"after $step: ") {
+    // returns the arm the PQ serve's walk took
+    def check(step: String): Option[String] = withClue(s"after $step: ") {
       val n = engine.index.count()
       // every route walks the one artifact; PQ at full probe and a
       // refine covering the corpus is exact
       val brute = ranked(engine.recall(query, k = n.toInt))
-      assert(ranked(engine.annRecall(query, k = n.toInt,
-        nprobe = MemoEngine.AnnNlist)) == brute)
-      val arm = engine.lastIvfMode
+      val (viaAnn, annTrace) = OpTrace.traced(ranked(engine.annRecall(
+        query, k = n.toInt, nprobe = MemoEngine.AnnNlist)))
+      assert(viaAnn == brute)
+      val arm = annTrace.arm("ivf")
       if (arm.contains("rebuild")) trainedOn = frozen(engine.index)
-      assert(ranked(engine.pqRecall(query, k = n.toInt,
-        nprobe = MemoEngine.AnnNlist, refine = n.toInt)) == brute)
-      assert(engine.lastIvfMode.contains("fresh"),
+      val (viaPq, pqTrace) = OpTrace.traced(ranked(engine.pqRecall(query,
+        k = n.toInt, nprobe = MemoEngine.AnnNlist, refine = n.toInt)))
+      assert(viaPq == brute)
+      assert(pqTrace.arm("ivf").contains("fresh"),
         "the PQ route walked a second artifact")
       val meta = IvfIndex.metaAt(spark, ann).get
       val n0 = trainedOn.count()
@@ -89,9 +92,9 @@ class AnnArtifactSpec extends SparkTestBase {
         .filter(col("cell_id") =!= col("want_cell") ||
           !(col("code") === col("want_code")))
       assert(off.count() == 0, "a row is off its cell or its code")
+      pqTrace.arm("ivf")
     }
-    check("build")
-    assert(engine.lastIvfMode.contains("fresh"))
+    assert(check("build").contains("fresh"))
     engine.save("---\nbody: a saved note about topic3 and more\n")
     check("save")
     engine.save("---\nid: 4\nbody: overwritten note about topic3\n")
@@ -143,11 +146,10 @@ class AnnArtifactSpec extends SparkTestBase {
     assert(IvfIndex.metaAt(spark, s"$db/_ivf").get.codebooks.isEmpty)
 
     val query = "note about topic5"
-    val served = ranked(engine.recallServe(query, k = n.toInt,
-      nprobe = MemoEngine.AnnNlist, pqBytes = 0L))
-    assert(engine.lastServeRoute.map(_._1).contains("pq"),
-      engine.lastServeRoute)
-    assert(engine.lastIvfMode.contains("rebuild"), engine.lastIvfMode)
+    val (served, trace) = OpTrace.traced(ranked(engine.recallServe(query,
+      k = n.toInt, nprobe = MemoEngine.AnnNlist, pqBytes = 0L)))
+    assert(trace.serveRoute.map(_._1).contains("pq"), trace.serveRoute)
+    assert(trace.arm("ivf").contains("rebuild"), trace.arm("ivf"))
     // refine 4 × k = n covers the corpus: the PQ route is exact
     assert(served == ranked(engine.recall(query, k = n.toInt)))
     Seq("_ivf", "_ivfpq").foreach(d =>
@@ -167,17 +169,18 @@ class AnnArtifactSpec extends SparkTestBase {
     Seq(("ann", MemoEngine.DefaultServePqBytes), ("pq", 1L)).foreach {
       case (route, pqBytes) =>
         withClue(s"route $route: ") {
-          engine.recallServe(query, k = 3, pqBytes = pqBytes).collect()
-          assert(engine.lastIvfMode.contains("fresh"), engine.lastIvfMode)
+          val warm = OpTrace.traced(
+            engine.recallServe(query, k = 3, pqBytes = pqBytes).collect())._2
+          assert(warm.arm("ivf").contains("fresh"), warm.arm("ivf"))
           // the watermark still names the live version; the meta is gone
           Files.delete(Paths.get(db, "_ann", "_ivf_centroids"))
           assert(Files.readString(Paths.get(db, "_ann", "_store_version"))
             .trim == engine.versions.max.toString)
-          val served = ranked(engine.recallServe(query, k = n,
-            nprobe = MemoEngine.AnnNlist, pqBytes = pqBytes))
-          assert(engine.lastServeRoute.map(_._1).contains(route),
-            engine.lastServeRoute)
-          assert(engine.lastIvfMode.contains("rebuild"), engine.lastIvfMode)
+          val (served, trace) = OpTrace.traced(ranked(engine.recallServe(
+            query, k = n, nprobe = MemoEngine.AnnNlist, pqBytes = pqBytes)))
+          assert(trace.serveRoute.map(_._1).contains(route),
+            trace.serveRoute)
+          assert(trace.arm("ivf").contains("rebuild"), trace.arm("ivf"))
           assert(IvfIndex.metaAt(spark, s"$db/_ann").isDefined,
             "the rebuild must write the meta back")
           assert(served == exact)

@@ -3,7 +3,7 @@ package graft
 import java.io.ByteArrayOutputStream
 import java.nio.file.Files
 
-import graft.memo.{MemoCli, MemoEngine}
+import graft.memo.{MemoCli, MemoEngine, OpTrace}
 
 /** Golden transcript replay of the CLI lifecycle (reference
   * SKILL.md:96-151): exact stdout contract for save / recall / filtered
@@ -439,8 +439,10 @@ class CliSpec extends SparkTestBase {
       val engine = new MemoEngine(spark, db)
       engine.viewState("cardsrc", "metadata['src']",
         where = Some("{lang: en}"))
-      assert(engine.statsPairs("{lang: en}", "src").collect().nonEmpty)
-      assert(engine.lastStatsSource.contains("view:cardsrc"))
+      val (pairs, trace) = OpTrace.traced(
+        engine.statsPairs("{lang: en}", "src").collect())
+      assert(pairs.nonEmpty)
+      assert(trace.statsSource.contains("view:cardsrc"))
       val (c2, viaView) = run(ask: _*)
       assert(c2 == 0 && viaView == viaScan,
         s"view-served stats block diverged:\n$viaView\nvs\n$viaScan")
@@ -463,12 +465,15 @@ class CliSpec extends SparkTestBase {
       val engine = new MemoEngine(spark, db)
       engine.viewState("cnt", "metadata['src']",
         where = Some("{lang: en}"))
-      assert(engine.analyzeCount("{lang: en}") == 3)
-      assert(engine.lastCountSource.contains("view:cnt"),
-        s"expected the view route, got ${engine.lastCountSource}")
+      val (matched, viewed) = OpTrace.traced(engine.analyzeCount("{lang: en}"))
+      assert(matched == 3)
+      assert(viewed.countSource.contains("view:cnt"),
+        s"expected the view route, got ${viewed.countSource}")
       // uncovered filter falls back to the scan
-      assert(engine.analyzeCount("{lang: sw}") == 1)
-      assert(engine.lastCountSource.contains("scan"))
+      val (swMatched, scanned) =
+        OpTrace.traced(engine.analyzeCount("{lang: sw}"))
+      assert(swMatched == 1)
+      assert(scanned.countSource.contains("scan"))
       val (c2, viaView) = run(ask: _*)
       assert(c2 == 0 && viaView == viaScan,
         s"view-served Matched diverged:\n$viaView\nvs\n$viaScan")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-import graft.memo.{MemoEngine, MetaCodec}
+import graft.memo.{MemoEngine, MetaCodec, OpTrace}
 
 /** Randomized differential for the FILTERED ANN serving paths: over a
   * store whose metadata comes from the shared typed case generator
@@ -124,10 +124,11 @@ class FilteredAnnDifferentialSpec extends SparkTestBase {
       val exact = rows(engine.recall("corpus topic", k = n,
         filterExpr = Some(filter)))
       if (exact.nonEmpty && exact.size < n) nonTrivial += 1
-      val served = rows(engine.recallServe("corpus topic", k = n,
-        filterExpr = Some(filter), nprobe = MemoEngine.AnnNlist,
-        bruteRows = bruteRows, pqBytes = pqBytes))
-      val route = engine.lastServeRoute.map(_._1).getOrElse("?")
+      val (served, trace) = OpTrace.traced(rows(engine.recallServe(
+        "corpus topic", k = n, filterExpr = Some(filter),
+        nprobe = MemoEngine.AnnNlist, bruteRows = bruteRows,
+        pqBytes = pqBytes)))
+      val route = trace.serveRoute.map(_._1).getOrElse("?")
       routesSeen += route
       assert(served == exact,
         s"case $i filter $filter route=$route bruteRows=$bruteRows " +
@@ -191,11 +192,11 @@ class FilteredAnnDifferentialSpec extends SparkTestBase {
       val survivors = engine.recall("corpus topic", k = n,
         filterExpr = Some(filter)).count()
       if (survivors > 0 && survivors < n) nonTrivial += 1
-      val served = fused(engine.hybridServe("corpus topic", k = n,
-        filterExpr = Some(filter), perList = n,
+      val (served, trace) = OpTrace.traced(fused(engine.hybridServe(
+        "corpus topic", k = n, filterExpr = Some(filter), perList = n,
         nprobe = MemoEngine.AnnNlist, bruteRows = bruteRows,
-        pqBytes = pqBytes))
-      val route = engine.lastServeRoute.map(_._1).getOrElse("?")
+        pqBytes = pqBytes)))
+      val route = trace.serveRoute.map(_._1).getOrElse("?")
       routesSeen += route
       assert(served == exact,
         s"case $i filter $filter route=$route bruteRows=$bruteRows " +

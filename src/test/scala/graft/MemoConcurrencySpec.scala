@@ -421,8 +421,8 @@ class MemoConcurrencySpec extends SparkTestBase {
     // cluster shingle sets are disjoint (the minHashSignature caveat)
     def body(k: Int) = s"clusterdoc$k alpha$k beta$k gamma$k delta$k"
     e1.save((0 until 24).map(i => s"---\nbody: ${body(i / 3)}\n").mkString)
-    e1.dupGroups().collect() // initial rebuild
-    assert(e1.lastDupMode.contains("rebuild"))
+    val built = OpTrace.traced(e1.dupGroups().collect())._2 // initial rebuild
+    assert(built.arm("dupgroups").contains("rebuild"))
     val pool = Executors.newFixedThreadPool(2)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     def transient(e: Throwable): Boolean = {
@@ -443,8 +443,8 @@ class MemoConcurrencySpec extends SparkTestBase {
         var rounds = 0
         while (!appender.isCompleted && rounds < 30) {
           try {
-            e2.dupGroups().collect()
-            if (e2.lastDupMode.contains("append")) folds += 1
+            val walk = OpTrace.traced(e2.dupGroups().collect())._2
+            if (walk.arm("dupgroups").contains("append")) folds += 1
           } catch { case e: Throwable if transient(e) => () }
           rounds += 1
         }
@@ -455,13 +455,13 @@ class MemoConcurrencySpec extends SparkTestBase {
       // quiesce: bring the labeling current, then the convergence
       // oracle — racing folds and the final catch-up must together
       // produce EXACTLY the from-scratch labeling of the live corpus
-      val served = e1.dupGroups().collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val (served, last) = OpTrace.traced(e1.dupGroups().collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap)
       // non-vacuity: SOMETHING folded incrementally (a racing walk or
       // the final catch-up) — all-rebuild would not exercise the race
-      assert(folds >= 1 || e1.lastDupMode.contains("append"),
+      assert(folds >= 1 || last.arm("dupgroups").contains("append"),
         s"no incremental fold ever ran (folds=$folds, " +
-          s"final=${e1.lastDupMode})")
+          s"final=${last.arm("dupgroups")})")
       val scratch = graft.ops.Dedup.nearDupClusters(
           e1.records.select(col("id"), col("body")), "id", "body")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -642,6 +642,73 @@ class MemoConcurrencySpec extends SparkTestBase {
     assert(Files.exists(fresh), "fresh (possibly in-flight) attempt swept")
     assert(Files.exists(inflight),
       "old dir with a fresh deep file is an active parquet write — swept!")
+    engine.clean()
+  }
+
+  test("two serving clients on one engine each read only their own " +
+      "route: a brute and an ann recallServe racing on two threads") {
+    val db = freshStore()
+    val engine = new MemoEngine(spark, db)
+    (0 until 2).foreach { p =>
+      engine.save((0 until 20).map { j =>
+        s"---\nbody: route note ${p * 20 + j} about topic${j % 5}\n" +
+          s"metadata: {part: p$p}\n"
+      }.mkString)
+    }
+    val f = Some("{part: p1}")
+    // the same filter, two row budgets: 20 survivors ≤ 4096 brutes, and
+    // over a budget of 0 the IVF probe serves
+    def serve(bruteRows: Long): OpTrace = OpTrace.traced(
+      engine.recallServe("topic1 note", k = 5, filterExpr = f,
+        bruteRows = bruteRows).collect())._2
+    serve(0L) // trains the ANN artifact before the race
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      (0 until 3).foreach { round =>
+        val start = new java.util.concurrent.CyclicBarrier(2)
+        val runs = Seq(4096L, 0L).map(rows => pool.submit(
+          new java.util.concurrent.Callable[OpTrace] {
+            def call(): OpTrace = { start.await(); serve(rows) }
+          }))
+        val Seq(brute, ann) = runs.map(_.get(120, SECONDS))
+        assert(brute.serveRoute == Some(("brute", 20L)),
+          s"round $round: the brute client read ${brute.serveRoute}")
+        assert(ann.serveRoute == Some(("ann", 20L)),
+          s"round $round: the ann client read ${ann.serveRoute}")
+        // the brute arm probes nothing: no ladder, no artifact walk
+        assert(brute.filteredAnnProbe.isEmpty && brute.arms.isEmpty,
+          s"round $round: the ann client's decisions reached the brute " +
+            s"client's trace: ${brute.filteredAnnProbe} ${brute.arms}")
+        assert(ann.filteredAnnProbe.isDefined &&
+          ann.arm("ivf").contains("fresh"),
+          s"round $round: ${ann.filteredAnnProbe} ${ann.arms}")
+      }
+    } finally {
+      pool.shutdownNow()
+      engine.clean()
+    }
+  }
+
+  test("a traced append save records each commit phase once, pooled " +
+      "legs included; a later untraced commit on the same pool adds " +
+      "nothing to that trace") {
+    import scala.jdk.CollectionConverters._
+    val db = freshStore()
+    val engine = new MemoEngine(spark, db)
+    engine.save("---\nbody: phase seed\n")
+    val (_, trace) = OpTrace.traced(
+      engine.save("---\nbody: phase one\n---\nbody: phase two\n"))
+    def phases = trace.phases.asScala.map(_._1).toSeq
+    assert(phases.sorted == Seq("idrange_stats", "index_write",
+      "manifests_finalize", "records_write"), phases)
+    val recorded = trace.phases.asScala.toList
+    // the same append arm, untraced: its index leg runs on the pool
+    // thread that just carried the trace
+    engine.save("---\nbody: phase three\n")
+    engine.save("---\nbody: phase four\n")
+    assert(trace.phases.asScala.toList == recorded,
+      s"an untraced commit wrote into a finished trace: $phases")
+    assert(engine.records.count() == 5)
     engine.clean()
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.memo.{MemoEngine, MemoOps, YamlIO}
+import graft.memo.{MemoEngine, MemoOps, OpTrace, YamlIO}
 
 /** Golden lifecycle replay (reference SKILL.md:96-143): save → recall →
   * filtered recall → analyze → reindex → clean against a versioned Parquet
@@ -724,46 +724,48 @@ class MemoEngineSpec extends SparkTestBase {
     // no widening retry fires
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val annP1 = rows(engine.annRecall("topic1 theme2", k = 5,
-      nprobe = MemoEngine.AnnNlist, filterExpr = Some("{part: p1}")))
+    val (annP1, p1Trace) = OpTrace.traced(rows(engine.annRecall(
+      "topic1 theme2", k = 5, nprobe = MemoEngine.AnnNlist,
+      filterExpr = Some("{part: p1}"))))
     val exactP1 = rows(engine.recall("topic1 theme2", k = 5,
       filterExpr = Some("{part: p1}")))
     assert(annP1 == exactP1,
       s"full-probe filtered ANN diverged from filtered exact: $annP1 vs $exactP1")
-    assert(engine.lastFilteredAnnProbe == Some((16, 0)),
+    assert(p1Trace.filteredAnnProbe == Some((16, 0)),
       "a well-filled full-probe query must not widen")
     // selective filter (5 survivors ≤ k = 10), nprobe = 1: the cached
     // mask's count proves no intermediate probe can fill k, so the
     // ladder SHORT-CIRCUITS to one full-probe pass (reported as a
     // single retry) and the result is the ENTIRE survivor set with
     // exact-ranking scores — a post-filtered k would under-fill here
-    val annHot = rows(engine.annRecall("topic1 theme2", k = 10,
-      nprobe = 1, filterExpr = Some("{hot: h1}")))
+    val (annHot, hotTrace) = OpTrace.traced(rows(engine.annRecall(
+      "topic1 theme2", k = 10, nprobe = 1, filterExpr = Some("{hot: h1}"))))
     val exactHot = rows(engine.recall("topic1 theme2", k = 10,
       filterExpr = Some("{hot: h1}")))
     assert(annHot.map(_._1).toSet == Set(0L, 12L, 24L, 36L, 48L),
       s"filtered ANN missed survivors: $annHot")
     assert(annHot == exactHot,
       s"widened filtered ANN diverged from filtered exact: $annHot vs $exactHot")
-    assert(engine.lastFilteredAnnProbe == Some((16, 1)),
+    assert(hotTrace.filteredAnnProbe == Some((16, 1)),
       s"expected the ≤k shortcut's single full-probe jump, " +
-        s"got ${engine.lastFilteredAnnProbe}")
+        s"got ${hotTrace.filteredAnnProbe}")
     // the LADDER arm (survivors > k): p1 has 20 survivors spread over
     // 16 cells, so a 1-cell probe under-fills k=16 and the loop doubles
     // until filled — the result is k filter survivors (approximate
     // ranking below full probe, the standard ANN contract), never short
-    val ladder = rows(engine.annRecall("topic1 theme2", k = 16,
-      nprobe = 1, filterExpr = Some("{part: p1}")))
+    val (ladder, ladderTrace) = OpTrace.traced(rows(engine.annRecall(
+      "topic1 theme2", k = 16, nprobe = 1, filterExpr = Some("{part: p1}"))))
     assert(ladder.size == 16, s"ladder under-filled: ${ladder.size}")
     assert(ladder.map(_._1).forall(id => id >= 20 && id < 40),
       s"ladder leaked non-survivors: $ladder")
-    val (np, retries) = engine.lastFilteredAnnProbe.get
+    val (np, retries) = ladderTrace.filteredAnnProbe.get
     assert(retries >= 1 && np > 1,
       s"expected the doubling loop to fire, got ($np, $retries)")
     // empty filter result: no scan, no rows, seam reports (0, 0)
-    assert(engine.annRecall("topic1 theme2", k = 5,
-      filterExpr = Some("{part: nope}")).count() == 0)
-    assert(engine.lastFilteredAnnProbe == Some((0, 0)))
+    val (none, noneTrace) = OpTrace.traced(engine.annRecall("topic1 theme2",
+      k = 5, filterExpr = Some("{part: nope}")).count())
+    assert(none == 0)
+    assert(noneTrace.filteredAnnProbe == Some((0, 0)))
     engine.clean()
   }
 
@@ -774,28 +776,29 @@ class MemoEngineSpec extends SparkTestBase {
     // full probe, well-filled: masked ADC candidates cover all top-k
     // survivors (k×refine ≥ k), exact re-rank ⇒ parity with the exact
     // filtered ranking
-    val pqP1 = rows(engine.pqRecall("topic1 theme2", k = 5,
-      nprobe = MemoEngine.AnnNlist, refine = 8,
-      filterExpr = Some("{part: p1}")))
+    val (pqP1, p1Trace) = OpTrace.traced(rows(engine.pqRecall(
+      "topic1 theme2", k = 5, nprobe = MemoEngine.AnnNlist, refine = 8,
+      filterExpr = Some("{part: p1}"))))
     val exactP1 = rows(engine.recall("topic1 theme2", k = 5,
       filterExpr = Some("{part: p1}")))
     assert(pqP1 == exactP1,
       s"full-probe filtered PQ diverged from filtered exact: $pqP1 vs $exactP1")
-    assert(engine.lastFilteredAnnProbe == Some((16, 0)))
+    assert(p1Trace.filteredAnnProbe == Some((16, 0)))
     // selective filter: because the mask applies BEFORE the ADC cut,
     // every survivor is a candidate — the ≤k shortcut jumps to full
     // probe and fills the whole 5-doc survivor set with exact scores
     // (a post-refine filter would return only the survivors that
     // happened to crack the unfiltered top-k×refine)
-    val pqHot = rows(engine.pqRecall("topic1 theme2", k = 10,
-      nprobe = 1, refine = 4, filterExpr = Some("{hot: h1}")))
+    val (pqHot, hotTrace) = OpTrace.traced(rows(engine.pqRecall(
+      "topic1 theme2", k = 10, nprobe = 1, refine = 4,
+      filterExpr = Some("{hot: h1}"))))
     val exactHot = rows(engine.recall("topic1 theme2", k = 10,
       filterExpr = Some("{hot: h1}")))
     assert(pqHot.map(_._1).toSet == Set(0L, 12L, 24L, 36L, 48L),
       s"filtered PQ missed survivors: $pqHot")
     assert(pqHot == exactHot,
       s"widened filtered PQ diverged from filtered exact: $pqHot vs $exactHot")
-    assert(engine.lastFilteredAnnProbe == Some((16, 1)))
+    assert(hotTrace.filteredAnnProbe == Some((16, 1)))
     engine.clean()
   }
 
@@ -836,12 +839,13 @@ class MemoEngineSpec extends SparkTestBase {
     // probed cell holds ~1-2 of p1's 20 survivors, so the per-query-id
     // ladder must widen — and the widened batch must equal the
     // single-query widening path per query, ids AND scores
-    val starving = engine.annRecallBatch(queries, "qid", "qtext", k = 5,
-        nprobe = 1, filterExpr = Some("{part: p1}"))
+    val (starving, starveTrace) = OpTrace.traced(engine.annRecallBatch(
+        queries, "qid", "qtext", k = 5, nprobe = 1,
+        filterExpr = Some("{part: p1}"))
       .collect()
       .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val widen = engine.lastBatchWiden.getOrElse((0, 0))
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap)
+    val widen = starveTrace.batchWiden.getOrElse((0, 0))
     assert(widen._2 >= 1 && widen._1 > 1,
       s"expected the batch ladder to widen from nprobe=1, got $widen")
     queries.collect().foreach { r =>
@@ -857,12 +861,13 @@ class MemoEngineSpec extends SparkTestBase {
     }
     // ≤ k survivors: the batch jumps straight to the full probe in ONE
     // extra-rung report, exactly like the single path's shortcut
-    val fewSurvivors = engine.annRecallBatch(queries, "qid", "qtext",
-        k = 5, nprobe = 1, filterExpr = Some("{hot: h1}"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(engine.lastBatchWiden ==
+    val (fewSurvivors, fewTrace) = OpTrace.traced(engine.annRecallBatch(
+        queries, "qid", "qtext", k = 5, nprobe = 1,
+        filterExpr = Some("{hot: h1}"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))))
+    assert(fewTrace.batchWiden ==
         Some((MemoEngine.AnnNlist, 1)),
-      s"expected the <=k shortcut report, got ${engine.lastBatchWiden}")
+      s"expected the <=k shortcut report, got ${fewTrace.batchWiden}")
     assert(fewSurvivors.map(_._2).toSet == Set(0L, 12L, 24L, 36L, 48L),
       "shortcut full probe must return exactly the h1 survivors")
     engine.clean()
@@ -898,9 +903,9 @@ class MemoEngineSpec extends SparkTestBase {
       ("unfiltered-ivf", None, 4096L,
         MemoEngine.DefaultServePqBytes, "ann"))
     cases.foreach { case (label, f, br, pb, route) =>
-      val batch = served(f, br, pb)
-      assert(engine.lastServeRoute.exists(_._1 == route),
-        s"$label: expected route $route, got ${engine.lastServeRoute}")
+      val (batch, trace) = OpTrace.traced(served(f, br, pb))
+      assert(trace.serveRoute.exists(_._1 == route),
+        s"$label: expected route $route, got ${trace.serveRoute}")
       queries.collect().foreach { r =>
         val s = single(r.getString(1), f, br, pb)
         assert(batch.getOrElse(r.getLong(0), Set.empty) == s,
@@ -919,18 +924,18 @@ class MemoEngineSpec extends SparkTestBase {
     val f = Some("{part: p1}")
     // the EXPLICIT arm obeys the caller: nprobe=1 on p1 (20 survivors,
     // nlist=16) pays the widening ladder
-    engine.annRecall("topic1 theme2", k = 5, nprobe = 1,
-      filterExpr = f).collect()
-    val naive = engine.lastFilteredAnnProbe.getOrElse((0, 0))
+    val naive = OpTrace.traced(engine.annRecall("topic1 theme2", k = 5,
+      nprobe = 1, filterExpr = f).collect())._2
+      .filteredAnnProbe.getOrElse((0, 0))
     assert(naive._2 >= 1,
       s"explicit arm should widen from nprobe=1, got $naive")
     // the FRONT DOOR at the same nominal nprobe starts at the width the
     // survivor count implies (2k·nlist/survivors = 2·5·16/20 = 8)
-    val served = engine.recallServe("topic1 theme2", k = 5,
-        filterExpr = f, nprobe = 1, bruteRows = 10L)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-    assert(engine.lastServeRoute.exists(_._1 == "ann"))
-    val adaptive = engine.lastFilteredAnnProbe.getOrElse((0, 0))
+    val (served, serveTrace) = OpTrace.traced(engine.recallServe(
+        "topic1 theme2", k = 5, filterExpr = f, nprobe = 1, bruteRows = 10L)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet)
+    assert(serveTrace.serveRoute.exists(_._1 == "ann"))
+    val adaptive = serveTrace.filteredAnnProbe.getOrElse((0, 0))
     assert(adaptive._1 >= 8,
       s"front door should start bound-aware, got $adaptive")
     assert(adaptive._2 < naive._2,
@@ -947,13 +952,14 @@ class MemoEngineSpec extends SparkTestBase {
     // the batch front door lands on the SAME width and rungs, and
     // matches per query
     val queries = Seq((0L, "topic1 theme2")).toDF("qid", "qtext")
-    val batch = engine.recallServeBatch(queries, "qid", "qtext", k = 5,
-        filterExpr = f, nprobe = 1, bruteRows = 10L)
-      .collect().map(r => (r.getLong(1), r.getDouble(2))).toSet
+    val (batch, batchTrace) = OpTrace.traced(engine.recallServeBatch(
+        queries, "qid", "qtext", k = 5, filterExpr = f, nprobe = 1,
+        bruteRows = 10L)
+      .collect().map(r => (r.getLong(1), r.getDouble(2))).toSet)
     assert(batch == served,
       s"batch front door diverged at the adaptive width: $batch")
-    assert(engine.lastBatchWiden.contains(adaptive),
-      s"batch ladder telemetry diverged: ${engine.lastBatchWiden} " +
+    assert(batchTrace.batchWiden.contains(adaptive),
+      s"batch ladder telemetry diverged: ${batchTrace.batchWiden} " +
         s"vs $adaptive")
     engine.clean()
   }
@@ -982,10 +988,10 @@ class MemoEngineSpec extends SparkTestBase {
         s"$door did not return a frame over local rows")
     }
     // nprobe=1 on p1 widens: the ladder caches >= 2 rungs
-    val ladder = engine.annRecallBatch(queries, "qid", "qtext", k = 5,
-      nprobe = 1, filterExpr = p1)
-    assert(engine.lastBatchWiden.exists(_._2 >= 1),
-      s"the batch ladder must widen, got ${engine.lastBatchWiden}")
+    val (ladder, ladderTrace) = OpTrace.traced(engine.annRecallBatch(
+      queries, "qid", "qtext", k = 5, nprobe = 1, filterExpr = p1))
+    assert(ladderTrace.batchWiden.exists(_._2 >= 1),
+      s"the batch ladder must widen, got ${ladderTrace.batchWiden}")
     local("annRecallBatch (widening)", ladder)
     // the answer reads no cache: consuming it twice gives one answer
     assert(ladder.collect().toSet == ladder.collect().toSet)
@@ -1027,9 +1033,9 @@ class MemoEngineSpec extends SparkTestBase {
           filterExpr = Some("{part: p1}"))
         .collect().map(r => (r.getLong(1), r.getDouble(2))).toSet
     // sequential baseline for result parity
-    val baseline = serve()
-    assert(engine.lastBatchWiden.exists(_._2 >= 1),
-      s"the baseline ladder must widen, got ${engine.lastBatchWiden}")
+    val (baseline, baseTrace) = OpTrace.traced(serve())
+    assert(baseTrace.batchWiden.exists(_._2 >= 1),
+      s"the baseline ladder must widen, got ${baseTrace.batchWiden}")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     try {
       (0 until 3).foreach { round =>
@@ -1063,11 +1069,11 @@ class MemoEngineSpec extends SparkTestBase {
     val twin = engine.annMask("{part: p1}").cache()
     try {
       twin.count()
-      val got = engine.annRecallBatch(queries, "qid", "qtext", k = 5,
-          nprobe = 1, filterExpr = Some("{part: p1}"))
-        .collect().map(r => (r.getLong(1), r.getDouble(2))).toSet
-      assert(engine.lastBatchWiden.exists(_._2 >= 1),
-        s"the ladder must widen, got ${engine.lastBatchWiden}")
+      val (got, trace) = OpTrace.traced(engine.annRecallBatch(queries,
+          "qid", "qtext", k = 5, nprobe = 1, filterExpr = Some("{part: p1}"))
+        .collect().map(r => (r.getLong(1), r.getDouble(2))).toSet)
+      assert(trace.batchWiden.exists(_._2 >= 1),
+        s"the ladder must widen, got ${trace.batchWiden}")
       assert(got.nonEmpty)
       assert(twin.storageLevel != StorageLevel.NONE,
         "the filtered batch serve uncached another caller's twin plan")
@@ -1110,8 +1116,9 @@ class MemoEngineSpec extends SparkTestBase {
     }
     // the exact-fill ladder at a starving nprobe equals the single-query
     // widening path per query, and fills exactly k
-    val starving = batchSets(Some("{part: p1}"), 5, 1)
-    val widen = engine.lastBatchWiden.getOrElse((0, 0))
+    val (starving, starveTrace) =
+      OpTrace.traced(batchSets(Some("{part: p1}"), 5, 1))
+    val widen = starveTrace.batchWiden.getOrElse((0, 0))
     assert(widen._2 >= 1 && widen._1 > 1,
       s"expected the pq batch ladder to widen from nprobe=1, got $widen")
     queries.collect().foreach { r =>
@@ -1123,9 +1130,9 @@ class MemoEngineSpec extends SparkTestBase {
         s"pq fill contract broken for '${r.getString(1)}'")
     }
     // ≤ k survivors: the shortcut report matches the ann batch's shape
-    batchSets(Some("{hot: h1}"), 5, 1)
-    assert(engine.lastBatchWiden == Some((MemoEngine.AnnNlist, 1)),
-      s"expected the <=k shortcut report, got ${engine.lastBatchWiden}")
+    val few = OpTrace.traced(batchSets(Some("{hot: h1}"), 5, 1))._2
+    assert(few.batchWiden == Some((MemoEngine.AnnNlist, 1)),
+      s"expected the <=k shortcut report, got ${few.batchWiden}")
     engine.clean()
   }
 
@@ -1139,11 +1146,11 @@ class MemoEngineSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // one router serves every door: the batch and hybrid doors, driven
     // through the same inputs, must report the identical (route, bound)
-    // recallServe just reported
-    def sameRouteOnEveryDoor(e: MemoEngine, q: String,
+    // recallServe just reported (`expected`)
+    def sameRouteOnEveryDoor(e: MemoEngine,
+        expected: Option[(String, Long)], q: String,
         filter: Option[String], bruteRows: Long = 4096L,
         pqBytes: Long = MemoEngine.DefaultServePqBytes): Unit = {
-      val expected = e.lastServeRoute
       val queries = Seq((0L, q)).toDF("qid", "qtext")
       Seq[(String, () => Unit)](
         "recallServeBatch" -> (() => e.recallServeBatch(queries, "qid",
@@ -1156,64 +1163,67 @@ class MemoEngineSpec extends SparkTestBase {
           "qtext", k = 5, filterExpr = filter, bruteRows = bruteRows,
           pqBytes = pqBytes).collect())
       ).foreach { case (door, serve) =>
-        e.lastServeRoute = None
-        serve()
-        assert(e.lastServeRoute == expected,
-          s"$door routed ${e.lastServeRoute}, recallServe $expected")
+        val routed = OpTrace.traced(serve())._2.serveRoute
+        assert(routed == expected,
+          s"$door routed $routed, recallServe $expected")
       }
     }
     // selective filter, default budget: the surviving segment's 20 rows
     // bound the brute scan — take the exact pruned-frame arm
-    val served = rows(engine.recallServe("topic1 theme2", k = 5,
-      filterExpr = Some("{part: p1}")))
-    assert(engine.lastServeRoute == Some(("brute", 20L)),
-      s"expected the bounded brute route, got ${engine.lastServeRoute}")
-    sameRouteOnEveryDoor(engine, "topic1 theme2", Some("{part: p1}"))
+    val (served, bruteTrace) = OpTrace.traced(rows(engine.recallServe(
+      "topic1 theme2", k = 5, filterExpr = Some("{part: p1}"))))
+    assert(bruteTrace.serveRoute == Some(("brute", 20L)),
+      s"expected the bounded brute route, got ${bruteTrace.serveRoute}")
+    sameRouteOnEveryDoor(engine, bruteTrace.serveRoute, "topic1 theme2",
+      Some("{part: p1}"))
     assert(served == rows(engine.recall("topic1 theme2", k = 5,
       filterExpr = Some("{part: p1}"))))
     // same filter under a tiny row budget: the bound exceeds it — probe
     // raw vectors (20 rows × dim × 4 B is far under the byte budget)
-    val servedAnn = rows(engine.recallServe("topic1 theme2", k = 5,
-      filterExpr = Some("{part: p1}"), nprobe = MemoEngine.AnnNlist,
-      bruteRows = 10L))
-    assert(engine.lastServeRoute == Some(("ann", 20L)))
-    sameRouteOnEveryDoor(engine, "topic1 theme2", Some("{part: p1}"),
-      bruteRows = 10L)
+    val (servedAnn, annTrace) = OpTrace.traced(rows(engine.recallServe(
+      "topic1 theme2", k = 5, filterExpr = Some("{part: p1}"),
+      nprobe = MemoEngine.AnnNlist, bruteRows = 10L)))
+    assert(annTrace.serveRoute == Some(("ann", 20L)))
+    sameRouteOnEveryDoor(engine, annTrace.serveRoute, "topic1 theme2",
+      Some("{part: p1}"), bruteRows = 10L)
     assert(servedAnn == rows(engine.annRecall("topic1 theme2", k = 5,
       nprobe = MemoEngine.AnnNlist, filterExpr = Some("{part: p1}"))
       .filter(col("score") >= MemoOps.ScoreFloor)))
     // …and under a tiny BYTE budget too: the survivors' raw vectors
     // outweigh it — the probe must swap to the compressed (PQ) path
-    val servedPq = rows(engine.recallServe("topic1 theme2", k = 5,
-      filterExpr = Some("{part: p1}"), nprobe = MemoEngine.AnnNlist,
-      bruteRows = 10L, pqBytes = 64L))
-    assert(engine.lastServeRoute == Some(("pq", 20L)),
-      s"expected the byte-bounded pq route, got ${engine.lastServeRoute}")
-    sameRouteOnEveryDoor(engine, "topic1 theme2", Some("{part: p1}"),
-      bruteRows = 10L, pqBytes = 64L)
+    val (servedPq, pqTrace) = OpTrace.traced(rows(engine.recallServe(
+      "topic1 theme2", k = 5, filterExpr = Some("{part: p1}"),
+      nprobe = MemoEngine.AnnNlist, bruteRows = 10L, pqBytes = 64L)))
+    assert(pqTrace.serveRoute == Some(("pq", 20L)),
+      s"expected the byte-bounded pq route, got ${pqTrace.serveRoute}")
+    sameRouteOnEveryDoor(engine, pqTrace.serveRoute, "topic1 theme2",
+      Some("{part: p1}"), bruteRows = 10L, pqBytes = 64L)
     assert(servedPq == rows(engine.pqRecall("topic1 theme2", k = 5,
       nprobe = MemoEngine.AnnNlist, filterExpr = Some("{part: p1}"))
       .filter(col("score") >= MemoOps.ScoreFloor)))
     // unfiltered always probes (the brute arm would be the corpus scan
     // the artifact exists to avoid); the byte bound prices the CHAIN
-    engine.recallServe("topic1 theme2", k = 5).collect()
-    assert(engine.lastServeRoute.exists(_._1 == "ann"))
-    sameRouteOnEveryDoor(engine, "topic1 theme2", None)
-    engine.recallServe("topic1 theme2", k = 5, pqBytes = 64L).collect()
-    assert(engine.lastServeRoute.exists(_._1 == "pq"),
-      s"unfiltered past the byte budget must compress, got " +
-        s"${engine.lastServeRoute}")
-    sameRouteOnEveryDoor(engine, "topic1 theme2", None, pqBytes = 64L)
+    val unfiltered = OpTrace.traced(
+      engine.recallServe("topic1 theme2", k = 5).collect())._2.serveRoute
+    assert(unfiltered.exists(_._1 == "ann"))
+    sameRouteOnEveryDoor(engine, unfiltered, "topic1 theme2", None)
+    val compressed = OpTrace.traced(engine.recallServe("topic1 theme2",
+      k = 5, pqBytes = 64L).collect())._2.serveRoute
+    assert(compressed.exists(_._1 == "pq"),
+      s"unfiltered past the byte budget must compress, got $compressed")
+    sameRouteOnEveryDoor(engine, compressed, "topic1 theme2", None,
+      pqBytes = 64L)
     engine.clean()
     // a store without stats sidecars: the bound is unknowable — pricing
     // blind assumes big, which is the compressed arm
     val dir = Files.createTempDirectory("serve_nostats").toString
     val e2 = new MemoEngine(spark, s"$dir/db", metaStatsSidecars = false)
     e2.save("---\nbody: only note here\nmetadata: {part: p0}\n")
-    e2.recallServe("note", k = 1, filterExpr = Some("{part: p0}")).collect()
-    assert(e2.lastServeRoute == Some(("pq", Long.MaxValue)),
-      s"missing sidecars must route to pq, got ${e2.lastServeRoute}")
-    sameRouteOnEveryDoor(e2, "note", Some("{part: p0}"))
+    val blind = OpTrace.traced(e2.recallServe("note", k = 1,
+      filterExpr = Some("{part: p0}")).collect())._2.serveRoute
+    assert(blind == Some(("pq", Long.MaxValue)),
+      s"missing sidecars must route to pq, got $blind")
+    sameRouteOnEveryDoor(e2, blind, "note", Some("{part: p0}"))
     e2.clean()
   }
 
@@ -1317,10 +1327,10 @@ class MemoEngineSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val f = Some("{part: p1}")
     def serve(bruteRows: Long, pqBytes: Long) = {
-      val r = rows(engine.hybridServe("topic1 theme2", k = 8,
-        filterExpr = f, nprobe = MemoEngine.AnnNlist,
-        bruteRows = bruteRows, pqBytes = pqBytes))
-      (r, engine.lastServeRoute.map(_._1).getOrElse("?"))
+      val (r, trace) = OpTrace.traced(rows(engine.hybridServe(
+        "topic1 theme2", k = 8, filterExpr = f, nprobe = MemoEngine.AnnNlist,
+        bruteRows = bruteRows, pqBytes = pqBytes)))
+      (r, trace.serveRoute.map(_._1).getOrElse("?"))
     }
     // route decisions mirror recallServe's: row bound, then byte budget
     val (viaBrute, r1) = serve(4096L, MemoEngine.DefaultServePqBytes)
@@ -1343,10 +1353,10 @@ class MemoEngineSpec extends SparkTestBase {
     assert(viaPq == viaBrute,
       s"pq-routed fused ranking diverged: $viaPq vs $viaBrute")
     // unfiltered never brutes — the probe arm serves
-    rows(engine.hybridServe("topic1 theme2", k = 8,
-      nprobe = MemoEngine.AnnNlist))
-    assert(engine.lastServeRoute.exists(r => r._1 == "ann"),
-      s"unfiltered hybridServe must probe, got ${engine.lastServeRoute}")
+    val unfiltered = OpTrace.traced(rows(engine.hybridServe("topic1 theme2",
+      k = 8, nprobe = MemoEngine.AnnNlist)))._2.serveRoute
+    assert(unfiltered.exists(r => r._1 == "ann"),
+      s"unfiltered hybridServe must probe, got $unfiltered")
     engine.clean()
   }
 
@@ -1375,9 +1385,9 @@ class MemoEngineSpec extends SparkTestBase {
       ("pq", Some("{part: p1}"), 10L, 64L),
       ("ann", None, 4096L, MemoEngine.DefaultServePqBytes))
     cases.foreach { case (route, f, br, pb) =>
-      val batch = batchSets(f, br, pb)
-      assert(engine.lastServeRoute.exists(_._1 == route),
-        s"expected route $route, got ${engine.lastServeRoute}")
+      val (batch, trace) = OpTrace.traced(batchSets(f, br, pb))
+      assert(trace.serveRoute.exists(_._1 == route),
+        s"expected route $route, got ${trace.serveRoute}")
       queries.collect().foreach { r =>
         val single = singleSet(r.getString(1), f, br, pb)
         assert(batch.getOrElse(r.getLong(0), Set.empty) == single,
@@ -1406,57 +1416,63 @@ class MemoEngineSpec extends SparkTestBase {
       .filter(col("raw").isNotNull && col("raw") =!= "z")
       .groupBy("raw").count().collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
+    // the stats source one call took
+    def sourceOf(call: => Any): Option[String] =
+      OpTrace.traced(call)._2.statsSource
     // no covering view yet: the corpus scan serves
-    val viaScan = pairs()
-    assert(engine.lastStatsSource.contains("scan"))
+    val (viaScan, scanTrace) = OpTrace.traced(pairs())
+    assert(scanTrace.statsSource.contains("scan"))
     assert(viaScan == expected())
     // a view whose groupKey/where match the ask verbatim COVERS it: the
     // pairs come from its state, byte-identical
     engine.viewState("cardsrc", "metadata['src']",
       where = Some(filter))
-    val viaView = pairs()
-    assert(engine.lastStatsSource.contains("view:cardsrc"),
-      s"expected the view route, got ${engine.lastStatsSource}")
+    val (viaView, viewTrace) = OpTrace.traced(pairs())
+    assert(viewTrace.statsSource.contains("view:cardsrc"),
+      s"expected the view route, got ${viewTrace.statsSource}")
     assert(viaView == viaScan,
       s"view-served pairs diverged: $viaView vs $viaScan")
     assert(engine.cardinality(filter, "src") ==
       viaScan.map(_._1).size.toLong)
     // coverage is PARSE-level, not string-level: the brace-less spelling
     // of the same filter still routes to the view
-    engine.statsPairs("lang: en", "src").collect()
-    assert(engine.lastStatsSource.contains("view:cardsrc"),
+    assert(sourceOf(engine.statsPairs("lang: en", "src").collect())
+        .contains("view:cardsrc"),
       "a parse-equivalent filter spelling must still cover")
     // ...and CANONICAL-level: a single-element $and wrapper is the same
     // predicate (all([x]) = x) and must not fall to the scan arm
-    assert(engine.statsPairs("$and: [{lang: en}]", "src").collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSet == viaScan)
-    assert(engine.lastStatsSource.contains("view:cardsrc"),
+    val (andPairs, andTrace) = OpTrace.traced(
+      engine.statsPairs("$and: [{lang: en}]", "src").collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSet)
+    assert(andPairs == viaScan)
+    assert(andTrace.statsSource.contains("view:cardsrc"),
       "a single-element $and wrapper must still cover")
-    engine.statsPairs("$or: [{lang: en}]", "src").collect()
-    assert(engine.lastStatsSource.contains("view:cardsrc"),
+    assert(sourceOf(engine.statsPairs("$or: [{lang: en}]", "src").collect())
+        .contains("view:cardsrc"),
       "a single-element $or wrapper must still cover")
     // uncovered asks: different filter, different key → scan fallback
-    engine.statsPairs("{lang: sw}", "src").collect()
-    assert(engine.lastStatsSource.contains("scan"),
+    assert(sourceOf(engine.statsPairs("{lang: sw}", "src").collect())
+        .contains("scan"),
       "a different filter must not be served from the view")
-    engine.statsPairs("$and: [{lang: en}, {src: s1}]", "src").collect()
-    assert(engine.lastStatsSource.contains("scan"),
+    assert(sourceOf(engine.statsPairs("$and: [{lang: en}, {src: s1}]",
+        "src").collect()).contains("scan"),
       "a genuinely stronger conjunction must not be served from the view")
-    engine.statsPairs(filter, "lang").collect()
-    assert(engine.lastStatsSource.contains("scan"),
+    assert(sourceOf(engine.statsPairs(filter, "lang").collect())
+        .contains("scan"),
       "a different key must not be served from the view")
     // freshness: the view route walks viewState's refresh first, so a
     // commit after registration is visible — never a stale block
     engine.save(doc("en", "s9", 99))
-    val afterAppend = pairs()
-    assert(engine.lastStatsSource.contains("view:cardsrc"))
+    val (afterAppend, appendTrace) = OpTrace.traced(pairs())
+    assert(appendTrace.statsSource.contains("view:cardsrc"))
     assert(afterAppend == expected(),
       s"view-served stats went stale: $afterAppend vs ${expected()}")
     // the A8 rollup API rides the same pairs: view-served, equal to the
     // MemoOps scan formulas
-    val rollup = engine.analyzeStats(filter, "src").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(engine.lastStatsSource.contains("view:cardsrc"))
+    val (rollup, rollupTrace) = OpTrace.traced(
+      engine.analyzeStats(filter, "src").collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSeq)
+    assert(rollupTrace.statsSource.contains("view:cardsrc"))
     val viaOps = graft.memo.MemoOps.statsTopK(
         engine.records, filter, "src").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
@@ -1485,15 +1501,15 @@ class MemoEngineSpec extends SparkTestBase {
     // sorted multiset [10, 20, 20, 30]: p0 → 10, p0.5 → position 1.5,
     // both brackets 20 (the duplicate weight) → 20 exactly, p1 → 30
     val expect = Seq((0.0, 10.0), (0.5, 20.0), (1.0, 30.0))
-    val scanned = ask()
-    assert(engine.lastStatsSource.contains("scan"), engine.lastStatsSource)
+    val (scanned, scanTrace) = OpTrace.traced(ask())
+    assert(scanTrace.statsSource.contains("scan"), scanTrace.statsSource)
     assert(scanned == expect, s"scan arm: $scanned")
     // covering view: the SAME numbers must serve O(state)
     engine.viewState("pctw", "metadata['w']", Seq.empty, Map.empty,
       where = Some("{flt: f1}")).count()
-    val served = ask()
-    assert(engine.lastStatsSource.exists(_.startsWith("view:")),
-      engine.lastStatsSource)
+    val (served, viewTrace) = OpTrace.traced(ask())
+    assert(viewTrace.statsSource.exists(_.startsWith("view:")),
+      viewTrace.statsSource)
     assert(served == expect, s"view arm: $served")
     // no numeric value under the ask → one NULL row per percent
     val none = engine.analyzePercentiles("{flt: f2}", "w", Seq(0.5))
@@ -1546,9 +1562,9 @@ class MemoEngineSpec extends SparkTestBase {
     }
     assert(r2("view:mview") == "incremental", s"got ${r2("view:mview")}")
     // the next VIEW serve is fresh (zero catch-up, the lock-free arm)
-    engine.viewState("mview", "metadata['part']",
-      where = Some("{part: p1}")).collect()
-    assert(engine.lastViewRefresh.exists(_._1 == "fresh"))
+    val next = OpTrace.traced(engine.viewState("mview", "metadata['part']",
+      where = Some("{part: p1}")).collect())._2
+    assert(next.viewRefresh.exists(_._1 == "fresh"))
     // drift arm: a sky-high threshold skips and touches NO artifact file
     def mtimes(): Map[String, Long] = {
       import scala.jdk.CollectionConverters._
@@ -1719,51 +1735,59 @@ class MemoEngineSpec extends SparkTestBase {
         "---\nbody: two\nmetadata: {lang: sw, src: s2}\n" +
         "---\nbody: three\nmetadata: {lang: en, src: s1}\n" +
         "---\nbody: four with no metadata at all\n")
+    // each count runs under its own trace; `source` is the count
+    // source the last one took
+    var source: Option[String] = None
+    def counted(filter: String): Long = {
+      val (n, trace) = OpTrace.traced(engine.analyzeCount(filter))
+      source = trace.countSource
+      n
+    }
     // no covering view yet: scan
-    assert(engine.analyzeCount("{lang: en}") == 2)
-    assert(engine.lastCountSource.contains("scan"))
+    assert(counted("{lang: en}") == 2)
+    assert(source.contains("scan"))
     engine.viewState("c1", "metadata['src']",
       where = Some("{lang: en}"))
-    assert(engine.analyzeCount("{lang: en}") == 2)
-    assert(engine.lastCountSource.contains("view:c1"),
-      s"expected the view route, got ${engine.lastCountSource}")
+    assert(counted("{lang: en}") == 2)
+    assert(source.contains("view:c1"),
+      s"expected the view route, got $source")
     // coverage is PARSE-level: the brace-less spelling still covers
-    assert(engine.analyzeCount("lang: en") == 2)
-    assert(engine.lastCountSource.contains("view:c1"))
+    assert(counted("lang: en") == 2)
+    assert(source.contains("view:c1"))
     // ...and CANONICAL-level: the $and-wrapped spelling of the same
     // predicate covers; a genuinely different one scans
-    assert(engine.analyzeCount("$and: [{lang: en}]") == 2)
-    assert(engine.lastCountSource.contains("view:c1"),
-      s"expected the view route, got ${engine.lastCountSource}")
-    assert(engine.analyzeCount("$or: [{lang: en}, {lang: sw}]") == 3)
-    assert(engine.lastCountSource.contains("scan"))
+    assert(counted("$and: [{lang: en}]") == 2)
+    assert(source.contains("view:c1"),
+      s"expected the view route, got $source")
+    assert(counted("$or: [{lang: en}, {lang: sw}]") == 3)
+    assert(source.contains("scan"))
     // the match-all ask: the reference SKIPS metadata-less records
     // before evaluating any filter (memo_cli.py:670-672), so the scan
     // counts 3 of 4 — and a WHERE-LESS view (which counts every row,
     // no-metadata included) must therefore NEVER cover it...
-    assert(engine.analyzeCount("{}") == 3)
-    assert(engine.lastCountSource.contains("scan"))
+    assert(counted("{}") == 3)
+    assert(source.contains("scan"))
     engine.viewState("vnowhere", "metadata['lang']")
-    assert(engine.analyzeCount("{}") == 3,
+    assert(counted("{}") == 3,
       "a where-less view must not cover (it counts no-metadata rows " +
         "the filter gate excludes)")
-    assert(engine.lastCountSource.contains("scan"),
-      s"expected the scan, got ${engine.lastCountSource}")
+    assert(source.contains("scan"),
+      s"expected the scan, got $source")
     // ...while a view WHERE-scoped to {} carries the gate through
     // compile and covers exactly
     engine.viewState("call", "metadata['lang']", where = Some("{}"))
-    assert(engine.analyzeCount("{}") == 3)
-    assert(engine.lastCountSource.contains("view:call"),
-      s"expected the {}-scoped view, got ${engine.lastCountSource}")
+    assert(counted("{}") == 3)
+    assert(source.contains("view:call"),
+      s"expected the {}-scoped view, got $source")
     // freshness: the route walks viewState's refresh first
     engine.save("---\nbody: five\nmetadata: {lang: en, src: s9}\n")
-    assert(engine.analyzeCount("{lang: en}") == 3)
-    assert(engine.lastCountSource.contains("view:c1"))
-    assert(engine.analyzeCount("{}") == 4)
-    assert(engine.lastCountSource.contains("view:call"))
+    assert(counted("{lang: en}") == 3)
+    assert(source.contains("view:c1"))
+    assert(counted("{}") == 4)
+    assert(source.contains("view:call"))
     // uncovered filter: scan fallback
-    assert(engine.analyzeCount("{lang: sw}") == 1)
-    assert(engine.lastCountSource.contains("scan"))
+    assert(counted("{lang: sw}") == 1)
+    assert(source.contains("scan"))
     engine.clean()
   }
 
@@ -1783,11 +1807,11 @@ class MemoEngineSpec extends SparkTestBase {
     engine.viewState("vmeta", "metadata['metadata']", where = Some(filter))
     engine.viewState("vdot", "metadata['metadata.x']", where = Some(filter))
     for (key <- Seq("id", "metadata", "metadata.x")) {
-      val got = engine.statsPairs(filter, key).collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSet
-      assert(engine.lastStatsSource.contains("scan"),
+      val (got, trace) = OpTrace.traced(engine.statsPairs(filter, key)
+        .collect().map(r => (r.getString(0), r.getLong(1))).toSet)
+      assert(trace.statsSource.contains("scan"),
         s"special key '$key' must take the scan arm, got " +
-          s"${engine.lastStatsSource}")
+          s"${trace.statsSource}")
       val want = engine.records
         .filter(graft.filter.FilterAlgebra.compile(filter, col("metadata")))
         .select(graft.memo.MemoOps.rawField(key).as("raw"))
@@ -1807,9 +1831,9 @@ class MemoEngineSpec extends SparkTestBase {
     // a NON-special key still rides a covering view (the guard must not
     // over-shoot)
     engine.viewState("vx", "metadata['x']", where = Some(filter))
-    engine.statsPairs(filter, "x").collect()
-    assert(engine.lastStatsSource.contains("view:vx"),
-      s"plain key lost view coverage: ${engine.lastStatsSource}")
+    val plain = OpTrace.traced(engine.statsPairs(filter, "x").collect())._2
+    assert(plain.statsSource.contains("view:vx"),
+      s"plain key lost view coverage: ${plain.statsSource}")
     engine.clean()
   }
 
@@ -1879,14 +1903,14 @@ class MemoEngineSpec extends SparkTestBase {
     def oracle(): Map[Long, Long] = labelsOf(
       graft.ops.Dedup.nearDupClusters(
         engine.records.select(col("id"), col("body")), "id", "body"))
-    val l1 = labelsOf(engine.dupGroups())
-    assert(engine.lastDupMode.contains("rebuild"), engine.lastDupMode)
+    val (l1, t1) = OpTrace.traced(labelsOf(engine.dupGroups()))
+    assert(t1.arm("dupgroups").contains("rebuild"), t1.arm("dupgroups"))
     assert(l1 == (0L until 24L).map(i => i -> (i / 3) * 3).toMap, l1)
     // fresh serve: metadata reads only, nothing rewritten
     val dupFiles = artifactFiles(db, "_dupgroups")
     val sigFiles = artifactFiles(db, "_minhash")
-    engine.dupGroups().collect()
-    assert(engine.lastDupMode.contains("fresh"))
+    val fresh = OpTrace.traced(engine.dupGroups().collect())._2
+    assert(fresh.arm("dupgroups").contains("fresh"))
     assert(artifactFiles(db, "_dupgroups") == dupFiles,
       "a fresh dupGroups serve rewrote the labeling")
     // append: one doc joins cluster 2, two docs mint a NEW pair — the
@@ -1896,8 +1920,8 @@ class MemoEngineSpec extends SparkTestBase {
       s"---\nbody: ${clusterBody(2)}\n" +
         s"---\nbody: ${clusterBody(100)}\n" +
         s"---\nbody: ${clusterBody(100)}\n")
-    val l2 = labelsOf(engine.dupGroups())
-    assert(engine.lastDupMode.contains("append"), engine.lastDupMode)
+    val (l2, t2) = OpTrace.traced(labelsOf(engine.dupGroups()))
+    assert(t2.arm("dupgroups").contains("append"), t2.arm("dupgroups"))
     assert(l2(24L) == 6L && l2(25L) == 25L && l2(26L) == 25L, l2)
     assert(l2 == oracle(), "fold diverged from the from-scratch labeling")
     val sigFiles2 = artifactFiles(db, "_minhash")
@@ -1910,19 +1934,19 @@ class MemoEngineSpec extends SparkTestBase {
     // touched id relabel; the removed id leaves the labeling and every
     // untouched group's label file survives byte-identical (the prior
     // generation is only REPLACED, so the O(touched) pin here is that
-    // the fold equals the oracle while lastDupMode proves the corpus-
-    // wide components() never ran)
+    // the fold equals the oracle while the traced dupgroups arm proves
+    // the corpus-wide components() never ran)
     val sigFilesPrePatch = artifactFiles(db, "_minhash")
     engine.applyChanges(Seq(
         (1L, "removed", "", Map.empty[String, String]))
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(0L)))
-    val l3 = labelsOf(engine.dupGroups())
-    assert(engine.lastDupMode.contains("retract"), engine.lastDupMode)
+    val (l3, t3) = OpTrace.traced(labelsOf(engine.dupGroups()))
+    assert(t3.arm("dupgroups").contains("retract"), t3.arm("dupgroups"))
     // ...and the SIGNATURE family retracted too (tombstone fold — a
     // pure-delete patch must not re-minhash the corpus): every prior
     // signature parquet file survives byte-identical
-    assert(engine.lastSigMode.contains("retract"), engine.lastSigMode)
+    assert(t3.arm("signatures").contains("retract"), t3.arm("signatures"))
     artifactFiles(db, "_minhash").foreach { case (f, m) =>
       if (!f.contains("_tombstones") && !f.contains("_minhash_meta") &&
           sigFilesPrePatch.contains(f))
@@ -1944,8 +1968,8 @@ class MemoEngineSpec extends SparkTestBase {
         (10L, "removed", "", Map.empty[String, String]))
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(1L)))
-    val l4 = labelsOf(engine.dupGroups())
-    assert(engine.lastDupMode.contains("retract"), engine.lastDupMode)
+    val (l4, t4) = OpTrace.traced(labelsOf(engine.dupGroups()))
+    assert(t4.arm("dupgroups").contains("retract"), t4.arm("dupgroups"))
     assert(!l4.contains(9L) && !l4.contains(10L) && !l4.contains(11L),
       s"a group shrunk to one member must drop entirely: $l4")
     assert(l4 == oracle())
@@ -1954,26 +1978,26 @@ class MemoEngineSpec extends SparkTestBase {
     // other two members, cluster 2 gains doc 4, whose id is the merged
     // group's new minimum (the whole gaining group must relabel)
     engine.save(s"---\nid: 4\nbody: ${clusterBody(2)}\n")
-    val l5 = labelsOf(engine.dupGroups())
-    assert(engine.lastDupMode.contains("retract"), engine.lastDupMode)
+    val (l5, t5) = OpTrace.traced(labelsOf(engine.dupGroups()))
+    assert(t5.arm("dupgroups").contains("retract"), t5.arm("dupgroups"))
     // a body EDIT cannot fold into the signature artifact (re-signing a
     // tombstoned id violates the append contract) — signatures rebuild
     // honestly while the LABELING still retracts O(touched)
-    assert(engine.lastSigMode.contains("rebuild"), engine.lastSigMode)
+    assert(t5.arm("signatures").contains("rebuild"), t5.arm("signatures"))
     assert(l5(4L) == 4L && l5(6L) == 4L && l5(24L) == 4L &&
       l5(3L) == 3L && l5(5L) == 3L, l5)
     assert(l5 == oracle())
     // a REINDEX re-sequences every id — corpus-scale diff, so the
     // retract gate must fall through to the honest rebuild
     engine.reindex()
-    val l6 = labelsOf(engine.dupGroups())
-    assert(engine.lastDupMode.contains("rebuild"), engine.lastDupMode)
-    assert(engine.lastSigMode.contains("rebuild"), engine.lastSigMode)
+    val (l6, t6) = OpTrace.traced(labelsOf(engine.dupGroups()))
+    assert(t6.arm("dupgroups").contains("rebuild"), t6.arm("dupgroups"))
+    assert(t6.arm("signatures").contains("rebuild"), t6.arm("signatures"))
     assert(l6 == oracle())
     // threshold participates in identity: a different minJaccard
     // rebuilds under the new spec rather than serving the old labeling
-    engine.dupGroups(0.5).collect()
-    assert(engine.lastDupMode.contains("rebuild"))
+    val respec = OpTrace.traced(engine.dupGroups(0.5).collect())._2
+    assert(respec.arm("dupgroups").contains("rebuild"))
     // maintain walks the REGISTERED threshold (the recorded spec)
     val report = engine.maintain()
     assert(report.get("dupgroups").exists(_.contains("0.5")), report)
@@ -2013,42 +2037,52 @@ class MemoEngineSpec extends SparkTestBase {
     engine.applyChanges(Seq((0L, "removed", "", Map.empty[String, String]))
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(0L)))
-    assert(engine.dupGroups().collect().map(r =>
-      r.getLong(0) -> r.getLong(1)).toMap == oracle())
-    assert(engine.lastSigMode.contains("rebuild"), engine.lastSigMode)
-    assert(engine.lastDupMode.contains("rebuild"), engine.lastDupMode)
-    assert(engine.lastRetractRoute.exists(_.startsWith("rebuild(")),
-      engine.lastRetractRoute)
-    val rebuilt = engine.maintain()
-    assert(engine.lastLexMode.contains("rebuild"), engine.lastLexMode)
+    def labels() = engine.dupGroups().collect().map(r =>
+      r.getLong(0) -> r.getLong(1)).toMap
+    val (small, smallTrace) = OpTrace.traced(labels())
+    assert(small == oracle())
+    assert(smallTrace.arm("signatures").contains("rebuild"),
+      smallTrace.arm("signatures"))
+    assert(smallTrace.arm("dupgroups").contains("rebuild"),
+      smallTrace.arm("dupgroups"))
+    assert(smallTrace.retractRoute.exists(_.startsWith("rebuild(")),
+      smallTrace.retractRoute)
+    val (rebuilt, rebuiltTrace) = OpTrace.traced(engine.maintain())
+    assert(rebuiltTrace.arm("lexical").contains("rebuild"),
+      rebuiltTrace.arm("lexical"))
     assert(rebuilt("lexical") == "current (rebuild)", rebuilt)
     // a METADATA-ONLY patch under the same floor is a zero-touch window:
     // free fold in every family, never a rebuild, route never consulted
-    engine.lastRetractRoute = None
     engine.applyChanges(Seq((2L, "updated", body(0),
         Map("tag" -> "route-spec")))
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(1L)))
-    assert(engine.dupGroups().collect().map(r =>
-      r.getLong(0) -> r.getLong(1)).toMap == oracle())
-    assert(engine.lastSigMode.contains("retract"), engine.lastSigMode)
-    assert(engine.lastDupMode.contains("retract"), engine.lastDupMode)
-    val folded = engine.maintain()
-    assert(engine.lastLexMode.contains("retract"), engine.lastLexMode)
+    val (retagged, retagTrace) = OpTrace.traced(labels())
+    assert(retagged == oracle())
+    assert(retagTrace.arm("signatures").contains("retract"),
+      retagTrace.arm("signatures"))
+    assert(retagTrace.arm("dupgroups").contains("retract"),
+      retagTrace.arm("dupgroups"))
+    val (folded, foldTrace) = OpTrace.traced(engine.maintain())
+    assert(foldTrace.arm("lexical").contains("retract"),
+      foldTrace.arm("lexical"))
     assert(folded("lexical") == "current (retract)", folded)
-    assert(engine.lastRetractRoute.isEmpty, engine.lastRetractRoute)
-    // floor dropped: the next delete patch takes the fold and the route
-    // seam says so
+    assert(retagTrace.retractRoute.isEmpty && foldTrace.retractRoute.isEmpty,
+      (retagTrace.retractRoute, foldTrace.retractRoute))
+    // floor dropped: the next delete patch takes the fold and the
+    // traced route says so
     engine.retractRouteMinRows = 0
     engine.applyChanges(Seq((4L, "removed", "", Map.empty[String, String]))
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(2L)))
-    assert(engine.dupGroups().collect().map(r =>
-      r.getLong(0) -> r.getLong(1)).toMap == oracle())
-    assert(engine.lastSigMode.contains("retract"), engine.lastSigMode)
-    assert(engine.lastDupMode.contains("retract"), engine.lastDupMode)
-    assert(engine.lastRetractRoute.exists(_.startsWith("retract(")),
-      engine.lastRetractRoute)
+    val (large, largeTrace) = OpTrace.traced(labels())
+    assert(large == oracle())
+    assert(largeTrace.arm("signatures").contains("retract"),
+      largeTrace.arm("signatures"))
+    assert(largeTrace.arm("dupgroups").contains("retract"),
+      largeTrace.arm("dupgroups"))
+    assert(largeTrace.retractRoute.exists(_.startsWith("retract(")),
+      largeTrace.retractRoute)
     engine.clean()
   }
 
@@ -2081,13 +2115,17 @@ class MemoEngineSpec extends SparkTestBase {
     engine.applyChanges(Seq((0L, "removed", "", Map.empty[String, String]))
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(1L)))
-    assert(engine.dupGroups().collect().map(r =>
-      r.getLong(0) -> r.getLong(1)).toMap == oracle())
-    assert(engine.lastSigMode.contains("rebuild"), engine.lastSigMode)
-    assert(engine.lastDupMode.contains("rebuild"), engine.lastDupMode)
-    assert(engine.lastRetractRoute.exists(r =>
+    def labels() = engine.dupGroups().collect().map(r =>
+      r.getLong(0) -> r.getLong(1)).toMap
+    val (rebuiltLabels, rebuilt) = OpTrace.traced(labels())
+    assert(rebuiltLabels == oracle())
+    assert(rebuilt.arm("signatures").contains("rebuild"),
+      rebuilt.arm("signatures"))
+    assert(rebuilt.arm("dupgroups").contains("rebuild"),
+      rebuilt.arm("dupgroups"))
+    assert(rebuilt.retractRoute.exists(r =>
         r.startsWith("rebuild(") && r.contains("live=29")),
-      engine.lastRetractRoute)
+      rebuilt.retractRoute)
     // same store, floor back under the live count: the next tombstone
     // folds — live-row pricing only moves the crossover, the retract
     // arm itself is intact on a holey id space
@@ -2095,12 +2133,13 @@ class MemoEngineSpec extends SparkTestBase {
     engine.applyChanges(Seq((1L, "removed", "", Map.empty[String, String]))
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(2L)))
-    assert(engine.dupGroups().collect().map(r =>
-      r.getLong(0) -> r.getLong(1)).toMap == oracle())
-    assert(engine.lastSigMode.contains("retract"), engine.lastSigMode)
-    assert(engine.lastRetractRoute.exists(r =>
+    val (foldedLabels, folded) = OpTrace.traced(labels())
+    assert(foldedLabels == oracle())
+    assert(folded.arm("signatures").contains("retract"),
+      folded.arm("signatures"))
+    assert(folded.retractRoute.exists(r =>
         r.startsWith("retract(") && r.contains("live=28")),
-      engine.lastRetractRoute)
+      folded.retractRoute)
     engine.clean()
   }
 
@@ -2123,8 +2162,9 @@ class MemoEngineSpec extends SparkTestBase {
       graft.ops.Dedup.nearDupClusters(
           engine.records.select(col("id"), col("body")), "id", "body")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labelsOf() == oracle())
-    val (wFull, cFull) = engine.lastDupPublish.get
+    val (full, fullTrace) = OpTrace.traced(labelsOf())
+    assert(full == oracle())
+    val (wFull, cFull) = fullTrace.dupPublish.get
     assert(wFull > 1 && cFull == 0,
       s"full publish expected many written shards, got ($wFull, $cFull)")
     val filesFull = artifactFiles(db, "_dupgroups")
@@ -2132,9 +2172,11 @@ class MemoEngineSpec extends SparkTestBase {
     // shards its delta touches and carry the rest by reference
     engine.save((0 until 3).map(_ => s"---\nbody: ${body(100)}\n")
       .mkString)
-    assert(labelsOf() == oracle())
-    assert(engine.lastDupMode.contains("append"), engine.lastDupMode)
-    val (wApp, cApp) = engine.lastDupPublish.get
+    val (appended, appTrace) = OpTrace.traced(labelsOf())
+    assert(appended == oracle())
+    assert(appTrace.arm("dupgroups").contains("append"),
+      appTrace.arm("dupgroups"))
+    val (wApp, cApp) = appTrace.dupPublish.get
     assert(cApp > 0, s"append fold carried no shards: ($wApp, $cApp)")
     assert(wApp < wFull, s"append fold rewrote the grid: ($wApp vs $wFull)")
     // every carried shard's files are byte-untouched (mtime pin)
@@ -2155,10 +2197,12 @@ class MemoEngineSpec extends SparkTestBase {
     engine.applyChanges(Seq((0L, "removed", "", Map.empty[String, String]))
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(0L)))
-    assert(labelsOf() == oracle())
-    assert(engine.lastDupMode.contains("retract"), engine.lastDupMode)
-    assert(engine.lastDupPublish.exists(_._2 > 0),
-      s"retract fold carried no shards: ${engine.lastDupPublish}")
+    val (retracted, retTrace) = OpTrace.traced(labelsOf())
+    assert(retracted == oracle())
+    assert(retTrace.arm("dupgroups").contains("retract"),
+      retTrace.arm("dupgroups"))
+    assert(retTrace.dupPublish.exists(_._2 > 0),
+      s"retract fold carried no shards: ${retTrace.dupPublish}")
     val filesRet = artifactFiles(db, "_dupgroups")
     filesApp.foreach { case (f, m) =>
       if (filesRet.contains(f))
@@ -2195,8 +2239,10 @@ class MemoEngineSpec extends SparkTestBase {
     // holding that group into a new generation, which carries the rest
     // of gen0 by reference — so gen0 stays, with a superseded shard
     engine.save(s"---\nbody: ${body(7)}\n")
-    assert(labels() == oracle())
-    assert(engine.lastDupMode.contains("append"), engine.lastDupMode)
+    val (folded, foldTrace) = OpTrace.traced(labels())
+    assert(folded == oracle())
+    assert(foldTrace.arm("dupgroups").contains("append"),
+      foldTrace.arm("dupgroups"))
     val refs1 = refs(live())
     assert(refs1.exists(_.startsWith(s"$gen0/")),
       s"the fold must carry gen0 shards by reference: $refs1")
@@ -2247,8 +2293,9 @@ class MemoEngineSpec extends SparkTestBase {
     val gen0 = live()
     // the last fold: it rewrites one shard of gen0 and carries the rest
     engine.save(s"---\nbody: ${body(7)}\n")
-    val before = labels()
-    assert(engine.lastDupMode.contains("append"), engine.lastDupMode)
+    val (before, foldTrace) = OpTrace.traced(labels())
+    assert(foldTrace.arm("dupgroups").contains("append"),
+      foldTrace.arm("dupgroups"))
     val gen1 = live()
     val refs1 = engine.readShardManifest(root.resolve(gen1)).get.map(_.path)
     val superseded = java.nio.file.Files.list(root.resolve(gen0))
@@ -2291,14 +2338,14 @@ class MemoEngineSpec extends SparkTestBase {
     engine.save((0 until 24).map(i =>
       s"---\nbody: journal corpus doc $i about topic${i % 6} and " +
         s"facet${i % 4}\n").mkString)
-    // (artifact dir, the door that walks it, the family's arm seam)
-    val families = Seq[(String, () => Unit, () => Option[String])](
+    // (artifact dir, the door that walks it, the family's trace name)
+    val families = Seq[(String, () => Unit, String)](
       ("_lexical", () => { engine.hybridRecall("topic1 facet2", k = 3)
-        .collect(); () }, () => engine.lastLexMode),
+        .collect(); () }, "lexical"),
       ("_ann", () => { engine.annRecall("journal corpus doc 3", k = 3)
-        .collect(); () }, () => engine.lastIvfMode),
+        .collect(); () }, "ivf"),
       ("_minhash", () => { engine.admitNew(Seq((900L, "a unique zebra"))
-        .toDF("id", "body")).collect(); () }, () => engine.lastSigMode))
+        .toDF("id", "body")).collect(); () }, "signatures"))
     families.foreach(_._2())
     var commit = 0L
     def removeOne(id: Long): Unit = {
@@ -2308,19 +2355,20 @@ class MemoEngineSpec extends SparkTestBase {
       commit += 1
     }
     var victim = 0L
-    families.foreach { case (fam, door, seam) =>
+    families.foreach { case (fam, door, name) =>
+      def armOf(): Option[String] = OpTrace.traced(door())._2.arm(name)
       // a crashed prior fold: the journal outlives its fold
       graft.ops.ArtifactMeta.write(spark, s"$db/$fam", "_retract_journal",
         "99")
       removeOne(victim); victim += 1
-      door()
-      assert(seam().contains("rebuild"), s"$fam: ${seam()}")
+      val rebuilt = armOf()
+      assert(rebuilt.contains("rebuild"), s"$fam: $rebuilt")
       assert(graft.ops.ArtifactMeta.read(spark, s"$db/$fam",
           "_retract_journal").isEmpty,
         s"$fam: the rebuild must sweep the crashed fold's journal")
       removeOne(victim); victim += 1
-      door()
-      assert(seam().contains("retract"), s"$fam: ${seam()}")
+      val folded = armOf()
+      assert(folded.contains("retract"), s"$fam: $folded")
     }
     engine.clean()
   }
@@ -2469,27 +2517,31 @@ class MemoEngineSpec extends SparkTestBase {
         (24L, "removed", "", Map.empty[String, String]))
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(0L)))
-    val hy = engine.hybridRecall("albatross nougat", k = 5).collect()
-    assert(engine.lastLexMode.contains("retract"), engine.lastLexMode)
+    val (hy, hyTrace) = OpTrace.traced(
+      engine.hybridRecall("albatross nougat", k = 5).collect())
+    assert(hyTrace.arm("lexical").contains("retract"), hyTrace.arm("lexical"))
     assert(hy.nonEmpty &&
       !hy.map(_.getAs[String]("body")).contains(victim),
       "lexical retract left the victim findable")
-    val ann = engine.annRecall(victim, k = 5).collect()
-    assert(engine.lastIvfMode.contains("retract"), engine.lastIvfMode)
+    val (ann, annTrace) = OpTrace.traced(
+      engine.annRecall(victim, k = 5).collect())
+    assert(annTrace.arm("ivf").contains("retract"), annTrace.arm("ivf"))
     assert(ann.nonEmpty &&
       !ann.map(_.getAs[String]("body")).contains(victim),
       "IVF retract left the victim findable")
     // the PQ route probes the artifact the IVF walk just retracted
-    val pq = engine.pqRecall(victim, k = 5).collect()
-    assert(engine.lastIvfMode.contains("fresh"), engine.lastIvfMode)
+    val (pq, pqTrace) = OpTrace.traced(
+      engine.pqRecall(victim, k = 5).collect())
+    assert(pqTrace.arm("ivf").contains("fresh"), pqTrace.arm("ivf"))
     assert(pq.nonEmpty &&
       !pq.map(_.getAs[String]("body")).contains(victim),
       "PQ retract left the victim findable")
-    val admitted = engine.admitNew(Seq(
+    val (admitted, admitTrace) = OpTrace.traced(engine.admitNew(Seq(
         (901L, victim),
         (902L, "retract corpus doc 3 about concept3 and aspect3"))
-      .toDF("id", "body")).collect().map(_.getLong(0)).toSet
-    assert(engine.lastSigMode.contains("retract"), engine.lastSigMode)
+      .toDF("id", "body")).collect().map(_.getLong(0)).toSet)
+    assert(admitTrace.arm("signatures").contains("retract"),
+      admitTrace.arm("signatures"))
     assert(admitted == Set(901L),
       s"victim must readmit, survivor dup must still gate: $admitted")
     // O(touched): every prior artifact DATA file survives byte-identical
@@ -2508,18 +2560,22 @@ class MemoEngineSpec extends SparkTestBase {
       "and aspect1\nmetadata: {tag: retagged}\n")
     val mid = Seq("_lexical", "_ann", "_minhash")
       .map(f => f -> artifactFiles(db, f)).toMap
-    engine.hybridRecall("concept5", k = 3).collect()
-    engine.annRecall("retract corpus doc 5", k = 3).collect()
-    engine.pqRecall("retract corpus doc 5", k = 3).collect()
-    engine.admitNew(Seq((903L, "fresh unrelated zebra paragraph"))
-      .toDF("id", "body")).collect()
-    assert(engine.lastLexMode.contains("retract") ||
-      engine.lastLexMode.contains("fresh"), engine.lastLexMode)
-    assert(!engine.lastLexMode.contains("rebuild") &&
-      !engine.lastIvfMode.contains("rebuild") &&
-      !engine.lastSigMode.contains("rebuild"),
-      s"metadata-only patch forced a rebuild: lex=${engine.lastLexMode} " +
-        s"ivf=${engine.lastIvfMode} sig=${engine.lastSigMode}")
+    def armOf(name: String)(door: => Any): Option[String] =
+      OpTrace.traced(door)._2.arm(name)
+    val lex = armOf("lexical")(
+      engine.hybridRecall("concept5", k = 3).collect())
+    val ivf = armOf("ivf")(
+      engine.annRecall("retract corpus doc 5", k = 3).collect())
+    val pqArm = armOf("ivf")(
+      engine.pqRecall("retract corpus doc 5", k = 3).collect())
+    val sig = armOf("signatures")(engine.admitNew(
+      Seq((903L, "fresh unrelated zebra paragraph")).toDF("id", "body"))
+      .collect())
+    assert(lex.contains("retract") || lex.contains("fresh"), lex)
+    assert(!lex.contains("rebuild") && !ivf.contains("rebuild") &&
+      !pqArm.contains("rebuild") && !sig.contains("rebuild"),
+      s"metadata-only patch forced a rebuild: lex=$lex ivf=$ivf " +
+        s"pq=$pqArm sig=$sig")
     mid.foreach { case (fam, files) =>
       val after = artifactFiles(db, fam)
       files.foreach { case (f, m) =>
@@ -2539,9 +2595,10 @@ class MemoEngineSpec extends SparkTestBase {
         (7L, "removed", "", Map.empty[String, String]))
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(1L)))
-    engine.admitNew(Seq((904L, "zebra paragraph one of a kind"))
-      .toDF("id", "body")).collect()
-    assert(engine.lastSigMode.contains("rebuild"), engine.lastSigMode)
+    val rebuiltSig = armOf("signatures")(engine.admitNew(
+      Seq((904L, "zebra paragraph one of a kind")).toDF("id", "body"))
+      .collect())
+    assert(rebuiltSig.contains("rebuild"), rebuiltSig)
     assert(graft.ops.ArtifactMeta.read(spark, s"$db/_minhash",
         "_retract_journal").isEmpty,
       "the rebuild must sweep the crashed fold's journal")
@@ -2549,16 +2606,17 @@ class MemoEngineSpec extends SparkTestBase {
         (8L, "removed", "", Map.empty[String, String]))
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(2L)))
-    engine.admitNew(Seq((905L, "gryphon memo equally unique"))
-      .toDF("id", "body")).collect()
-    assert(engine.lastSigMode.contains("retract"), engine.lastSigMode)
+    val foldedSig = armOf("signatures")(engine.admitNew(
+      Seq((905L, "gryphon memo equally unique")).toDF("id", "body"))
+      .collect())
+    assert(foldedSig.contains("retract"), foldedSig)
     // maintain() applies the pending VECTOR tombstones physically:
     // ensureIvf first retract-folds the two delete patches the vector
     // family hasn't walked yet, then the apply pass rewrites
     // only the affected cells and drops the tombstone dirs — and a
     // second maintain has nothing pending
-    val rep = engine.maintain()
-    assert(engine.lastIvfMode.contains("retract"), engine.lastIvfMode)
+    val (rep, repTrace) = OpTrace.traced(engine.maintain())
+    assert(repTrace.arm("ivf").contains("retract"), repTrace.arm("ivf"))
     assert(rep.get("ivf_apply").contains("applied"), rep)
     assert(rep.get("lexical_apply").contains("applied"), rep)
     assert(!java.nio.file.Files.isDirectory(
@@ -3170,47 +3228,47 @@ class MemoEngineSpec extends SparkTestBase {
   test("applyChanges: id-watermark shortcut proves disjointness without a join") {
     import spark.implicits._
     val (follower, _) = freshEngine()
-    val phases = scala.collection.mutable.Map[String, Int]()
-    follower.commitPhaseHook =
-      (ph, _) => phases.synchronized { phases(ph) = phases.getOrElse(ph, 0) + 1 }
+    // the phases one apply reported into its trace, counted by name
+    def phasesOf(call: => Any): Map[String, Int] = {
+      import scala.jdk.CollectionConverters._
+      OpTrace.traced(call)._2.phases.asScala.toSeq.groupBy(_._1)
+        .view.mapValues(_.size).toMap
+    }
     def feed(rows: Seq[(Long, String, String)]) = rows
       .toDF("id", "change", "body")
       .withColumn("metadata", org.apache.spark.sql.functions
         .map(org.apache.spark.sql.functions.lit("k"),
           org.apache.spark.sql.functions.lit("v")))
       .withColumn("commit_version", org.apache.spark.sql.functions.lit(0L))
-    try {
-      follower.applyChanges(feed(Seq((0L, "added", "wm zero"))))
-      phases.clear()
-      // batch 2: pure adds, min id (1) > store max (0) — the first batch
-      // pays ONE priming max(id) probe, then the watermark decides alone
-      follower.applyChanges(feed(Seq((1L, "added", "wm one"),
-        (2L, "added", "wm two"))))
-      assert(phases.getOrElse("probe", 0) == 1,
-        s"expected exactly the priming max-id scan, got $phases")
-      assert(follower.history.orderBy(
-        org.apache.spark.sql.functions.desc("version"))
-        .select("kind").collect().head.getString(0) == "append")
-      phases.clear()
-      // batch 3: memo is warm from our own commit — ZERO probe jobs
-      follower.applyChanges(feed(Seq((3L, "added", "wm three"))))
-      assert(phases.getOrElse("probe", 0) == 0,
-        s"warm watermark still probed the chain: $phases")
-      // a REPLAYED add (id collides) fails the watermark, takes the
-      // overlap probe, and lands as the content-idempotent merge
-      phases.clear()
-      follower.applyChanges(feed(Seq((3L, "added", "wm three"))))
-      assert(phases.getOrElse("probe", 0) >= 1,
-        s"colliding batch skipped the probe: $phases")
-      val st = follower.records.orderBy("id").collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSeq
-      assert(st == Seq((0L, "wm zero"), (1L, "wm one"), (2L, "wm two"),
-        (3L, "wm three")), s"got $st")
-      // removes always take the merge arm and converge
-      follower.applyChanges(feed(Seq((1L, "removed", "wm one"))))
-      assert(follower.records.orderBy("id").collect().map(_.getLong(0))
-        .toSeq == Seq(0L, 2L, 3L))
-    } finally follower.commitPhaseHook = null
+    follower.applyChanges(feed(Seq((0L, "added", "wm zero"))))
+    // batch 2: pure adds, min id (1) > store max (0) — the first batch
+    // pays ONE priming max(id) probe, then the watermark decides alone
+    var phases = phasesOf(follower.applyChanges(feed(Seq(
+      (1L, "added", "wm one"), (2L, "added", "wm two")))))
+    assert(phases.getOrElse("probe", 0) == 1,
+      s"expected exactly the priming max-id scan, got $phases")
+    assert(follower.history.orderBy(
+      org.apache.spark.sql.functions.desc("version"))
+      .select("kind").collect().head.getString(0) == "append")
+    // batch 3: memo is warm from our own commit — ZERO probe jobs
+    phases = phasesOf(follower.applyChanges(feed(Seq(
+      (3L, "added", "wm three")))))
+    assert(phases.getOrElse("probe", 0) == 0,
+      s"warm watermark still probed the chain: $phases")
+    // a REPLAYED add (id collides) fails the watermark, takes the
+    // overlap probe, and lands as the content-idempotent merge
+    phases = phasesOf(follower.applyChanges(feed(Seq(
+      (3L, "added", "wm three")))))
+    assert(phases.getOrElse("probe", 0) >= 1,
+      s"colliding batch skipped the probe: $phases")
+    val st = follower.records.orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(st == Seq((0L, "wm zero"), (1L, "wm one"), (2L, "wm two"),
+      (3L, "wm three")), s"got $st")
+    // removes always take the merge arm and converge
+    follower.applyChanges(feed(Seq((1L, "removed", "wm one"))))
+    assert(follower.records.orderBy("id").collect().map(_.getLong(0))
+      .toSeq == Seq(0L, 2L, 3L))
     follower.clean()
   }
 
@@ -3250,6 +3308,61 @@ class MemoEngineSpec extends SparkTestBase {
       // the add collides with the saved id 2, so it upserts over it
       assert(rows(e) == Seq((0L, "p"), (1L, "q"), (2L, "x2"), (3L, "s")),
         s"viaOther=$viaOther: ${rows(e)}")
+      e.clean()
+    }
+  }
+
+  test("per-engine memos stay with their store across clean(): segment " +
+      "stats and the classified retract window of a dropped store never " +
+      "answer for the recreated one, whether the same engine or a second " +
+      "one drops and refills the store") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    def retag(id: Long, body: String) =
+      Seq((id, "updated", body, Map("tag" -> "sretagged")))
+        .toDF("id", "change", "body", "metadata")
+        .withColumn("commit_version", lit(0L))
+    Seq(false, true).foreach { viaOther =>
+      // stats: the dropped store's v0/records sidecar said "topic a only"
+      val (e, db) = freshEngine()
+      val other = if (viaOther) new MemoEngine(spark, db) else e
+      e.save("---\nbody: apple note\nmetadata: {topic: a}\n")
+      assert(e.recall("note", filterExpr = Some("{topic: b}")).count() == 0)
+      other.clean()
+      other.save("---\nbody: banana note\nmetadata: {topic: b}\n")
+      val hits = e.recall("note", filterExpr = Some("{topic: b}")).collect()
+        .map(_.getString(2)).toSeq
+      assert(hits == Seq("banana note"), s"viaOther=$viaOther: $hits")
+      e.clean()
+    }
+    Seq(false, true).foreach { viaOther =>
+      // retract window: the dropped store's v0→v1 removed id 1, a
+      // fold the route takes (4 docs, not 2: halving a store refuses it)
+      val (e, db) = freshEngine()
+      val other = if (viaOther) new MemoEngine(spark, db) else e
+      e.retractRouteMinRows = 0
+      e.save("---\nbody: alpha fox\n---\nbody: bravo owl\n" +
+        "---\nbody: delta elk\n---\nbody: foxtrot gnu\n")
+      e.hybridRecall("alpha fox", k = 2).collect()
+      e.applyChanges(Seq((1L, "removed", "", Map.empty[String, String]))
+        .toDF("id", "change", "body", "metadata")
+        .withColumn("commit_version", lit(0L)))
+      e.hybridRecall("alpha fox", k = 2).collect() // folds v0→v1
+      other.clean()
+      other.save("---\nbody: charlie cat\n---\nbody: echo vole\n" +
+        "---\nbody: golf hen\n---\nbody: hotel ibis\n")
+      e.hybridRecall("echo vole", k = 2).collect() // postings at v0
+      other.applyChanges(retag(0L, "charlie cat")) // v1: touches no body
+      val (fused, trace) = OpTrace.traced(
+        e.hybridRecall("echo vole", k = 2).collect())
+      assert(trace.retractRoute.isEmpty,
+        s"viaOther=$viaOther: a zero-touch window priced a fold: " +
+          trace.retractRoute)
+      val vole = fused.find(_.getAs[String]("body") == "echo vole")
+      assert(vole.exists(r => !r.isNullAt(r.fieldIndex("r_bm25")) &&
+          r.getAs[Int]("r_bm25") == 1),
+        s"viaOther=$viaOther: echo vole lost its BM25 rank: " +
+          fused.toSeq)
       e.clean()
     }
   }

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.memo.MemoEngine
+import graft.memo.{MemoEngine, OpTrace}
 
 /** Incremental materialized views ([[MemoEngine.viewState]]): a persisted
   * group-by aggregate maintained O(delta) from the store's changefeed.
@@ -37,11 +37,24 @@ class MemoViewSpec extends SparkTestBase {
   private def collected(df: DataFrame): Set[(String, Long, Long)] =
     df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
 
-  private def mode(engine: MemoEngine): String =
-    engine.lastViewRefresh.map(_._1).getOrElse("none")
+  /** The trace of this spec's last view call, run through [[viewed]];
+    * [[mode]], [[scanned]] and [[published]] read that call's
+    * decisions. */
+  private var viewTrace: OpTrace = new OpTrace
 
-  private def scanned(engine: MemoEngine): Seq[String] =
-    engine.lastViewRefresh.map(_._2).getOrElse(Nil)
+  private def viewed[A](call: => A): A = {
+    val (out, trace) = OpTrace.traced(call)
+    viewTrace = trace
+    out
+  }
+
+  private def mode: String =
+    viewTrace.viewRefresh.map(_._1).getOrElse("none")
+
+  private def scanned: Seq[String] =
+    viewTrace.viewRefresh.map(_._2).getOrElse(Nil)
+
+  private def published: (Int, Int) = viewTrace.viewPublish.get
 
   private def yamlDoc(body: String, cat: Option[String]): String =
     cat match {
@@ -57,14 +70,14 @@ class MemoViewSpec extends SparkTestBase {
       yamlDoc("no category on this one", None),
       yamlDoc("second health note here", Some("health"))).mkString)
     val key = "metadata['category']"
-    val v1 = engine.viewState("bycat", key, Chars)
-    assert(mode(engine) == "rebuild") // first materialization pays the scan
+    val v1 = viewed(engine.viewState("bycat", key, Chars))
+    assert(mode == "rebuild") // first materialization pays the scan
     assert(collected(v1) == direct(engine, key))
     // the null group (docs without the key) is one merged row, not a row
     // per refresh
     assert(v1.filter(col("group_key").isNull).count() == 1)
-    val v2 = engine.viewState("bycat", key, Chars)
-    assert(mode(engine) == "fresh", "watermark-current view must serve lock-free")
+    val v2 = viewed(engine.viewState("bycat", key, Chars))
+    assert(mode == "fresh", "watermark-current view must serve lock-free")
     assert(collected(v2) == direct(engine, key))
     engine.clean()
   }
@@ -74,23 +87,23 @@ class MemoViewSpec extends SparkTestBase {
     val key = "metadata['category']"
     engine.save(yamlDoc("first note body", Some("a")) +
       yamlDoc("uncategorized one", None))
-    engine.viewState("bycat", key, Chars)
+    viewed(engine.viewState("bycat", key, Chars))
     engine.save(yamlDoc("second commit note", Some("a")) +
       yamlDoc("third with new group", Some("b")) +
       yamlDoc("another uncategorized", None))
-    val v = engine.viewState("bycat", key, Chars)
-    assert(mode(engine) == "incremental")
-    assert(scanned(engine).nonEmpty &&
-      scanned(engine).forall(_.contains("/v1/")),
-      s"append refresh must read only v1's delta: ${scanned(engine)}")
+    val v = viewed(engine.viewState("bycat", key, Chars))
+    assert(mode == "incremental")
+    assert(scanned.nonEmpty &&
+      scanned.forall(_.contains("/v1/")),
+      s"append refresh must read only v1's delta: ${scanned}")
     assert(collected(v) == direct(engine, key))
     // two appends behind: a multi-step walk stays incremental
     engine.save(yamlDoc("fourth note here", Some("b")))
     engine.save(yamlDoc("fifth and last", Some("c")))
-    val v2 = engine.viewState("bycat", key, Chars)
-    assert(mode(engine) == "incremental")
-    assert(scanned(engine).forall(f => f.contains("/v2/") || f.contains("/v3/")),
-      s"two-step refresh must read only v2+v3 deltas: ${scanned(engine)}")
+    val v2 = viewed(engine.viewState("bycat", key, Chars))
+    assert(mode == "incremental")
+    assert(scanned.forall(f => f.contains("/v2/") || f.contains("/v3/")),
+      s"two-step refresh must read only v2+v3 deltas: ${scanned}")
     assert(collected(v2) == direct(engine, key))
     assert(v2.filter(col("group_key").isNull).count() == 1)
     engine.clean()
@@ -101,18 +114,18 @@ class MemoViewSpec extends SparkTestBase {
     val key = "metadata['category']"
     engine.save(yamlDoc("alpha one", Some("a")) + yamlDoc("beta one", Some("b")))
     engine.save(yamlDoc("alpha two", Some("a")) + yamlDoc("gamma one", Some("c")))
-    engine.viewState("bycat", key, Chars)
+    viewed(engine.viewState("bycat", key, Chars))
     // the re-layout is a rewrite commit: manifests don't extend, so the
     // walk must take the captured-version recompute, never serve stale
     engine.clusterBy("category", nClusters = 3)
-    val v = engine.viewState("bycat", key, Chars)
-    assert(mode(engine) == "rebuild",
-      s"a cluster rewrite must rebuild, got ${mode(engine)}")
+    val v = viewed(engine.viewState("bycat", key, Chars))
+    assert(mode == "rebuild",
+      s"a cluster rewrite must rebuild, got ${mode}")
     assert(collected(v) == direct(engine, key))
     // and the clustered chain maintains incrementally from there
     engine.save(yamlDoc("delta one", Some("d")))
-    val v2 = engine.viewState("bycat", key, Chars)
-    assert(mode(engine) == "incremental")
+    val v2 = viewed(engine.viewState("bycat", key, Chars))
+    assert(mode == "incremental")
     assert(collected(v2) == direct(engine, key))
     engine.clean()
   }
@@ -124,7 +137,7 @@ class MemoViewSpec extends SparkTestBase {
     engine.save((0 until 4).map(i => yamlDoc(s"note number $i words", Some("a"))).mkString)
     engine.save((4 until 8).map(i => yamlDoc(s"note number $i words", Some("b"))).mkString)
     engine.save((8 until 12).map(i => yamlDoc(s"note number $i words", Some("c"))).mkString)
-    engine.viewState("bycat", key, Chars)
+    viewed(engine.viewState("bycat", key, Chars))
     // one update that MOVES a row between groups (b -> moved) and one remove
     import spark.implicits._
     // metadata arrives pre-encoded on the CDC path (the store's typed
@@ -148,11 +161,11 @@ class MemoViewSpec extends SparkTestBase {
       .parquet(feedDir.toString)
       .filter(col("change") === "updated").collect()
     assert(prev.length == 1 && prev(0).getString(4) == "note number 5 words")
-    val v = engine.viewState("bycat", key, Chars)
-    assert(mode(engine) == "incremental")
-    assert(scanned(engine).nonEmpty &&
-      scanned(engine).forall(_.contains("/changefeed/")),
-      s"patch refresh must read only the feed: ${scanned(engine)}")
+    val v = viewed(engine.viewState("bycat", key, Chars))
+    assert(mode == "incremental")
+    assert(scanned.nonEmpty &&
+      scanned.forall(_.contains("/changefeed/")),
+      s"patch refresh must read only the feed: ${scanned}")
     assert(collected(v) == direct(engine, key))
     // the retraction really moved the group: b lost a row, moved gained
     // one, c lost the removed row (group values carry the store's typed
@@ -168,17 +181,17 @@ class MemoViewSpec extends SparkTestBase {
     val key = "metadata['category']"
     engine.save(yamlDoc("first note", Some("a")) + yamlDoc("second note", Some("b")))
     engine.save(yamlDoc("third note", Some("a")))
-    engine.viewState("bycat", key, Chars)
+    viewed(engine.viewState("bycat", key, Chars))
     engine.save("---\nid: 1\nbody: gone\nmetadata: {deleted: true}\n")
     engine.reindex() // re-sequences ids, compacts the chain
-    val v = engine.viewState("bycat", key, Chars)
-    assert(mode(engine) == "rebuild",
+    val v = viewed(engine.viewState("bycat", key, Chars))
+    assert(mode == "rebuild",
       "a reindex rewrite cannot be proven incremental and must recompute")
     assert(collected(v) == direct(engine, key))
     val restored = engine.restore(engine.versions.head)
     assert(restored > 0)
-    val v2 = engine.viewState("bycat", key, Chars)
-    assert(mode(engine) == "rebuild")
+    val v2 = viewed(engine.viewState("bycat", key, Chars))
+    assert(mode == "rebuild")
     assert(collected(v2) == direct(engine, key))
     engine.clean()
   }
@@ -186,15 +199,15 @@ class MemoViewSpec extends SparkTestBase {
   test("changing the spec under the same name rebuilds, same spec reuses") {
     val (engine, _) = freshEngine()
     engine.save(yamlDoc("alpha note", Some("x")) + yamlDoc("beta note", Some("y")))
-    engine.viewState("v", "metadata['category']", Chars)
-    assert(mode(engine) == "rebuild")
+    viewed(engine.viewState("v", "metadata['category']", Chars))
+    assert(mode == "rebuild")
     // same name, different group key: detected, recomputed under new spec
-    val byLen = engine.viewState("v", "CAST(length(body) % 2 AS STRING)", Chars)
-    assert(mode(engine) == "rebuild")
+    val byLen = viewed(engine.viewState("v", "CAST(length(body) % 2 AS STRING)", Chars))
+    assert(mode == "rebuild")
     assert(collected(byLen) == direct(engine, "CAST(length(body) % 2 AS STRING)"))
     // and back: the spec is recorded verbatim, so this rebuilds again
-    engine.viewState("v", "metadata['category']", Chars)
-    assert(mode(engine) == "rebuild")
+    viewed(engine.viewState("v", "metadata['category']", Chars))
+    assert(mode == "rebuild")
     engine.clean()
   }
 
@@ -202,20 +215,20 @@ class MemoViewSpec extends SparkTestBase {
     val (engine, _) = freshEngine()
     val key = "metadata['category']"
     engine.save(yamlDoc("first note", Some("a")))
-    engine.viewState("bycat", key, Chars)
+    viewed(engine.viewState("bycat", key, Chars))
     engine.save(yamlDoc("second note", Some("b")))
     // interleave a foreign commit inside the locked refresh window: the
     // refresh must aggregate the version it CAPTURED, never the live view
     engine.beforeViewBuildHook =
       () => { engine.save(yamlDoc("racing note", Some("c"))); () }
     try {
-      val v = engine.viewState("bycat", key, Chars)
+      val v = viewed(engine.viewState("bycat", key, Chars))
       assert(collected(v).map(_._1) == Set("sa", "sb"),
         "refresh must not see the commit that raced it")
     } finally engine.beforeViewBuildHook = () => ()
     // the next call catches up incrementally with the raced commit
-    val v2 = engine.viewState("bycat", key, Chars)
-    assert(mode(engine) == "incremental")
+    val v2 = viewed(engine.viewState("bycat", key, Chars))
+    assert(mode == "incremental")
     assert(collected(v2) == direct(engine, key))
     assert(collected(v2).map(_._1) == Set("sa", "sb", "sc"))
     engine.clean()
@@ -258,15 +271,15 @@ class MemoViewSpec extends SparkTestBase {
       yamlW("a two", "a", 3) + yamlW("b zero", "b", 4)) // v0: ids 0-3
     engine.save(yamlW("a three", "a", 7) + yamlW("b one", "b", 6)) // v1: 4,5
     engine.save(yamlW("b two", "b", 2)) // v2: id 6
-    val v = engine.viewState("mm", key, MM, MMAggs)
-    assert(mode(engine) == "rebuild")
+    val v = viewed(engine.viewState("mm", key, MM, MMAggs))
+    assert(mode == "rebuild")
     assert(collectedW(v) == directW(engine, key))
     // append: extremes are insert-monotone — incremental, delta scan only
     engine.save(yamlW("a four", "a", 11)) // v3: id 7, new champion for a.hi
-    val v2 = engine.viewState("mm", key, MM, MMAggs)
-    assert(mode(engine) == "incremental")
-    assert(scanned(engine).nonEmpty && scanned(engine).forall(_.contains("/v3/")),
-      s"append refresh must read only v3's delta: ${scanned(engine)}")
+    val v2 = viewed(engine.viewState("mm", key, MM, MMAggs))
+    assert(mode == "incremental")
+    assert(scanned.nonEmpty && scanned.forall(_.contains("/v3/")),
+      s"append refresh must read only v3's delta: ${scanned}")
     assert(collectedW(v2) == directW(engine, key))
     assert(collectedW(v2).find(_._1 == "sa").get._3 == 11L)
     // patch retracting a NON-champion (a-one's 9 drops to 1 while 11
@@ -278,12 +291,12 @@ class MemoViewSpec extends SparkTestBase {
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(0L))
     engine.applyChanges(feed1)
-    val v3 = engine.viewState("mm", key, MM, MMAggs)
-    assert(mode(engine) == "incremental",
+    val v3 = viewed(engine.viewState("mm", key, MM, MMAggs))
+    assert(mode == "incremental",
       "a retraction missing the stored champion must not rescan")
-    assert(scanned(engine).nonEmpty &&
-      scanned(engine).forall(_.contains("/changefeed/")),
-      s"covered retraction must read only the feed: ${scanned(engine)}")
+    assert(scanned.nonEmpty &&
+      scanned.forall(_.contains("/changefeed/")),
+      s"covered retraction must read only the feed: ${scanned}")
     assert(collectedW(v3) == directW(engine, key))
     assert(collectedW(v3).find(_._1 == "sa").get._4 == 1L)
     // remove the champion (id 7, weight 11) with no covering add: the
@@ -293,12 +306,12 @@ class MemoViewSpec extends SparkTestBase {
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(0L))
     engine.applyChanges(feed2)
-    val v4 = engine.viewState("mm", key, MM, MMAggs)
-    assert(mode(engine) == "incremental",
+    val v4 = viewed(engine.viewState("mm", key, MM, MMAggs))
+    assert(mode == "incremental",
       "a reserve-covered champion retraction must stay O(delta)")
-    assert(scanned(engine).nonEmpty &&
-      scanned(engine).forall(_.contains("/changefeed/")),
-      s"champion retraction must read only the feed: ${scanned(engine)}")
+    assert(scanned.nonEmpty &&
+      scanned.forall(_.contains("/changefeed/")),
+      s"champion retraction must read only the feed: ${scanned}")
     assert(collectedW(v4) == directW(engine, key))
     assert(collectedW(v4).find(_._1 == "sa").get._3 == 7L)
     // group b's extremes were never touched and still agree
@@ -313,7 +326,7 @@ class MemoViewSpec extends SparkTestBase {
     val key = "metadata['category']"
     engine.save(yamlW("p zero", "p", 10) + yamlW("p one", "p", 9))
     engine.save(yamlW("p two", "p", 8)) // 2 segments: patches prune
-    engine.viewState("ph", key, MM, MMAggs) // watermark here
+    viewed(engine.viewState("ph", key, MM, MMAggs)) // watermark here
     def upd(id: Long, cat: String, w: Int): Unit =
       engine.applyChanges(Seq((id, "updated", s"ph upd $id $w",
           Map("category" -> s"s$cat", "weight" -> s"i$w")))
@@ -324,8 +337,8 @@ class MemoViewSpec extends SparkTestBase {
     // must cancel at the VALUE level, not slip past the stored reserve
     upd(0L, "p", 50) // row 0: 10 -> 50 (would-be champion)
     upd(0L, "p", 7)  // row 0: 50 -> 7 (the 50 never survives the window)
-    val v = engine.viewState("ph", key, MM, MMAggs)
-    assert(mode(engine) == "incremental", s"got ${mode(engine)}")
+    val v = viewed(engine.viewState("ph", key, MM, MMAggs))
+    assert(mode == "incremental", s"got ${mode}")
     assert(collectedW(v) == directW(engine, key),
       "cross-step add+retract must cancel in the reserve")
     assert(collectedW(v).find(_._1 == "sp").get._3 == 9L,
@@ -338,7 +351,7 @@ class MemoViewSpec extends SparkTestBase {
         Map.empty[String, String]))
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(0L)))
-    val v2 = engine.viewState("ph", key, MM, MMAggs)
+    val v2 = viewed(engine.viewState("ph", key, MM, MMAggs))
     assert(collectedW(v2) == directW(engine, key),
       "an in-window add+remove of the same row must cancel")
     assert(!collectedW(v2).exists(_._1 == "sq"),
@@ -363,22 +376,22 @@ class MemoViewSpec extends SparkTestBase {
     // group c: committed values 10, 9 -> k=2 reserve [10, 9]
     engine.save(yamlW("c zero", "c", 10) + yamlW("c one", "c", 9))
     engine.save(yamlW("d zero", "d", 28) + yamlW("d one", "d", 10))
-    engine.viewState("cap", key, MM, MMAggs) // watermark
+    viewed(engine.viewState("cap", key, MM, MMAggs)) // watermark
     // ONE window, two steps: append THREE c-values (30, 29, 28 — more
     // than k, so an add side capped at k before netting would forget
     // the 28) then retract the kept top add (30)
     engine.save(yamlW("c two", "c", 30) + yamlW("c three", "c", 29) +
       yamlW("c four", "c", 28))
     rm(Seq(idOf(30)))
-    val v = engine.viewState("cap", key, MM, MMAggs)
-    assert(mode(engine) == "incremental", s"got ${mode(engine)}")
+    val v = viewed(engine.viewState("cap", key, MM, MMAggs))
+    assert(mode == "incremental", s"got ${mode}")
     assert(collectedW(v) == directW(engine, key))
     assert(collectedW(v).find(_._1 == "sc").get._3 == 29L)
     // the probe: retract the NEW champion. The stored reserve must still
     // know 28 — O(delta), served max 28, never the stale pre-window 10
     rm(Seq(idOf(29)))
-    val v2 = engine.viewState("cap", key, MM, MMAggs)
-    assert(mode(engine) == "incremental",
+    val v2 = viewed(engine.viewState("cap", key, MM, MMAggs))
+    assert(mode == "incremental",
       "a retraction covered by the true top-k must stay O(delta)")
     assert(collectedW(v2).find(_._1 == "sc").get._3 == 28L,
       "the capped-out in-window add must survive as the runner-up")
@@ -390,8 +403,8 @@ class MemoViewSpec extends SparkTestBase {
     engine.save(yamlW("d two", "d", 40) + yamlW("d three", "d", 39) +
       yamlW("d four", "d", 28))
     rm(Seq(idOf(40), idOf(39), idOf(28))) // idOf takes max id: the new 28
-    val v3 = engine.viewState("cap", key, MM, MMAggs)
-    assert(mode(engine) == "incremental", s"got ${mode(engine)}")
+    val v3 = viewed(engine.viewState("cap", key, MM, MMAggs))
+    assert(mode == "incremental", s"got ${mode}")
     assert(collectedW(v3).find(_._1 == "sd").get._3 == 28L,
       "a net-zero window must leave the old reserve untouched")
     assert(collectedW(v3) == directW(engine, key))
@@ -409,7 +422,7 @@ class MemoViewSpec extends SparkTestBase {
       yamlW("x two", "x", 8) + yamlW("x three", "x", 7) +
       yamlW("y zero", "y", 5))
     engine.save(yamlW("y one", "y", 6)) // second segment: patches prune
-    engine.viewState("res", key, MM, MMAggs)
+    viewed(engine.viewState("res", key, MM, MMAggs))
     // retract the top TWO of group x in one batch (ids 0 and 1): the k=2
     // reserve [10, 9] empties — max 8 is unrecoverable from state+delta
     val feed = Seq(
@@ -418,12 +431,12 @@ class MemoViewSpec extends SparkTestBase {
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(0L))
     engine.applyChanges(feed)
-    val v = engine.viewState("res", key, MM, MMAggs)
-    assert(mode(engine) == "incremental_rescan",
+    val v = viewed(engine.viewState("res", key, MM, MMAggs))
+    assert(mode == "incremental_rescan",
       "an exhausted reserve must take the rescan arm")
-    assert(scanned(engine).exists(_.contains("/changefeed/")) &&
-      scanned(engine).exists(_.contains("/records")),
-      s"rescan arm reads the feed AND the corpus: ${scanned(engine)}")
+    assert(scanned.exists(_.contains("/changefeed/")) &&
+      scanned.exists(_.contains("/records")),
+      s"rescan arm reads the feed AND the corpus: ${scanned}")
     assert(collectedW(v) == directW(engine, key))
     assert(collectedW(v).find(_._1 == "sx").get._3 == 8L,
       "the rescan must land on the true post-retraction max")
@@ -432,8 +445,8 @@ class MemoViewSpec extends SparkTestBase {
     engine.applyChanges(Seq((2L, "removed", "", Map.empty[String, String]))
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(0L)))
-    val v2 = engine.viewState("res", key, MM, MMAggs)
-    assert(mode(engine) == "incremental",
+    val v2 = viewed(engine.viewState("res", key, MM, MMAggs))
+    assert(mode == "incremental",
       "a rescan must refill the reserve for the next champion retraction")
     assert(collectedW(v2).find(_._1 == "sx").get._3 == 7L)
     assert(collectedW(v2) == directW(engine, key))
@@ -467,16 +480,16 @@ class MemoViewSpec extends SparkTestBase {
     engine.save(yamlS("a zero", "a", "s1") + yamlS("a one", "a", "s2") +
       yamlS("a two", "a", "s2") + yamlS("b zero", "b", "s1"))
     engine.save(yamlS("a three", "a", "s3")) // second segment: patches prune
-    val v = engine.viewState("dd", key, DD, DDAggs)
-    assert(mode(engine) == "rebuild")
+    val v = viewed(engine.viewState("dd", key, DD, DDAggs))
+    assert(mode == "rebuild")
     assert(collected(v) == directD(engine, key))
     assert(collected(v).find(_._1 == "sa").get._3 == 3L)
     // append with one NEW and one KNOWN source: incremental, delta only
     engine.save(yamlS("a four", "a", "s4") + yamlS("b one", "b", "s1"))
-    val v2 = engine.viewState("dd", key, DD, DDAggs)
-    assert(mode(engine) == "incremental")
-    assert(scanned(engine).nonEmpty && scanned(engine).forall(_.contains("/v2/")),
-      s"append refresh must read only v2's delta: ${scanned(engine)}")
+    val v2 = viewed(engine.viewState("dd", key, DD, DDAggs))
+    assert(mode == "incremental")
+    assert(scanned.nonEmpty && scanned.forall(_.contains("/v2/")),
+      s"append refresh must read only v2's delta: ${scanned}")
     assert(collected(v2) == directD(engine, key))
     assert(collected(v2).find(_._1 == "sa").get._3 == 4L)
     assert(collected(v2).find(_._1 == "sb").get._3 == 1L)
@@ -486,20 +499,20 @@ class MemoViewSpec extends SparkTestBase {
     // retract ONE of group a's two s2 instances: multiplicity covers it —
     // distinct count unchanged, no rescan, feed-only scan
     patch(Seq((2L, "removed", "", Map.empty[String, String])))
-    val v3 = engine.viewState("dd", key, DD, DDAggs)
-    assert(mode(engine) == "incremental",
+    val v3 = viewed(engine.viewState("dd", key, DD, DDAggs))
+    assert(mode == "incremental",
       "a multiplicity-covered retraction must not rescan")
-    assert(scanned(engine).nonEmpty &&
-      scanned(engine).forall(_.contains("/changefeed/")),
-      s"covered retraction must read only the feed: ${scanned(engine)}")
+    assert(scanned.nonEmpty &&
+      scanned.forall(_.contains("/changefeed/")),
+      s"covered retraction must read only the feed: ${scanned}")
     assert(collected(v3) == directD(engine, key))
     assert(collected(v3).find(_._1 == "sa").get._3 == 4L,
       "one surviving s2 instance must keep the value counted")
     // retract the LAST instance of a value (a's s1): the dictionary drops
     // the key — the distinct count falls, still O(delta)
     patch(Seq((0L, "removed", "", Map.empty[String, String])))
-    val v4 = engine.viewState("dd", key, DD, DDAggs)
-    assert(mode(engine) == "incremental",
+    val v4 = viewed(engine.viewState("dd", key, DD, DDAggs))
+    assert(mode == "incremental",
       "a last-instance retraction is covered by the exact dictionary")
     assert(collected(v4) == directD(engine, key))
     assert(collected(v4).find(_._1 == "sa").get._3 == 3L)
@@ -507,8 +520,8 @@ class MemoViewSpec extends SparkTestBase {
     // retraction + one add in the same window, both groups exact
     patch(Seq((4L, "updated", "moved to b",
       Map("category" -> "sb", "src" -> "ss3"))))
-    val v5 = engine.viewState("dd", key, DD, DDAggs)
-    assert(mode(engine) == "incremental")
+    val v5 = viewed(engine.viewState("dd", key, DD, DDAggs))
+    assert(mode == "incremental")
     assert(collected(v5) == directD(engine, key))
     assert(collected(v5).find(_._1 == "sa").get._3 == 2L)
     assert(collected(v5).find(_._1 == "sb").get._3 == 2L)
@@ -527,32 +540,32 @@ class MemoViewSpec extends SparkTestBase {
     engine.save(yamlS("x zero", "x", "s1") + yamlS("x one", "x", "s2") +
       yamlS("y zero", "y", "s1"))
     engine.save(yamlS("y one", "y", "s2")) // second segment: patches prune
-    engine.viewState("dover", key, DD, DDAggs)
-    assert(mode(engine) == "rebuild")
+    viewed(engine.viewState("dover", key, DD, DDAggs))
+    assert(mode == "rebuild")
     // the cap-CROSSING merge: a third distinct source for x. The fold saw
     // every value, so the scalar is exact and the mode stays incremental —
     // only the dictionary drops
     engine.save(yamlS("x two", "x", "s3"))
-    val v = engine.viewState("dover", key, DD, DDAggs)
-    assert(mode(engine) == "incremental",
+    val v = viewed(engine.viewState("dover", key, DD, DDAggs))
+    assert(mode == "incremental",
       "the cap-crossing merge itself must not rescan")
     assert(collected(v) == directD(engine, key))
     assert(collected(v).find(_._1 == "sx").get._3 == 3L,
       "the scalar must stay exact through the overflow merge")
     // a window touching ONLY group y: x's overflow must not tax it
     engine.save(yamlS("y two", "y", "s3"))
-    val v2 = engine.viewState("dover", key, DD, DDAggs)
-    assert(mode(engine) == "incremental",
+    val v2 = viewed(engine.viewState("dover", key, DD, DDAggs))
+    assert(mode == "incremental",
       "an untouched overflowed group must not force a rescan")
     assert(collected(v2) == directD(engine, key))
     // now TOUCH x's values: the dropped dictionary can't answer — the
     // group-scoped rescan arm fires and restores truth
     engine.save(yamlS("x three", "x", "s4"))
-    val v3 = engine.viewState("dover", key, DD, DDAggs)
-    assert(mode(engine) == "incremental_rescan",
+    val v3 = viewed(engine.viewState("dover", key, DD, DDAggs))
+    assert(mode == "incremental_rescan",
       "a value touch on an overflowed group must rescan it")
-    assert(scanned(engine).exists(_.contains("/records")),
-      s"rescan arm reads the corpus: ${scanned(engine)}")
+    assert(scanned.exists(_.contains("/records")),
+      s"rescan arm reads the corpus: ${scanned}")
     assert(collected(v3) == directD(engine, key))
     assert(collected(v3).find(_._1 == "sx").get._3 == 4L)
     // retract back UNDER the cap (drop x's s3 row — id 4 — and s4 row —
@@ -563,16 +576,16 @@ class MemoViewSpec extends SparkTestBase {
         (6L, "removed", "", Map.empty[String, String]))
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(0L)))
-    val v4 = engine.viewState("dover", key, DD, DDAggs)
-    assert(mode(engine) == "incremental_rescan")
+    val v4 = viewed(engine.viewState("dover", key, DD, DDAggs))
+    assert(mode == "incremental_rescan")
     assert(collected(v4) == directD(engine, key))
     assert(collected(v4).find(_._1 == "sx").get._3 == 2L)
     // … so the NEXT covered retraction is O(delta) again — full recovery
     engine.applyChanges(Seq((0L, "removed", "", Map.empty[String, String]))
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(0L)))
-    val v5 = engine.viewState("dover", key, DD, DDAggs)
-    assert(mode(engine) == "incremental",
+    val v5 = viewed(engine.viewState("dover", key, DD, DDAggs))
+    assert(mode == "incremental",
       "a refilled dictionary must cover retractions again")
     assert(collected(v5) == directD(engine, key))
     assert(collected(v5).find(_._1 == "sx").get._3 == 1L)
@@ -588,23 +601,23 @@ class MemoViewSpec extends SparkTestBase {
     engine.save(yamlS("x two", "x", "s3")) // second segment: patches prune
     // tight view (cap 2 — already overflowed at 3 distinct sources) and
     // default-cap view over the SAME store
-    val a0 = engine.viewState("dcap2", key, DD, DDAggs,
-      distinctCap = Some(2))
-    assert(mode(engine) == "rebuild")
+    val a0 = viewed(engine.viewState("dcap2", key, DD, DDAggs,
+      distinctCap = Some(2)))
+    assert(mode == "rebuild")
     assert(collected(a0) == directD(engine, key))
-    val b0 = engine.viewState("dcap64", key, DD, DDAggs)
-    assert(mode(engine) == "rebuild")
+    val b0 = viewed(engine.viewState("dcap64", key, DD, DDAggs))
+    assert(mode == "rebuild")
     assert(collected(b0) == directD(engine, key))
     // a value touch: the overflowed tight view pays its group rescan,
     // the roomy view does an O(delta) dictionary insert — same window
     engine.save(yamlS("x three", "x", "s4"))
-    val a1 = engine.viewState("dcap2", key, DD, DDAggs,
-      distinctCap = Some(2))
-    assert(mode(engine) == "incremental_rescan",
+    val a1 = viewed(engine.viewState("dcap2", key, DD, DDAggs,
+      distinctCap = Some(2)))
+    assert(mode == "incremental_rescan",
       "cap-2 view must rescan its overflowed group")
     assert(collected(a1) == directD(engine, key))
-    val b1 = engine.viewState("dcap64", key, DD, DDAggs)
-    assert(mode(engine) == "incremental",
+    val b1 = viewed(engine.viewState("dcap64", key, DD, DDAggs))
+    assert(mode == "incremental",
       "the default-cap view must not pay the tight view's overflow")
     assert(collected(b1) == directD(engine, key))
     // refreshViews decodes each view's OWN cap from its recorded spec:
@@ -616,12 +629,12 @@ class MemoViewSpec extends SparkTestBase {
       s"refreshViews lost the per-view cap: ${modes("dcap2")}")
     assert(modes("dcap64") == "incremental",
       s"refreshViews changed the default view's path: ${modes("dcap64")}")
-    assert(collected(engine.viewState("dcap2", key, DD, DDAggs,
-      distinctCap = Some(2))) == directD(engine, key))
+    assert(collected(viewed(engine.viewState("dcap2", key, DD, DDAggs,
+      distinctCap = Some(2)))) == directD(engine, key))
     // changing the cap IS a spec change — detected, rebuilt
-    val a2 = engine.viewState("dcap2", key, DD, DDAggs,
-      distinctCap = Some(8))
-    assert(mode(engine) == "rebuild",
+    val a2 = viewed(engine.viewState("dcap2", key, DD, DDAggs,
+      distinctCap = Some(8)))
+    assert(mode == "rebuild",
       "a distinctCap change must rebuild like any spec change")
     assert(collected(a2) == directD(engine, key))
     engine.clean()
@@ -633,25 +646,25 @@ class MemoViewSpec extends SparkTestBase {
     val (engine, _) = freshEngine()
     val key = "metadata['category']"
     engine.save(yamlS("seed a", "a", "s1"))
-    engine.viewState("dnull", key, DD, DDAggs)
-    assert(mode(engine) == "rebuild")
+    viewed(engine.viewState("dnull", key, DD, DDAggs))
+    assert(mode == "rebuild")
     // group c arrives with NO src key at all: doc_count moves, but the
     // distinct measure sees only NULLs — touched=false, no old row
     engine.save(yamlDoc("c zero no src", Some("c")))
-    val v = engine.viewState("dnull", key, DD, DDAggs)
-    assert(mode(engine) == "incremental")
+    val v = viewed(engine.viewState("dnull", key, DD, DDAggs))
+    assert(mode == "incremental")
     assert(collected(v) == directD(engine, key))
     assert(collected(v).find(_._1 == "sc").get._3 == 0L)
     // the group's FIRST real value: an empty dictionary answers it
     // O(delta); a NULL-poisoned one would fire the group-scoped rescan
     engine.save(yamlS("c one", "c", "s9"))
-    val v2 = engine.viewState("dnull", key, DD, DDAggs)
-    assert(mode(engine) == "incremental",
+    val v2 = viewed(engine.viewState("dnull", key, DD, DDAggs))
+    assert(mode == "incremental",
       s"empty dictionary must not masquerade as overflow, " +
-        s"got ${mode(engine)}")
-    assert(scanned(engine).nonEmpty &&
-      scanned(engine).forall(_.contains("/v2/")),
-      s"first value add must read only v2's delta: ${scanned(engine)}")
+        s"got ${mode}")
+    assert(scanned.nonEmpty &&
+      scanned.forall(_.contains("/v2/")),
+      s"first value add must read only v2's delta: ${scanned}")
     assert(collected(v2) == directD(engine, key))
     assert(collected(v2).find(_._1 == "sc").get._3 == 1L)
     // and the dictionary really is live: retracting that value is covered
@@ -659,8 +672,8 @@ class MemoViewSpec extends SparkTestBase {
     engine.applyChanges(Seq((2L, "removed", "", Map.empty[String, String]))
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(0L)))
-    val v3 = engine.viewState("dnull", key, DD, DDAggs)
-    assert(mode(engine) == "incremental")
+    val v3 = viewed(engine.viewState("dnull", key, DD, DDAggs))
+    assert(mode == "incremental")
     assert(collected(v3) == directD(engine, key))
     assert(collected(v3).find(_._1 == "sc").get._3 == 0L)
     engine.clean()
@@ -673,7 +686,7 @@ class MemoViewSpec extends SparkTestBase {
     val key = "metadata['category']"
     engine.save(yamlS("p zero", "p", "s1") + yamlS("p one", "p", "s2"))
     engine.save(yamlS("p two", "p", "s2")) // 2 segments: patches prune
-    engine.viewState("dph", key, DD, DDAggs) // watermark here
+    viewed(engine.viewState("dph", key, DD, DDAggs)) // watermark here
     def upd(id: Long, src: String): Unit =
       engine.applyChanges(Seq((id, "updated", s"dph upd $id",
           Map("category" -> "sp", "src" -> src)))
@@ -683,8 +696,8 @@ class MemoViewSpec extends SparkTestBase {
     // to s1 — the transient s9 must not survive the window's fold
     upd(0L, "ss9")
     upd(0L, "ss1")
-    val v = engine.viewState("dph", key, DD, DDAggs)
-    assert(mode(engine) == "incremental", s"got ${mode(engine)}")
+    val v = viewed(engine.viewState("dph", key, DD, DDAggs))
+    assert(mode == "incremental", s"got ${mode}")
     assert(collected(v) == directD(engine, key),
       "a cross-step add+retract must cancel in the dictionary")
     assert(collected(v).find(_._1 == "sp").get._3 == 2L,
@@ -736,16 +749,16 @@ class MemoViewSpec extends SparkTestBase {
     engine.save(yamlP("a zero", "a", 10) + yamlP("a one", "a", 20) +
       yamlP("a two", "a", 20) + yamlP("b zero", "b", 7))
     engine.save(yamlP("a three", "a", 40)) // second segment: patches prune
-    val v = engine.viewState("pct", key, PC, PCAggs)
-    assert(mode(engine) == "rebuild")
+    val v = viewed(engine.viewState("pct", key, PC, PCAggs))
+    assert(mode == "rebuild")
     assert(collectedP(v) == directP(engine, key))
     assert(collectedP(v).find(_._1 == "sa").get._3 == 20L)
     // append with a new extreme: incremental, delta only
     engine.save(yamlP("a four", "a", 5) + yamlP("b one", "b", 9))
-    val v2 = engine.viewState("pct", key, PC, PCAggs)
-    assert(mode(engine) == "incremental")
-    assert(scanned(engine).nonEmpty && scanned(engine).forall(_.contains("/v2/")),
-      s"append refresh must read only v2's delta: ${scanned(engine)}")
+    val v2 = viewed(engine.viewState("pct", key, PC, PCAggs))
+    assert(mode == "incremental")
+    assert(scanned.nonEmpty && scanned.forall(_.contains("/v2/")),
+      s"append refresh must read only v2's delta: ${scanned}")
     assert(collectedP(v2) == directP(engine, key))
     def patch(rows: Seq[(Long, String, String, Map[String, String])]): Unit = {
       engine.applyChanges(rows.toDF("id", "change", "body", "metadata")
@@ -755,25 +768,25 @@ class MemoViewSpec extends SparkTestBase {
     // retract ONE of group a's two 20s: multiplicity-covered — the
     // median stays 20 off the histogram, no rescan, feed-only scan
     patch(Seq((2L, "removed", "", Map.empty[String, String])))
-    val v3 = engine.viewState("pct", key, PC, PCAggs)
-    assert(mode(engine) == "incremental",
+    val v3 = viewed(engine.viewState("pct", key, PC, PCAggs))
+    assert(mode == "incremental",
       "a multiplicity-covered retraction must not rescan")
-    assert(scanned(engine).nonEmpty &&
-      scanned(engine).forall(_.contains("/changefeed/")),
-      s"covered retraction must read only the feed: ${scanned(engine)}")
+    assert(scanned.nonEmpty &&
+      scanned.forall(_.contains("/changefeed/")),
+      s"covered retraction must read only the feed: ${scanned}")
     assert(collectedP(v3) == directP(engine, key))
     // retract the MEDIAN's last instance: the histogram still answers —
     // the walk lands on a neighbor, still O(delta)
     patch(Seq((1L, "removed", "", Map.empty[String, String])))
-    val v4 = engine.viewState("pct", key, PC, PCAggs)
-    assert(mode(engine) == "incremental",
+    val v4 = viewed(engine.viewState("pct", key, PC, PCAggs))
+    assert(mode == "incremental",
       "a champion retraction is covered by the exact histogram")
     assert(collectedP(v4) == directP(engine, key))
     // move a value (b's 7 becomes 100): retract + add in one window
     patch(Seq((3L, "updated", "b zero louder",
       Map("category" -> "sb", "w" -> "i100"))))
-    val v5 = engine.viewState("pct", key, PC, PCAggs)
-    assert(mode(engine) == "incremental")
+    val v5 = viewed(engine.viewState("pct", key, PC, PCAggs))
+    assert(mode == "incremental")
     assert(collectedP(v5) == directP(engine, key))
     assert(collectedP(v5).find(_._1 == "sb").get._4 == 100L)
     engine.clean()
@@ -789,27 +802,27 @@ class MemoViewSpec extends SparkTestBase {
     engine.save(yamlP("x zero", "x", 1) + yamlP("x one", "x", 2) +
       yamlP("y zero", "y", 5))
     engine.save(yamlP("y one", "y", 6)) // second segment: patches prune
-    engine.viewState("pover", key, PC, PCAggs)
-    assert(mode(engine) == "rebuild")
+    viewed(engine.viewState("pover", key, PC, PCAggs))
+    assert(mode == "rebuild")
     // the cap-CROSSING merge: a third distinct value for x — the fold
     // saw every value, so the scalars stay exact while the dict drops
     engine.save(yamlP("x two", "x", 9))
-    val v = engine.viewState("pover", key, PC, PCAggs)
-    assert(mode(engine) == "incremental",
+    val v = viewed(engine.viewState("pover", key, PC, PCAggs))
+    assert(mode == "incremental",
       "the cap-crossing merge itself must not rescan")
     assert(collectedP(v) == directP(engine, key))
     assert(collectedP(v).find(_._1 == "sx").get._3 == 2L,
       "the median must stay exact through the overflow merge")
     // a window touching ONLY group y: x's overflow must not tax it
     engine.save(yamlP("y two", "y", 7))
-    val v2 = engine.viewState("pover", key, PC, PCAggs)
-    assert(mode(engine) == "incremental",
+    val v2 = viewed(engine.viewState("pover", key, PC, PCAggs))
+    assert(mode == "incremental",
       "an untouched overflowed group must not force a rescan")
     assert(collectedP(v2) == directP(engine, key))
     // TOUCH x's values: the dropped histogram can't answer — rescan
     engine.save(yamlP("x three", "x", 4))
-    val v3 = engine.viewState("pover", key, PC, PCAggs)
-    assert(mode(engine) == "incremental_rescan",
+    val v3 = viewed(engine.viewState("pover", key, PC, PCAggs))
+    assert(mode == "incremental_rescan",
       "a value touch on an overflowed group must rescan it")
     assert(collectedP(v3) == directP(engine, key))
     // retract back UNDER the cap (drop 9 and 4): the rescan refills …
@@ -818,15 +831,15 @@ class MemoViewSpec extends SparkTestBase {
         (6L, "removed", "", Map.empty[String, String]))
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(0L)))
-    val v4 = engine.viewState("pover", key, PC, PCAggs)
-    assert(mode(engine) == "incremental_rescan")
+    val v4 = viewed(engine.viewState("pover", key, PC, PCAggs))
+    assert(mode == "incremental_rescan")
     assert(collectedP(v4) == directP(engine, key))
     // … so the NEXT retraction is O(delta) again — full recovery
     engine.applyChanges(Seq((0L, "removed", "", Map.empty[String, String]))
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(0L)))
-    val v5 = engine.viewState("pover", key, PC, PCAggs)
-    assert(mode(engine) == "incremental",
+    val v5 = viewed(engine.viewState("pover", key, PC, PCAggs))
+    assert(mode == "incremental",
       "a refilled histogram must cover retractions again")
     assert(collectedP(v5) == directP(engine, key))
     engine.clean()
@@ -839,24 +852,24 @@ class MemoViewSpec extends SparkTestBase {
     val key = "metadata['category']"
     engine.save(yamlP("m zero", "m", 3) + yamlP("m one", "m", 8) +
       yamlP("m two", "m", 11))
-    val med = engine.viewState("pmed", key,
-      Seq("v" -> WExpr), Map("v" -> "median")).collect()
-    val p50 = engine.viewState("p50twin", key,
-      Seq("v" -> WExpr), Map("v" -> "p50")).collect()
+    val med = viewed(engine.viewState("pmed", key,
+      Seq("v" -> WExpr), Map("v" -> "median"))).collect()
+    val p50 = viewed(engine.viewState("p50twin", key,
+      Seq("v" -> WExpr), Map("v" -> "p50"))).collect()
     assert(med.map(r => (r.getString(0), r.getLong(2))).toSet ==
       p50.map(r => (r.getString(0), r.getLong(2))).toSet)
     assert(med.head.getLong(2) == 8L)
     // percent participates in spec identity through the aggregator name:
     // same view name at p95 is a DETECTED change and rebuilds
-    val p95 = engine.viewState("pmed", key,
-      Seq("v" -> WExpr), Map("v" -> "p95"))
-    assert(mode(engine) == "rebuild",
+    val p95 = viewed(engine.viewState("pmed", key,
+      Seq("v" -> WExpr), Map("v" -> "p95")))
+    assert(mode == "rebuild",
       "a percent change must rebuild, never serve the old percentile")
     assert(p95.collect().head.getLong(2) == 11L)
     // outside 1..99 (or not pNN at all) is rejected at the boundary
     for (bad <- Seq("p0", "p100", "p05", "p9x", "percentile")) {
       val e = intercept[IllegalArgumentException] {
-        engine.viewState("prej", key, Seq("v" -> WExpr), Map("v" -> bad))
+        viewed(engine.viewState("prej", key, Seq("v" -> WExpr), Map("v" -> bad)))
       }
       assert(e.getMessage.contains("unsupported"), s"$bad: ${e.getMessage}")
     }
@@ -885,8 +898,8 @@ class MemoViewSpec extends SparkTestBase {
         count(expr("metadata['opt']")).as("n_opt"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .toSet
-    val v = engine.viewState("cnt", key, m, aggs)
-    assert(mode(engine) == "rebuild")
+    val v = viewed(engine.viewState("cnt", key, m, aggs))
+    assert(mode == "rebuild")
     assert(collected(v) == directC())
     assert(collected(v).find(_._1 == "sc").get._3 == 0L,
       "a group of all-null evaluations must count 0, not its rows")
@@ -899,9 +912,9 @@ class MemoViewSpec extends SparkTestBase {
         (2L, "removed", "", Map.empty[String, String]))
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(0L)))
-    val v2 = engine.viewState("cnt", key, m, aggs)
-    assert(mode(engine) == "incremental",
-      s"presence retraction must stay O(delta), got ${mode(engine)}")
+    val v2 = viewed(engine.viewState("cnt", key, m, aggs))
+    assert(mode == "incremental",
+      s"presence retraction must stay O(delta), got ${mode}")
     assert(collected(v2) == directC())
     assert(collected(v2).find(_._1 == "sa").get._3 == 1L)
     assert(collected(v2).find(_._1 == "sb").get._3 == 0L)
@@ -938,8 +951,8 @@ class MemoViewSpec extends SparkTestBase {
     // segment-pruned (all-segment patches degrade to rewrite commits)
     engine.save(yamlG("d in one", "d", "g1"))
     val w = Some("{grp: g1}")
-    val v = engine.viewState("fg", key, Chars, where = w)
-    assert(mode(engine) == "rebuild")
+    val v = viewed(engine.viewState("fg", key, Chars, where = w))
+    assert(mode == "rebuild")
     assert(collected(v) == directG(engine, key, "g1"))
     assert(!collected(v).exists(_._1 == "sc"),
       "non-matching groups must not exist in a filtered view")
@@ -953,12 +966,12 @@ class MemoViewSpec extends SparkTestBase {
       (0L, "updated", "a moved out", Map("category" -> "sa", "grp" -> "sg2")),
       (1L, "updated", "a moved in!", Map("category" -> "sa", "grp" -> "sg1")),
       (4L, "updated", "c still out", Map("category" -> "sc", "grp" -> "sg3"))))
-    val v2 = engine.viewState("fg", key, Chars, where = w)
-    assert(mode(engine) == "incremental",
-      s"boundary crossings must stay O(delta), got ${mode(engine)}")
-    assert(scanned(engine).nonEmpty &&
-      scanned(engine).forall(_.contains("/changefeed/")),
-      s"patch refresh must read only the feed: ${scanned(engine)}")
+    val v2 = viewed(engine.viewState("fg", key, Chars, where = w))
+    assert(mode == "incremental",
+      s"boundary crossings must stay O(delta), got ${mode}")
+    assert(scanned.nonEmpty &&
+      scanned.forall(_.contains("/changefeed/")),
+      s"patch refresh must read only the feed: ${scanned}")
     assert(collected(v2) == directG(engine, key, "g1"))
     assert(collected(v2).find(_._1 == "sa").get._2 == 1L,
       "the out-crossing must retract and the in-crossing must add")
@@ -967,8 +980,8 @@ class MemoViewSpec extends SparkTestBase {
     patch(Seq(
       (2L, "updated", "b longer body now", Map("category" -> "sb", "grp" -> "sg1")),
       (3L, "removed", "", Map.empty[String, String])))
-    val v3 = engine.viewState("fg", key, Chars, where = w)
-    assert(mode(engine) == "incremental")
+    val v3 = viewed(engine.viewState("fg", key, Chars, where = w))
+    assert(mode == "incremental")
     assert(collected(v3) == directG(engine, key, "g1"))
     engine.clean()
   }
@@ -982,40 +995,40 @@ class MemoViewSpec extends SparkTestBase {
     engine.save(yamlG("seed zero", "a", "g0") + yamlG("seed one", "b", "g0"))
     engine.save(yamlG("in one", "a", "g1") + yamlG("in two", "b", "g1"))
     val w = Some("{grp: g1}")
-    val v = engine.viewState("fs", key, Chars, where = w)
-    assert(mode(engine) == "rebuild")
+    val v = viewed(engine.viewState("fs", key, Chars, where = w))
+    assert(mode == "rebuild")
     // the REBUILD must already skip the provably-unmatchable segment
-    assert(scanned(engine).nonEmpty && scanned(engine).forall(_.contains("/v1/")),
-      s"filtered rebuild must scan only surviving segments: ${scanned(engine)}")
+    assert(scanned.nonEmpty && scanned.forall(_.contains("/v1/")),
+      s"filtered rebuild must scan only surviving segments: ${scanned}")
     assert(collected(v) == directG(engine, key, "g1"))
     // append a provably-unmatchable delta: the refresh is incremental
     // and scans NOTHING (delta ∩ surviving = ∅)
     engine.save(yamlG("out three", "c", "g0"))
-    val v2 = engine.viewState("fs", key, Chars, where = w)
-    assert(mode(engine) == "incremental")
-    assert(scanned(engine).isEmpty,
-      s"an unmatchable delta segment must never be opened: ${scanned(engine)}")
+    val v2 = viewed(engine.viewState("fs", key, Chars, where = w))
+    assert(mode == "incremental")
+    assert(scanned.isEmpty,
+      s"an unmatchable delta segment must never be opened: ${scanned}")
     assert(collected(v2) == directG(engine, key, "g1"))
     // append a matching delta: scanned is exactly that segment
     engine.save(yamlG("in three", "c", "g1"))
-    val v3 = engine.viewState("fs", key, Chars, where = w)
-    assert(mode(engine) == "incremental")
-    assert(scanned(engine).nonEmpty && scanned(engine).forall(_.contains("/v3/")),
-      s"matching delta only: ${scanned(engine)}")
+    val v3 = viewed(engine.viewState("fs", key, Chars, where = w))
+    assert(mode == "incremental")
+    assert(scanned.nonEmpty && scanned.forall(_.contains("/v3/")),
+      s"matching delta only: ${scanned}")
     assert(collected(v3) == directG(engine, key, "g1"))
     // same name, different predicate: a detected spec change — rebuild,
     // and the new predicate's rows serve
-    val v4 = engine.viewState("fs", key, Chars, where = Some("{grp: g0}"))
-    assert(mode(engine) == "rebuild",
+    val v4 = viewed(engine.viewState("fs", key, Chars, where = Some("{grp: g0}")))
+    assert(mode == "rebuild",
       "a WHERE change must be detected as a spec change")
     assert(collected(v4) == directG(engine, key, "g0"))
     // …and dropping the predicate is a spec change too (None ≠ match-all)
-    val v5 = engine.viewState("fs", key, Chars)
-    assert(mode(engine) == "rebuild")
+    val v5 = viewed(engine.viewState("fs", key, Chars))
+    assert(mode == "rebuild")
     assert(collected(v5) == direct(engine, key))
     // malformed predicates fail loudly at the boundary
     intercept[IllegalArgumentException] {
-      engine.viewState("fs", key, Chars, where = Some("{unclosed: "))
+      viewed(engine.viewState("fs", key, Chars, where = Some("{unclosed: ")))
     }
     engine.clean()
   }
@@ -1025,15 +1038,15 @@ class MemoViewSpec extends SparkTestBase {
     val (engine, _) = freshEngine()
     val key = "metadata['category']"
     engine.save(yamlG("one in", "a", "g1") + yamlG("one out", "a", "g0"))
-    engine.viewState("fr", key, Chars, where = Some("{grp: g1}"))
+    viewed(engine.viewState("fr", key, Chars, where = Some("{grp: g1}")))
     engine.save(yamlG("two in", "b", "g1") + yamlG("two out", "b", "g0"))
     val modes = engine.refreshViews()
     // "rebuild" here would mean the decoded spec LOST the predicate and
     // re-registered a different view
     assert(modes.get("fr").contains("incremental"),
       s"decoded filtered view must refresh incrementally: $modes")
-    val v = engine.viewState("fr", key, Chars, where = Some("{grp: g1}"))
-    assert(mode(engine) == "fresh",
+    val v = viewed(engine.viewState("fr", key, Chars, where = Some("{grp: g1}")))
+    assert(mode == "fresh",
       "the refreshViews pass must have left the view watermark-current")
     assert(collected(v) == directG(engine, key, "g1"))
     engine.clean()
@@ -1045,17 +1058,17 @@ class MemoViewSpec extends SparkTestBase {
     // percentile-class aggregates are NOT retractable from the feed:
     // loud rejection at the boundary beats a silently stale view
     intercept[IllegalArgumentException] {
-      engine.viewState("bad", "metadata['category']", Chars,
-        Map("chars" -> "percentile"))
+      viewed(engine.viewState("bad", "metadata['category']", Chars,
+        Map("chars" -> "percentile")))
     }
     intercept[IllegalArgumentException] {
-      engine.viewState("bad", "metadata['category']", Chars,
-        Map("nope" -> "sum"))
+      viewed(engine.viewState("bad", "metadata['category']", Chars,
+        Map("nope" -> "sum")))
     }
     // "sign" would alias the contribution frame's retraction column
     intercept[IllegalArgumentException] {
-      engine.viewState("bad", "metadata['category']",
-        Seq("sign" -> "length(body)"))
+      viewed(engine.viewState("bad", "metadata['category']",
+        Seq("sign" -> "length(body)")))
     }
     engine.clean()
   }
@@ -1064,14 +1077,14 @@ class MemoViewSpec extends SparkTestBase {
     val (engine, _) = freshEngine()
     engine.save(yamlW("x zero", "x", 4) + yamlW("x one", "x", 6))
     val m = Seq("w" -> W)
-    val s1 = engine.viewState("agg", "metadata['category']", m) // sum
-    assert(mode(engine) == "rebuild")
+    val s1 = viewed(engine.viewState("agg", "metadata['category']", m)) // sum
+    assert(mode == "rebuild")
     assert(s1.collect()(0).getLong(2) == 10L)
     // same name, same exprs, different aggregator: the spec encodes the
     // aggregator per component, so this rebuilds instead of serving sums
-    val s2 = engine.viewState("agg", "metadata['category']", m,
-      Map("w" -> "max"))
-    assert(mode(engine) == "rebuild",
+    val s2 = viewed(engine.viewState("agg", "metadata['category']", m,
+      Map("w" -> "max")))
+    assert(mode == "rebuild",
       "agg-kind change must be detected as a spec change")
     assert(s2.collect()(0).getLong(2) == 6L)
     engine.clean()
@@ -1081,11 +1094,11 @@ class MemoViewSpec extends SparkTestBase {
     val (engine, base) = freshEngine()
     val key = "metadata['category']"
     engine.save(yamlDoc("gen zero note", Some("a")))
-    val held = engine.viewState("gen", key, Chars) // generation 0
+    val held = viewed(engine.viewState("gen", key, Chars)) // generation 0
     engine.save(yamlDoc("gen one note", Some("b")))
-    engine.viewState("gen", key, Chars) // generation 1
+    viewed(engine.viewState("gen", key, Chars)) // generation 1
     engine.save(yamlDoc("gen two note", Some("c")))
-    engine.viewState("gen", key, Chars) // generation 2
+    viewed(engine.viewState("gen", key, Chars)) // generation 2
     // two refreshes completed under the held frame; the sweep is TTL-aged
     // (not keep-last-one), so the generation-0 dir is still on disk and
     // the held DataFrame still serves
@@ -1109,7 +1122,7 @@ class MemoViewSpec extends SparkTestBase {
     val key = "metadata['category']"
     val cats = Seq("a", "b", "c")
     engine.save(yamlDoc("seed note", Some("a")))
-    engine.viewState("churn", key, Chars)
+    viewed(engine.viewState("churn", key, Chars))
     import spark.implicits._
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val writer = new Thread(() => {
@@ -1133,16 +1146,16 @@ class MemoViewSpec extends SparkTestBase {
     // 'z' retract from the source group's reserve mid-loop)
     val maxMeasure = Seq("hi" -> "length(body)")
     val maxAggs = Map("hi" -> "max")
-    engine.viewState("churnmax", key, maxMeasure, maxAggs)
+    viewed(engine.viewState("churnmax", key, maxMeasure, maxAggs))
     writer.start()
     try {
       // adversarial loop: every observation mid-churn must be a coherent
       // committed state — no exceptions, no zero/negative counts
       while (writer.isAlive) {
-        val rows = engine.viewState("churn", key, Chars).collect()
+        val rows = viewed(engine.viewState("churn", key, Chars)).collect()
         assert(rows.forall(_.getLong(1) > 0L),
           s"incoherent view served mid-churn: ${rows.mkString(";")}")
-        val mrows = engine.viewState("churnmax", key, maxMeasure, maxAggs)
+        val mrows = viewed(engine.viewState("churnmax", key, maxMeasure, maxAggs))
           .collect()
         assert(mrows.forall(r => r.getLong(1) > 0L && !r.isNullAt(2)),
           s"incoherent max view served mid-churn: ${mrows.mkString(";")}")
@@ -1150,10 +1163,10 @@ class MemoViewSpec extends SparkTestBase {
       }
     } finally writer.join()
     assert(errs.isEmpty, s"writer failed mid-churn: ${errs.peek()}")
-    val fin = engine.viewState("churn", key, Chars)
+    val fin = viewed(engine.viewState("churn", key, Chars))
     assert(collected(fin) == direct(engine, key),
       "post-churn view must converge with the direct group-by")
-    val finMax = engine.viewState("churnmax", key, maxMeasure, maxAggs)
+    val finMax = viewed(engine.viewState("churnmax", key, maxMeasure, maxAggs))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     val directMax = engine.records
       .groupBy(expr(key).cast("string").as("group_key"))
@@ -1184,12 +1197,12 @@ class MemoViewSpec extends SparkTestBase {
       (((seed >>> 33) % bound) + bound).toInt % bound
     }
     def checkBoth(step: String): Unit = {
-      val s = engine.viewState("dsum", key, MM) // sum over the weight expr
+      val s = viewed(engine.viewState("dsum", key, MM)) // sum over the weight expr
       assert(collectedW(s).map(t => (t._1, t._2)) ==
         directW(engine, key).map(t => (t._1, t._2)), s"counts diverged: $step")
-      val m = engine.viewState("dmm", key, MM, MMAggs)
+      val m = viewed(engine.viewState("dmm", key, MM, MMAggs))
       assert(collectedW(m) == directW(engine, key),
-        s"min/max diverged after $step (mode ${mode(engine)})")
+        s"min/max diverged after $step (mode ${mode})")
     }
     engine.save((0 until 6).map(i =>
       yamlW(s"seed doc $i", s"g${i % 3}", next(50))).mkString)
@@ -1239,15 +1252,15 @@ class MemoViewSpec extends SparkTestBase {
     val ckpt = Files.createTempDirectory("memo_view_ckpt").toString
     follower.replicateFrom(log, ckpt)
     // the read-scaling shape: leader writes, follower serves the aggregate
-    val v1 = follower.viewState("fv", key, Chars)
+    val v1 = viewed(follower.viewState("fv", key, Chars))
     assert(collectedFrom(v1) == direct(leader, key),
       "follower view must match the leader's direct group-by")
     // append ships: the follower's catch-up refresh is O(delta)
     leader.save(yamlDoc("f delta", Some("c")))
     leader.emitChanges(log)
     follower.replicateFrom(log, ckpt)
-    val v2 = follower.viewState("fv", key, Chars)
-    assert(mode(follower) == "incremental",
+    val v2 = viewed(follower.viewState("fv", key, Chars))
+    assert(mode == "incremental",
       "a replicated append must refresh the follower view incrementally")
     assert(collectedFrom(v2) == direct(leader, key))
     // update + soft-delete + reindex cycle ships and the view follows
@@ -1256,7 +1269,7 @@ class MemoViewSpec extends SparkTestBase {
     leader.reindex()
     leader.emitChanges(log)
     follower.replicateFrom(log, ckpt)
-    val v3 = follower.viewState("fv", key, Chars)
+    val v3 = viewed(follower.viewState("fv", key, Chars))
     assert(collectedFrom(v3) == direct(leader, key),
       "follower view must converge across update/remove/reindex")
     leader.clean(); follower.clean()
@@ -1270,19 +1283,19 @@ class MemoViewSpec extends SparkTestBase {
     val (engine, _) = freshEngine()
     val key = "metadata['category']"
     engine.save(yamlW("r zero", "a", 4) + yamlW("r one", "b", 9))
-    engine.viewState("vsum", key, Chars)
-    engine.viewState("vmax", key, MM, MMAggs)
+    viewed(engine.viewState("vsum", key, Chars))
+    viewed(engine.viewState("vmax", key, MM, MMAggs))
     assert(engine.views == Seq("vmax", "vsum"))
     engine.save(yamlW("r two", "a", 6))
     // one maintenance call, no restated specs: both views catch up
     val modes = engine.refreshViews()
     assert(modes == Map("vsum" -> "incremental", "vmax" -> "incremental"),
       s"unexpected refresh modes: $modes")
-    val vs = engine.viewState("vsum", key, Chars)
-    assert(mode(engine) == "fresh", "refreshViews must have caught vsum up")
+    val vs = viewed(engine.viewState("vsum", key, Chars))
+    assert(mode == "fresh", "refreshViews must have caught vsum up")
     assert(collected(vs) == direct(engine, key))
-    val vm = engine.viewState("vmax", key, MM, MMAggs)
-    assert(mode(engine) == "fresh", "refreshViews must have caught vmax up")
+    val vm = viewed(engine.viewState("vmax", key, MM, MMAggs))
+    assert(mode == "fresh", "refreshViews must have caught vmax up")
     assert(collectedW(vm) == directW(engine, key))
     assert(engine.dropView("vmax"))
     assert(!engine.dropView("vmax"), "second drop must report absence")
@@ -1302,7 +1315,7 @@ class MemoViewSpec extends SparkTestBase {
       val (engine, _) = freshEngine()
       engine.save(yamlDoc("pv zero", Some("a")) + yamlDoc("pv one", Some("b")))
       engine.save(yamlDoc("pv two", Some("c"))) // 2 segments: patches prune
-      engine.viewState("pv", "metadata['category']", Chars) // watermark 1
+      viewed(engine.viewState("pv", "metadata['category']", Chars)) // watermark 1
       upd(engine, "pv zero patched once")  // v2: patch rewrites segment 0
       upd(engine, "pv zero patched twice") // v3: supersedes v2's patch seg
       engine
@@ -1311,16 +1324,16 @@ class MemoViewSpec extends SparkTestBase {
     // the view's walk aborts at the missing step — honest rebuild
     val bare = build()
     bare.vacuum(retainVersions = 1)
-    val vBare = bare.viewState("pv", "metadata['category']", Chars)
-    assert(mode(bare) == "rebuild",
+    val vBare = viewed(bare.viewState("pv", "metadata['category']", Chars))
+    assert(mode == "rebuild",
       "vacuumed walk window must fall back to rebuild")
     assert(collected(vBare) == direct(bare, "metadata['category']"))
     // protected: retention extends to the oldest view watermark, the
     // walk's dirs (and their materialized feeds) survive — O(delta)
     val prot = build()
     prot.vacuum(retainVersions = 1, protectViews = true)
-    val vProt = prot.viewState("pv", "metadata['category']", Chars)
-    assert(mode(prot) == "incremental",
+    val vProt = viewed(prot.viewState("pv", "metadata['category']", Chars))
+    assert(mode == "incremental",
       "protected vacuum must keep the behind view incremental")
     assert(collected(vProt) == direct(prot, "metadata['category']"))
     bare.clean(); prot.clean()
@@ -1332,7 +1345,7 @@ class MemoViewSpec extends SparkTestBase {
     val engine = new MemoEngine(spark, s"$dir/db", materializeFeeds = false)
     engine.save(yamlDoc("nf zero", Some("a")) + yamlDoc("nf one", Some("b")))
     engine.save(yamlDoc("nf two", Some("c"))) // 2 segments: patches prune
-    engine.viewState("nf", "metadata['category']", Chars)
+    viewed(engine.viewState("nf", "metadata['category']", Chars))
     import spark.implicits._
     engine.applyChanges(Seq(
         (0L, "updated", "nf zero patched", Map("category" -> "sa")))
@@ -1347,8 +1360,8 @@ class MemoViewSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(ch == Set((0L, "updated")), s"fallback classification: $ch")
     // the view can't prove the patch step retractable: honest rebuild
-    val v = engine.viewState("nf", "metadata['category']", Chars)
-    assert(mode(engine) == "rebuild",
+    val v = viewed(engine.viewState("nf", "metadata['category']", Chars))
+    assert(mode == "rebuild",
       "without the sidecar a patch step must recompute, never serve stale")
     assert(collected(v) == direct(engine, "metadata['category']"))
     engine.clean()
@@ -1370,7 +1383,7 @@ class MemoViewSpec extends SparkTestBase {
     def rows(df: DataFrame): Map[String, (Long, Long, Double)] =
       df.collect().map(r =>
         r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
-    val v1 = engine.viewState("av", key, m, aggs)
+    val v1 = viewed(engine.viewState("av", key, m, aggs))
     assert(v1.schema("w_avg").dataType == DoubleType,
       "avg measures must serve as DOUBLE")
     assert(v1.schema("w_sum").dataType ==
@@ -1381,8 +1394,8 @@ class MemoViewSpec extends SparkTestBase {
       "sb" -> ((1L, 10L, 10.0))), s"rebuild-arm avg wrong: ${rows(v1)}")
     // incremental append moves the average
     engine.save(yamlW("b one", "b", 4))
-    val v2 = engine.viewState("av", key, m, aggs)
-    assert(mode(engine) == "incremental")
+    val v2 = viewed(engine.viewState("av", key, m, aggs))
+    assert(mode == "incremental")
     assert(rows(v2)("sb") == ((2L, 14L, 7.0)), s"append avg: ${rows(v2)}")
     // patch retraction: an update re-weights an 'a' row (3 → 9), a
     // remove drops the heavy 'b' row — both ride the SUM retraction,
@@ -1395,8 +1408,8 @@ class MemoViewSpec extends SparkTestBase {
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(0L))
     engine.applyChanges(feed)
-    val v3 = engine.viewState("av", key, m, aggs)
-    assert(mode(engine) == "incremental")
+    val v3 = viewed(engine.viewState("av", key, m, aggs))
+    assert(mode == "incremental")
     assert(rows(v3) == Map("sa" -> ((3L, 14L, 14.0 / 3)),
       "sb" -> ((1L, 4L, 4.0))), s"patched avg wrong: ${rows(v3)}")
     // the incremental state equals a direct recompute, division included
@@ -1412,9 +1425,9 @@ class MemoViewSpec extends SparkTestBase {
     assert(rows(v3) == directAvg)
     // sum→avg on the same name is a detected spec change (aggregator
     // participates in spec identity), not a silently re-served sum
-    val v4 = engine.viewState("av", key, m,
-      Map("w_avg" -> "avg", "w_sum" -> "avg"))
-    assert(mode(engine) == "rebuild")
+    val v4 = viewed(engine.viewState("av", key, m,
+      Map("w_avg" -> "avg", "w_sum" -> "avg")))
+    assert(mode == "rebuild")
     assert(v4.schema("w_sum").dataType == DoubleType)
     engine.clean()
   }
@@ -1428,14 +1441,14 @@ class MemoViewSpec extends SparkTestBase {
     // try_cast coercion turns both into 0 instead of an ANSI cast error
     val measures = Seq("weight_sum" ->
       "regexp_extract(metadata['weight'], '^i?(-?\\\\d+)$', 1)")
-    val v = engine.viewState("wv", "metadata['category']", measures)
+    val v = viewed(engine.viewState("wv", "metadata['category']", measures))
     val row = v.collect()(0)
     assert(row.getString(0) == "sx" && row.getLong(1) == 2 && row.getLong(2) == 3,
       s"null measure must count as 0: $row")
     // incremental path agrees on the null-as-zero rule
     engine.save("---\nbody: another unpriced\nmetadata: {category: x}\n")
-    val v2 = engine.viewState("wv", "metadata['category']", measures)
-    assert(mode(engine) == "incremental")
+    val v2 = viewed(engine.viewState("wv", "metadata['category']", measures))
+    assert(mode == "incremental")
     val row2 = v2.collect()(0)
     assert(row2.getLong(1) == 3 && row2.getLong(2) == 3)
     engine.clean()
@@ -1481,9 +1494,9 @@ class MemoViewSpec extends SparkTestBase {
     val key = "metadata['g']"
     engine.save((0 until 64).map(i =>
       s"---\nbody: shard corpus doc $i\nmetadata: {g: g$i}\n").mkString)
-    engine.viewState("sh", key, Chars).collect()
-    assert(mode(engine) == "rebuild")
-    val (w0, c0) = engine.lastViewPublish.get
+    viewed(engine.viewState("sh", key, Chars)).collect()
+    assert(mode == "rebuild")
+    val (w0, c0) = published
     assert(w0 >= 4 && c0 == 0,
       s"64 groups at shardRows=8 must split into several shards: ($w0, $c0)")
     val st0 = liveStateDir(s"$dir/db", "sh")
@@ -1492,9 +1505,9 @@ class MemoViewSpec extends SparkTestBase {
     // ONE group changes: the refresh must rewrite one shard and carry
     // the rest by reference into the new manifest
     engine.save("---\nbody: appended into one group\nmetadata: {g: g7}\n")
-    val served = engine.viewState("sh", key, Chars)
-    assert(mode(engine) == "incremental")
-    val (w1, c1) = engine.lastViewPublish.get
+    val served = viewed(engine.viewState("sh", key, Chars))
+    assert(mode == "incremental")
+    val (w1, c1) = published
     assert(w1 >= 1 && w1 <= 2 && c1 == w0 - w1,
       s"1-group delta must touch one shard of $w0: wrote $w1, carried $c1")
     val st1 = liveStateDir(s"$dir/db", "sh")
@@ -1523,17 +1536,17 @@ class MemoViewSpec extends SparkTestBase {
     val key = "metadata['g']"
     engine.save((0 until 4).map(i =>
       s"---\nbody: seed doc $i\nmetadata: {g: g$i}\n").mkString)
-    engine.viewState("sp", key, Chars).collect()
-    val (w0, _) = engine.lastViewPublish.get
+    viewed(engine.viewState("sp", key, Chars)).collect()
+    val (w0, _) = published
     assert(w0 == 1, s"4 groups at shardRows=4 is ONE shard, got $w0")
     val st0 = liveStateDir(s"$dir/db", "sp")
     // 28 new groups land in the single shard's region (it covers the
     // whole cell space): the rewrite must split
     engine.save((4 until 32).map(i =>
       s"---\nbody: growth doc $i\nmetadata: {g: g$i}\n").mkString)
-    val served = engine.viewState("sp", key, Chars)
-    assert(mode(engine) == "incremental")
-    val (w1, c1) = engine.lastViewPublish.get
+    val served = viewed(engine.viewState("sp", key, Chars))
+    assert(mode == "incremental")
+    val (w1, c1) = published
     assert(w1 >= 4 && c1 == 0,
       s"32 groups through one wide shard must split on rewrite: ($w1, $c1)")
     val st1 = liveStateDir(s"$dir/db", "sp")
@@ -1544,8 +1557,8 @@ class MemoViewSpec extends SparkTestBase {
     assert(collected(served) == direct(engine, key))
     // and the NEXT 1-group refresh only touches one of the new shards
     engine.save("---\nbody: post split append\nmetadata: {g: g9}\n")
-    engine.viewState("sp", key, Chars).collect()
-    val (w2, c2) = engine.lastViewPublish.get
+    viewed(engine.viewState("sp", key, Chars)).collect()
+    val (w2, c2) = published
     assert(w2 <= 2 && c2 >= w1 - 2,
       s"post-split 1-group refresh must be narrow: ($w2, $c2)")
     engine.clean()
@@ -1560,11 +1573,11 @@ class MemoViewSpec extends SparkTestBase {
     def doc(g: Int, tag: String) =
       s"---\nbody: sweep doc $tag\nmetadata: {g: g$g}\n"
     engine.save((0 until 64).map(i => doc(i, s"seed $i")).mkString)
-    engine.viewState("sw", key, Chars).collect()
+    viewed(engine.viewState("sw", key, Chars)).collect()
     val st0 = liveStateDir(s"$dir/db", "sw")
     // refresh 2 supersedes ONE shard of st0 (rewritten into st1)
     engine.save(doc(7, "touch g7"))
-    engine.viewState("sw", key, Chars).collect()
+    viewed(engine.viewState("sw", key, Chars)).collect()
     val st1 = liveStateDir(s"$dir/db", "sw")
     val viewRoot = java.nio.file.Paths.get(s"$dir/db").resolve("_view_sw")
     val lines1 = manifestLines(s"$dir/db", "sw", st1)
@@ -1580,14 +1593,14 @@ class MemoViewSpec extends SparkTestBase {
     // then age it past the TTL and refresh again: it must fall, while
     // every shard the live manifests reference stays
     engine.save(doc(9, "touch g9"))
-    engine.viewState("sw", key, Chars).collect()
+    viewed(engine.viewState("sw", key, Chars)).collect()
     assert(java.nio.file.Files.exists(superseded.head),
       "a young superseded shard must survive (TTL window)")
     java.nio.file.Files.setLastModifiedTime(superseded.head,
       java.nio.file.attribute.FileTime.fromMillis(
         System.currentTimeMillis() - 3L * 60 * 60 * 1000))
     engine.save(doc(11, "touch g11"))
-    val served = engine.viewState("sw", key, Chars)
+    val served = viewed(engine.viewState("sw", key, Chars))
     assert(!java.nio.file.Files.exists(superseded.head),
       "an aged superseded shard must be swept")
     val stLive = liveStateDir(s"$dir/db", "sw")
@@ -1610,11 +1623,11 @@ class MemoViewSpec extends SparkTestBase {
     def doc(g: Int, tag: String) =
       s"---\nbody: vacuum doc $tag\nmetadata: {g: g$g}\n"
     engine.save((0 until 64).map(i => doc(i, s"seed $i")).mkString)
-    engine.viewState("vs", key, Chars).collect()
+    viewed(engine.viewState("vs", key, Chars)).collect()
     val st0 = liveStateDir(s"$dir/db", "vs")
     // the last fold: it supersedes ONE shard of st0 and carries the rest
     engine.save(doc(7, "touch g7"))
-    val before = collected(engine.viewState("vs", key, Chars))
+    val before = collected(viewed(engine.viewState("vs", key, Chars)))
     val st1 = liveStateDir(s"$dir/db", "vs")
     val viewRoot = java.nio.file.Paths.get(s"$dir/db").resolve("_view_vs")
     val lines1 = manifestLines(s"$dir/db", "vs", st1)
@@ -1645,7 +1658,7 @@ class MemoViewSpec extends SparkTestBase {
       assert(java.nio.file.Files.isDirectory(viewRoot.resolve(rel)),
         s"referenced shard $rel must survive the sweep")
     }
-    val after = collected(engine.viewState("vs", key, Chars))
+    val after = collected(viewed(engine.viewState("vs", key, Chars)))
     assert(after == before && after == direct(engine, key))
     engine.clean()
   }
@@ -1658,7 +1671,7 @@ class MemoViewSpec extends SparkTestBase {
     val key = "metadata['g']"
     engine.save((0 until 32).map(i =>
       s"---\nbody: legacy doc $i\nmetadata: {g: g$i}\n").mkString)
-    engine.viewState("lg", key, Chars).collect()
+    viewed(engine.viewState("lg", key, Chars)).collect()
     val viewDirS = java.nio.file.Paths.get(s"$dir/db").resolve("_view_lg")
     val st0 = liveStateDir(s"$dir/db", "lg")
     // fabricate the legacy layout: the same state as ONE flat parquet
@@ -1672,22 +1685,22 @@ class MemoViewSpec extends SparkTestBase {
     graft.ops.ArtifactMeta.write(spark, viewDirS.toString, "_view_meta",
       s"${meta(0)}|${meta(1)}|state-legacy")
     // fresh serve reads the legacy dir whole
-    val servedLegacy = engine.viewState("lg", key, Chars)
-    assert(mode(engine) == "fresh")
+    val servedLegacy = viewed(engine.viewState("lg", key, Chars))
+    assert(mode == "fresh")
     assert(collected(servedLegacy) == direct(engine, key))
     // first refresh: the legacy state is one wide shard — rewritten
     // whole (carried 0), published SHARDED
     engine.save("---\nbody: upgrade append\nmetadata: {g: g3}\n")
-    val servedUp = engine.viewState("lg", key, Chars)
-    assert(mode(engine) == "incremental")
-    val (w1, c1) = engine.lastViewPublish.get
+    val servedUp = viewed(engine.viewState("lg", key, Chars))
+    assert(mode == "incremental")
+    val (w1, c1) = published
     assert(c1 == 0 && w1 >= 2,
       s"legacy upgrade is one full rewrite into shards: ($w1, $c1)")
     assert(collected(servedUp) == direct(engine, key))
     // thereafter: narrow refreshes carry
     engine.save("---\nbody: post upgrade append\nmetadata: {g: g5}\n")
-    engine.viewState("lg", key, Chars).collect()
-    val (w2, c2) = engine.lastViewPublish.get
+    viewed(engine.viewState("lg", key, Chars)).collect()
+    val (w2, c2) = published
     assert(w2 <= 2 && c2 > 0,
       s"post-upgrade refresh must carry untouched shards: ($w2, $c2)")
     engine.clean()
@@ -1700,7 +1713,7 @@ class MemoViewSpec extends SparkTestBase {
     val key = "metadata['g']"
     engine.save((0 until 64).map(i =>
       s"---\nbody: rows corpus doc $i\nmetadata: {g: g$i}\n").mkString)
-    engine.viewState("rw", key, Chars).collect()
+    viewed(engine.viewState("rw", key, Chars)).collect()
     val st0 = liveStateDir(s"$dir/db", "rw")
     val lines0 = manifestLines(s"$dir/db", "rw", st0)
     val counts0 = lines0.map(_.split('|')).map(p => p(2) -> p(3).toLong)
@@ -1711,7 +1724,7 @@ class MemoViewSpec extends SparkTestBase {
     // 1-group refresh: the carried entries' lines survive VERBATIM
     // (path AND recorded count), only the touched shard re-counts
     engine.save("---\nbody: rows touch\nmetadata: {g: g7}\n")
-    engine.viewState("rw", key, Chars).collect()
+    viewed(engine.viewState("rw", key, Chars)).collect()
     val st1 = liveStateDir(s"$dir/db", "rw")
     val lines1 = manifestLines(s"$dir/db", "rw", st1)
     val carried = lines1.filter(_.contains(st0))
@@ -1735,7 +1748,7 @@ class MemoViewSpec extends SparkTestBase {
     // and erases the very fragmentation this test exists to create
     (0 until 64).grouped(16).foreach(b => engine.save(b.map(i =>
       s"---\nbody: compact corpus doc $i\nmetadata: {g: g$i}\n").mkString))
-    engine.viewState("cp", key, Chars).collect()
+    viewed(engine.viewState("cp", key, Chars)).collect()
     val frag0 = engine.viewFragmentation("cp").get
     assert(frag0 <= 1.5, s"a fresh rebuild is near-uniform: $frag0")
     // a uniform state must NOT compact, and the skip touches no files
@@ -1755,13 +1768,13 @@ class MemoViewSpec extends SparkTestBase {
         .map(i => (i, "removed", "", Map.empty[String, String]))
         .toDF("id", "change", "body", "metadata")
         .withColumn("commit_version", lit(0L)))
-      engine.viewState("cp", key, Chars).collect()
-      assert(mode(engine).startsWith("incremental"),
-        s"shrink patch must refresh incrementally, got ${mode(engine)}")
+      viewed(engine.viewState("cp", key, Chars)).collect()
+      assert(mode.startsWith("incremental"),
+        s"shrink patch must refresh incrementally, got ${mode}")
     }
     removeIds(0L to 47L)
     removeIds(48L to 55L)
-    val servedBefore = collected(engine.viewState("cp", key, Chars))
+    val servedBefore = collected(viewed(engine.viewState("cp", key, Chars)))
     assert(servedBefore.size == 8)
     val frag1 = engine.viewFragmentation("cp").get
     assert(frag1 > 2.0,
@@ -1782,14 +1795,14 @@ class MemoViewSpec extends SparkTestBase {
     assert(engine.viewFragmentation("cp").get <= 1.0 + 1e-9)
     // serve parity through the lock-free fresh arm (same version, same
     // spec — compact is pure re-layout)
-    val served = engine.viewState("cp", key, Chars)
-    assert(mode(engine) == "fresh")
+    val served = viewed(engine.viewState("cp", key, Chars))
+    assert(mode == "fresh")
     assert(collected(served) == servedBefore)
     assert(collected(served) == direct(engine, key))
     // the next refresh merges INTO the compacted state incrementally
     engine.save("---\nbody: post compact append\nmetadata: {g: g0}\n")
-    val v2 = engine.viewState("cp", key, Chars)
-    assert(mode(engine) == "incremental")
+    val v2 = viewed(engine.viewState("cp", key, Chars))
+    assert(mode == "incremental")
     assert(collected(v2) == direct(engine, key))
     // compacted-and-current: the maintenance walk reports the skip
     val report = engine.maintain(compactFragmentation = Some(2.0))

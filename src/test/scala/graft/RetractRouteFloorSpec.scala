@@ -7,7 +7,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.lit
 
-import graft.memo.MemoEngine
+import graft.memo.{MemoEngine, OpTrace}
 
 /** The premise behind [[MemoEngine.DefaultRetractRouteMinRows]]: a retract
   * fold costs a FIXED number of Spark jobs, whatever the corpus size, so
@@ -56,13 +56,13 @@ class RetractRouteFloorSpec extends SparkTestBase {
   private def foldJobs(n: Int): Map[String, (Int, Int)] = {
     import spark.implicits._
     val engine = buildStore(n)
-    val doors: Seq[(String, () => Any, () => Seq[Option[String]])] = Seq(
+    val doors: Seq[(String, () => Any, Seq[String])] = Seq(
       ("lexical", () => engine.hybridRecall("alpha1 gamma", k = 5).collect(),
-        () => Seq(engine.lastLexMode)),
+        Seq("lexical")),
       ("ann", () => engine.annRecall("alpha1 gamma", k = 5).collect(),
-        () => Seq(engine.lastIvfMode)),
+        Seq("ivf")),
       ("signatures", () => engine.dupGroups().collect(),
-        () => Seq(engine.lastSigMode, engine.lastDupMode)))
+        Seq("signatures", "dupgroups")))
     doors.foreach(_._2()) // build every family at the live version
     engine.retractRouteMinRows = 0
     engine.applyChanges((0 until 10).map(g =>
@@ -78,9 +78,9 @@ class RetractRouteFloorSpec extends SparkTestBase {
     }
     sc.addSparkListener(counter)
     try {
-      val arms = doors.map { case (family, door, modes) =>
-        under(s"$run-$family-fold")(door())
-        val arm = modes()
+      val arms = doors.map { case (family, door, walked) =>
+        val trace = OpTrace.traced(under(s"$run-$family-fold")(door()))._2
+        val arm = walked.map(trace.arm)
         under(s"$run-$family-serve")(door())
         family -> arm
       }

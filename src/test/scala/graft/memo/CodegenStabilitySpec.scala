@@ -53,10 +53,11 @@ class CodegenStabilitySpec extends SparkTestBase {
     val f = Some("{part: p1}")
     def route(q: String, filter: Option[String], bruteRows: Long,
         pqBytes: Long, want: String): Unit = {
-      engine.recallServe(q, k = 5, filterExpr = filter,
-        bruteRows = bruteRows, pqBytes = pqBytes).collect()
-      assert(engine.lastServeRoute.map(_._1).contains(want),
-        s"expected route $want, got ${engine.lastServeRoute}")
+      val trace = OpTrace.traced(engine.recallServe(q, k = 5,
+        filterExpr = filter, bruteRows = bruteRows, pqBytes = pqBytes)
+        .collect())._2
+      assert(trace.serveRoute.map(_._1).contains(want),
+        s"expected route $want, got ${trace.serveRoute}")
     }
     val big = MemoEngine.DefaultServePqBytes
     assertStable("brute, filtered")(route(_, f, Long.MaxValue, big, "brute"))
